@@ -19,6 +19,9 @@ Storage layout (all inside ``path``):
     v00000001/
         data.parquet/     ← the rolled-up state, O(groups) rows
         batches.json      ← EVERY batch id folded into this version
+        schema.json       ← the state's schema: reads pin it, so no
+                            schema-inference job runs (a version dir
+                            without it is read with inference)
     v00000002/ ...
 
 Crash safety: a version directory is written COMPLETELY before the
@@ -58,12 +61,14 @@ co-locate with zero extra exchange.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 # output-column merge function per partial kind: how two partial states
 # combine under re-aggregation.
@@ -263,6 +268,44 @@ def _seg_id_of(name: str) -> int | None:
     return int(head) if head.isdigit() else None
 
 
+def _schema_record(df: DataFrame) -> dict:
+    """JSON-able schema of a frame about to be written, with every column
+    nullable — the form a parquet file source reads back, so a count
+    partial (NOT NULL) and a compacted sum of counts (nullable) record the
+    same schema. ``df.schema`` needs analysis only — no Spark job runs."""
+    return StructType([
+        StructField(f.name, f.dataType, True, f.metadata) for f in df.schema
+    ]).jsonValue()
+
+
+def _read_parquet(spark: SparkSession, parts: list[tuple[str, dict | None]]) -> DataFrame:
+    """Union of parquet directories given as (path, recorded schema or
+    None), with no schema-inference job for recorded schemas.
+
+    Paths sharing a recorded schema are read by ONE schema-pinned scan;
+    ``unionByName`` (which widens, e.g. int ∪ bigint → bigint) runs only
+    across distinct schemas, in order of first appearance. Paths with no
+    record (written before schemas were recorded) form one group read with
+    inference: one merge-schema job for the whole group, falling back to a
+    scan per path when their footers disagree on a column type."""
+    groups: dict[str | None, tuple[dict | None, list[str]]] = {}
+    for path, schema in parts:
+        key = None if schema is None else json.dumps(schema, sort_keys=True)
+        groups.setdefault(key, (schema, []))[1].append(path)
+    frames = []
+    for schema, paths in groups.values():
+        if schema is not None:
+            frames.append(spark.read.schema(StructType.fromJson(schema)).parquet(*paths))
+            continue
+        try:
+            frames.append(spark.read.option("mergeSchema", "true").parquet(*paths))
+        except Exception as e:  # noqa: BLE001 - the JVM error reaches Python untyped
+            if "CANNOT_MERGE_SCHEMAS" not in str(e):
+                raise
+            frames.extend(spark.read.parquet(p) for p in paths)
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
 def _snapshot_is_small(path: str, cap_bytes: int | None = None) -> bool:
     """Broadcast a committed snapshot only while its on-disk parquet
     provably fits — the shared functions/storage.py discipline; past the
@@ -356,6 +399,15 @@ class IncrementalAggView:
         with open(os.path.join(self._vdir(v), "batches.json")) as f:
             return json.load(f)
 
+    def _read_state(self, spark: SparkSession, v: int) -> DataFrame:
+        vdir = self._vdir(v)
+        try:
+            with open(os.path.join(vdir, "schema.json")) as f:
+                schema = json.load(f)
+        except FileNotFoundError:
+            schema = None
+        return _read_parquet(spark, [(os.path.join(vdir, "data.parquet"), schema)])
+
     # ---- the merge algebra ---------------------------------------------
     def _partial(self, delta: DataFrame) -> DataFrame:
         exprs = [
@@ -416,10 +468,7 @@ class IncrementalAggView:
         self._gc_orphans()
         partial = self._partial(delta)
         v = self.current_version()
-        state = partial if v == 0 else self._merge(
-            spark.read.parquet(os.path.join(self._vdir(v), "data.parquet")),
-            partial,
-        )
+        state = partial if v == 0 else self._merge(self._read_state(spark, v), partial)
         nxt = self._vdir(v + 1)
         state.repartition(self.n_buckets, *self.keys).write.mode(
             "error"
@@ -428,6 +477,7 @@ class IncrementalAggView:
         if self.ledger_cap is not None:
             ledger = ledger[-self.ledger_cap:]
         _write_json_durable(os.path.join(nxt, "batches.json"), ledger)
+        _write_json_durable(os.path.join(nxt, "schema.json"), _schema_record(state))
         tmp = os.path.join(self.path, _POINTER + ".tmp")
         with open(tmp, "w") as f:
             f.write(str(v + 1))
@@ -455,7 +505,7 @@ class IncrementalAggView:
             raise ValueError(
                 f"version {v} not committed (current={self.current_version()})"
             )
-        df = spark.read.parquet(os.path.join(self._vdir(v), "data.parquet"))
+        df = self._read_state(spark, v)
         for alias, fn in self.derive.items():
             df = df.withColumn(alias, _as_column(fn(df)))
         return df
@@ -1061,6 +1111,15 @@ class SegmentedAggView:
         m00000001.json      ← manifest: live segments + replay ledger
         seg-00000001/       ← immutable parquet partial (data.parquet)
 
+    Each manifest segment is ``{"dir", "weight", "schema"}``: the schema
+    of the frame written, recorded at write time (analysis only, no job).
+    A read therefore infers nothing — it is ONE schema-pinned parquet
+    scan per distinct schema across the live segments (normally one scan
+    in total), and ``unionByName`` runs only between schemas that really
+    differ (e.g. a key that arrived as int, then as bigint). Segments
+    from manifests written before schemas were recorded are read
+    together with one inference job.
+
     Crash safety mirrors IncrementalAggView: segments and the new
     manifest are fully written BEFORE the one atomic pointer flip;
     a crash leaves unreferenced seg-*/m* debris that readers never see
@@ -1139,7 +1198,7 @@ class SegmentedAggView:
             return json.load(f)
 
     def segments(self, version: int | None = None) -> list[dict]:
-        """Live segment descriptors [{dir, weight}] at ``version``."""
+        """Live segment descriptors [{dir, weight, schema}] at ``version``."""
         v = self.current_version() if version is None else version
         if v == 0:
             return []
@@ -1185,14 +1244,10 @@ class SegmentedAggView:
         return df.groupBy(*self.keys).agg(*exprs)
 
     def _union_segments(self, spark: SparkSession, segs: list[dict]) -> DataFrame:
-        dfs = [
-            spark.read.parquet(os.path.join(self.path, s["dir"], "data.parquet"))
+        return _read_parquet(spark, [
+            (os.path.join(self.path, s["dir"], "data.parquet"), s.get("schema"))
             for s in segs
-        ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        ])
 
     def _next_seg_id(self) -> int:
         mx = 0
@@ -1202,12 +1257,13 @@ class SegmentedAggView:
                 mx = max(mx, sid)
         return mx + 1
 
-    def _write_segment(self, df: DataFrame) -> str:
+    def _write_segment(self, df: DataFrame, weight: int = 1) -> dict:
+        """Write ``df`` as a new segment; returns its manifest descriptor."""
         name = _new_seg_name(self._next_seg_id())
         df.repartition(self.n_buckets, *self.keys).write.mode("error").parquet(
             os.path.join(self.path, name, "data.parquet")
         )
-        return name
+        return {"dir": name, "weight": weight, "schema": _schema_record(df)}
 
     def _commit(self, segments: list[dict], batches: list[str], base_v: int) -> int:
         # Commit at base_v+1 where base_v is the version the CONTENT was
@@ -1273,7 +1329,7 @@ class SegmentedAggView:
                     # batch id (concurrent replay) — our written segment
                     # is referenced by no manifest; reclaim it instead of
                     # leaking it until vacuum (r12 review)
-                    shutil.rmtree(os.path.join(self.path, seg), ignore_errors=True)
+                    shutil.rmtree(os.path.join(self.path, seg["dir"]), ignore_errors=True)
                 return False
             if seg is None:  # the delta is written once; retries re-ledger it
                 seg = self._write_segment(self._partial(delta))
@@ -1285,11 +1341,7 @@ class SegmentedAggView:
                 # horizon, as Structured Streaming's do).
                 ledger = ledger[-self.ledger_cap:]
             try:
-                self._commit(
-                    [*manifest["segments"], {"dir": seg, "weight": 1}],
-                    ledger,
-                    base_v=v,
-                )
+                self._commit([*manifest["segments"], seg], ledger, base_v=v)
                 break
             except ValueError as e:
                 # Bounded rebase-retry (VERDICT r11 item 5): a LIVE
@@ -1309,13 +1361,12 @@ class SegmentedAggView:
         return True
 
     def compact(self, spark: SparkSession) -> int:
-        """Run size-tiered compactions until no tier holds ``fanout``
-        or more segments. Each round merges the smallest-weight
-        ``fanout`` members of the LOWEST eligible tier (so merges cascade
-        upward naturally) into ONE
-        segment of combined weight (one union-re-aggregate job over
-        just those segments — the rest of the state is untouched).
-        Returns the number of merge rounds executed."""
+        """Run compaction rounds until the policy (``_victims``) finds
+        nothing due. Each round merges the victims into ONE segment of
+        combined weight (one union-re-aggregate job over just those
+        segments — the rest of the state is untouched) and commits the
+        survivors plus that segment. Returns the number of merge rounds
+        executed."""
         # compaction RE-APPLIES the merge algebra and rewrites state, so
         # a wrong-spec instance must fail loudly here, not corrupt disk
         self._check_or_write_spec()
@@ -1326,22 +1377,26 @@ class SegmentedAggView:
             tiers: dict[int, list[dict]] = {}
             for s in segs:
                 tiers.setdefault(self._tier(s["weight"]), []).append(s)
-            due = [t for t, members in tiers.items() if len(members) >= self.fanout]
-            if not due:
+            victims = self._victims(tiers)
+            if not victims:
                 return rounds
-            t = min(due)  # smallest tier first: cascades upward naturally
-            victims = sorted(tiers[t], key=lambda s: (s["weight"], s["dir"]))[
-                : self.fanout
-            ]
             merged = self._reagg(self._union_segments(spark, victims))
-            new_seg = self._write_segment(merged)
+            new_seg = self._write_segment(merged, sum(s["weight"] for s in victims))
             victim_dirs = {s["dir"] for s in victims}
             survivors = [s for s in segs if s["dir"] not in victim_dirs]
-            survivors.append(
-                {"dir": new_seg, "weight": sum(s["weight"] for s in victims)}
-            )
-            self._commit(survivors, self.applied_batches(), base_v=v0)
+            self._commit([*survivors, new_seg], self.applied_batches(), base_v=v0)
             rounds += 1
+
+    def _victims(self, tiers: dict[int, list[dict]]) -> list[dict] | None:
+        """Size-tiered policy: the smallest-weight ``fanout`` members of
+        the LOWEST tier holding ``fanout`` or more segments (so merges
+        cascade upward naturally); None when no tier is due."""
+        due = [t for t, members in tiers.items() if len(members) >= self.fanout]
+        if not due:
+            return None
+        return sorted(tiers[min(due)], key=lambda s: (s["weight"], s["dir"]))[
+            : self.fanout
+        ]
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """The rollup at ``version`` (default latest): union of that
@@ -1416,43 +1471,22 @@ class LeveledAggView(SegmentedAggView):
         size-tiered's O(log_f n).
     Pick leveled when reads dominate (a frequently-queried rollup),
     size-tiered when the ingest rate dominates. Storage layout, manifest
-    format, crash safety, replay ledger, time travel, and vacuum are all
-    inherited unchanged — only ``compact`` differs, and both policies'
+    format, crash safety, replay ledger, time travel, vacuum and the
+    compaction loop are all inherited unchanged — only the victim choice
+    (``_victims``) differs, and both policies'
     reads re-apply the same merge algebra, so results are identical
     (pytest: 10-batch leveled ≡ size-tiered ≡ flat ≡ one-pass).
     """
 
-    def compact(self, spark: SparkSession) -> int:
-        self._check_or_write_spec()
-        rounds = 0
-        while True:
-            v0 = self.current_version()  # version the merge is derived from
-            segs = self.segments(v0)
-            tiers: dict[int, list[dict]] = {}
-            for s in segs:
-                tiers.setdefault(self._tier(s["weight"]), []).append(s)
-            victims: list[dict] | None = None
-            if len(tiers.get(0, [])) >= self.fanout:
-                victims = sorted(
-                    tiers[0], key=lambda s: (s["weight"], s["dir"])
-                )[: self.fanout]
-            else:
-                over = [t for t, m in tiers.items() if t >= 1 and len(m) >= 2]
-                if over:
-                    # merge the WHOLE offending tier (lowest first — the
-                    # result may land in a higher tier and cascade there)
-                    victims = tiers[min(over)]
-            if victims is None:
-                return rounds
-            merged = self._reagg(self._union_segments(spark, victims))
-            new_seg = self._write_segment(merged)
-            victim_dirs = {s["dir"] for s in victims}
-            survivors = [s for s in segs if s["dir"] not in victim_dirs]
-            survivors.append(
-                {"dir": new_seg, "weight": sum(s["weight"] for s in victims)}
-            )
-            self._commit(survivors, self.applied_batches(), base_v=v0)
-            rounds += 1
+    def _victims(self, tiers: dict[int, list[dict]]) -> list[dict] | None:
+        if len(tiers.get(0, [])) >= self.fanout:
+            return sorted(tiers[0], key=lambda s: (s["weight"], s["dir"]))[
+                : self.fanout
+            ]
+        over = [t for t, m in tiers.items() if t >= 1 and len(m) >= 2]
+        # merge the WHOLE offending tier (lowest first — the result may
+        # land in a higher tier and cascade there)
+        return tiers[min(over)] if over else None
 
 
 class FactDimRollupView:

@@ -790,6 +790,96 @@ def test_star_rollup_left_join_surfaces_referential_gaps(spark, tmp_path):
     assert len(orphan) == 1 and orphan[0].n_orders == n_fact - inner_total
 
 
+def _strip_recorded_schemas(path):
+    """Rewrite view directories as written before schemas were recorded:
+    no ``schema`` in any segmented manifest, no flat-view schema.json."""
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            if name == "schema.json":
+                os.remove(full)
+            elif name.startswith("m") and name.endswith(".json"):
+                with open(full) as f:
+                    manifest = json.load(f)
+                for s in manifest["segments"]:
+                    s.pop("schema", None)
+                with open(full, "w") as f:
+                    json.dump(manifest, f)
+
+
+def test_views_without_recorded_schemas_read_the_same(spark, tmp_path):
+    """A view written before segment/state schemas were recorded reads,
+    time-travels, compacts and vacuums to the same frames — legacy
+    segments are read with inference, and mix with newly recorded ones."""
+    batches = _li_batches(spark, 6)
+    sv = _seg_view(tmp_path / "seg", fanout=2)
+    flat = _mk_view(tmp_path / "flat")
+    for i, b in enumerate(batches):
+        sv.refresh(spark, b, batch_id=f"b{i}", compact=i < 4)
+        flat.refresh(spark, b, batch_id=f"b{i}")
+    assert [s["weight"] for s in sv.segments()] == [4, 1, 1]
+    seg_versions = range(1, sv.current_version() + 1)
+    before = {v: _frame_dict(sv.read(spark, version=v)) for v in seg_versions}
+    flat_before = {v: _canon(flat.read(spark, version=v)) for v in range(1, 7)}
+
+    _strip_recorded_schemas(tmp_path)
+    assert all("schema" not in s for v in seg_versions for s in sv.segments(v))
+    assert {v: _frame_dict(sv.read(spark, version=v)) for v in seg_versions} == before
+    assert {v: _canon(flat.read(spark, version=v)) for v in range(1, 7)} == flat_before
+
+    final = before[sv.current_version()]
+    assert sv.compact(spark) == 1  # merges the two stripped weight-1 segments
+    assert ["schema" in s for s in sv.segments()] == [False, True]
+    assert _frame_dict(sv.read(spark)) == final
+    assert sv.vacuum(keep_last=1)
+    assert _frame_dict(sv.read(spark)) == final
+
+    # a refresh on stripped flat state records its schema again
+    flat.refresh(spark, batches[0].limit(0), batch_id="empty")
+    assert _canon(flat.read(spark)) == flat_before[6]
+    assert flat.vacuum(keep_last=1)
+    assert _canon(flat.read(spark)) == flat_before[6]
+
+
+def test_segment_key_widened_across_batches_reads_as_union(spark, tmp_path):
+    """A key that arrives as int in one batch and bigint in a later one
+    reads back as the widened union of the per-segment scans — recorded
+    schemas in two groups, and the same frame once the records are
+    stripped (the inference fallback)."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from machinelearningalgomapreduce_spark.operators.matview import SegmentedAggView
+
+    li = load_tables(spark, SMOKE_SF_DIR).lineitem
+    narrow = li.filter(F.col("l_orderkey") % 2 == 0).withColumn(
+        "k", F.col("l_linenumber").cast("int")
+    )
+    wide = li.filter(F.col("l_orderkey") % 2 == 1).withColumn(
+        "k", F.col("l_linenumber").cast("bigint")
+    )
+    sv = SegmentedAggView(
+        str(tmp_path / "sv"),
+        keys=["k"],
+        aggs={"n_rows": ("count", "*"), "sum_qty": ("sum", "l_quantity")},
+    )
+    sv.refresh(spark, narrow, batch_id="narrow")
+    sv.refresh(spark, wide, batch_id="wide")
+    per_segment = reduce(DataFrame.unionByName, [
+        spark.read.parquet(os.path.join(sv.path, s["dir"], "data.parquet"))
+        for s in sv.segments()
+    ])
+    want = sv._reagg(per_segment)
+    assert dict(want.dtypes)["k"] == "bigint"
+
+    got = sv.read(spark)
+    assert got.dtypes == want.dtypes and _canon(got) == _canon(want)
+    _strip_recorded_schemas(tmp_path)
+    got = sv.read(spark)
+    assert got.dtypes == want.dtypes and _canon(got) == _canon(want)
+
+
 def test_segmented_view_ledger_cap(spark, tmp_path):
     """ledger_cap bounds the manifest's replay ledger to the newest N
     ids (recent replays still no-op; ancient ids age out — the flat
@@ -1358,7 +1448,7 @@ def test_stale_committed_manifest_is_never_reclaimed(spark, tmp_path):
     # lagging writer derived its content from v0 → tries to commit v1
     seg = sv._write_segment(sv._partial(b1))
     with pytest.raises(ValueError, match="version collision"):
-        sv._commit([{"dir": seg, "weight": 1}], ["late"], base_v=0)
+        sv._commit([seg], ["late"], base_v=0)
     # the winner's manifest survived untouched; pointer never moved
     assert sv.current_version() == 1
     assert sv._manifest(1) == committed
