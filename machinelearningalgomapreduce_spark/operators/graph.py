@@ -873,8 +873,7 @@ def scc_members(edges: DataFrame, pivot: str, max_rounds: int = 30) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Oracle-checked round-6 graph queries (deferred driver window — see
-# registry.DEFERRED_NEXT_WINDOW). Determinism discipline: ALL scoring is
+# Oracle-checked round-6 graph queries. Determinism discipline: ALL scoring is
 # exact integer arithmetic (micro-unit ranks, 2m-scaled modularity and
 # Louvain gains), so no float summation order can flip a result.
 

@@ -137,8 +137,7 @@ def heavy_hitters(
 
 
 # ---------------------------------------------------------------------------
-# Oracle-checked sketch queries (round-6 additions, deferred to the round-7
-# driver window — see registry.DEFERRED_NEXT_WINDOW).
+# Oracle-checked sketch queries (round-6 additions).
 #
 # The library tier above hashes with xxhash64 (fastest JVM-side option);
 # the ORACLE-CHECKED queries below re-derive every bucket from md5, the

@@ -161,42 +161,11 @@ DRIVER_GREEN_ROUND = {
 # the ledger-absorption guard do set algebra against it).
 DRIVER_GREEN = frozenset(DRIVER_GREEN_ROUND)
 
-# Never-driver-green queries ADDED MID-ROUND after the round's 50-entry
-# driver window was already committed to a specific cohort (VERDICT r5
-# item 3 prescribes round 6's window = the 4 driver-red classicml queries
-# + 46 of the stale-r2 cohort). A brand-new query would sort to the front
-# (key 0) and displace a prescribed entry, so mid-round additions are
-# DEFERRED: they take sort key 2.5 — after the stale-r2 cohort (key 2)
-# this round, but ahead of every fresher cohort, so the NEXT round's
-# window picks them up first (after any still-stale r2 rows). Remove
-# names from this set once they gain a DRIVER_GREEN_ROUND entry.
-DEFERRED_NEXT_WINDOW: frozenset[str] = frozenset({
-    # The 20 never-driver-checked queries (every one judge-verified via
-    # tools/check.py --arrow at sf0.01 in round 7); with the round-7 greens
-    # absorbed they hold the smallest sort key and fill window slots 1-20
-    # in round 8, closing full driver evidence (246 entering the round;
-    # q_quantile_hist, added mid-round-8 with no green row, sorts ahead
-    # of them at key 0.0 — slots 1 + 2-21 all fit the 50-window).
-    # sketches (md5-bucket oracle-checked forms)
-    # behavior (KM risk table, RFM, session entropy, overlap/LTV/churn/DAU)
-    # classifier / classicml (isotonic PAV, MCC, density ratio)
-    # tpch adaptations (Q9/Q21 shapes)
-    # sequence (HMM forward scoring)
-    # round-8 session-6 additions (operators/inference.py — the LAST
-    # module in _MODULES, so within this tier they sort AFTER the 20
-    # names above: the first takes window slot 50 and the rest rotate
-    # in next round without displacing the never-driver-checked set).
-    })
-_DEFER_KEY = 2.5
-
 
 def sort_key(name: str) -> float:
     """Registry ordering key: never-green first (0), then oldest latest
-    green round; mid-round deferred additions slot between the stale-r2
-    cohort and the r3 cohort (see DEFERRED_NEXT_WINDOW)."""
-    if name in DRIVER_GREEN_ROUND:
-        return float(DRIVER_GREEN_ROUND[name])
-    return _DEFER_KEY if name in DEFERRED_NEXT_WINDOW else 0.0
+    green round."""
+    return float(DRIVER_GREEN_ROUND.get(name, 0))
 
 
 def _collect() -> tuple[dict[str, Callable[[SparkSession, str], DataFrame]], dict[str, str]]:
@@ -225,8 +194,6 @@ def _collect() -> tuple[dict[str, Callable[[SparkSession, str], DataFrame]], dic
     # Tiered order: never-driver-green first, then by OLDEST latest-green
     # round (stable within tier), so the driver's 50-entry window checks
     # no-evidence queries first and otherwise re-greens the stalest rows.
-    # Mid-round additions are deferred behind the prescribed window
-    # (DEFERRED_NEXT_WINDOW above).
     order = sorted(queries, key=sort_key)
     queries = {n: queries[n] for n in order}
     oracles = {n: oracles[n] for n in order}

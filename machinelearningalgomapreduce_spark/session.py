@@ -70,6 +70,13 @@ def ensure_query_conf(spark: SparkSession) -> None:
     session invariant the scan layer depends on (fixture parquet stores
     TIMESTAMP(NANOS)); re-asserted here so driver-side execution self-heals
     if anything flipped it between load and action.
+
+    Contract on a shared session: the confs set here apply to the whole
+    session and are NOT restored afterwards. In particular this sets
+    ``spark.sql.ansi.enabled=true`` on the caller's session and leaves it
+    on, so any other work the caller runs on that session after query
+    construction also runs under ANSI (overflow and invalid casts raise
+    instead of returning wrapped values or NULL).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

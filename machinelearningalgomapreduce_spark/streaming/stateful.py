@@ -1,14 +1,23 @@
-"""Custom stateful streaming operator via applyInPandasWithState
+"""Custom stateful streaming operators via applyInPandasWithState
 (SURVEY.md §2E's 'stateful ops' row — arbitrary per-key state).
 
-Example operator: a per-user running profile (event count, value sum,
-last-seen timestamp) maintained incrementally across micro-batches. The
-state is O(1) per user; each micro-batch updates only the keys it saw —
-exactly the custom-Reducer-with-state job class MapReduce cannot express
-without re-reading its own output.
+Each operator keeps per-key state across micro-batches and updates only
+the keys a micro-batch saw — the custom-Reducer-with-state job class
+MapReduce cannot express without re-reading its own output:
 
-pytest drives it with trigger(availableNow) and diffs the final state
-against the batch groupBy aggregate.
+* ``user_profiles`` — running (count, value sum, last seen) per user;
+* ``user_ema`` — per-user exponential moving average of ``value``;
+* ``type_page_hinkley`` — Page-Hinkley drift monitor per event type;
+* ``type_ewma_control`` — adaptive EWMA control chart per event type;
+* ``type_cusum`` — two-sided tabular CUSUM per event type;
+* ``user_sessions`` — gap sessionizer closed by event-time timeouts
+  (append mode: each session is emitted exactly once);
+* ``user_type_mix`` — per-user event-type counts in a map state column;
+* ``user_recent_window`` — per-user last-``RECENT_N`` events in an array
+  state column.
+
+pytest drives each with trigger(availableNow) into a memory sink and
+diffs the result against the batch aggregate or a plain Python fold.
 """
 
 from __future__ import annotations
@@ -17,6 +26,7 @@ from collections.abc import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -227,9 +237,8 @@ EWC_ZERO_STATE = (0, 0.0, 0.0, 0.0, 1.0, 0)
 def fold_ewma_control(st: tuple, xs) -> tuple[tuple, int]:
     """Fold chronologically-ordered values into the EWMA-control state
     (n, mean, M2, z, p, n_alarms); returns (new_state, last_point_alarm).
-    The ONE copy of the detector arithmetic, shared by the
-    applyInPandasWithState operator here and the transformWithState port
-    in stateful_v2.py."""
+    Folding a series in any chunking equals folding it in one shot, which
+    is what makes the operator correct across micro-batch boundaries."""
     import math
 
     from machinelearningalgomapreduce_spark.operators.timeseries import (
@@ -271,8 +280,7 @@ def _update_ewma_control(
     # z seeds at the first observation; limits only engage from n ≥ 2,
     # when σ̂ exists. Events sort chronologically across ALL Arrow chunks
     # of the micro-batch (_ordered_values); across batches arrival order
-    # stands in for event time. The arithmetic lives in fold_ewma_control —
-    # ONE copy shared with the transformWithState port (stateful_v2.py).
+    # stands in for event time. The arithmetic lives in fold_ewma_control.
 
     (event_type,) = key
     st = state.get if state.exists else EWC_ZERO_STATE
@@ -338,9 +346,8 @@ CUS_ZERO_STATE = (0, 0.0, 0.0, 0.0, 0.0, 0)
 def fold_cusum(st: tuple, xs) -> tuple[tuple, int]:
     """Fold chronologically-ordered values into the two-sided tabular
     CUSUM state (n, mean, M2, S⁺, S⁻, n_alarms); returns
-    (new_state, last_point_alarm). The ONE copy of the detector
-    arithmetic, shared by the applyInPandasWithState operator here and
-    the transformWithState port in stateful_v2.py."""
+    (new_state, last_point_alarm). Chunk-invariant like
+    fold_ewma_control."""
     import math
 
     n, mean, m2, s_pos, s_neg, n_alarms = st
@@ -378,8 +385,7 @@ def _update_cusum(
     # k and h re-derive from σ̂ at every step. Limits engage from n ≥ 2.
     # State is O(1) per key; events sort chronologically across ALL Arrow
     # chunks of the micro-batch (_ordered_values); across batches arrival
-    # order stands in for event time. Arithmetic lives in fold_cusum —
-    # ONE copy shared with the transformWithState port (stateful_v2.py).
+    # order stands in for event time. Arithmetic lives in fold_cusum.
     (event_type,) = key
     st = state.get if state.exists else CUS_ZERO_STATE
     st, alarm = fold_cusum(st, _ordered_values(pdfs))
@@ -407,6 +413,241 @@ def type_cusum(events: DataFrame) -> DataFrame:
         _update_cusum,
         outputStructType=CUS_OUTPUT_SCHEMA,
         stateStructType=CUS_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, matching events.q_sessionize
+
+SESSION_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("start_us", T.LongType()),
+        T.StructField("last_us", T.LongType()),
+        T.StructField("n_events", T.LongType()),
+    ]
+)
+
+SESSION_OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("start_us", T.LongType()),
+        T.StructField("end_us", T.LongType()),
+        T.StructField("n_events", T.LongType()),
+        T.StructField("closed_by", T.StringType()),  # 'gap' | 'timer'
+    ]
+)
+
+
+def _update_session(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterable[pd.DataFrame]:
+    # State is the one OPEN session (start, last, count) per user. Each
+    # call folds the batch's events in time order: an in-gap event extends
+    # the session (a late one backwards: start = min); an over-gap event
+    # closes it inline ('gap') and opens the next; an event older than
+    # start − gap (possible when the watermark delay exceeds the gap)
+    # belongs to an earlier, already-over session and is emitted as its
+    # own closed singleton. The open session's event-time timeout sits at
+    # last + gap: when the watermark passes it, Spark calls back with
+    # hasTimedOut and the session is emitted ('timer') and its state
+    # removed — so state holds one tuple per OPEN session only.
+    (user_id,) = key
+    closed: list[tuple[int, int, int, str]] = []
+    if state.hasTimedOut:
+        start, last, n = state.get
+        state.remove()
+        closed.append((start, last, n, "timer"))
+    else:
+        times = sorted(int(t) for pdf in pdfs for t in pdf["us"])
+        start, last, n = state.get if state.exists else (None, None, 0)
+        for t in times:
+            if start is None:
+                start, last, n = t, t, 1
+            elif t < start - SESSION_GAP_US:
+                closed.append((t, t, 1, "gap"))
+            elif t - last <= SESSION_GAP_US:
+                start, last, n = min(start, t), max(last, t), n + 1
+            else:
+                closed.append((start, last, n, "gap"))
+                start, last, n = t, t, 1
+        if start is not None:
+            timeout_ms = (last + SESSION_GAP_US) // 1000
+            # setTimeoutTimestamp rejects a time below the watermark: the
+            # session is already past its timeout, so close it now.
+            if timeout_ms < state.getCurrentWatermarkMs():
+                state.remove()
+                closed.append((start, last, n, "timer"))
+            else:
+                state.update((start, last, n))
+                state.setTimeoutTimestamp(timeout_ms)
+    if closed:
+        yield pd.DataFrame(
+            {
+                "user_id": [user_id] * len(closed),
+                "start_us": [c[0] for c in closed],
+                "end_us": [c[1] for c in closed],
+                "n_events": [c[2] for c in closed],
+                "closed_by": [c[3] for c in closed],
+            }
+        )
+
+
+def user_sessions(events: DataFrame, watermark_delay: str = "30 seconds") -> DataFrame:
+    """Timer-closed gap sessionization stream (append mode): every session
+    is emitted exactly once, when a later over-gap event closes it
+    ('gap') or when the watermark passes last + SESSION_GAP_US ('timer').
+    Input needs (user_id, ts); ``ts`` feeds the watermark, its epoch
+    micros the fold. Events later than ``watermark_delay`` are dropped by
+    the engine, so a delay wider than the gap is what lets late events
+    reach the backwards extension and the singleton rule."""
+    return (
+        events.withColumn("us", F.unix_micros("ts"))
+        .withWatermark("ts", watermark_delay)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _update_session,
+            outputStructType=SESSION_OUTPUT_SCHEMA,
+            stateStructType=SESSION_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
+
+TYPEMIX_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("counts", T.MapType(T.StringType(), T.LongType())),
+        # map keys cannot be NULL, so the NULL type's count lives apart
+        T.StructField("n_null", T.LongType()),
+    ]
+)
+
+TYPEMIX_OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("n_types", T.LongType()),
+        T.StructField("n_events", T.LongType()),
+        T.StructField("top_type", T.StringType()),
+        T.StructField("top_count", T.LongType()),
+    ]
+)
+
+
+def _update_type_mix(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterable[pd.DataFrame]:
+    # State is one event_type → count map per user (plus the NULL type's
+    # count). The modal type breaks count ties toward the smallest type,
+    # NULL first — the order Spark's min_by over struct(-count, type)
+    # uses in the batch twin.
+    (user_id,) = key
+    counts, n_null = state.get if state.exists else ({}, 0)
+    counts = dict(counts)
+    for pdf in pdfs:
+        # dropna=False: the batch twin's groupBy keeps the NULL type group
+        for ty, cnt in pdf["event_type"].value_counts(dropna=False).items():
+            if pd.isna(ty):
+                n_null += int(cnt)
+            else:
+                counts[ty] = counts.get(ty, 0) + int(cnt)
+    state.update((counts, n_null))
+    ranked = [(-cnt, True, ty) for ty, cnt in counts.items()]
+    if n_null:
+        ranked.append((-n_null, False, ""))
+    neg_top, is_typed, top = min(ranked)
+    yield pd.DataFrame(
+        {
+            "user_id": [user_id],
+            "n_types": [len(ranked)],
+            "n_events": [sum(counts.values()) + n_null],
+            "top_type": [top if is_typed else None],
+            "top_count": [-neg_top],
+        }
+    )
+
+
+def user_type_mix(events: DataFrame) -> DataFrame:
+    """Streaming per-user event-type mix: emits (distinct types, total
+    events, modal type, its count) for every user seen in each
+    micro-batch. Input needs (user_id, event_type). Batch twin:
+    groupBy(user_id, event_type) counts, then count/sum/min_by."""
+    return events.groupBy("user_id").applyInPandasWithState(
+        _update_type_mix,
+        outputStructType=TYPEMIX_OUTPUT_SCHEMA,
+        stateStructType=TYPEMIX_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+RECENT_N = 5
+
+RECENT_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField(
+            "recent",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("us", T.LongType()),
+                        T.StructField("event_id", T.LongType()),
+                        T.StructField("cents", T.LongType()),
+                    ]
+                )
+            ),
+        ),
+    ]
+)
+
+RECENT_OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("n_recent", T.LongType()),
+        T.StructField("recent_cents", T.LongType()),
+        T.StructField("max_cents", T.LongType()),
+        T.StructField("last_us", T.LongType()),
+    ]
+)
+
+
+def _update_recent_window(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterable[pd.DataFrame]:
+    # State is the newest RECENT_N (us, event_id, cents) rows per user,
+    # sorted by (us, event_id), so a late event — within a batch or across
+    # batches — displaces an older row or is evicted at once, never a
+    # newer one. O(1) per key by the cap.
+    (user_id,) = key
+    kept = [tuple(r) for r in state.get[0]] if state.exists else []
+    for pdf in pdfs:
+        kept.extend(
+            (int(u), int(e), int(c))
+            for u, e, c in zip(pdf["us"], pdf["event_id"], pdf["cents"])
+        )
+    kept = sorted(kept)[-RECENT_N:]
+    state.update((kept,))
+    yield pd.DataFrame(
+        {
+            "user_id": [user_id],
+            "n_recent": [len(kept)],
+            "recent_cents": [sum(c for _u, _e, c in kept)],
+            "max_cents": [max(c for _u, _e, c in kept)],
+            "last_us": [kept[-1][0]],
+        }
+    )
+
+
+def user_recent_window(events: DataFrame) -> DataFrame:
+    """Streaming per-user last-N window: emits the rolling (count, exact
+    integer cents sum, max, last seen) over the newest RECENT_N events for
+    every user seen in each micro-batch. Input needs (user_id, us,
+    event_id, cents). Batch twin: row_number over (us desc, event_id
+    desc) ≤ RECENT_N, then the same aggregate."""
+    return events.groupBy("user_id").applyInPandasWithState(
+        _update_recent_window,
+        outputStructType=RECENT_OUTPUT_SCHEMA,
+        stateStructType=RECENT_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -51,3 +51,43 @@ def drain(q, timeout: int = 420) -> None:
             f"stream did not terminate within {timeout}s (host too slow or "
             f"a real hang): {status}"
         )
+
+
+def file_stream(spark, root, frames):
+    """readStream over one parquet file per Spark frame, in list order.
+
+    Each frame is written as a single file under ``root/src`` with a
+    strictly increasing mtime, and the stream reads one file per trigger
+    (maxFilesPerTrigger=1), so every frame is its own micro-batch and
+    the watermark advances between them."""
+    import shutil
+
+    src = root / "src"
+    src.mkdir()
+    for i, df in enumerate(frames):
+        staging = root / f"staging{i}"
+        df.coalesce(1).write.parquet(str(staging))
+        part = next(p for p in staging.iterdir() if p.name.endswith(".parquet"))
+        dest = src / f"{i:03d}.parquet"
+        shutil.copy(part, dest)
+        os.utime(dest, (1_000_000 + 100 * i, 1_000_000 + 100 * i))
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+
+
+def run_stream(stream_df, name, checkpoint, output_mode="update"):
+    """Drain ``stream_df`` into memory table ``name`` with
+    trigger(availableNow); returns (collected rows, the finished query)."""
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", str(checkpoint))
+        .trigger(availableNow=True)
+        .start()
+    )
+    drain(q, 600)
+    return stream_df.sparkSession.table(name).collect(), q

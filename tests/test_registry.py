@@ -126,20 +126,8 @@ def test_driver_window_covers_never_checked_modules():
     allowed — the overflow rotates into the window next round once this
     round's CORRECTNESS greens move into DRIVER_GREEN."""
     order = list(registry.queries())
-    # Mid-round deferred additions (DEFERRED_NEXT_WINDOW) are never-green
-    # but intentionally sorted behind the prescribed window; the leading
-    # tier is the NON-deferred never-green set.
-    never_green = [
-        n for n in order
-        if n not in registry.DRIVER_GREEN and n not in registry.DEFERRED_NEXT_WINDOW
-    ]
+    never_green = [n for n in order if n not in registry.DRIVER_GREEN]
     assert not registry.DRIVER_GREEN - set(order), "DRIVER_GREEN names unknown queries"
-    assert not registry.DEFERRED_NEXT_WINDOW - set(order), (
-        "DEFERRED_NEXT_WINDOW names unknown queries"
-    )
-    assert not registry.DEFERRED_NEXT_WINDOW & registry.DRIVER_GREEN, (
-        "a driver-green query must not stay deferred — drop it from the set"
-    )
     if len(never_green) > 50:
         # Window must consist ENTIRELY of never-green queries.
         wasted = [n for n in order[:50] if n in registry.DRIVER_GREEN]

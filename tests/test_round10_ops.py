@@ -159,143 +159,6 @@ def test_learned_ivf_output_contract_matches_q_sim_ann(spark, sf_dir):
         assert len(ranks) <= ANN_K
 
 
-class _FakeValueState:
-    def __init__(self) -> None:
-        self._v = None
-
-    def exists(self) -> bool:
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v) -> None:
-        self._v = v
-
-
-class _FakeHandle:
-    def __init__(self) -> None:
-        self.states: dict = {}
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _FakeValueState())
-
-
-def _tws_monitor_differential(spark, sf_dir, v1_op, tws_op, proc_cls, table, cols):
-    """Shared dual-mode differential (the test_stateful discipline, never a
-    skip): expected = the v1 applyInPandasWithState engine run (itself
-    diffed against an independent Python fold in test_stateful.py); got =
-    the real TWS engine when google.protobuf exists, else the SAME
-    processor instance driven per key through a fake handle in CHUNKED
-    calls (state must persist across calls)."""
-    import importlib.util
-
-    from pyspark.sql import functions as F
-
-    from machinelearningalgomapreduce_spark.sources.catalog import load_tables
-    from machinelearningalgomapreduce_spark.streaming import windows as sw
-
-    stream = sw.stream_events(spark, sf_dir).select(
-        "event_type", "value", F.unix_micros("ts").alias("us"), "event_id"
-    )
-    expected_df = sw.run_to_memory(v1_op(stream), f"v1_{table}", output_mode="update")
-    # later emissions overwrite earlier ones (n is monotone per key)
-    expected = {
-        r.event_type: tuple(r[c] for c in cols)
-        for r in expected_df.orderBy("n").collect()
-    }
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-
-    if has_protobuf:
-        out = sw.run_to_memory(tws_op(stream), f"v2_{table}", output_mode="update")
-        got = {
-            r.event_type: tuple(r[c] for c in cols)
-            for r in out.orderBy("n").collect()
-        }
-    else:
-        rows = (
-            load_tables(spark, sf_dir)
-            .events.select("event_type", "value", F.unix_micros("ts").alias("us"), "event_id")
-            .toPandas()
-        )
-        got = {}
-        for ty, pdf in rows.groupby("event_type"):
-            proc = proc_cls()
-            proc.init(_FakeHandle())
-            pdf = pdf.sort_values(["us", "event_id"]).reset_index(drop=True)
-            n_chunks, emitted = 3, None
-            # chronological micro-batches (contiguous slices), each split
-            # into two interleaved Arrow chunks to exercise the cross-chunk
-            # ordering inside ONE handleInputRows call
-            for i in range(n_chunks):
-                lo = len(pdf) * i // n_chunks
-                hi = len(pdf) * (i + 1) // n_chunks
-                batch = pdf.iloc[lo:hi]
-                if batch.empty:
-                    continue
-                chunks = [batch.iloc[1::2], batch.iloc[0::2]]
-                for out_pdf in proc.handleInputRows((ty,), chunks, None):
-                    emitted = out_pdf
-            got[ty] = tuple(emitted.iloc[0][c] for c in cols)
-    assert set(got) == set(expected)
-    for ty in expected:
-        assert got[ty] == expected[ty], ty
-
-
-def test_tws_cusum_matches_v1_operator(spark, sf_dir):
-    """VERDICT r9 item 6b: the transformWithState CUSUM port emits the
-    same final per-type state as the applyInPandasWithState twin."""
-    from machinelearningalgomapreduce_spark.streaming.stateful import type_cusum
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
-        CusumProcessor,
-        type_cusum_tws,
-    )
-
-    _tws_monitor_differential(
-        spark, sf_dir, type_cusum, type_cusum_tws, CusumProcessor,
-        "cus10", ("n", "s_pos", "s_neg", "n_alarms"),
-    )
-
-
-def test_tws_ewma_control_matches_v1_operator(spark, sf_dir):
-    """VERDICT r9 item 6b: the transformWithState EWMA-control port emits
-    the same final per-type state as the applyInPandasWithState twin."""
-    from machinelearningalgomapreduce_spark.streaming.stateful import type_ewma_control
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
-        EwmaControlProcessor,
-        type_ewma_control_tws,
-    )
-
-    _tws_monitor_differential(
-        spark, sf_dir, type_ewma_control, type_ewma_control_tws, EwmaControlProcessor,
-        "ewc10", ("n", "z", "n_alarms"),
-    )
-
-
-def test_tws_monitor_wiring_constructs(spark, sf_dir):
-    """The transformWithStateInPandas plans must ANALYZE regardless of
-    protobuf availability (the sessionize_tws wiring discipline)."""
-    from pyspark.sql import functions as F
-
-    from machinelearningalgomapreduce_spark.streaming import windows as sw
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
-        type_cusum_tws,
-        type_ewma_control_tws,
-    )
-
-    stream = sw.stream_events(spark, sf_dir).select(
-        "event_type", "value", F.unix_micros("ts").alias("us"), "event_id"
-    )
-    for op in (type_cusum_tws, type_ewma_control_tws):
-        out = op(stream)
-        assert out.isStreaming
-        assert "event_type" in out.columns and "n_alarms" in out.columns
-
-
 def test_kmeans_parallel_init_matches_pp_quality(spark, sf_dir):
     """VERDICT r9 'What's wrong' #3: k-means‖ oversampling seeding runs
     O(log k) full passes instead of kmeans_pp_init's k−1, and must not
@@ -332,65 +195,24 @@ def test_kmeans_parallel_init_matches_pp_quality(spark, sf_dir):
     assert k_center_obj(par) <= 1.5 * k_center_obj(pp)
 
 
-class _FakeMapState:
-    def __init__(self) -> None:
-        self._m: dict = {}
-
-    def exists(self) -> bool:
-        return bool(self._m)
-
-    def containsKey(self, key) -> bool:
-        return tuple(key) in self._m
-
-    def getValue(self, key):
-        return self._m[tuple(key)]
-
-    def updateValue(self, key, value) -> None:
-        self._m[tuple(key)] = tuple(value)
-
-    def iterator(self):
-        return iter(sorted(self._m.items()))
-
-    def keys(self):
-        return iter(sorted(self._m))
-
-    def values(self):
-        return (self._m[k] for k in sorted(self._m))
-
-    def removeKey(self, key) -> None:
-        self._m.pop(tuple(key), None)
-
-    def clear(self) -> None:
-        self._m.clear()
-
-
-class _FakeMapHandle:
-    def __init__(self) -> None:
-        self.states: dict = {}
-
-    def getMapState(self, name, key_schema, value_schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _FakeMapState())
-
-
-def test_tws_user_type_mix_matches_batch(spark, sf_dir):
-    """MapState family member (the value-state/timer processors don't
-    exercise it): per-user event-type mix must equal the batch
-    countDistinct/count/modal-type aggregate. Dual mode, never a skip:
-    real engine when protobuf exists, else the processor driven per key
-    through a fake MapState handle in chunked micro-batches."""
-    import importlib.util
-
+def test_user_type_mix_matches_batch(spark, sf_dir, tmp_path):
+    """Map-state operator: the per-user event-type mix equals the batch
+    countDistinct/count/modal-type aggregate, NULL type included. Three
+    source files split by event_id, so the map state crosses
+    micro-batches."""
     from pyspark.sql import functions as F
 
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
-    from machinelearningalgomapreduce_spark.streaming import windows as sw
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
-        UserTypeMixProcessor,
-        user_type_mix_tws,
-    )
+    from machinelearningalgomapreduce_spark.streaming.stateful import user_type_mix
+    from tests.conftest import file_stream, run_stream
 
-    events = load_tables(spark, sf_dir).events
-    # modal type: max count, lexicographically-smallest tie-break
+    # every 4th event gets a NULL type: the batch groupBy keeps that group
+    events = load_tables(spark, sf_dir).events.select(
+        "user_id",
+        "event_id",
+        F.when(F.col("event_id") % 4 != 0, F.col("event_type")).alias("event_type"),
+    )
+    # modal type: max count, smallest type (NULL first) on ties
     per_ty = events.groupBy("user_id", "event_type").agg(F.count("*").alias("cnt_ty"))
     batch = per_ty.groupBy("user_id").agg(
         F.count("*").alias("n_types"),
@@ -405,50 +227,18 @@ def test_tws_user_type_mix_matches_batch(spark, sf_dir):
         for r in batch.collect()
     }
 
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-
-    if has_protobuf:
-        stream = sw.stream_events(spark, sf_dir).select("user_id", "event_type")
-        out = sw.run_to_memory(user_type_mix_tws(stream), "t_typemix", output_mode="update")
-        got = {
-            r.user_id: (r.n_types, r.n_events, r.top_type, r.top_count)
-            for r in out.orderBy("n_events").collect()
-        }
-    else:
-        rows = events.select("user_id", "event_type").toPandas()
-        got = {}
-        for uid, pdf in rows.groupby("user_id"):
-            proc = UserTypeMixProcessor()
-            proc.init(_FakeMapHandle())
-            emitted = None
-            n_chunks = 3
-            for i in range(n_chunks):
-                chunk = pdf.iloc[i::n_chunks]
-                if chunk.empty:
-                    continue
-                for out_pdf in proc.handleInputRows((uid,), [chunk], None):
-                    emitted = out_pdf
-            r = emitted.iloc[0]
-            got[uid] = (r.n_types, r.n_events, r.top_type, r.top_count)
-    assert set(got) == set(expected)
-    for uid in expected:
-        assert got[uid] == expected[uid], uid
-
-
-def test_tws_user_type_mix_wiring_constructs(spark, sf_dir):
-    from machinelearningalgomapreduce_spark.streaming import windows as sw
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
-        user_type_mix_tws,
+    stream = file_stream(
+        spark, tmp_path, [events.filter(F.col("event_id") % 3 == i) for i in range(3)]
     )
-
-    stream = sw.stream_events(spark, sf_dir).select("user_id", "event_type")
-    out = user_type_mix_tws(stream)
-    assert out.isStreaming and out.columns == [
-        "user_id", "n_types", "n_events", "top_type", "top_count",
-    ]
+    rows, _q = run_stream(
+        user_type_mix(stream.select("user_id", "event_type")), "t_typemix", tmp_path / "ck"
+    )
+    # later emissions overwrite earlier ones (n_events grows per key)
+    got = {
+        r.user_id: (r.n_types, r.n_events, r.top_type, r.top_count)
+        for r in sorted(rows, key=lambda r: r.n_events)
+    }
+    assert got == expected
 
 
 # ---- fold chunk-invariance (hypothesis) -----------------------------------
@@ -504,54 +294,20 @@ def test_fold_ewma_control_chunk_invariant(xs, cuts):
     assert whole == chunked
 
 
-class _FakeListState:
-    def __init__(self) -> None:
-        self._l: list = []
-
-    def exists(self) -> bool:
-        return bool(self._l)
-
-    def get(self):
-        return iter(list(self._l))
-
-    def put(self, new_state) -> None:
-        self._l = [tuple(t) for t in new_state]
-
-    def appendValue(self, value) -> None:
-        self._l.append(tuple(value))
-
-    def appendList(self, values) -> None:
-        self._l.extend(tuple(v) for v in values)
-
-    def clear(self) -> None:
-        self._l.clear()
-
-
-class _FakeListHandle:
-    def __init__(self) -> None:
-        self.states: dict = {}
-
-    def getListState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _FakeListState())
-
-
-def test_tws_user_recent_window_matches_batch(spark, sf_dir):
-    """ListState family member (the last state-variable type): the
-    per-user last-N rolling window must equal the batch row_number-over-
-    (us desc, event_id desc) ≤ N aggregate — exact integers both sides.
-    Dual mode, never a skip."""
-    import importlib.util
-
+def test_user_recent_window_matches_batch(spark, sf_dir, tmp_path):
+    """Array-state operator: the per-user last-N rolling window equals the
+    batch row_number-over-(us desc, event_id desc) ≤ N aggregate — exact
+    integers both sides. Three source files split by event_id, so older
+    events keep arriving after newer ones across micro-batches."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
-    from machinelearningalgomapreduce_spark.streaming import windows as sw
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
+    from machinelearningalgomapreduce_spark.streaming.stateful import (
         RECENT_N,
-        UserRecentWindowProcessor,
-        user_recent_window_tws,
+        user_recent_window,
     )
+    from tests.conftest import file_stream, run_stream
 
     events = load_tables(spark, sf_dir).events.select(
         "user_id",
@@ -576,71 +332,34 @@ def test_tws_user_recent_window_matches_batch(spark, sf_dir):
         for r in batch.collect()
     }
 
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-
-    if has_protobuf:
-        stream = sw.stream_events(spark, sf_dir).select(
-            "user_id",
-            F.unix_micros("ts").alias("us"),
-            "event_id",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        out = sw.run_to_memory(
-            user_recent_window_tws(stream), "t_recent_tws", output_mode="update"
-        )
-        got = {
-            r.user_id: (r.n_recent, r.recent_cents, r.max_cents, r.last_us)
-            for r in out.orderBy("last_us").collect()
-        }
-    else:
-        rows = events.toPandas()
-        got = {}
-        for uid, pdf in rows.groupby("user_id"):
-            proc = UserRecentWindowProcessor()
-            proc.init(_FakeListHandle())
-            pdf = pdf.sort_values(["us", "event_id"]).reset_index(drop=True)
-            emitted = None
-            n_chunks = 3
-            for i in range(n_chunks):  # chronological micro-batches
-                lo = len(pdf) * i // n_chunks
-                hi = len(pdf) * (i + 1) // n_chunks
-                batch_pdf = pdf.iloc[lo:hi]
-                if batch_pdf.empty:
-                    continue
-                for out_pdf in proc.handleInputRows((uid,), [batch_pdf], None):
-                    emitted = out_pdf
-            r = emitted.iloc[0]
-            got[uid] = (r.n_recent, r.recent_cents, r.max_cents, r.last_us)
-    assert set(got) == set(expected)
-    for uid in expected:
-        assert got[uid] == expected[uid], uid
+    stream = file_stream(
+        spark, tmp_path, [events.filter(F.col("event_id") % 3 == i) for i in range(3)]
+    )
+    rows, _q = run_stream(user_recent_window(stream), "t_recent", tmp_path / "ck")
+    # the memory sink keeps batch order: a user's last row is its final window
+    got = {r.user_id: (r.n_recent, r.recent_cents, r.max_cents, r.last_us) for r in rows}
+    assert got == expected
 
 
-def test_tws_user_recent_window_late_event_displacement(spark):
-    """A late (old) event arriving after newer ones must NOT displace a
-    newer row once the window is full — the sorted-cap semantics."""
-    import pandas as pd
-
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
+def test_user_recent_window_late_event_displacement(spark, tmp_path):
+    """A late (old) event arriving in a later micro-batch, once the window
+    is full, is evicted at once and never displaces a newer row."""
+    from machinelearningalgomapreduce_spark.streaming.stateful import (
         RECENT_N,
-        UserRecentWindowProcessor,
+        user_recent_window,
     )
+    from tests.conftest import file_stream, run_stream
 
-    proc = UserRecentWindowProcessor()
-    proc.init(_FakeListHandle())
-    fresh = pd.DataFrame(
-        {"us": [10, 20, 30, 40, 50], "event_id": [1, 2, 3, 4, 5],
-         "cents": [100, 200, 300, 400, 500]}
-    )
-    [out1] = list(proc.handleInputRows((7,), [fresh], None))
-    assert out1.iloc[0].n_recent == RECENT_N and out1.iloc[0].recent_cents == 1500
-    late = pd.DataFrame({"us": [5], "event_id": [0], "cents": [9999]})
-    [out2] = list(proc.handleInputRows((7,), [late], None))
-    # the late event sorts below every kept row and is evicted immediately
-    assert out2.iloc[0].recent_cents == 1500 and out2.iloc[0].max_cents == 500
+    schema = "user_id long, us long, event_id long, cents long"
+    fresh = [(7, 10 * i, i, 100 * i) for i in range(1, RECENT_N + 1)]
+    frames = [
+        spark.createDataFrame(fresh, schema),
+        spark.createDataFrame([(7, 5, 0, 9999)], schema),
+    ]
+    stream = file_stream(spark, tmp_path, frames)
+    rows, _q = run_stream(user_recent_window(stream), "t_recent_late", tmp_path / "ck")
+    # one emission per micro-batch, both the window of the five fresh rows
+    assert [tuple(r) for r in rows] == [(7, RECENT_N, 1500, 500, 50)] * 2
 
 
 def test_knn_ann_twin_matches_brute_task_contract(spark, sf_dir):

@@ -411,145 +411,13 @@ def test_viterbi_single_exchange(spark, sf_dir):
     assert P.count_exchanges(seq.viterbi_decode(events)) <= 1
 
 
-# ------------------------------------ timer-based sessionizer (tws v2)
+# ------------------------------- timer-closed sessionizer (user_sessions)
 
-class _TimerFakeValueState:
-    def __init__(self):
-        self.value = None
+def _gap_sessions(rows):
+    """Reference fold: per-user gap sessions (start, end, n) over
+    time-ordered (user_id, us) rows."""
+    from machinelearningalgomapreduce_spark.streaming.stateful import SESSION_GAP_US
 
-    def exists(self):
-        return self.value is not None
-
-    def get(self):
-        return self.value
-
-    def update(self, v):
-        self.value = v
-
-    def clear(self):
-        self.value = None
-
-
-class _TimerFakeHandle:
-    """Faithful fake of StatefulProcessorHandle incl. the timer API —
-    mirrors test_stateful._FakeHandle (same no-protobuf rationale)."""
-
-    def __init__(self):
-        self.states = {}
-        self.timers = set()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _TimerFakeValueState())
-
-    def registerTimer(self, expiry_ms):
-        self.timers.add(int(expiry_ms))
-
-    def deleteTimer(self, expiry_ms):
-        self.timers.discard(int(expiry_ms))
-
-    def listTimers(self):
-        return list(self.timers)
-
-
-def test_sessionizer_timers_match_batch_fold(spark, sf_dir, tmp_path):
-    """Every session the streaming sessionizer emits matches the plain
-    Python gap-fold of the same events exactly; all non-final sessions
-    close inline ('gap'), final ones only via event-time timers.
-
-    Two execution modes, never a skip (the test_stateful discipline):
-    with google.protobuf the differential runs through the real engine
-    over a two-file source (maxFilesPerTrigger=1 advances the watermark
-    between micro-batches so timers can fire); without it the SAME
-    SessionizerProcessor is driven per key through a fake handle in
-    chunked calls, with timer expiry simulated at the final watermark."""
-    import importlib.util
-    import shutil
-
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
-        SESSION_GAP_US,
-        SessionizerProcessor,
-        sessionize_tws,
-    )
-
-    events = (
-        load_tables(spark, sf_dir).events
-        .select("user_id", "ts", F.unix_micros("ts").alias("us"))
-    )
-    rows = sorted(events.collect(), key=lambda r: (r["us"], r["user_id"]))
-    cut = rows[len(rows) // 2]["us"]
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-
-    if has_protobuf:
-        # Two source files split by event time (older file first by mtime)
-        # so availableNow + maxFilesPerTrigger=1 advances the watermark
-        # between micro-batches.
-        src = tmp_path / "src"
-        src.mkdir()
-        import os as _os
-
-        for i, pred in enumerate([F.col("us") <= cut, F.col("us") > cut]):
-            staging = tmp_path / f"h{i}"
-            events.filter(pred).select("user_id", "ts").coalesce(1).write.parquet(
-                str(staging)
-            )
-            part = next(p for p in staging.iterdir() if p.name.endswith(".parquet"))
-            dest = src / f"{i}_half.parquet"
-            shutil.copy(part, dest)
-            _os.utime(dest, (1_000_000 + i * 100, 1_000_000 + i * 100))
-
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
-        q = (
-            sessionize_tws(stream)
-            .writeStream.format("memory")
-            .queryName("t_sessions_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain(q, 600)
-        got = spark.sql("SELECT * FROM t_sessions_tws").collect()
-    else:
-        import pandas as pd
-
-        watermark_us = rows[-1]["us"] - 30 * 1_000_000  # the stream's delay
-        got = []
-        by_user: dict[int, list[int]] = {}
-        for r in rows:
-            by_user.setdefault(r["user_id"], []).append(r["us"])
-        for uid, times in by_user.items():
-            proc = SessionizerProcessor()
-            handle = _TimerFakeHandle()
-            proc.init(handle)
-            # Split at the same event-time cut as the real-engine source.
-            for chunk in ([t for t in times if t <= cut], [t for t in times if t > cut]):
-                if not chunk:
-                    continue
-                got.extend(
-                    r
-                    for out in proc.handleInputRows(
-                        (uid,), [pd.DataFrame({"us": chunk})], None
-                    )
-                    for r in out.to_dict("records")
-                )
-            for expiry_ms in sorted(handle.listTimers()):
-                if expiry_ms <= watermark_us // 1000:
-                    got.extend(
-                        r
-                        for out in proc.handleExpiredTimer((uid,), None, None)
-                        for r in out.to_dict("records")
-                    )
-            proc.close()
-
-    # Reference fold: per-user gap sessions over ALL events.
     per_user: dict[int, list[int]] = {}
     for r in rows:
         per_user.setdefault(r["user_id"], []).append(r["us"])
@@ -566,30 +434,55 @@ def test_sessionizer_timers_match_batch_fold(spark, sf_dir, tmp_path):
                 start, last, n = t, t, 1
         sessions.append((start, last, n))
         expected[uid] = sessions
-
-    exp_all = {(u, *s) for u, ss in expected.items() for s in ss}
-    exp_final = {(u, *ss[-1]) for u, ss in expected.items()}
-    got_gap = {(r["user_id"], r["start_us"], r["end_us"], r["n_events"])
-               for r in got if r["closed_by"] == "gap"}
-    got_timer = {(r["user_id"], r["start_us"], r["end_us"], r["n_events"])
-                 for r in got if r["closed_by"] == "timer"}
-    assert got_gap == exp_all - exp_final
-    assert got_timer <= exp_final
-    assert len(got_gap) > 0
+    return expected
 
 
-def test_sessionizer_tws_wiring_constructs(spark, sf_dir):
-    """The TWS wiring (watermark, EventTime timeMode, Append, output
-    schema) must ANALYZE regardless of protobuf availability."""
-    from machinelearningalgomapreduce_spark.streaming import windows as sw
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
-        SESSION_OUTPUT_SCHEMA,
-        sessionize_tws,
+def _fixture_halves(spark, sf_dir):
+    """(sorted rows, [events ≤ cut, events > cut]) split at the median
+    event time, as (user_id, ts) frames."""
+    events = load_tables(spark, sf_dir).events.select(
+        "user_id", "ts", F.unix_micros("ts").alias("us")
+    )
+    rows = sorted(events.collect(), key=lambda r: (r["us"], r["user_id"]))
+    cut = rows[len(rows) // 2]["us"]
+    halves = [
+        events.filter(pred).select("user_id", "ts")
+        for pred in (F.col("us") <= cut, F.col("us") > cut)
+    ]
+    return rows, halves
+
+
+def _sessions(got, closed_by):
+    return [
+        (r["user_id"], r["start_us"], r["end_us"], r["n_events"])
+        for r in got
+        if r["closed_by"] == closed_by
+    ]
+
+
+def test_sessionizer_timers_match_batch_fold(spark, sf_dir, tmp_path):
+    """Every session user_sessions emits matches the plain Python gap-fold
+    of the same events exactly: all non-final sessions close inline
+    ('gap'), final ones only through event-time timeouts ('timer'). Two
+    source files split by event time, one per micro-batch, so the
+    watermark advances and timeouts can fire."""
+    from machinelearningalgomapreduce_spark.streaming.stateful import user_sessions
+    from tests.conftest import file_stream, run_stream
+
+    rows, halves = _fixture_halves(spark, sf_dir)
+    stream = file_stream(spark, tmp_path, halves)
+    got, _q = run_stream(
+        user_sessions(stream), "t_sessions", tmp_path / "ck", output_mode="append"
     )
 
-    out = sessionize_tws(sw.stream_events(spark, sf_dir).select("user_id", "ts"))
-    assert out.isStreaming
-    assert out.schema == SESSION_OUTPUT_SCHEMA
+    expected = _gap_sessions(rows)
+    exp_all = {(u, *s) for u, ss in expected.items() for s in ss}
+    exp_final = {(u, *ss[-1]) for u, ss in expected.items()}
+    got_gap = set(_sessions(got, "gap"))
+    got_timer = set(_sessions(got, "timer"))
+    assert got_gap == exp_all - exp_final
+    assert got_timer <= exp_final
+    assert len(got_gap) > 0 and len(got_timer) > 0
 
 
 # ------------------------- two-stage retrieval (JL project + re-rank)
@@ -1030,34 +923,51 @@ def test_ppr_isolated_seed_keeps_mass(spark):
     assert math.isclose(sum(rows.values()), 1.0, rel_tol=1e-9)
 
 
-def test_sessionizer_late_events(spark):
-    """Out-of-order arrivals: an in-gap late event extends the session
+def test_sessionizer_late_events(spark, tmp_path):
+    """Out-of-order arrivals, three micro-batches with a watermark delay
+    wider than the gap: an in-gap late event extends the open session
     BACKWARDS (start = min); one older than start − gap is emitted as its
-    own closed singleton, never folded into a session it predates."""
-    import pandas as pd
-
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
+    own closed 'gap' singleton, never folded into a session it predates.
+    An event that reaches the operator when its session's timeout is
+    already below the watermark (user 2: the engine filters late rows by
+    the previous batch's watermark, the timeout is checked against the
+    current one) closes at once as 'timer'."""
+    from machinelearningalgomapreduce_spark.streaming.stateful import (
         SESSION_GAP_US,
-        SessionizerProcessor,
+        user_sessions,
     )
+    from tests.conftest import file_stream, run_stream
 
-    proc = SessionizerProcessor()
-    proc.init(_TimerFakeHandle())
-    base = 10_000_000_000
-    out = []
-    for chunk in ([base], [base - SESSION_GAP_US // 2], [base - 5 * SESSION_GAP_US]):
-        out.extend(
-            r
-            for pdf in proc.handleInputRows((1,), [pd.DataFrame({"us": chunk})], None)
-            for r in pdf.to_dict("records")
+    base = 1_700_000_000_000_000
+    batches = [
+        [(1, base)],
+        [(1, base - SESSION_GAP_US // 2), (2, base - 10 * SESSION_GAP_US)],
+        # the old event, and one past the gap that closes the open session
+        [(1, base - 5 * SESSION_GAP_US), (1, base + 3 * SESSION_GAP_US)],
+    ]
+    frames = [
+        spark.createDataFrame(rows, "user_id long, us long").select(
+            "user_id", F.timestamp_micros("us").alias("ts")
         )
-    # The very-old event came out as a singleton; the open session was
-    # extended backwards by the in-gap late event.
-    assert [
-        (r["start_us"], r["end_us"], r["n_events"], r["closed_by"]) for r in out
-    ] == [(base - 5 * SESSION_GAP_US, base - 5 * SESSION_GAP_US, 1, "gap")]
-    start, last, n = proc._state.get()
-    assert (start, last, n) == (base - SESSION_GAP_US // 2, base, 2)
+        for rows in batches
+    ]
+    stream = file_stream(spark, tmp_path, frames)
+    got, q = run_stream(
+        user_sessions(stream, watermark_delay="4 hours"),
+        "t_sessions_late",
+        tmp_path / "ck",
+        output_mode="append",
+    )
+    assert sorted(
+        (r["user_id"], r["start_us"], r["end_us"], r["n_events"], r["closed_by"])
+        for r in got
+    ) == [
+        (1, base - 5 * SESSION_GAP_US, base - 5 * SESSION_GAP_US, 1, "gap"),
+        (1, base - SESSION_GAP_US // 2, base, 2, "gap"),
+        (2, base - 10 * SESSION_GAP_US, base - 10 * SESSION_GAP_US, 1, "timer"),
+    ]
+    # only the session opened by the last event is still in state
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 1
 
 
 def test_plan_lint_single_partition_detector(spark):
@@ -1427,43 +1337,35 @@ def test_streaming_semantic_dedup_ingest_pq_backed(spark, sf_dir, tmp_path):
     }
 
 
-def test_sessionizer_state_bounded_by_timer_cleanup():
-    """VERDICT r11 item 7 (resolved as documented why-not + this pin):
-    the sessionizer needs no ttl_ms because its state is bounded by
-    construction — one tuple per OPEN session, exactly ONE pending timer
-    per key (stale timers deleted on every fold), and timer expiry emits
-    the session and CLEARS the state, so an idle key holds nothing. A
-    TTL would only add a path that drops the Append emission."""
-    import pandas as pd
+def test_sessionizer_state_bounded_by_timer_cleanup(spark, sf_dir, tmp_path):
+    """State is bounded by open sessions: a timeout emits its session and
+    removes the state. After the two fixture halves, a sentinel event for
+    another user far enough in the future moves the watermark past every
+    fixture session, so each session comes out exactly once and the
+    sentinel's is the only state row left."""
+    from machinelearningalgomapreduce_spark.streaming.stateful import user_sessions
+    from tests.conftest import file_stream, run_stream
 
-    from machinelearningalgomapreduce_spark.streaming.stateful_v2 import (
-        SESSION_GAP_US,
-        SessionizerProcessor,
+    rows, halves = _fixture_halves(spark, sf_dir)
+    sentinel_us = rows[-1]["us"] + 86_400_000_000
+    sentinel = spark.createDataFrame(
+        [(-1, sentinel_us)], "user_id long, us long"
+    ).select("user_id", F.timestamp_micros("us").alias("ts"))
+    stream = file_stream(spark, tmp_path, [*halves, sentinel])
+    got, q = run_stream(
+        user_sessions(stream), "t_sessions_cleanup", tmp_path / "ck",
+        output_mode="append",
     )
 
-    proc = SessionizerProcessor()
-    handle = _TimerFakeHandle()
-    proc.init(handle)
-    base = 10_000_000_000
-    # two folds extend one open session: exactly one pending timer, moved
-    list(proc.handleInputRows((1,), [pd.DataFrame({"us": [base]})], None))
-    assert handle.timers == {(base + SESSION_GAP_US) // 1000}
-    later = base + SESSION_GAP_US // 2
-    list(proc.handleInputRows((1,), [pd.DataFrame({"us": [later]})], None))
-    assert handle.timers == {(later + SESSION_GAP_US) // 1000}  # re-registered
-    assert proc._state.exists()
-    # watermark passes: expiry emits ONCE and clears all per-key state
-    out = [
-        r
-        for pdf in proc.handleExpiredTimer((1,), None, None)
-        for r in pdf.to_dict("records")
-    ]
-    assert [(r["start_us"], r["end_us"], r["n_events"], r["closed_by"]) for r in out] == [
-        (base, later, 2, "timer")
-    ]
-    assert not proc._state.exists()  # idle key holds NOTHING
-    # a second expiry (spurious timer) emits nothing — exactly-once
-    assert not list(proc.handleExpiredTimer((1,), None, None))
+    expected = _gap_sessions(rows)
+    emitted = _sessions(got, "gap") + _sessions(got, "timer")
+    assert sorted(emitted) == sorted(
+        (u, *s) for u, ss in expected.items() for s in ss
+    )
+    assert sorted(_sessions(got, "timer")) == sorted(
+        (u, *ss[-1]) for u, ss in expected.items()
+    )
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 1
 
 
 @pytest.mark.slow  # heavy lane, run with -m slow (pytest.ini r16)

@@ -7,9 +7,8 @@ registry.DRIVER_GREEN_ROUND (the ledger guard test fails loudly until it
 is). Default prints the complete replacement dict — paste it over the
 old one, grouped by round for readability. ``--apply`` rewrites
 registry.py in place instead: the DRIVER_GREEN_ROUND block is replaced
-wholesale and now-green names are pruned from DEFERRED_NEXT_WINDOW
-(re-run the ledger guard test afterwards; review the diff like any
-edit).
+wholesale (re-run the ledger guard test afterwards; review the diff like
+any edit).
 
 Usage: python tools/absorb_greens.py [--apply]
 """
@@ -48,31 +47,16 @@ def _render_dict(latest: dict[str, int]) -> str:
     return "\n".join(lines)
 
 
-def _apply(latest: dict[str, int], greened: list[str]) -> None:
-    """Rewrite registry.py: swap the DRIVER_GREEN_ROUND block, drop
-    now-green names from the DEFERRED_NEXT_WINDOW literal."""
+def _apply(latest: dict[str, int]) -> None:
+    """Rewrite registry.py: swap the DRIVER_GREEN_ROUND block."""
     path = os.path.join(REPO, "machinelearningalgomapreduce_spark", "registry.py")
     src = open(path).read()
     m = re.search(r"^DRIVER_GREEN_ROUND = \{\n.*?^\}$", src, re.M | re.S)
     if not m:
         raise SystemExit("could not locate the DRIVER_GREEN_ROUND block")
     src = src[: m.start()] + _render_dict(latest) + src[m.end():]
-    d = re.search(
-        r"^DEFERRED_NEXT_WINDOW: frozenset\[str\] = frozenset\(\{\n.*?^\s*\}\)$",
-        src, re.M | re.S,
-    )
-    if not d:
-        raise SystemExit("could not locate the DEFERRED_NEXT_WINDOW block")
-    block = d.group(0)
-    for name in greened:
-        # drop the quoted name (with its following comma) from the
-        # DEFERRED literal only; stale comment lines are left for review
-        block, n = re.subn(rf'"{re.escape(name)}",\s*', "", block, count=1)
-        if n == 0:
-            raise SystemExit(f"could not prune {name} from DEFERRED_NEXT_WINDOW")
-    src = src[: d.start()] + block + src[d.end():]
     open(path, "w").write(src)
-    print(f"# applied to {path}: {len(latest)} entries, pruned {len(greened)}")
+    print(f"# applied to {path}: {len(latest)} entries")
 
 
 def main() -> None:
@@ -101,21 +85,10 @@ def main() -> None:
     print(f"# newly green ({len(new)}): {sorted(new)}\n")
     print(f"# freshened ({len(stale)})\n")
 
-    # Deferred-tier upkeep (registry.DEFERRED_NEXT_WINDOW): once a
-    # deferred query gains a driver green it must leave the set, or the
-    # window test fails loudly.
-    from machinelearningalgomapreduce_spark.registry import DEFERRED_NEXT_WINDOW
-
-    greened = sorted(DEFERRED_NEXT_WINDOW & set(latest))
     if apply_mode:
-        _apply(latest, greened)
+        _apply(latest)
         return
     print(_render_dict(latest))
-    if greened:
-        print(
-            f"\n# ALSO: remove these {len(greened)} now-green names from "
-            f"registry.DEFERRED_NEXT_WINDOW:\n# {greened}"
-        )
 
 
 if __name__ == "__main__":

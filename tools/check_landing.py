@@ -90,18 +90,12 @@ def main() -> None:
         failures.append(f"queries()/oracle_sql() key mismatch: {unpaired}")
 
     # 4. never-driver-checked inventory (informational)
-    fresh = [
-        n
-        for n in qs
-        if n not in registry.DRIVER_GREEN_ROUND
-        and n not in registry.DEFERRED_NEXT_WINDOW
-    ]
+    fresh = [n for n in qs if n not in registry.DRIVER_GREEN_ROUND]
     if fresh:
         print(
             f"NOTE: {len(fresh)} queries have no driver-green row yet: {fresh}\n"
             "      run `python tools/plan_lint.py` before the snapshot commit\n"
-            "      (new plans need allowlist review) and consider "
-            "DEFERRED_NEXT_WINDOW placement."
+            "      (new plans need allowlist review)."
         )
 
     if failures:
