@@ -2,9 +2,16 @@
 
 from __future__ import annotations
 
+import importlib
+import json
 import os
+from pathlib import Path
+
+import pytest
 
 from machinelearningalgomapreduce_spark import registry
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def test_every_query_has_an_oracle():
@@ -120,17 +127,15 @@ def test_driver_window_covers_never_checked_modules():
     """Rounds 1-2 showed the driver checks only the FIRST 50 registry
     entries. The registry sorts never-driver-green queries first; this
     guards (a) no already-green query occupies a window slot while a
-    never-green one sits outside (window slots are never wasted), (b) the
-    DRIVER_GREEN ledger only names real queries, and (c) the two-tier
-    order is actually applied. More than 50 never-green queries is
-    allowed — the overflow rotates into the window next round once this
-    round's CORRECTNESS greens move into DRIVER_GREEN."""
+    never-green one sits outside (window slots are never wasted) and (b)
+    the two-tier order is actually applied. More than 50 never-green
+    queries is allowed — the overflow rotates into the window next round
+    once this round's CORRECTNESS file records their greens."""
     order = list(registry.queries())
-    never_green = [n for n in order if n not in registry.DRIVER_GREEN]
-    assert not registry.DRIVER_GREEN - set(order), "DRIVER_GREEN names unknown queries"
+    never_green = [n for n in order if registry.sort_key(n) == 0]
     if len(never_green) > 50:
         # Window must consist ENTIRELY of never-green queries.
-        wasted = [n for n in order[:50] if n in registry.DRIVER_GREEN]
+        wasted = [n for n in order[:50] if registry.sort_key(n) != 0]
         assert not wasted, f"green queries occupy window slots: {wasted}"
     else:
         outside = set(never_green) - set(order[:50])
@@ -153,48 +158,78 @@ def test_registry_order_rotates_stalest_evidence_first():
     )
 
 
-def test_driver_green_ledger_absorbs_every_correctness_round():
-    """ADVICE r3: rotation depends on moving each round's green rows into
-    DRIVER_GREEN — if that manual step is forgotten, overflow queries sit
-    outside the driver's 50-entry window forever with nothing failing.
-    Make the omission fail loudly: every green row in every
-    CORRECTNESS_r{N}.json on disk must already be in DRIVER_GREEN.
+def _write_round(directory, rnd, rows):
+    (directory / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
 
-    Structural caveat (VERDICT r5 item 2): the driver writes
-    CORRECTNESS_r{N}.json AFTER the builder's last commit of round N, so
-    a file from a round NEWER than the ledger's max known round can never
-    have been absorbed by the committed tree — treating it as stale made
-    this guard red at judge time every round by construction. Such files
-    are informational only; the guard enforces absorption for every round
-    the ledger already knows about (i.e. the absorb chore happened at
-    round-open for all past rounds)."""
-    import json
-    import re
-    from pathlib import Path
 
-    repo = Path(__file__).resolve().parent.parent
-    max_known = max(registry.DRIVER_GREEN_ROUND.values(), default=0)
-    stale = {}
-    for path in sorted(repo.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)\.json$", path.name).group(1))
-        if rnd > max_known:
-            continue  # post-commit driver artifact — next round's chore
-        rows = json.loads(path.read_text())
-        greens = {
-            name
-            for name, r in rows.items()
-            if isinstance(r, dict)
-            and r.get("rows_match") and r.get("schema_match")
-            and r.get("hash_match") and not r.get("err")
-        }
-        # Only count queries that still exist (a renamed query's old green
-        # row should not force a ghost ledger entry).
-        missing = (greens - registry.DRIVER_GREEN) & set(registry.queries())
-        if missing:
-            stale[path.name] = sorted(missing)
-    assert not stale, (
-        f"DRIVER_GREEN not updated with these driver-confirmed greens: {stale}"
+def test_latest_green_rounds_reads_one_green_rule(tmp_path):
+    """The registry's one definition of a green driver row: rows and
+    schema match, no hash mismatch, no err. The latest green round wins
+    and a later red row does not erase it."""
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    assert registry.latest_green_rounds(tmp_path) == {}
+    _write_round(tmp_path, 1, {
+        "q_newer": ok, "q_red_later": ok,
+        "q_rows_only": {"rows_match": True, "schema_match": True, "hash_match": None},
+        "q_err": {**ok, "err": "no_oracle"},
+        "q_hash_red": {**ok, "hash_match": False},
+        "q_not_a_row": "skipped",
+    })
+    _write_round(tmp_path, 3, {
+        "q_newer": ok, "q_red_later": {**ok, "rows_match": False}, "q_bad": [1, 2],
+    })
+    (tmp_path / "CORRECTNESS_r09_c8.json").write_text(json.dumps({"q_newer": ok}))
+    assert registry.latest_green_rounds(tmp_path) == {
+        "q_newer": 3, "q_red_later": 1, "q_rows_only": 1,
+    }
+
+
+def test_registry_falls_back_to_module_order_without_correctness_files(
+    tmp_path, monkeypatch
+):
+    module_order = [
+        n for m in registry._MODULES for n in importlib.import_module(m).QUERIES
+    ]
+    monkeypatch.setattr(registry, "_ledger", lambda: registry.latest_green_rounds(tmp_path))
+    assert list(registry.queries()) == module_order
+    assert list(registry.oracle_sql()) == module_order
+
+
+def test_driver_window_skips_the_newest_correctness_round():
+    """The r15 and r16 driver runs checked the same 50 queries because the
+    registry order came from a hand-kept ledger nobody updated. The next
+    window must share no name with the newest round's green rows (holds
+    while 290 - 50 >= 50). A query that went red in the newest round may
+    lead the window: re-checking it first is the point."""
+    latest = registry.latest_green_rounds(REPO)
+    if not latest:
+        pytest.skip("no CORRECTNESS_r*.json next to the package")
+    newest = max(latest.values())
+    newest_greens = {n for n, r in latest.items() if r == newest}
+    window = set(list(registry.queries())[:50])
+    assert not window & newest_greens, (
+        f"driver window re-checks round {newest}'s greens: "
+        f"{sorted(window & newest_greens)}"
     )
+
+
+def test_every_module_with_queries_is_referenced_by_a_test():
+    """Landing gate: every _MODULES entry with QUERIES is referenced by at
+    least one tests/*.py file (inference.py once landed with none). A
+    module counts as tested if any test names it in full, imports it by
+    its short name, or names any of its queries."""
+    test_blob = "\n".join(p.read_text() for p in (REPO / "tests").glob("*.py"))
+    untested = []
+    for modname in registry._MODULES:
+        mod = importlib.import_module(modname)
+        if not mod.QUERIES:
+            continue
+        short = modname.rsplit(".", 1)[-1]
+        if modname not in test_blob and not any(
+            f"import {short}" in test_blob or q in test_blob for q in mod.QUERIES
+        ):
+            untested.append(modname)
+    assert not untested, f"modules with QUERIES but zero test references: {untested}"
 
 
 def test_no_query_emits_unhashable_column_types(spark):
