@@ -21,8 +21,9 @@ from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
 
-# (applicationId, analyzed-plan semanticHash, scan conf) -> static source
-# width, so fan_out's no-op decision is ~free on repeated builds (r16).
+# (applicationId, analyzed-plan semanticHash, scan conf, shuffle width,
+# defaultParallelism) -> plan width, so fan_out's no-op decision is ~free
+# on repeated builds (r16).
 _FAN_OUT_WIDTH_CACHE: dict = {}
 
 
@@ -81,20 +82,24 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     host; the real action then re-plans). The check now (a) uses the
     internal ``toRdd`` (skips the Python-deserializer wrapping, ~35 ms)
     and (b) memoizes the width per (application, analyzed-plan
-    semanticHash, scan conf) — ~1 ms on every repeated build of the same
-    query shape (bench best-of-N, repeated invocations). Sound within an
-    application: a plan's pre-AQE source width is a function of the plan
-    and the scan confs in the key; localCheckpoint/cache create fresh
-    leaf nodes (fresh hashes), and the fixture dirs are static (the same
-    assumption load_tables' catalog cache already makes).
+    semanticHash, scan conf, shuffle width, defaultParallelism) — ~1 ms on
+    every repeated build of the same query shape (bench best-of-N,
+    repeated invocations). Sound within an application: a scan's width is
+    a function of the plan and the scan conf, and a plan with an exchange
+    takes its width from ``spark.sql.shuffle.partitions`` (or from
+    defaultParallelism for RDD-backed leaves), so a conf change inside one
+    application misses the memo instead of reusing a stale width;
+    localCheckpoint/cache create fresh leaf nodes (fresh hashes), and the
+    fixture dirs are static (the same assumption load_tables' catalog
+    cache already makes).
     """
     spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
     try:
         conf_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
-        conf_width = spark.sparkContext.defaultParallelism
-    target = min(spark.sparkContext.defaultParallelism * factor,
-                 max(conf_width, 1))
+        conf_width = cores
+    target = min(cores * factor, max(conf_width, 1))
     width = None
     try:
         try:
@@ -105,6 +110,8 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
             spark.sparkContext.applicationId,
             df._jdf.queryExecution().analyzed().semanticHash(),
             scan_conf,
+            conf_width,
+            cores,
         )
         width = _FAN_OUT_WIDTH_CACHE.get(key)
         if width is None:

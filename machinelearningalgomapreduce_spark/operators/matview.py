@@ -52,11 +52,11 @@ Non-algebraic finals (avg, rate) are DERIVED on read from merged parts
 100 TB shape: the stored state is O(groups) and is the ONLY history ever
 read — a refresh scans just the delta (one map-side-combined partial
 aggregate), unions O(groups) + O(delta-groups) rows, and re-aggregates.
-State files are written hash-partitioned on the group keys
-(``n_buckets``, the catalog CACHE_KEYS analogue) so consecutive refresh
-re-aggregations start from a key-clustered layout; on a real cluster the
-same spec would back a bucketed table and the union-re-aggregate would
-co-locate with zero extra exchange.
+State is written exactly as that aggregate produced it, with no extra
+exchange: the aggregate's output is hash-partitioned on the group keys,
+so every parquet file holds a disjoint set of keys, and AQE's partition
+coalescing (which merges only adjacent buckets) sizes the file count —
+one file for a few MB of state, the session's shuffle width at scale.
 """
 
 from __future__ import annotations
@@ -306,6 +306,27 @@ def _read_parquet(spark: SparkSession, parts: list[tuple[str, dict | None]]) -> 
     return functools.reduce(DataFrame.unionByName, frames)
 
 
+def _write_snapshot(df: DataFrame, snap_dir: str) -> None:
+    """Write ``df`` as ``snap_dir/data.parquet`` plus its durable
+    ``schema.json`` record — the single-directory state of a flat view
+    version, a pinned drift reference or a dim version. The caller makes
+    it visible afterwards (pointer flip or directory rename)."""
+    df.write.mode("error").parquet(os.path.join(snap_dir, "data.parquet"))
+    _write_json_durable(os.path.join(snap_dir, "schema.json"), _schema_record(df))
+
+
+def _read_snapshot(spark: SparkSession, snap_dir: str) -> DataFrame:
+    """Read a ``_write_snapshot`` directory with its recorded schema (no
+    inference job); a directory without the record is read with
+    inference."""
+    try:
+        with open(os.path.join(snap_dir, "schema.json")) as f:
+            schema = json.load(f)
+    except FileNotFoundError:
+        schema = None
+    return _read_parquet(spark, [(os.path.join(snap_dir, "data.parquet"), schema)])
+
+
 def _snapshot_is_small(path: str, cap_bytes: int | None = None) -> bool:
     """Broadcast a committed snapshot only while its on-disk parquet
     provably fits — the shared functions/storage.py discipline; past the
@@ -343,7 +364,6 @@ class IncrementalAggView:
         keys: list[str],
         aggs: dict[str, tuple[str, str]],
         derive: dict[str, "callable"] | None = None,
-        n_buckets: int = 8,
         spec_extra: dict | None = None,
         ledger_cap: int | None = None,
     ) -> None:
@@ -362,7 +382,6 @@ class IncrementalAggView:
         self.keys = list(keys)
         self.aggs = dict(aggs)
         self.derive = dict(derive or {})
-        self.n_buckets = n_buckets
         if ledger_cap is not None and ledger_cap < 1:
             raise ValueError(f"ledger_cap must be >= 1 or None, got {ledger_cap}")
         self.ledger_cap = ledger_cap
@@ -370,8 +389,9 @@ class IncrementalAggView:
         # keys/aggs (or a wrapper's different sketch width/depth) into
         # existing state would be silent corruption — same column names,
         # different meanings. Persisted at first refresh, validated on
-        # every later one. `derive` is read-time-only (never stored) and
-        # `n_buckets` is pure layout, so neither participates.
+        # every later one. `derive` is read-time-only (never stored), so it
+        # does not participate; neither does the file layout, which is
+        # whatever partitioning the aggregate wrote.
         self._spec = {
             "keys": self.keys,
             "aggs": {a: list(v) for a, v in self.aggs.items()},
@@ -400,13 +420,7 @@ class IncrementalAggView:
             return json.load(f)
 
     def _read_state(self, spark: SparkSession, v: int) -> DataFrame:
-        vdir = self._vdir(v)
-        try:
-            with open(os.path.join(vdir, "schema.json")) as f:
-                schema = json.load(f)
-        except FileNotFoundError:
-            schema = None
-        return _read_parquet(spark, [(os.path.join(vdir, "data.parquet"), schema)])
+        return _read_snapshot(spark, self._vdir(v))
 
     # ---- the merge algebra ---------------------------------------------
     def _partial(self, delta: DataFrame) -> DataFrame:
@@ -470,14 +484,11 @@ class IncrementalAggView:
         v = self.current_version()
         state = partial if v == 0 else self._merge(self._read_state(spark, v), partial)
         nxt = self._vdir(v + 1)
-        state.repartition(self.n_buckets, *self.keys).write.mode(
-            "error"
-        ).parquet(os.path.join(nxt, "data.parquet"))
+        _write_snapshot(state, nxt)
         ledger = [*applied, batch_id]
         if self.ledger_cap is not None:
             ledger = ledger[-self.ledger_cap:]
         _write_json_durable(os.path.join(nxt, "batches.json"), ledger)
-        _write_json_durable(os.path.join(nxt, "schema.json"), _schema_record(state))
         tmp = os.path.join(self.path, _POINTER + ".tmp")
         with open(tmp, "w") as f:
             f.write(str(v + 1))
@@ -554,7 +565,7 @@ class FrequencySketchView:
 
     def __init__(
         self, path: str, value_col: str, depth: int | None = None,
-        width: int | None = None, n_buckets: int = 8,
+        width: int | None = None,
     ) -> None:
         from machinelearningalgomapreduce_spark.operators.sketches import (
             CM_DEPTH,
@@ -568,7 +579,6 @@ class FrequencySketchView:
             path,
             keys=["row", "col_idx"],
             aggs={"cnt": ("sum", "cnt")},
-            n_buckets=n_buckets,
             spec_extra={"sketch": "count_min", "value_col": value_col,
                         "depth": self.depth, "width": self.width},
         )
@@ -634,7 +644,6 @@ class DistinctCountView:
         path: str,
         keys: list[str],
         value_col: str,
-        n_buckets: int = 8,
     ) -> None:
         self.keys = list(keys)
         self.value_col = value_col
@@ -642,7 +651,6 @@ class DistinctCountView:
             path,
             keys=[*keys, "reg"],
             aggs={"max_rank": ("max", "max_rank")},
-            n_buckets=n_buckets,
             spec_extra={"sketch": "hll_registers", "value_col": value_col},
         )
 
@@ -698,7 +706,6 @@ class QuantileHistogramView:
 
     def __init__(
         self, path: str, value_col: str, width: int | None = None,
-        n_buckets: int = 8,
     ) -> None:
         from machinelearningalgomapreduce_spark.operators.sketches import (
             QHIST_WIDTH,
@@ -710,7 +717,6 @@ class QuantileHistogramView:
             path,
             keys=["bucket"],
             aggs={"cnt": ("sum", "cnt")},
-            n_buckets=n_buckets,
             spec_extra={"sketch": "quantile_hist", "value_col": value_col,
                         "width": self.width},
         )
@@ -879,7 +885,8 @@ class DriftMonitorView:
     Values outside [lo, hi) clamp to the edge bins, same as q_psi's
     `least` guard. The reference is an immutable copied snapshot
     (``_ref-v*`` + atomic pointer), so vacuum of old versions never
-    invalidates it.
+    invalidates it; like a state version it carries a ``schema.json``
+    record, so reading it runs no schema-inference job.
 
     100 TB shape: state is O(groups × bins) forever; a refresh is one
     map-side-combined count over the delta + an O(state) re-sum; psi
@@ -888,7 +895,7 @@ class DriftMonitorView:
 
     def __init__(
         self, path: str, group_col: str, value_col: str,
-        lo: float, hi: float, n_bins: int = 10, n_buckets: int = 8,
+        lo: float, hi: float, n_bins: int = 10,
     ) -> None:
         if not hi > lo:
             raise ValueError(f"need hi > lo, got [{lo}, {hi})")
@@ -900,7 +907,6 @@ class DriftMonitorView:
             path,
             keys=["grp", "bin"],
             aggs={"cnt": ("sum", "cnt")},
-            n_buckets=n_buckets,
             spec_extra={
                 "monitor": "psi_drift", "group_col": group_col,
                 "value_col": value_col, "lo": self.lo, "hi": self.hi,
@@ -949,9 +955,7 @@ class DriftMonitorView:
         if not os.path.exists(ref_dir):
             tmp = ref_dir + ".inprogress"
             shutil.rmtree(tmp, ignore_errors=True)
-            self._mv.read(spark, v).write.mode("overwrite").parquet(
-                os.path.join(tmp, "data.parquet")
-            )
+            _write_snapshot(self._mv.read(spark, v), tmp)
             os.replace(tmp, ref_dir)
         with open(os.path.join(self.path, "_REF.tmp"), "w") as fh:
             fh.write(f"{v}")
@@ -984,9 +988,7 @@ class DriftMonitorView:
         v = self.reference_version()
         if v == 0:
             raise ValueError("no reference pinned — call set_reference first")
-        return spark.read.parquet(
-            os.path.join(self.path, f"_ref-v{v:08d}", "data.parquet")
-        )
+        return _read_snapshot(spark, os.path.join(self.path, f"_ref-v{v:08d}"))
 
     # -- derived drift ----------------------------------------------------
     def psi(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -1111,6 +1113,13 @@ class SegmentedAggView:
         m00000001.json      ← manifest: live segments + replay ledger
         seg-00000001/       ← immutable parquet partial (data.parquet)
 
+    A segment is written exactly as its aggregate produced it — the
+    delta's partial, or the re-aggregate of the compaction victims — with
+    no extra exchange. That aggregate is hash-partitioned on the view
+    keys, so each of the segment's parquet files holds a disjoint set of
+    keys, and AQE's partition coalescing sizes the file count: one file
+    at the fixture tiers, the session's shuffle width at scale.
+
     Each manifest segment is ``{"dir", "weight", "schema"}``: the schema
     of the frame written, recorded at write time (analysis only, no job).
     A read therefore infers nothing — it is ONE schema-pinned parquet
@@ -1144,7 +1153,6 @@ class SegmentedAggView:
         aggs: dict[str, tuple[str, str]],
         derive: dict[str, "callable"] | None = None,
         fanout: int = 4,
-        n_buckets: int = 8,
         spec_extra: dict | None = None,
         ledger_cap: int | None = None,
     ) -> None:
@@ -1168,12 +1176,11 @@ class SegmentedAggView:
         self.aggs = dict(aggs)
         self.derive = dict(derive or {})
         self.fanout = int(fanout)
-        self.n_buckets = int(n_buckets)
         # fanout is part of the spec: reopening with a different fanout
         # would re-tier existing segments and break the amortization
         # invariant mid-chain (weights stay valid, but the written
         # guarantee changes silently). keys/aggs are state-defining as in
-        # the flat view; n_buckets/derive are layout/read-time only.
+        # the flat view; derive is read-time only.
         self._spec = {
             "keys": self.keys,
             "aggs": {a: list(v) for a, v in self.aggs.items()},
@@ -1258,11 +1265,11 @@ class SegmentedAggView:
         return mx + 1
 
     def _write_segment(self, df: DataFrame, weight: int = 1) -> dict:
-        """Write ``df`` as a new segment; returns its manifest descriptor."""
+        """Write ``df`` (a ``groupBy`` on the view keys, so its partitions
+        are already key-disjoint) as a new segment; returns its manifest
+        descriptor."""
         name = _new_seg_name(self._next_seg_id())
-        df.repartition(self.n_buckets, *self.keys).write.mode("error").parquet(
-            os.path.join(self.path, name, "data.parquet")
-        )
+        df.write.mode("error").parquet(os.path.join(self.path, name, "data.parquet"))
         return {"dir": name, "weight": weight, "schema": _schema_record(df)}
 
     def _commit(self, segments: list[dict], batches: list[str], base_v: int) -> int:
@@ -1509,7 +1516,8 @@ class FactDimRollupView:
     every dim update a history rewrite.
 
     The dim side is a keyed LATEST-WINS snapshot with the same
-    version-dir + atomic-pointer + batch-ledger machinery: an upsert
+    version-dir (data + ``schema.json`` record, so reads infer nothing)
+    + atomic-pointer + batch-ledger machinery: an upsert
     batch keeps max_by(ts) per key within the batch, then overrides the
     stored row for those keys (state ← latest ∪ state ⟕̸ latest-keys).
 
@@ -1529,7 +1537,6 @@ class FactDimRollupView:
         dim_key: str,
         dim_attrs: list[str],
         dim_ts: str = "ts",
-        n_buckets: int = 8,
     ) -> None:
         if not dim_attrs:
             raise ValueError("FactDimRollupView needs at least one dim attribute")
@@ -1543,7 +1550,6 @@ class FactDimRollupView:
             os.path.join(path, "fact"),
             keys=[fact_key],
             aggs=aggs,
-            n_buckets=n_buckets,
             spec_extra={"role": "fact_of_star_rollup", "dim_key": dim_key},
         )
         self._dim_dir = os.path.join(path, "dim")
@@ -1600,15 +1606,13 @@ class FactDimRollupView:
         if v == 0:
             state = latest
         else:
-            prev = spark.read.parquet(
-                os.path.join(self._dim_vdir(v), "data.parquet")
-            )
+            prev = _read_snapshot(spark, self._dim_vdir(v))
             keys = latest.select(self.dim_key)
             state = prev.join(F.broadcast(keys), self.dim_key, "left_anti").unionByName(
                 latest
             )
         nxt = self._dim_vdir(v + 1)
-        state.write.mode("error").parquet(os.path.join(nxt, "data.parquet"))
+        _write_snapshot(state, nxt)
         _write_json_durable(os.path.join(nxt, "batches.json"), [*applied, batch_id])
         tmp = os.path.join(self._dim_dir, _POINTER + ".tmp")
         with open(tmp, "w") as f:
@@ -1622,7 +1626,7 @@ class FactDimRollupView:
         v = self._dim_version()
         if v == 0:
             raise ValueError("dim snapshot has no committed version yet")
-        return spark.read.parquet(os.path.join(self._dim_vdir(v), "data.parquet"))
+        return _read_snapshot(spark, self._dim_vdir(v))
 
     # ---- fact side --------------------------------------------------------
     def refresh_fact(self, spark: SparkSession, delta: DataFrame, batch_id: str) -> bool:
@@ -1647,7 +1651,7 @@ class FactDimRollupView:
         if v == 0:
             raise ValueError("dim snapshot has no committed version yet")
         dim_data = os.path.join(self._dim_vdir(v), "data.parquet")
-        d = spark.read.parquet(dim_data)
+        d = _read_snapshot(spark, self._dim_vdir(v))
         # Broadcast only while the committed dim snapshot provably fits
         # (on-disk parquet size, the sinks._index_is_small discipline);
         # a large dimension would otherwise force a driver-side broadcast

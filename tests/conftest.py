@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -24,6 +25,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SMOKE_SF_DIR
+
+
+def jobs_while(spark, group, fn):
+    """(fn(), number of Spark jobs fn launched), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def conf_scope(spark, confs):
+    """Set runtime SQL confs for the body; restore the previous values."""
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def drain(q, timeout: int = 420) -> None:

@@ -8,9 +8,6 @@ import json
 import os
 
 import pytest
-
-# Materialized-view maintenance integration lane (~minutes): slow-marked, run with -m slow (pytest.ini r16).
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from machinelearningalgomapreduce_spark.operators.matview import (
@@ -18,9 +15,7 @@ from machinelearningalgomapreduce_spark.operators.matview import (
     mv_ingest_stream,
 )
 from machinelearningalgomapreduce_spark.sources.catalog import load_tables
-from tests.conftest import SMOKE_SF_DIR
-
-from tests.conftest import drain
+from tests.conftest import SMOKE_SF_DIR, drain, jobs_while
 
 
 def _mk_view(path):
@@ -839,6 +834,50 @@ def test_views_without_recorded_schemas_read_the_same(spark, tmp_path):
     assert _canon(flat.read(spark)) == flat_before[6]
     assert flat.vacuum(keep_last=1)
     assert _canon(flat.read(spark)) == flat_before[6]
+
+
+def test_drift_reference_and_dim_snapshots_read_without_inference(spark, tmp_path):
+    """The pinned drift reference and the star rollup's dim versions carry
+    a schema.json record: reference(), dim() and the star read build their
+    frames with no Spark job. With every record stripped they read the
+    same frames (inference fallback), and refresh_dim rebuilds on a
+    stripped previous version and records the new one's schema."""
+    t = load_tables(spark, SMOKE_SF_DIR)
+    mv = _drift_view(tmp_path / "drift")
+    mv.refresh(spark, t.events.select("event_type", "value"), batch_id="all")
+    mv.set_reference(spark)
+    sv = _star_view(tmp_path / "star")
+    dim0 = t.customer.select("c_custkey", "c_mktsegment", F.lit("2020-01-01").alias("ts"))
+    sv.refresh_dim(spark, dim0, batch_id="dim0")
+    sv.refresh_fact(spark, t.orders.select(
+        "o_custkey", (F.col("o_totalprice") * 100).cast("long").alias("price_cents")
+    ), batch_id="f0")
+
+    reads = {
+        "reference": lambda: mv.reference(spark),
+        "dim": lambda: sv.dim(spark),
+        "star": lambda: sv.read(spark),
+    }
+    before = {}
+    for name, read in reads.items():
+        df, jobs = jobs_while(spark, f"matview-{name}-read", read)
+        assert jobs == 0, name
+        before[name] = (df.dtypes, _canon(df))
+
+    _strip_recorded_schemas(tmp_path)
+    for name, read in reads.items():
+        df = read()
+        assert (df.dtypes, _canon(df)) == before[name], name
+
+    moved = t.customer.filter(F.pmod("c_custkey", F.lit(7)) == 0).select(
+        "c_custkey", F.lit("RELOCATED").alias("c_mktsegment"), F.lit("2021-06-01").alias("ts")
+    )
+    assert sv.refresh_dim(spark, moved, batch_id="dim1") is True
+    df, jobs = jobs_while(spark, "matview-dim-read-v2", lambda: sv.dim(spark))
+    assert jobs == 0
+    want = {r.c_custkey: r.c_mktsegment for r in dim0.collect()}
+    want.update({r.c_custkey: "RELOCATED" for r in moved.collect()})
+    assert {r.c_custkey: r.c_mktsegment for r in df.collect()} == want
 
 
 def test_segment_key_widened_across_batches_reads_as_union(spark, tmp_path):

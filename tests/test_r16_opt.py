@@ -71,6 +71,34 @@ def test_fan_out_memoized_width_and_behavior(spark, sf_dir):
     assert J.fan_out(wide) is wide
 
 
+def test_fan_out_memo_follows_shuffle_partitions(spark):
+    # An exchange-bearing plan takes its width from
+    # spark.sql.shuffle.partitions: after the conf changes, the memoized
+    # width of the same query shape must not be reused. Coalescing is off
+    # so the aggregate's width is exactly the configured one; each call
+    # builds a fresh frame, as a repeated query build does (a DataFrame
+    # keeps the physical plan it was first planned with).
+    from machinelearningalgomapreduce_spark.functions import joins as J
+    from tests.conftest import conf_scope
+
+    def no_op():
+        df = spark.range(1000).groupBy((F.col("id") % 17).alias("k")).count()
+        return J.fan_out(df) is df
+
+    cores = spark.sparkContext.defaultParallelism
+    with conf_scope(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        J._FAN_OUT_WIDTH_CACHE.clear()
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "2"}):
+            assert no_op()  # 2 wide, target min(cores, 2)
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": str(cores)}):
+            decided = no_op()
+            J._FAN_OUT_WIDTH_CACHE.clear()
+            fresh = no_op()
+    # cores wide now, already at the target: the fresh decision is a no-op
+    assert fresh is True
+    assert decided == fresh
+
+
 def test_exact_avg_wide_equals_narrow(spark):
     # r16 bounds-audit flips: exact_avg(wide=True) must be bitwise equal
     # to the BIGINT form on grid data incl. negatives and half-boundaries.
