@@ -51,8 +51,3 @@ def minhash_sig(shingle_arr: Column, seed: int) -> Column:
 def band_key(sig_cols: list[Column]) -> Column:
     """LSH band bucket key: md5 of the concatenated band signatures."""
     return F.md5(F.concat_ws("|", *sig_cols))
-
-
-def hex_char_val(ch: Column) -> Column:
-    """Hex char → 0..15 via strpos (identical expression runs in DuckDB)."""
-    return F.instr(F.lit("0123456789abcdef"), ch) - 1

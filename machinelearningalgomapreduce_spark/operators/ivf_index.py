@@ -3,8 +3,12 @@ scale path, index-maintenance form).
 
 q_sim_ann / learned_ivf_ann recompute the corpus→cell assignment on
 every run — fine for an audit query, wrong for a serving index over a
-growing corpus. This view makes the IVF index a MAINTAINED artifact with
-the matview storage discipline (operators/matview.py):
+growing corpus. This view makes the IVF index a MAINTAINED artifact
+whose storage and commit protocol is matview's ``SegmentLog``
+(operators/matview.py) — the same pointer flip, manifests, exclusive
+commit, rebase-retry, spec guard and vacuum as ``SegmentedAggView``; this
+module keeps only cell assignment, newest-wins compaction and the probe/
+query plans:
 
 * the coarse quantizer (centroids) is PINNED at construction and spec-
   guarded — assignments from two different quantizers must never mix;
@@ -14,10 +18,15 @@ the matview storage discipline (operators/matview.py):
   immutable segment written ``partitionBy("cell")`` — the on-disk layout
   IS the index: a probe reads only its cells' directories via partition
   pruning, never the corpus;
-* manifest-per-version + atomic ``_CURRENT`` pointer flip gives crash
-  safety, a replay ledger (at-least-once delivery → exactly-once index
-  state), and time travel; ``compact`` merges segments (row union, no
-  re-assignment); ``vacuum`` frees unreferenced versions/segments;
+* the log's manifest-per-version + atomic ``_CURRENT`` pointer flip
+  gives crash safety, a replay ledger (at-least-once delivery →
+  exactly-once index state), and time travel; ``compact`` merges
+  segments (row union, no re-assignment); ``vacuum`` frees unreferenced
+  versions/segments;
+* each manifest segment is ``{"dir", "schema"}``, the schema (``cell``
+  as bigint included) recorded at write time, so a read pins every
+  segment's scan and infers nothing; manifests that list bare segment
+  names (written before schemas were recorded) are read with inference;
 * ``query(queries)`` probes each query's top-n_probe cells: centroids
   broadcast, the index scan filtered to the probed cells (pruned), one
   rounded-cosine top-k window per query — the q_sim_ann plan over the
@@ -32,9 +41,7 @@ and cosines, id tie-breaks) keeps results engine-stable.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,8 +49,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from machinelearningalgomapreduce_spark.functions.vectors import dot, norm, sq_dist
-
-_POINTER = "_CURRENT"
+from machinelearningalgomapreduce_spark.operators.matview import SegmentLog, _committed
 
 # query() collects the probe set (query rows × n_probe cells) to the
 # driver only while it provably fits this many rows; past the cap the
@@ -59,7 +65,10 @@ class IVFIndexView:
     """A persisted, incrementally-maintained IVF index over an embedding
     frame (vec_id, embedding: array<double>)."""
 
-    _SPEC_FILE = "_SPEC.json"
+    # The segment payload: the column stored beside (vec_id, cell), and
+    # the schema of a read with no segment. IVFPQIndexView stores codes.
+    _PAYLOAD = "embedding"
+    _EMPTY_SCHEMA = "vec_id long, embedding array<double>, cell bigint"
 
     def __init__(
         self,
@@ -96,119 +105,35 @@ class IVFIndexView:
                 raise ValueError(
                     f"centroid {label} has dim {len(vec)}, expected {self.dim}"
                 )
-        # quantizer identity: assignments from two different centroid sets
-        # must never mix in one index (n_probe is query-time only).
-        # Lists, not tuples — the spec must compare equal after a JSON
-        # round-trip.
-        self._spec = {
+        self._log = SegmentLog(
+            path, self._quantizer_spec(), what="quantizer", partition_by="cell"
+        )
+
+    def _quantizer_spec(self) -> dict:
+        """Quantizer identity, guarded by the log: assignments from two
+        different centroid sets must never mix in one index (n_probe is
+        query-time only). Lists, not tuples — the spec must compare equal
+        after a JSON round-trip."""
+        return {
             "dim": self.dim,
             "centroids": [[label, vec] for label, vec in self.centroids],
         }
-        os.makedirs(path, exist_ok=True)
 
-    # ---- pointers & manifests (the SegmentedAggView protocol) -----------
+    # ---- the log -----------------------------------------------------------
     def current_version(self) -> int:
-        try:
-            with open(os.path.join(self.path, _POINTER)) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
+        return self._log.current_version()
 
-    def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.path, f"m{version:08d}.json")
-
-    def _manifest(self, version: int) -> dict:
-        with open(self._manifest_path(version)) as f:
-            return json.load(f)
-
-    def segments(self, version: int | None = None) -> list[str]:
-        v = self.current_version() if version is None else version
-        return self._manifest(v)["segments"] if v else []
+    def segments(self, version: int | None = None) -> list[dict]:
+        """Live segment descriptors [{dir, schema}] at ``version``."""
+        return self._log.segments(version)
 
     def applied_batches(self) -> list[str]:
-        v = self.current_version()
-        return self._manifest(v)["batches"] if v else []
+        return self._log.applied_batches()
 
-    def _check_or_write_spec(self) -> None:
-        spec_path = os.path.join(self.path, self._SPEC_FILE)
-        if os.path.exists(spec_path):
-            with open(spec_path) as f:
-                on_disk = json.load(f)
-            if on_disk != self._spec:
-                raise ValueError(
-                    f"index at {self.path} was built with a different "
-                    "quantizer/dim; use a new path (or rebuild) to retrain"
-                )
-            return
-        tmp = spec_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._spec, f)
-        os.replace(tmp, spec_path)
-
-    def _commit(self, segments: list[str], batches: list[str], base_v: int) -> int:
-        from machinelearningalgomapreduce_spark.operators.matview import (
-            _write_json_durable,
-        )
-
-        # base_v+1, NOT current_version()+1 (r12): the commit version is
-        # pinned to the version the CONTENT was derived from, so a
-        # competitor's interleaved commit surfaces as a loud version
-        # collision instead of being silently dropped by committing past
-        # it (the optimistic-concurrency version check — matview
-        # _commit's rationale).
-        v = base_v + 1
-        # exclusive manifest creation (the matview _commit discipline,
-        # VERDICT r10 item 6): a concurrent writer that already committed
-        # this version raises a loud version-collision error instead of
-        # silently dropping one batch from the ledger
-        # above_pointer_fn (matview discipline): a colliding manifest
-        # at/below the committed pointer is COMMITTED, never an
-        # age-based orphan — raise the collision instead of reclaiming.
-        wrote = {"segments": segments, "batches": batches}
-        _write_json_durable(
-            self._manifest_path(v), wrote, exclusive=True,
-            above_pointer_fn=lambda: self.current_version() < v,
-        )
-        ptmp = os.path.join(self.path, _POINTER + ".tmp")
-        with open(ptmp, "w") as f:
-            f.write(str(v))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ptmp, os.path.join(self.path, _POINTER))  # THE commit
-        # Post-commit verification (r12 ADVICE, mirrors the matview
-        # _commit): if a concurrent writer reclaimed our linked manifest
-        # as an orphan during a >MANIFEST_ORPHAN_SECONDS pause, the flip
-        # above committed ITS manifest — re-read and fail loudly instead
-        # of letting this batch vanish.
-        if self._manifest(v) != wrote:
-            raise ValueError(
-                f"post-commit verification failed at version {v} of "
-                f"{self.path}: the committed manifest is not the one this "
-                "writer linked (a concurrent writer reclaimed it as an "
-                "orphan during a long pause) — this batch was NOT "
-                "committed and must be retried"
-            )
-        return v
-
-    def _next_seg_id(self) -> int:
-        from machinelearningalgomapreduce_spark.operators.matview import _seg_id_of
-
-        mx = 0
-        for name in os.listdir(self.path):
-            sid = _seg_id_of(name)
-            if sid is not None:
-                mx = max(mx, sid)
-        return mx + 1
-
-    def _new_seg_name(self) -> str:
-        # writer-unique (matview discipline): racing OS processes can
-        # both read the same max id; the pid+token suffix keeps their
-        # mode("error") parquet writes from colliding on one directory
-        from machinelearningalgomapreduce_spark.operators.matview import (
-            _new_seg_name,
-        )
-
-        return _new_seg_name(self._next_seg_id())
+    def vacuum(self, keep_last: int = 2) -> list[str]:
+        """Drop manifests older than the newest ``keep_last`` and every
+        segment no kept manifest references."""
+        return self._log.vacuum(keep_last)
 
     # ---- quantizer -------------------------------------------------------
     def _centroids_df(self, spark: SparkSession) -> DataFrame:
@@ -233,6 +158,10 @@ class IVFIndexView:
         return vectors.select("vec_id", "embedding").join(best, "vec_id")
 
     # ---- maintenance -----------------------------------------------------
+    def _payload(self, spark: SparkSession, delta: DataFrame) -> DataFrame:
+        """(vec_id, payload, cell): what a segment stores for ``delta``."""
+        return self.assign_cells(spark, delta)
+
     def refresh(
         self, spark: SparkSession, delta: DataFrame, batch_id: str,
         compact: bool = True,
@@ -248,76 +177,22 @@ class IVFIndexView:
         only the old cell is probed — compact promptly after updates).
 
         An EMPTY delta advances only the ledger: a dynamic-partition
-        write of zero rows emits no parquet files, and committing such a
-        segment would break every later read's schema inference.
+        write of zero rows emits no parquet files, so there is no segment
+        to commit.
 
         ``compact=True`` (the mv_ingest_stream contract) runs the
         full-merge compaction only once ``compact_at`` segments are live;
         ``compact=False`` defers entirely to an explicit maintenance
         call (mv_ingest_stream's compact_every schedule)."""
-        from machinelearningalgomapreduce_spark.operators.matview import (
-            _COMMIT_RETRIES,
-            _await_rebase,
-        )
-
-        self._check_or_write_spec()
-        name = None
-        for attempt in range(_COMMIT_RETRIES + 1):
-            base_v = self.current_version()
-            applied = self.applied_batches()
-            if batch_id in applied:
-                if name is not None and wrote_rows:
-                    # a rebase found a competitor already committed THIS
-                    # batch id (concurrent replay) — our segment is
-                    # referenced by no manifest; reclaim it (r12 review)
-                    shutil.rmtree(seg_dir, ignore_errors=True)
-                return False
-            if name is None:  # the delta is written once; retries re-ledger it
-                name = self._new_seg_name()
-                seg_dir = os.path.join(self.path, name)
-                # deterministic within-batch dedup: a vec_id sent twice in
-                # ONE delta keeps the array-max embedding (arrays compare
-                # lexicographically), so the segment never depends on row
-                # order
-                delta = delta.groupBy("vec_id").agg(
-                    F.max("embedding").alias("embedding")
-                )
-                (
-                    self.assign_cells(spark, delta)
-                    .write.partitionBy("cell")
-                    .mode("error")
-                    .parquet(seg_dir)
-                )
-                wrote_rows = any(
-                    f.endswith(".parquet")
-                    for _root, _dirs, files in os.walk(seg_dir)
-                    for f in files
-                )
-                if not wrote_rows:
-                    shutil.rmtree(seg_dir)
-            try:
-                if wrote_rows:
-                    self._commit(
-                        [*self.segments(base_v), name],
-                        [*applied, batch_id],
-                        base_v=base_v,
-                    )
-                else:
-                    self._commit(
-                        self.segments(base_v),
-                        [*applied, batch_id],
-                        base_v=base_v,
-                    )
-                break
-            except ValueError as e:
-                # Bounded rebase-retry on a LIVE competing writer's
-                # version win (VERDICT r11 item 5) — matview discipline.
-                if (
-                    "version collision" not in str(e)
-                    or attempt == _COMMIT_RETRIES
-                ):
-                    raise
-                _await_rebase(self.current_version, base_v, e)
+        self._log.check_spec()
+        # deterministic within-batch dedup: a vec_id sent twice in ONE
+        # delta keeps the array-max embedding (arrays compare
+        # lexicographically), so the segment never depends on row order
+        delta = delta.groupBy("vec_id").agg(F.max("embedding").alias("embedding"))
+        if not self._log.append(
+            batch_id, lambda: self._log.write_segment(self._payload(spark, delta))
+        ):
+            return False
         if compact and len(self.segments()) >= self.compact_at:
             self.compact(spark)
         return True
@@ -327,46 +202,14 @@ class IVFIndexView:
         resolving duplicate vec_ids to the NEWEST row (max manifest
         position — the upsert-at-compaction promise). No-op below 2
         segments. Old versions stay time-travel-resolvable until vacuum."""
-        self._check_or_write_spec()
+        self._log.check_spec()
         v0 = self.current_version()  # version the merge is derived from
         segs = self.segments(v0)
         if len(segs) < 2:
             return 0
-        name = self._new_seg_name()
-        resolved = (
-            self._union_segments(spark, segs, with_order=True)
-            .groupBy("vec_id")
-            .agg(F.max_by(F.struct("embedding", "cell"), "_seg").alias("r"))
-            .select("vec_id", "r.embedding", "r.cell")
-        )
-        resolved.write.partitionBy("cell").mode("error").parquet(
-            os.path.join(self.path, name)
-        )
-        self._commit([name], self.applied_batches(), base_v=v0)
+        seg = self._log.write_segment(self._newest(spark, segs))
+        self._log.commit([seg], self.applied_batches(), base_v=v0)
         return 1
-
-    def vacuum(self, keep_last: int = 2) -> list[str]:
-        """Drop manifests older than the newest ``keep_last`` and every
-        segment no kept manifest references."""
-        if keep_last < 1:
-            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        cur = self.current_version()
-        removed: list[str] = []
-        keep_versions = set(range(max(1, cur - keep_last + 1), cur + 1))
-        live: set[str] = set()
-        for v in keep_versions:
-            if os.path.exists(self._manifest_path(v)):
-                live.update(self.segments(v))
-        for name in sorted(os.listdir(self.path)):
-            full = os.path.join(self.path, name)
-            if name.startswith("m") and name[1:9].isdigit():
-                if int(name[1:9]) not in keep_versions:
-                    os.remove(full)
-                    removed.append(name)
-            elif name.startswith("seg-") and name not in live:
-                shutil.rmtree(full)
-                removed.append(name)
-        return removed
 
     def rebuild(
         self,
@@ -391,57 +234,42 @@ class IVFIndexView:
         )
         segs = self.segments()
         corpus = (
-            self._union_segments(spark, segs, with_order=True)
-            .groupBy("vec_id")
-            .agg(F.max_by("embedding", "_seg").alias("embedding"))
-            if segs
-            else self.read(spark).select("vec_id", "embedding")
-        )
+            self._newest(spark, segs) if segs else self.read(spark)
+        ).select("vec_id", "embedding")
         new.refresh(
             spark, corpus, batch_id=f"rebuild-v{self.current_version():08d}"
         )
         return new
 
     # ---- reads -----------------------------------------------------------
-    def _union_segments(
-        self, spark: SparkSession, segs: list[str], with_order: bool = False
+    def _newest(
+        self, spark: SparkSession, segs: list[dict], cells: list[int] | None = None
     ) -> DataFrame:
-        """Union of segment scans; ``with_order`` adds ``_seg`` (the
-        manifest position — recency order) for newest-wins resolution."""
-        dfs = []
-        for i, s in enumerate(segs):
-            d = spark.read.parquet(os.path.join(self.path, s))
-            # partition-column discovery type-infers `cell` from the
-            # directory names (int for small labels, long for big ones);
-            # pin it to bigint so the segment union, the empty-corner
-            # schema, and the read() contract never disagree
-            d = d.withColumn("cell", F.col("cell").cast("long"))
-            if with_order:
-                d = d.withColumn("_seg", F.lit(i))
-            dfs.append(d)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        """(vec_id, payload, cell) over ``segs`` with each vec_id resolved
+        to its row in the newest segment (max manifest position).
+        ``cells`` restricts the scan to those cells' directories: the
+        filter sits below the aggregate, so it reaches every segment scan
+        as a partition filter."""
+        rows = self._log.read(spark, segs, order_col="_seg")
+        if cells is not None:
+            rows = rows.filter(F.col("cell").isin(cells))
+        p = self._PAYLOAD
+        return (
+            rows.groupBy("vec_id")
+            .agg(F.max_by(F.struct(p, "cell"), "_seg").alias("r"))
+            .select("vec_id", f"r.{p}", "r.cell")
+        )
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """The indexed corpus (vec_id, embedding, cell) at ``version``.
-        Plain segment union: a vec_id re-ingested since the last compact
+        """The indexed corpus (vec_id, payload, cell) at ``version``, read
+        with each segment's recorded schema (no inference job). Plain
+        segment union: a vec_id re-ingested since the last compact
         appears once per ingest (see refresh — upsert-at-compaction)."""
-        self._check_or_write_spec()
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise ValueError("index has no committed version yet")
-        if v > self.current_version():
-            raise ValueError(
-                f"version {v} not committed (current={self.current_version()})"
-            )
-        segs = self.segments(v)
+        self._log.check_spec()
+        segs = self.segments(_committed(version, self.current_version(), "index"))
         if not segs:  # only empty deltas applied so far
-            return spark.createDataFrame(
-                [], "vec_id long, embedding array<double>, cell bigint"
-            )
-        return self._union_segments(spark, segs)
+            return spark.createDataFrame([], self._EMPTY_SCHEMA)
+        return self._log.read(spark, segs)
 
     def _probe_plan(self, spark: SparkSession, queries: DataFrame) -> DataFrame:
         """(query_id, qv, qnorm, pcell): each query row replicated to its
@@ -580,19 +408,12 @@ class IVFIndexView:
         segs = self.segments()
         if probe is None or not segs:  # no queries, or an all-empty index
             return self._empty_query_result(spark, probe_plan)
-        # the isin literal list reaches every segment scan as a partition
-        # filter — only the probed cells' directories are read
-        corpus = (
-            self._union_segments(spark, segs, with_order=True)
-            .filter(F.col("cell").isin(probed_cells))
-            .groupBy("vec_id")
-            .agg(F.max_by(F.struct("embedding", "cell"), "_seg").alias("r"))
-            .select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("r.cell").alias("cell"),
-                F.col("r.embedding").alias("nv"),
-                norm(F.col("r.embedding"), self.dim).alias("vnorm"),
-            )
+        # only the probed cells' directories are read
+        corpus = self._newest(spark, segs, probed_cells).select(
+            F.col("vec_id").alias("neighbor_id"),
+            "cell",
+            F.col("embedding").alias("nv"),
+            norm(F.col("embedding"), self.dim).alias("vnorm"),
         )
         # try_divide: a zero-norm vector (indexed or query) yields NULL
         # cosine, which sorts LAST under desc and drops out of the top-k

@@ -9,10 +9,12 @@ probe with ASYMMETRIC distance (exact query subvector vs quantized
 codeword — no query-side quantization error), and re-rank only the short
 survivor list against full vectors.
 
-This subclass keeps the ENTIRE maintenance protocol of IVFIndexView —
-spec-pinned quantizer, manifest-per-version + atomic pointer flip,
-replay-ledgered refresh, upsert-at-compaction, time travel, vacuum — and
-changes only the segment payload and the query plan:
+This subclass inherits IVFIndexView's maintenance whole — refresh,
+upsert-at-compaction, read and vacuum over matview's ``SegmentLog``
+(spec-pinned quantizer, manifest-per-version + atomic pointer flip,
+replay ledger, time travel, schema-recorded segments) — and changes only
+the segment payload (the ``_payload`` hook and the empty-read schema)
+and the query plan:
 
 * segments store ``(vec_id, codes: array<int>, cell)`` — the PQ encoding
   of each vector (``M`` nearest-codeword ids, one per subspace), written
@@ -50,10 +52,18 @@ from machinelearningalgomapreduce_spark.operators.ivf_index import IVFIndexView
 class IVFPQIndexView(IVFIndexView):
     """IVF index whose segments hold PQ codes instead of full vectors.
 
+    Refresh, compaction, read and vacuum are IVFIndexView's, over the
+    same ``SegmentLog``: a segment is ``(vec_id, codes, cell)`` with its
+    schema recorded in the manifest, and the codebooks join the guarded
+    quantizer spec.
+
     ``codebooks`` is ``[(sub, code, centroid), ...]`` covering every
     subspace 0..M-1 with the same code count; ``dim`` must divide evenly
     into M subspaces of len(centroid) dims each.
     """
+
+    _PAYLOAD = "codes"
+    _EMPTY_SCHEMA = "vec_id long, codes array<int>, cell bigint"
 
     def __init__(
         self,
@@ -99,9 +109,10 @@ class IVFPQIndexView(IVFIndexView):
         super().__init__(
             path, centroids, dim, n_probe=n_probe, compact_at=compact_at
         )
-        # quantizer identity now includes the PQ codebooks: codes written
-        # under one codebook are meaningless under another
-        self._spec["pq_codebooks"] = self.codebooks
+
+    def _quantizer_spec(self) -> dict:
+        # codes written under one codebook are meaningless under another
+        return {**super()._quantizer_spec(), "pq_codebooks": self.codebooks}
 
     # ---- encoding --------------------------------------------------------
     def encode(self, spark: SparkSession, vectors: DataFrame) -> DataFrame:
@@ -137,124 +148,11 @@ class IVFPQIndexView(IVFIndexView):
             "vec_id", F.array(*code_exprs).cast("array<int>").alias("codes")
         )
 
-    # ---- maintenance (payload = codes) ------------------------------------
-    def refresh(
-        self, spark: SparkSession, delta: DataFrame, batch_id: str,
-        compact: bool = True,
-    ) -> bool:
-        """IVFIndexView.refresh with the PQ payload: the delta's vectors
-        are cell-assigned (coarse quantizer) AND PQ-encoded; the segment
-        stores (vec_id, codes, cell) only. Ledger/compaction/empty-delta
-        semantics inherited verbatim — see the parent docstring."""
-        import os
-        import shutil
-
-        from machinelearningalgomapreduce_spark.operators.matview import (
-            _COMMIT_RETRIES,
-            _await_rebase,
-        )
-
-        self._check_or_write_spec()
-        name = None
-        for attempt in range(_COMMIT_RETRIES + 1):
-            base_v = self.current_version()
-            applied = self.applied_batches()
-            if batch_id in applied:
-                if name is not None and wrote_rows:
-                    # a rebase found a competitor already committed THIS
-                    # batch id (concurrent replay) — our segment is
-                    # referenced by no manifest; reclaim it (r12 review)
-                    shutil.rmtree(seg_dir, ignore_errors=True)
-                return False
-            if name is None:  # encode + write once; retries re-ledger it
-                name = self._new_seg_name()
-                seg_dir = os.path.join(self.path, name)
-                # deterministic within-batch dedup (parent discipline):
-                # keep the array-max embedding per vec_id before encoding
-                delta = delta.groupBy("vec_id").agg(
-                    F.max("embedding").alias("embedding")
-                )
-                assigned = self.assign_cells(spark, delta).select("vec_id", "cell")
-                (
-                    self.encode(spark, delta)
-                    .join(assigned, "vec_id")
-                    .write.partitionBy("cell")
-                    .mode("error")
-                    .parquet(seg_dir)
-                )
-                wrote_rows = any(
-                    f.endswith(".parquet")
-                    for _root, _dirs, files in os.walk(seg_dir)
-                    for f in files
-                )
-                if not wrote_rows:
-                    shutil.rmtree(seg_dir)
-            try:
-                if wrote_rows:
-                    self._commit(
-                        [*self.segments(base_v), name],
-                        [*applied, batch_id],
-                        base_v=base_v,
-                    )
-                else:
-                    self._commit(
-                        self.segments(base_v),
-                        [*applied, batch_id],
-                        base_v=base_v,
-                    )
-                break
-            except ValueError as e:
-                # Bounded rebase-retry on a LIVE competing writer's
-                # version win (VERDICT r11 item 5) — matview discipline.
-                if (
-                    "version collision" not in str(e)
-                    or attempt == _COMMIT_RETRIES
-                ):
-                    raise
-                _await_rebase(self.current_version, base_v, e)
-        if compact and len(self.segments()) >= self.compact_at:
-            self.compact(spark)
-        return True
-
-    def compact(self, spark: SparkSession) -> int:
-        """Parent's full-merge compaction over the codes payload
-        (newest-wins per vec_id by manifest position)."""
-        import os
-
-        self._check_or_write_spec()
-        v0 = self.current_version()  # version the merge is derived from
-        segs = self.segments(v0)
-        if len(segs) < 2:
-            return 0
-        name = self._new_seg_name()
-        resolved = (
-            self._union_segments(spark, segs, with_order=True)
-            .groupBy("vec_id")
-            .agg(F.max_by(F.struct("codes", "cell"), "_seg").alias("r"))
-            .select("vec_id", "r.codes", "r.cell")
-        )
-        resolved.write.partitionBy("cell").mode("error").parquet(
-            os.path.join(self.path, name)
-        )
-        self._commit([name], self.applied_batches(), base_v=v0)
-        return 1
-
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """The indexed corpus (vec_id, codes, cell) at ``version``."""
-        self._check_or_write_spec()
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise ValueError("index has no committed version yet")
-        if v > self.current_version():
-            raise ValueError(
-                f"version {v} not committed (current={self.current_version()})"
-            )
-        segs = self.segments(v)
-        if not segs:
-            return spark.createDataFrame(
-                [], "vec_id long, codes array<int>, cell bigint"
-            )
-        return self._union_segments(spark, segs)
+    def _payload(self, spark: SparkSession, delta: DataFrame) -> DataFrame:
+        """(vec_id, codes, cell): the delta's vectors cell-assigned by the
+        coarse quantizer AND PQ-encoded; the segment stores only these."""
+        assigned = self.assign_cells(spark, delta).select("vec_id", "cell")
+        return self.encode(spark, delta).join(assigned, "vec_id")
 
     def rebuild(self, *args, **kwargs):
         """Blocked on purpose: PQ codes are LOSSY, so a retrain cannot be
@@ -343,16 +241,8 @@ class IVFPQIndexView(IVFIndexView):
         segs = self.segments()
         if probe is None or not segs:
             return self._empty_query_result(spark, probe_plan)
-        cands = (
-            self._union_segments(spark, segs, with_order=True)
-            .filter(F.col("cell").isin(probed_cells))
-            .groupBy("vec_id")
-            .agg(F.max_by(F.struct("codes", "cell"), "_seg").alias("r"))
-            .select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("r.cell").alias("cell"),
-                F.col("r.codes").alias("codes"),
-            )
+        cands = self._newest(spark, segs, probed_cells).select(
+            F.col("vec_id").alias("neighbor_id"), "cell", "codes"
         )
         # Stage 1 — asymmetric distance, fully JVM-side: the codebook is a
         # literal array<array<array<double>>> (M·k·sub_dim doubles,

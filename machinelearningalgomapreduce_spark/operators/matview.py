@@ -39,6 +39,18 @@ would race the version counter (last pointer flip wins; the loser's
 batch is silently dropped from the ledger). Readers need no
 coordination at any time.
 
+Segmented stores: ``SegmentLog`` is the one commit protocol of every
+store whose state is immutable segments listed by per-version manifests
+— ``SegmentedAggView``/``LeveledAggView`` here and the IVF/IVF-PQ
+indexes (operators/ivf_index.py, ivf_pq.py), which keep only their
+payload logic. It owns the ``_CURRENT`` pointer, the manifests and their
+replay ledger, the ``_SPEC.json`` guard, writer-unique segment names,
+the exclusive-manifest commit with post-commit verification, the append
+loop's bounded rebase-retry, vacuum, and the segment read pinned to each
+segment's recorded schema. The flat view's version directories flip the
+same pointer (``_flip_pointer``) and check the same guard
+(``_guard_spec``), so a fix to the commit path lands once.
+
 Merge algebra: count→sum, sum→sum, min→min, max→max — each
 associative + commutative, so any delta partitioning and any refresh
 order produce the identical state (the property test re-aggregates the
@@ -64,6 +76,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import reprlib
 import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -80,6 +93,7 @@ _PARTIAL = {
 }
 
 _POINTER = "_CURRENT"
+_SPEC_FILE = "_SPEC.json"
 
 # An above-pointer manifest this old is a crashed commit's orphan (a live
 # writer flips its pointer within milliseconds of linking the manifest);
@@ -245,6 +259,74 @@ def _write_json_durable(
         ) from None
 
 
+def _read_pointer(path: str) -> int:
+    """Committed version named by ``path/_CURRENT``; 0 if never committed."""
+    try:
+        with open(os.path.join(path, _POINTER)) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return 0
+
+
+def _flip_pointer(path: str, version: int) -> None:
+    """THE commit of every versioned store in the package: the new version
+    number is fsynced to a tmp file, then one atomic rename makes it the
+    ``_CURRENT`` a reader resolves."""
+    tmp = os.path.join(path, _POINTER + ".tmp")
+    with open(tmp, "w") as f:
+        f.write(str(version))
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(path, _POINTER))
+
+
+def _guard_spec(path: str, spec: dict, what: str = "spec") -> None:
+    """First call records the state-defining ``spec`` durably in
+    ``path/_SPEC.json``; every later call validates against it, so
+    reopening a store with different keys/aggs (a wrapper's different
+    width/depth via ``spec_extra``, an index's different quantizer) fails
+    loudly instead of silently merging state built under another
+    meaning — same column names, different contents."""
+    spec_path = os.path.join(path, _SPEC_FILE)
+    try:
+        with open(spec_path) as f:
+            on_disk = json.load(f)
+    except FileNotFoundError:
+        _write_json_durable(spec_path, spec)
+        return
+    if on_disk != spec:
+        diff = sorted(k for k in on_disk.keys() | spec.keys() if on_disk.get(k) != spec.get(k))
+        raise ValueError(
+            f"{path} was built with a different {what}:\n"
+            f"  on disk: {reprlib.repr({k: on_disk.get(k) for k in diff})}\n"
+            f"  this instance: {reprlib.repr({k: spec.get(k) for k in diff})}\n"
+            "merging state across specs would corrupt it; use a new path "
+            "(or rebuild) to change it"
+        )
+
+
+def _committed(version: int | None, current: int, what: str = "view") -> int:
+    """The version a read resolves: ``version`` (default the committed
+    one), refused when nothing is committed yet or it lies past the
+    pointer."""
+    v = current if version is None else version
+    if v == 0:
+        raise ValueError(f"{what} has no committed version yet")
+    if v > current:
+        raise ValueError(f"version {v} not committed (current={current})")
+    return v
+
+
+def _drop_uncommitted_versions(path: str) -> None:
+    """Remove ``v*`` version dirs ABOVE the committed pointer — debris from
+    a crash between state write and pointer flip. Never adopted (the write
+    may be partial); the interrupted batch simply re-applies."""
+    cur = _read_pointer(path)
+    for name in os.listdir(path):
+        if name.startswith("v") and name[1:].isdigit() and int(name[1:]) > cur:
+            shutil.rmtree(os.path.join(path, name))
+
+
 def _new_seg_name(next_id: int) -> str:
     """Writer-unique segment directory name. The numeric prefix is a
     readability/ordering hint only — uniqueness comes from the
@@ -402,11 +484,7 @@ class IncrementalAggView:
     # ---- version bookkeeping -------------------------------------------
     def current_version(self) -> int:
         """Committed version number, 0 if never refreshed."""
-        try:
-            with open(os.path.join(self.path, _POINTER)) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
+        return _read_pointer(self.path)
 
     def _vdir(self, version: int) -> str:
         return os.path.join(self.path, f"v{version:08d}")
@@ -437,29 +515,6 @@ class IncrementalAggView:
         ]
         return state.unionByName(partial).groupBy(*self.keys).agg(*exprs)
 
-    # ---- spec guard -------------------------------------------------------
-    _SPEC_FILE = "_SPEC.json"
-
-    def _check_or_write_spec(self) -> None:
-        """First refresh records the state-defining spec; every later
-        refresh validates against it, so reopening an existing view
-        directory with different keys/aggs (or a wrapper's different
-        width/depth via ``spec_extra``) fails loudly instead of silently
-        sum-merging same-named-but-differently-bucketed state."""
-        spec_path = os.path.join(self.path, self._SPEC_FILE)
-        if os.path.exists(spec_path):
-            with open(spec_path) as f:
-                on_disk = json.load(f)
-            if on_disk != self._spec:
-                raise ValueError(
-                    f"view at {self.path} was built with a different spec:\n"
-                    f"  on disk: {on_disk}\n  this instance: {self._spec}\n"
-                    "merging deltas across specs would corrupt the state; "
-                    "use a new path (or rebuild) to change the spec"
-                )
-            return
-        _write_json_durable(spec_path, self._spec)
-
     # ---- public API -----------------------------------------------------
     def refresh(self, spark: SparkSession, delta: DataFrame, batch_id: str) -> bool:
         """Fold one delta batch into the view. Returns False (no-op) when
@@ -475,11 +530,11 @@ class IncrementalAggView:
         I/O — safe when replays can only arrive within a bounded horizon
         (Structured Streaming re-sends recent epochs, not ancient
         ones)."""
-        self._check_or_write_spec()
+        _guard_spec(self.path, self._spec)
         applied = self.applied_batches()
         if batch_id in applied:
             return False
-        self._gc_orphans()
+        _drop_uncommitted_versions(self.path)
         partial = self._partial(delta)
         v = self.current_version()
         state = partial if v == 0 else self._merge(self._read_state(spark, v), partial)
@@ -489,12 +544,7 @@ class IncrementalAggView:
         if self.ledger_cap is not None:
             ledger = ledger[-self.ledger_cap:]
         _write_json_durable(os.path.join(nxt, "batches.json"), ledger)
-        tmp = os.path.join(self.path, _POINTER + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(str(v + 1))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.path, _POINTER))  # THE commit
+        _flip_pointer(self.path, v + 1)  # THE commit
         return True
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -508,15 +558,8 @@ class IncrementalAggView:
         n_bins would otherwise DERIVE silently wrong estimates from
         existing state (reads re-apply constructor parameters just as
         merges do)."""
-        self._check_or_write_spec()
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise ValueError("view has no committed version yet")
-        if v > self.current_version():
-            raise ValueError(
-                f"version {v} not committed (current={self.current_version()})"
-            )
-        df = self._read_state(spark, v)
+        _guard_spec(self.path, self._spec)
+        df = self._read_state(spark, _committed(version, self.current_version()))
         for alias, fn in self.derive.items():
             df = df.withColumn(alias, _as_column(fn(df)))
         return df
@@ -537,15 +580,6 @@ class IncrementalAggView:
                 shutil.rmtree(d)
                 removed.append(v)
         return removed
-
-    def _gc_orphans(self) -> None:
-        """Remove version dirs ABOVE the committed pointer — debris from a
-        crash between state write and pointer flip. Never adopted (the
-        write may be partial); the interrupted batch simply re-applies."""
-        cur = self.current_version()
-        for name in os.listdir(self.path):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) > cur:
-                shutil.rmtree(os.path.join(self.path, name))
 
 
 def _as_column(c) -> Column:
@@ -1080,6 +1114,247 @@ class DriftMonitorView:
         return self._mv.vacuum(keep_last)
 
 
+class SegmentLog:
+    """The commit protocol shared by every segmented store in the package
+    — ``SegmentedAggView``/``LeveledAggView`` and the IVF/IVF-PQ indexes
+    (operators/ivf_index.py, ivf_pq.py). The stores keep only their
+    payload logic; the log owns the layout, the commit and the read.
+
+    Layout (all inside ``path``)::
+
+        _CURRENT        ← committed manifest version (``_flip_pointer``)
+        _SPEC.json      ← state-defining spec (``_guard_spec``)
+        m00000001.json  ← manifest: {"segments": [descriptor, ...],
+                                     "batches": [batch id, ...]}
+        seg-<n>-<pid>-<token>/   ← immutable segment, writer-unique name
+
+    A descriptor is ``{"dir", <payload fields>, "schema"}``: the segment
+    directory, whatever the store records beside it (a view's ``weight``)
+    and the schema of the frame written, taken at write time (analysis
+    only, no job). Reads pin it, so they infer nothing. Descriptors
+    without a schema (segments written before schemas were recorded —
+    old IVF manifests list bare directory names, read here as
+    ``{"dir": name}``) are read with inference.
+
+    ``partition_by`` picks the segment layout. ``None``: the data is
+    ``seg-*/data.parquet`` and a read is ONE schema-pinned scan per
+    distinct schema across all live segments. A column name: the segment
+    root is written ``partitionBy(col)``, so a filter on that column
+    prunes directories; Spark cannot read several partitioned roots in
+    one scan (CONFLICTING_DIRECTORY_STRUCTURES), so such a read is one
+    pinned scan per segment, unioned.
+
+    Commit: segments and the new manifest are fully written BEFORE the
+    one atomic pointer flip, so a crash leaves unreferenced ``seg-*``/
+    ``m*`` debris that readers never see and ``vacuum`` removes. The
+    manifest of version base_v + 1 is created EXCLUSIVELY, where base_v
+    is the version its content was read from, so a writer racing another
+    gets a loud version collision instead of silently dropping a batch;
+    ``append`` turns a collision with a live writer into a bounded
+    rebase-retry. Replay: a batch id already in the manifest's ledger is
+    a no-op, so at-least-once delivery yields exactly-once state. Time
+    travel: old manifests stay resolvable until ``vacuum``."""
+
+    def __init__(
+        self, path: str, spec: dict, what: str = "spec",
+        partition_by: str | None = None,
+    ) -> None:
+        self.path = path
+        self.spec = spec
+        self.what = what  # names the spec in the guard's error
+        self.partition_by = partition_by
+        os.makedirs(path, exist_ok=True)
+
+    # ---- pointer, spec & manifests ----------------------------------------
+    def current_version(self) -> int:
+        return _read_pointer(self.path)
+
+    def check_spec(self) -> None:
+        _guard_spec(self.path, self.spec, self.what)
+
+    def manifest_path(self, version: int) -> str:
+        return os.path.join(self.path, f"m{version:08d}.json")
+
+    def manifest(self, version: int) -> dict:
+        with open(self.manifest_path(version)) as f:
+            m = json.load(f)
+        m["segments"] = [s if isinstance(s, dict) else {"dir": s} for s in m["segments"]]
+        return m
+
+    def segments(self, version: int | None = None) -> list[dict]:
+        """Live segment descriptors at ``version`` (default: committed)."""
+        v = self.current_version() if version is None else version
+        return self.manifest(v)["segments"] if v else []
+
+    def applied_batches(self) -> list[str]:
+        v = self.current_version()
+        return self.manifest(v)["batches"] if v else []
+
+    # ---- segments ---------------------------------------------------------
+    def next_seg_id(self) -> int:
+        mx = 0
+        for name in os.listdir(self.path):
+            sid = _seg_id_of(name)
+            if sid is not None:
+                mx = max(mx, sid)
+        return mx + 1
+
+    def write_segment(self, df: DataFrame, **fields) -> dict | None:
+        """Write ``df`` as a new segment; returns its descriptor, or None
+        for a partitioned write of zero rows — a dynamic-partition write
+        emits no parquet files then, so there is no segment to commit."""
+        name = _new_seg_name(self.next_seg_id())
+        seg_dir = os.path.join(self.path, name)
+        if self.partition_by is None:
+            df.write.mode("error").parquet(os.path.join(seg_dir, "data.parquet"))
+        else:
+            df.write.partitionBy(self.partition_by).mode("error").parquet(seg_dir)
+            if not any(
+                f.endswith(".parquet") for _root, _dirs, files in os.walk(seg_dir) for f in files
+            ):
+                shutil.rmtree(seg_dir)
+                return None
+        return {"dir": name, **fields, "schema": _schema_record(df)}
+
+    def read(
+        self, spark: SparkSession, segs: list[dict], order_col: str | None = None
+    ) -> DataFrame:
+        """Union of ``segs`` read with their recorded schemas.
+        ``order_col`` adds each row's segment position in ``segs`` (the
+        manifest's recency order) for newest-wins resolution."""
+        def data(s):
+            return (
+                os.path.join(self.path, s["dir"], "data.parquet")
+                if self.partition_by is None
+                else os.path.join(self.path, s["dir"])
+            )
+
+        if self.partition_by is None and order_col is None:
+            return _read_parquet(spark, [(data(s), s.get("schema")) for s in segs])
+        frames = []
+        for i, s in enumerate(segs):
+            d = _read_parquet(spark, [(data(s), s.get("schema"))])
+            if self.partition_by is not None and s.get("schema") is None:
+                # discovery types an unrecorded partition column from its
+                # directory names (int for small values, bigint for big
+                # ones); recorded segments carry it as bigint
+                d = d.withColumn(self.partition_by, F.col(self.partition_by).cast("bigint"))
+            if order_col is not None:
+                d = d.withColumn(order_col, F.lit(i))
+            frames.append(d)
+        return functools.reduce(DataFrame.unionByName, frames)
+
+    # ---- commit -------------------------------------------------------------
+    def commit(self, segments: list[dict], batches: list[str], base_v: int) -> int:
+        # Commit at base_v+1 where base_v is the version the CONTENT was
+        # derived from — NOT the pointer at commit time (r12): reading
+        # the pointer here would let a writer that based its manifest on
+        # v0 commit cleanly at v2 after a competitor's flip, silently
+        # dropping the competitor's segment with no collision at all.
+        # Pinning to the read version makes any lost-update race a loud
+        # version collision (the optimistic-concurrency version check).
+        v = base_v + 1
+        # exclusive: a concurrent writer that already committed this
+        # version raises here instead of silently dropping one batch
+        # from the ledger via a last-pointer-flip-wins overwrite.
+        # above_pointer_fn: a colliding manifest at/below the committed
+        # pointer is COMMITTED state, never an age-based orphan — raise
+        # the collision so the rebase-retry serializes behind it.
+        wrote = {"segments": segments, "batches": batches}
+        _write_json_durable(
+            self.manifest_path(v), wrote, exclusive=True,
+            above_pointer_fn=lambda: self.current_version() < v,
+        )
+        _flip_pointer(self.path, v)  # THE commit
+        # Post-commit verification (r12 ADVICE): a writer paused longer
+        # than MANIFEST_ORPHAN_SECONDS between its manifest link and this
+        # pointer flip can have its manifest reclaimed as an "orphan" by
+        # a concurrent writer — the flip above then commits the OTHER
+        # writer's manifest and this batch would vanish silently. One
+        # cheap re-read turns that race back into a loud failure.
+        if self.manifest(v) != wrote:
+            raise ValueError(
+                f"post-commit verification failed at version {v} of "
+                f"{self.path}: the committed manifest is not the one this "
+                "writer linked (a concurrent writer reclaimed it as an "
+                "orphan during a long pause) — this batch was NOT "
+                "committed and must be retried"
+            )
+        return v
+
+    def append(self, batch_id: str, write, ledger_cap: int | None = None) -> bool:
+        """Commit one batch: ``write()`` writes its segment (once) and
+        returns the descriptor, or None when the batch has no rows — the
+        commit then advances only the ledger. Returns False (no-op) for an
+        already-applied ``batch_id``.
+
+        ``ledger_cap`` keeps only the newest N batch ids: O(cap) manifest
+        I/O per refresh, replay protection only within the newest cap ids
+        (safe when replays arrive within a bounded horizon, as Structured
+        Streaming's do)."""
+        seg, written = None, False
+        for attempt in range(_COMMIT_RETRIES + 1):
+            v = self.current_version()
+            manifest = self.manifest(v) if v else {"segments": [], "batches": []}
+            applied = manifest["batches"]
+            if batch_id in applied:
+                if seg is not None:
+                    # a rebase found a competitor already committed THIS
+                    # batch id (concurrent replay) — our written segment
+                    # is referenced by no manifest; reclaim it instead of
+                    # leaking it until vacuum (r12 review)
+                    shutil.rmtree(os.path.join(self.path, seg["dir"]), ignore_errors=True)
+                return False
+            if not written:  # the batch is written once; retries re-ledger it
+                seg, written = write(), True
+            ledger = [*applied, batch_id]
+            if ledger_cap is not None:
+                ledger = ledger[-ledger_cap:]
+            segs = manifest["segments"] if seg is None else [*manifest["segments"], seg]
+            try:
+                self.commit(segs, ledger, base_v=v)
+                return True
+            except ValueError as e:
+                # Bounded rebase-retry (VERDICT r11 item 5): a LIVE
+                # competing writer won this version — wait for its pointer
+                # flip, rebase on its committed manifest (which now also
+                # carries its segment + batch id), retry at the next
+                # version. Anything else (an orphan that never flips,
+                # exhausted retries, non-collision errors) surfaces.
+                if "version collision" not in str(e) or attempt == _COMMIT_RETRIES:
+                    raise
+                _await_rebase(self.current_version, v, e)
+
+    def vacuum(self, keep_last: int = 2) -> list[str]:
+        """Drop manifests older than the newest ``keep_last``, then every
+        segment directory no kept manifest references (compaction leaves
+        old segments on disk precisely so old manifests stay
+        time-travel-resolvable; this is where they are finally freed).
+        Also removes crash debris above the pointer. Returns removed
+        file/dir names."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
+        cur = self.current_version()
+        removed: list[str] = []
+        keep_versions = set(range(max(1, cur - keep_last + 1), cur + 1))
+        live: set[str] = set()
+        for v in keep_versions:
+            # a version inside the keep window may already have been
+            # dropped by an earlier, stricter vacuum — skip, don't crash
+            if os.path.exists(self.manifest_path(v)):
+                live.update(s["dir"] for s in self.segments(v))
+        for name in sorted(os.listdir(self.path)):
+            full = os.path.join(self.path, name)
+            if name.startswith("m") and name[1:9].isdigit():
+                if int(name[1:9]) not in keep_versions:
+                    os.remove(full)
+                    removed.append(name)
+            elif name.startswith("seg-") and name not in live:
+                shutil.rmtree(full)
+                removed.append(name)
+        return removed
+
+
 class SegmentedAggView:
     """LSM-style segmented twin of IncrementalAggView: O(delta) refresh
     writes, size-tiered compaction, identical read semantics.
@@ -1106,12 +1381,13 @@ class SegmentedAggView:
     for the flat view — and a read unions at most
     O(fanout · log_fanout(#batches)) segments.
 
-    Storage layout (all inside ``path``)::
-
-        _CURRENT            ← committed manifest version number
-        _SPEC.json          ← state-defining spec (same guard as the flat view)
-        m00000001.json      ← manifest: live segments + replay ledger
-        seg-00000001/       ← immutable parquet partial (data.parquet)
+    Storage layout, commit, replay ledger, time travel and vacuum are the
+    ``SegmentLog``'s (its docstring has the layout); each manifest segment
+    is ``{"dir", "weight", "schema"}`` and its data is
+    ``seg-*/data.parquet``. A read is ONE schema-pinned parquet scan per
+    distinct schema across the live segments (normally one scan in
+    total), and ``unionByName`` runs only between schemas that really
+    differ (e.g. a key that arrived as int, then as bigint).
 
     A segment is written exactly as its aggregate produced it — the
     delta's partial, or the re-aggregate of the compaction victims — with
@@ -1120,31 +1396,9 @@ class SegmentedAggView:
     keys, and AQE's partition coalescing sizes the file count: one file
     at the fixture tiers, the session's shuffle width at scale.
 
-    Each manifest segment is ``{"dir", "weight", "schema"}``: the schema
-    of the frame written, recorded at write time (analysis only, no job).
-    A read therefore infers nothing — it is ONE schema-pinned parquet
-    scan per distinct schema across the live segments (normally one scan
-    in total), and ``unionByName`` runs only between schemas that really
-    differ (e.g. a key that arrived as int, then as bigint). Segments
-    from manifests written before schemas were recorded are read
-    together with one inference job.
-
-    Crash safety mirrors IncrementalAggView: segments and the new
-    manifest are fully written BEFORE the one atomic pointer flip;
-    a crash leaves unreferenced seg-*/m* debris that readers never see
-    (the pointer still names the old manifest) and ``vacuum`` removes.
-    Replay: the manifest's ledger makes re-sent batch_ids no-ops, so
-    at-least-once delivery yields exactly-once state. Time travel:
-    ``read(version=...)`` resolves an older manifest; compaction never
-    deletes segments (old manifests stay resolvable) — ``vacuum``
-    drops old manifests and then any segment no kept manifest
-    references.
-
     Single writer by design, like the flat view. Derived columns
     (``derive``) compute on read from the merged parts.
     """
-
-    _SPEC_FILE = "_SPEC.json"
 
     def __init__(
         self,
@@ -1181,59 +1435,34 @@ class SegmentedAggView:
         # invariant mid-chain (weights stay valid, but the written
         # guarantee changes silently). keys/aggs are state-defining as in
         # the flat view; derive is read-time only.
-        self._spec = {
+        self._log = SegmentLog(path, {
             "keys": self.keys,
             "aggs": {a: list(v) for a, v in self.aggs.items()},
             "fanout": self.fanout,
             "extra": spec_extra or {},
-        }
-        os.makedirs(path, exist_ok=True)
+        })
 
-    # ---- pointers & manifests ------------------------------------------
+    # ---- the log ---------------------------------------------------------
     def current_version(self) -> int:
-        try:
-            with open(os.path.join(self.path, _POINTER)) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
-
-    def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.path, f"m{version:08d}.json")
-
-    def _manifest(self, version: int) -> dict:
-        with open(self._manifest_path(version)) as f:
-            return json.load(f)
+        return self._log.current_version()
 
     def segments(self, version: int | None = None) -> list[dict]:
         """Live segment descriptors [{dir, weight, schema}] at ``version``."""
-        v = self.current_version() if version is None else version
-        if v == 0:
-            return []
-        return self._manifest(v)["segments"]
+        return self._log.segments(version)
 
     def applied_batches(self) -> list[str]:
-        v = self.current_version()
-        return self._manifest(v)["batches"] if v else []
+        return self._log.applied_batches()
+
+    def vacuum(self, keep_last: int = 2) -> list[str]:
+        """``SegmentLog.vacuum``: drop old manifests, then unreferenced
+        segments. Returns removed file/dir names."""
+        return self._log.vacuum(keep_last)
 
     def _tier(self, weight: int) -> int:
         t = 0
         while weight >= self.fanout ** (t + 1):
             t += 1
         return t
-
-    def _check_or_write_spec(self) -> None:
-        spec_path = os.path.join(self.path, self._SPEC_FILE)
-        if os.path.exists(spec_path):
-            with open(spec_path) as f:
-                on_disk = json.load(f)
-            if on_disk != self._spec:
-                raise ValueError(
-                    f"view at {self.path} was built with a different spec:\n"
-                    f"  on disk: {on_disk}\n  this instance: {self._spec}\n"
-                    "use a new path (or rebuild) to change the spec"
-                )
-            return
-        _write_json_durable(spec_path, self._spec)
 
     # ---- merge algebra (shared shapes with the flat view) ---------------
     def _partial(self, delta: DataFrame) -> DataFrame:
@@ -1250,69 +1479,11 @@ class SegmentedAggView:
         ]
         return df.groupBy(*self.keys).agg(*exprs)
 
-    def _union_segments(self, spark: SparkSession, segs: list[dict]) -> DataFrame:
-        return _read_parquet(spark, [
-            (os.path.join(self.path, s["dir"], "data.parquet"), s.get("schema"))
-            for s in segs
-        ])
-
-    def _next_seg_id(self) -> int:
-        mx = 0
-        for name in os.listdir(self.path):
-            sid = _seg_id_of(name)
-            if sid is not None:
-                mx = max(mx, sid)
-        return mx + 1
-
     def _write_segment(self, df: DataFrame, weight: int = 1) -> dict:
         """Write ``df`` (a ``groupBy`` on the view keys, so its partitions
         are already key-disjoint) as a new segment; returns its manifest
         descriptor."""
-        name = _new_seg_name(self._next_seg_id())
-        df.write.mode("error").parquet(os.path.join(self.path, name, "data.parquet"))
-        return {"dir": name, "weight": weight, "schema": _schema_record(df)}
-
-    def _commit(self, segments: list[dict], batches: list[str], base_v: int) -> int:
-        # Commit at base_v+1 where base_v is the version the CONTENT was
-        # derived from — NOT the pointer at commit time (r12): reading
-        # the pointer here would let a writer that based its manifest on
-        # v0 commit cleanly at v2 after a competitor's flip, silently
-        # dropping the competitor's segment with no collision at all.
-        # Pinning to the read version makes any lost-update race a loud
-        # version collision (the optimistic-concurrency version check).
-        v = base_v + 1
-        # exclusive: a concurrent writer that already committed this
-        # version raises here instead of silently dropping one batch
-        # from the ledger via a last-pointer-flip-wins overwrite.
-        # above_pointer_fn: a colliding manifest at/below the committed
-        # pointer is COMMITTED state, never an age-based orphan — raise
-        # the collision so the rebase-retry serializes behind it.
-        wrote = {"segments": segments, "batches": batches}
-        _write_json_durable(
-            self._manifest_path(v), wrote, exclusive=True,
-            above_pointer_fn=lambda: self.current_version() < v,
-        )
-        ptmp = os.path.join(self.path, _POINTER + ".tmp")
-        with open(ptmp, "w") as f:
-            f.write(str(v))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ptmp, os.path.join(self.path, _POINTER))  # THE commit
-        # Post-commit verification (r12 ADVICE): a writer paused longer
-        # than MANIFEST_ORPHAN_SECONDS between its manifest link and this
-        # pointer flip can have its manifest reclaimed as an "orphan" by
-        # a concurrent writer — the flip above then commits the OTHER
-        # writer's manifest and this batch would vanish silently. One
-        # cheap re-read turns that race back into a loud failure.
-        if self._manifest(v) != wrote:
-            raise ValueError(
-                f"post-commit verification failed at version {v} of "
-                f"{self.path}: the committed manifest is not the one this "
-                "writer linked (a concurrent writer reclaimed it as an "
-                "orphan during a long pause) — this batch was NOT "
-                "committed and must be retried"
-            )
-        return v
+        return self._log.write_segment(df, weight=weight)
 
     # ---- public API ------------------------------------------------------
     def refresh(
@@ -1323,46 +1494,13 @@ class SegmentedAggView:
         existing state is NOT read), then run any due size-tiered
         compactions. Returns False (no-op) for an already-applied
         batch_id. ``compact=False`` defers compaction (e.g. to an
-        off-peak maintenance call of ``compact()``)."""
-        self._check_or_write_spec()
-        seg = None
-        for attempt in range(_COMMIT_RETRIES + 1):
-            v = self.current_version()
-            manifest = self._manifest(v) if v else {"segments": [], "batches": []}
-            applied = manifest["batches"]
-            if batch_id in applied:
-                if seg is not None:
-                    # a rebase found a competitor already committed THIS
-                    # batch id (concurrent replay) — our written segment
-                    # is referenced by no manifest; reclaim it instead of
-                    # leaking it until vacuum (r12 review)
-                    shutil.rmtree(os.path.join(self.path, seg["dir"]), ignore_errors=True)
-                return False
-            if seg is None:  # the delta is written once; retries re-ledger it
-                seg = self._write_segment(self._partial(delta))
-            ledger = [*applied, batch_id]
-            if self.ledger_cap is not None:
-                # Same trade as the flat view's ledger_cap: O(cap) manifest
-                # I/O per refresh, replay protection only within the newest
-                # cap batch ids (safe when replays arrive within a bounded
-                # horizon, as Structured Streaming's do).
-                ledger = ledger[-self.ledger_cap:]
-            try:
-                self._commit([*manifest["segments"], seg], ledger, base_v=v)
-                break
-            except ValueError as e:
-                # Bounded rebase-retry (VERDICT r11 item 5): a LIVE
-                # competing writer won this version — wait for its pointer
-                # flip, rebase on its committed manifest (which now also
-                # carries its segment + batch id), retry at the next
-                # version. Anything else (an orphan that never flips,
-                # exhausted retries, non-collision errors) surfaces.
-                if (
-                    "version collision" not in str(e)
-                    or attempt == _COMMIT_RETRIES
-                ):
-                    raise
-                _await_rebase(self.current_version, v, e)
+        off-peak maintenance call of ``compact()``). ``ledger_cap``
+        bounds the replay ledger as in the flat view."""
+        self._log.check_spec()
+        if not self._log.append(
+            batch_id, lambda: self._write_segment(self._partial(delta)), self.ledger_cap
+        ):
+            return False
         if compact:
             self.compact(spark)
         return True
@@ -1376,7 +1514,7 @@ class SegmentedAggView:
         executed."""
         # compaction RE-APPLIES the merge algebra and rewrites state, so
         # a wrong-spec instance must fail loudly here, not corrupt disk
-        self._check_or_write_spec()
+        self._log.check_spec()
         rounds = 0
         while True:
             v0 = self.current_version()  # version the merge is derived from
@@ -1387,11 +1525,11 @@ class SegmentedAggView:
             victims = self._victims(tiers)
             if not victims:
                 return rounds
-            merged = self._reagg(self._union_segments(spark, victims))
+            merged = self._reagg(self._log.read(spark, victims))
             new_seg = self._write_segment(merged, sum(s["weight"] for s in victims))
             victim_dirs = {s["dir"] for s in victims}
             survivors = [s for s in segs if s["dir"] not in victim_dirs]
-            self._commit([*survivors, new_seg], self.applied_batches(), base_v=v0)
+            self._log.commit([*survivors, new_seg], self.applied_batches(), base_v=v0)
             rounds += 1
 
     def _victims(self, tiers: dict[int, list[dict]]) -> list[dict] | None:
@@ -1413,48 +1551,12 @@ class SegmentedAggView:
         read RE-APPLIES the merge algebra — so the spec guard runs here
         too: summing another spec's max partials would silently return
         garbage instead of failing."""
-        self._check_or_write_spec()
-        v = self.current_version() if version is None else version
-        if v == 0:
-            raise ValueError("view has no committed version yet")
-        if v > self.current_version():
-            raise ValueError(
-                f"version {v} not committed (current={self.current_version()})"
-            )
-        df = self._reagg(self._union_segments(spark, self.segments(v)))
+        self._log.check_spec()
+        v = _committed(version, self.current_version())
+        df = self._reagg(self._log.read(spark, self.segments(v)))
         for alias, fn in self.derive.items():
             df = df.withColumn(alias, _as_column(fn(df)))
         return df
-
-    def vacuum(self, keep_last: int = 2) -> list[str]:
-        """Drop manifests older than the newest ``keep_last``, then every
-        segment directory no kept manifest references (compaction
-        leaves old segments on disk precisely so old manifests stay
-        time-travel-resolvable; this is where they are finally freed).
-        Also removes crash debris above the pointer. Returns removed
-        file/dir names."""
-        if keep_last < 1:
-            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        cur = self.current_version()
-        removed: list[str] = []
-        keep_versions = set(range(max(1, cur - keep_last + 1), cur + 1))
-        live: set[str] = set()
-        for v in keep_versions:
-            # a version inside the keep window may already have been
-            # dropped by an earlier, stricter vacuum — skip, don't crash
-            if not os.path.exists(self._manifest_path(v)):
-                continue
-            live.update(s["dir"] for s in self.segments(v))
-        for name in sorted(os.listdir(self.path)):
-            full = os.path.join(self.path, name)
-            if name.startswith("m") and name[1:9].isdigit():
-                if int(name[1:9]) not in keep_versions:
-                    os.remove(full)
-                    removed.append(name)
-            elif name.startswith("seg-") and name not in live:
-                shutil.rmtree(full)
-                removed.append(name)
-        return removed
 
 
 class LeveledAggView(SegmentedAggView):
@@ -1557,11 +1659,7 @@ class FactDimRollupView:
 
     # ---- dim snapshot (latest-wins upsert, versioned) --------------------
     def _dim_version(self) -> int:
-        try:
-            with open(os.path.join(self._dim_dir, _POINTER)) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
+        return _read_pointer(self._dim_dir)
 
     def _dim_vdir(self, v: int) -> str:
         return os.path.join(self._dim_dir, f"v{v:08d}")
@@ -1580,13 +1678,10 @@ class FactDimRollupView:
         applied = self.dim_applied_batches()
         if batch_id in applied:
             return False
-        # the fact side's _gc_orphans discipline: a crash between the
-        # v{N+1} parquet write and the pointer flip leaves an orphan dir
-        # the retried upsert would collide with (mode="error") forever
-        cur = self._dim_version()
-        for name in os.listdir(self._dim_dir):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) > cur:
-                shutil.rmtree(os.path.join(self._dim_dir, name))
+        # the fact side's orphan discipline: a crash between the v{N+1}
+        # parquet write and the pointer flip leaves an orphan dir the
+        # retried upsert would collide with (mode="error") forever
+        _drop_uncommitted_versions(self._dim_dir)
         cols = [self.dim_key, *self.dim_attrs, self.dim_ts]
         latest = (
             updates.select(*cols)
@@ -1614,12 +1709,7 @@ class FactDimRollupView:
         nxt = self._dim_vdir(v + 1)
         _write_snapshot(state, nxt)
         _write_json_durable(os.path.join(nxt, "batches.json"), [*applied, batch_id])
-        tmp = os.path.join(self._dim_dir, _POINTER + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(str(v + 1))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self._dim_dir, _POINTER))
+        _flip_pointer(self._dim_dir, v + 1)
         return True
 
     def dim(self, spark: SparkSession) -> DataFrame:

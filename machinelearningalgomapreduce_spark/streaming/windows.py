@@ -94,16 +94,6 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of q_events_sliding (1 h window, 15 min slide)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), money.money_sum_2dp(money.units("value")).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
-
-
 def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native gap-based session windows (streaming analog of q_sessionize's
     session assignment; state = one open session per user)."""

@@ -4,10 +4,9 @@ the probed cells, and keep old versions readable until vacuum."""
 
 from __future__ import annotations
 
-import pytest
+import functools
 
-# IVF index integration lane (~minutes): slow-marked, run with -m slow (pytest.ini r16).
-pytestmark = pytest.mark.slow
+import pytest
 from pyspark.sql import functions as F
 
 from machinelearningalgomapreduce_spark.operators.ivf_index import IVFIndexView
@@ -20,6 +19,7 @@ from tests.conftest import drain
 DIM = 64
 
 
+@functools.cache  # one quantizer per session: label_centroids runs a Spark job
 def _centroids(spark):
     t = load_tables(spark, SMOKE_SF_DIR)
     return [
@@ -412,7 +412,7 @@ def test_concurrent_index_commit_raises_instead_of_silent_drop(
     stale = a.current_version()
     a.refresh(spark, batches[1], batch_id="b1")  # A wins the next version
     want = {(r.vec_id, r.cell) for r in a.read(spark).collect()}
-    monkeypatch.setattr(type(b), "current_version", lambda self: stale)
+    monkeypatch.setattr(b._log, "current_version", lambda: stale)
     with pytest.raises(ValueError, match="version collision"):
         b.refresh(spark, batches[2], batch_id="b2")
     monkeypatch.undo()

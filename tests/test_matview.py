@@ -1237,8 +1237,8 @@ def test_leveled_view_invariants_and_amplification_trade(spark, tmp_path):
         assert all(len(m) == 1 for t, m in tiers.items() if t >= 1), (i, segs)
         assert len(segs) <= len(tiered.segments()), (i, segs)
     # write-amp proxy: segment directories ever created (vacuum not run)
-    lev_written = lev._next_seg_id() - 1
-    tiered_written = tiered._next_seg_id() - 1
+    lev_written = lev._log.next_seg_id() - 1
+    tiered_written = tiered._log.next_seg_id() - 1
     assert lev_written >= tiered_written
 
 
@@ -1422,8 +1422,8 @@ def test_concurrent_version_commit_raises_instead_of_silent_drop(
     a.refresh(spark, b1, batch_id="b1")  # A wins v2
     want = {tuple(r) for r in a.read(spark).collect()}
     monkeypatch.setattr(
-        type(b), "current_version", lambda self: stale
-    )  # B still believes v1
+        b._log, "current_version", lambda: stale
+    )  # B's log still believes v1
     with pytest.raises(ValueError, match="version collision"):
         b.refresh(spark, b2, batch_id="b2")
     monkeypatch.undo()
@@ -1446,7 +1446,7 @@ def test_crashed_commit_orphan_manifest_self_heals(spark, tmp_path, monkeypatch)
     sv = _seg_view(tmp_path / "orph", fanout=99)
     sv.refresh(spark, b0, batch_id="b0")  # v1 committed
     # crashed commit: m2 exists, pointer still 1, mtime pushed stale
-    orphan = sv._manifest_path(2)
+    orphan = sv._log.manifest_path(2)
     with open(orphan, "w") as f:
         f.write('{"segments": [], "batches": ["ghost"]}')
     old = time.time() - 3600
@@ -1457,11 +1457,11 @@ def test_crashed_commit_orphan_manifest_self_heals(spark, tmp_path, monkeypatch)
     assert sv.applied_batches() == ["b0", "b1"]  # ghost ledger discarded
 
     # fresh above-pointer manifest = live concurrent writer → loud error
-    with open(sv._manifest_path(3), "w") as f:
+    with open(sv._log.manifest_path(3), "w") as f:
         f.write('{"segments": [], "batches": ["live"]}')
     with pytest.raises(ValueError, match="version collision"):
         sv.refresh(spark, b2, batch_id="b2")
-    os.remove(sv._manifest_path(3))
+    os.remove(sv._log.manifest_path(3))
 
 
 def test_stale_committed_manifest_is_never_reclaimed(spark, tmp_path):
@@ -1478,19 +1478,19 @@ def test_stale_committed_manifest_is_never_reclaimed(spark, tmp_path):
     b0, b1, _ = _batches(t.lineitem)
     sv = _seg_view(tmp_path / "committed", fanout=99)
     sv.refresh(spark, b0, batch_id="b0")  # v1 committed, pointer = 1
-    committed = sv._manifest(1)
+    committed = sv._log.manifest(1)
     # the committed manifest ages past the orphan horizon (normal for a
     # view refreshed less than once per 300s)
-    m1 = sv._manifest_path(1)
+    m1 = sv._log.manifest_path(1)
     old = time.time() - 3600
     os.utime(m1, (old, old))
     # lagging writer derived its content from v0 → tries to commit v1
     seg = sv._write_segment(sv._partial(b1))
     with pytest.raises(ValueError, match="version collision"):
-        sv._commit([seg], ["late"], base_v=0)
+        sv._log.commit([seg], ["late"], base_v=0)
     # the winner's manifest survived untouched; pointer never moved
     assert sv.current_version() == 1
-    assert sv._manifest(1) == committed
+    assert sv._log.manifest(1) == committed
     assert sv.applied_batches() == ["b0"]
 
 
@@ -1570,7 +1570,7 @@ def test_reclaimed_manifest_fails_post_commit_verification(spark, tmp_path):
 _TWO_PROC_CHILD = r"""
 import os, sys, time
 
-view_dir, delta_path, batch_id, go_file = sys.argv[1:5]
+view_dir, delta_path, batch_id, go_file, kind = sys.argv[1:6]
 sys.path.insert(0, {repo!r})
 os.chdir(os.path.dirname(go_file))  # keep derby/warehouse dirs separate
 from machinelearningalgomapreduce_spark.session import get_spark
@@ -1579,14 +1579,19 @@ spark = get_spark(
     app_name="race-" + batch_id, master="local[2]", shuffle_partitions=2
 )
 spark.conf.set("spark.sql.adaptive.enabled", "false")
-from machinelearningalgomapreduce_spark.operators.matview import SegmentedAggView
+if kind == "view":
+    from machinelearningalgomapreduce_spark.operators.matview import SegmentedAggView
 
-sv = SegmentedAggView(
-    view_dir,
-    keys=["l_returnflag", "l_linestatus"],
-    aggs={{"n_rows": ("count", "*"), "sum_qty": ("sum", "l_quantity")}},
-    fanout=99,
-)
+    sv = SegmentedAggView(
+        view_dir,
+        keys=["l_returnflag", "l_linestatus"],
+        aggs={{"n_rows": ("count", "*"), "sum_qty": ("sum", "l_quantity")}},
+        fanout=99,
+    )
+else:
+    from machinelearningalgomapreduce_spark.operators.ivf_index import IVFIndexView
+
+    sv = IVFIndexView(view_dir, {cents!r}, dim={dim})
 delta = spark.read.parquet(delta_path)
 deadline = time.monotonic() + 120
 while not os.path.exists(go_file):  # barrier: maximize commit overlap
@@ -1597,6 +1602,43 @@ ok = sv.refresh(spark, delta, batch_id=batch_id)
 sys.exit(0 if ok else 4)
 """
 
+# the IVF race's quantizer: one centroid per axis of a 4-d space
+_RACE_DIM = 4
+_RACE_CENTS = [(c, [1.0 if d == c else 0.0 for d in range(_RACE_DIM)]) for c in range(_RACE_DIM)]
+
+
+def _race_two_processes(tmp_path, view_dir, deltas, kind):
+    """Run one child process per (delta frame, batch id) in ``deltas``,
+    each refreshing the store at ``view_dir``; release both at once
+    and require both to exit 0 (refresh returned True)."""
+    import subprocess
+    import sys as _sys
+    import time as _time
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = _TWO_PROC_CHILD.format(repo=repo, cents=_RACE_CENTS, dim=_RACE_DIM)
+    procs = []
+    for df, bid in deltas:
+        path = str(tmp_path / f"{bid}.parquet")
+        df.coalesce(1).write.parquet(path)
+        wd = tmp_path / f"wd-{bid}"
+        wd.mkdir()
+        procs.append(
+            subprocess.Popen(
+                [_sys.executable, "-c", script, view_dir, path, bid,
+                 str(wd / "go"), kind],
+                env={**os.environ, "SPARK_LOCAL_IP": "127.0.0.1"},
+            )
+        )
+    # release both barriers as close together as possible once both JVMs
+    # are up (each child spins on its own go-file to avoid fs races)
+    _time.sleep(1)
+    for _df, bid in deltas:
+        with open(tmp_path / f"wd-{bid}" / "go", "w") as f:
+            f.write("go")
+    codes = [p.wait(timeout=300) for p in procs]
+    assert codes == [0, 0], f"child exit codes: {codes}"
+
 
 @pytest.mark.slow  # heavy lane, run with -m slow (pytest.ini r16)
 def test_two_os_process_commit_race_serializes(spark, tmp_path):
@@ -1606,41 +1648,11 @@ def test_two_os_process_commit_race_serializes(spark, tmp_path):
     the same SegmentedAggView. Both batches must land, serialized, and
     the state must equal a one-shot union — the single-writer-per-view
     documented mode is a deployment choice, not a correctness crutch."""
-    import subprocess
-    import sys as _sys
-
     li = load_tables(spark, SMOKE_SF_DIR).lineitem.limit(600)
     da = li.filter(F.col("l_orderkey") % 2 == 0)
     db = li.filter(F.col("l_orderkey") % 2 == 1)
-    pa, pb = str(tmp_path / "da.parquet"), str(tmp_path / "db.parquet")
-    da.coalesce(1).write.parquet(pa)
-    db.coalesce(1).write.parquet(pb)
     view_dir = str(tmp_path / "race2p")
-    go = str(tmp_path / "go")
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    script = _TWO_PROC_CHILD.format(repo=repo)
-    procs = []
-    for path, bid in ((pa, "proc-a"), (pb, "proc-b")):
-        wd = tmp_path / f"wd-{bid}"
-        wd.mkdir()
-        procs.append(
-            subprocess.Popen(
-                [_sys.executable, "-c", script, view_dir, path, bid,
-                 str(wd / os.path.basename(go))],
-                env={**os.environ, "SPARK_LOCAL_IP": "127.0.0.1"},
-            )
-        )
-    # release both barriers as close together as possible once both JVMs
-    # are up (each child spins on its own go-file to avoid fs races)
-    import time as _time
-
-    _time.sleep(1)
-    for bid in ("proc-a", "proc-b"):
-        with open(tmp_path / f"wd-{bid}" / "go", "w") as f:
-            f.write("go")
-    codes = [p.wait(timeout=300) for p in procs]
-    assert codes == [0, 0], f"child exit codes: {codes}"
+    _race_two_processes(tmp_path, view_dir, [(da, "proc-a"), (db, "proc-b")], "view")
 
     from machinelearningalgomapreduce_spark.operators.matview import (
         SegmentedAggView,
@@ -1669,6 +1681,31 @@ def test_two_os_process_commit_race_serializes(spark, tmp_path):
         .collect()
     }
     assert got == want
+
+
+@pytest.mark.slow  # heavy lane, run with -m slow (pytest.ini r16)
+def test_two_os_process_ivf_commit_race_serializes(spark, tmp_path):
+    """The same two-OS-process race on one IVFIndexView directory: the
+    index commits through the shared segment log, so both batches must
+    land, serialized, at version 2, and the index must hold exactly the
+    cell assignment of both deltas."""
+    from machinelearningalgomapreduce_spark.operators.ivf_index import IVFIndexView
+
+    vecs = spark.range(400).select(
+        "id",
+        F.array(*[F.sin(F.col("id") * (d + 1)) for d in range(_RACE_DIM)]).alias("embedding"),
+    ).select(F.col("id").alias("vec_id"), "embedding")
+    da = vecs.filter(F.col("vec_id") % 2 == 0)
+    db = vecs.filter(F.col("vec_id") % 2 == 1)
+    view_dir = str(tmp_path / "ivf2p")
+    _race_two_processes(tmp_path, view_dir, [(da, "proc-a"), (db, "proc-b")], "ivf")
+
+    idx = IVFIndexView(view_dir, _RACE_CENTS, dim=_RACE_DIM)
+    assert sorted(idx.applied_batches()) == ["proc-a", "proc-b"]
+    assert idx.current_version() == 2
+    got = {(r.vec_id, r.cell) for r in idx.read(spark).collect()}
+    want = {(r.vec_id, r.cell) for r in idx.assign_cells(spark, vecs).collect()}
+    assert got == want and len(got) == 400
 
 
 def test_concurrent_replay_of_same_batch_reclaims_loser_segment(
