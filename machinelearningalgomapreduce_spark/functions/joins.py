@@ -14,10 +14,10 @@ replicated n× — keep n modest and the small side genuinely small.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from machinelearningalgomapreduce_spark.sources.catalog import table_stats
 
 SALT_COL = "__salt"
 
@@ -27,30 +27,30 @@ SALT_COL = "__salt"
 _FAN_OUT_WIDTH_CACHE: dict = {}
 
 
-def sf_of(sf_dir: str) -> float:
-    """Scale factor encoded in a fixture dir name (`.../sf0.1` → 0.1)."""
-    name = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        return float(name.removeprefix("sf"))
-    except ValueError:
-        return float("inf")  # unknown layout: assume big, never force-broadcast
+# Row bounds of the gated shapes below (catalog.table_stats footer rows):
+# orders at sf1, the largest side the TPC-H tiers broadcast; events and
+# documents at sf0.5.
+BROADCAST_MAX_ROWS = 1_500_000
+PRE_PARTITION_MAX_ROWS = {"events": 500_000, "documents": 25_000}
 
 
-def broadcast_if_small(df: DataFrame, sf_dir: str, fits_until_sf: float) -> DataFrame:
-    """Broadcast-hint `df` only below a scale factor where it provably fits.
+def broadcast_if_small(df: DataFrame, sf_dir: str, table: str) -> DataFrame:
+    """Broadcast-hint `df` only while its key `table` provably fits.
 
     Static semi-reduction planning: a dimension chain pre-joined down to a
     compact (key → attrs) relation is worth broadcasting into the fact scan —
     it replaces one hash-table probe per joined dim with a single probe, and
     removes the fact-side shuffle entirely. But a *forced* hint is only
-    honest where the reduced side's size is provable from the tier: above
-    `fits_until_sf` the hint is dropped and the join stays declarative, so
-    Catalyst/AQE pick shuffle vs runtime-broadcast from actual stats (AQE is
-    on in the engine defaults; at 100 TB it converts to broadcast exactly
-    when the built side measures small). This mirrors what a cost-based
-    planner does with a size bound, without ever hinting an unbounded side.
+    honest where the side is bounded: it holds at most one row per key of
+    `table`, so above BROADCAST_MAX_ROWS the hint is dropped and the join
+    stays declarative, so Catalyst/AQE pick shuffle vs runtime-broadcast
+    from actual stats (AQE is on in the engine defaults; at 100 TB it
+    converts to broadcast exactly when the built side measures small). This
+    mirrors what a cost-based planner does with a size bound, without ever
+    hinting an unbounded side.
     """
-    return F.broadcast(df) if sf_of(sf_dir) <= fits_until_sf else df
+    rows = table_stats(df.sparkSession, sf_dir)[table].rows
+    return F.broadcast(df) if rows <= BROADCAST_MAX_ROWS else df
 
 
 def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -160,10 +160,10 @@ def salted_join(
 
 
 def pre_partition_small_tier(
-    df: DataFrame, sf_dir: str, outer_keys: list[str], fits_until_sf: float = 0.5
+    df: DataFrame, sf_dir: str, outer_keys: list[str], table: str
 ) -> DataFrame:
     """Pre-partition a two-level aggregation's input by its OUTER grouping
-    keys — but only at small scale factors.
+    keys — but only while its source `table` is small.
 
     A two-level exact-distinct aggregation (groupBy(outer..., member) →
     groupBy(outer...)) plans two exchanges. Hash-partitioning the input on
@@ -176,10 +176,10 @@ def pre_partition_small_tier(
     This trades map-side combining away: the explicit repartition moves RAW
     rows, not pre-aggregated partials, and concentrates each outer key on
     one reducer. At 100 TB that is exactly wrong (hot outer keys, full-data
-    shuffle), so above `fits_until_sf` the input is returned unchanged and
-    the skew-safe two-level shape keeps its two combine-friendly exchanges —
-    the same provable-size gating discipline as broadcast_if_small.
+    shuffle), so above PRE_PARTITION_MAX_ROWS[table] the input is returned
+    unchanged and the skew-safe two-level shape keeps its two
+    combine-friendly exchanges — the same gating as broadcast_if_small.
     """
-    if sf_of(sf_dir) <= fits_until_sf:
+    if table_stats(df.sparkSession, sf_dir)[table].rows <= PRE_PARTITION_MAX_ROWS[table]:
         return df.repartition(*[F.col(k) for k in outer_keys])
     return df

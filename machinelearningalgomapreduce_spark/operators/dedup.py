@@ -25,8 +25,6 @@ near-dup clusters sit at Jaccard ≥ 0.7 with a clean gap below (measured
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -44,32 +42,13 @@ from machinelearningalgomapreduce_spark.functions.hashing import (
 from machinelearningalgomapreduce_spark.functions.joins import fan_out
 from machinelearningalgomapreduce_spark.functions.vectors import dot, norm, sq_dist
 from machinelearningalgomapreduce_spark.operators.text import QUALITY_SCORE_SQL
-from machinelearningalgomapreduce_spark.sources.catalog import load_tables
+from machinelearningalgomapreduce_spark.sources.catalog import load_tables, table_stats
 
 JACCARD_THRESHOLD = 0.7
 NGRAM_JACCARD_THRESHOLD = 0.5
 EMBEDDING_COSINE_THRESHOLD = 0.45
 CONTAINMENT_THRESHOLD = 0.8
 SIMHASH_BITS = 32
-# Row bound for q_dedup_embedding's brute/blocked switch on directories
-# whose name does not parse as sfN (r12: a row-count probe, not a name
-# parse): 10k vectors ⇒ ≤5·10⁷ brute candidate pairs, the same order as
-# the named BRUTE_MAX_SF tier (sf0.5 ≈ 10k embeddings by the fixture
-# growth curve), so the two gates agree on where brute stops being OK.
-EMBED_BRUTE_MAX_ROWS = 10_000
-# Memoized row-count-probe verdicts for unnamed directories, keyed like
-# load_tables' Catalog cache — the probe is one bounded count job, but
-# q_dedup_embedding can be invoked many times per session (bench loops)
-# and the verdict for a fixed directory cannot change mid-application.
-# STATIC-DIRECTORY ASSUMPTION (r13 ADVICE): the cache never invalidates —
-# a directory that GROWS past EMBED_BRUTE_MAX_ROWS mid-application (a
-# sink writing into it between invocations) keeps its 'small' verdict and
-# stays brute. This is the same contract load_tables' Catalog cache
-# already imposes on every query (a grown table serves stale frames long
-# before the probe verdict matters); callers ingesting into a live
-# directory must route explicitly (embedding_dedup_blocked) instead of
-# relying on the probe. Documented in q_dedup_embedding's docstring.
-_EMBED_PROBE_CACHE: dict = {}
 
 # Once-per-CALL-SITE registry for embedding_dedup_blocked_frame's
 # verify=False semantic
@@ -553,66 +532,35 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline, and `dedup_embedding_cell`'s recall is pytest-tracked
     (tests/test_dedup_variants.py) so the trade-off is machine-recorded.
 
-    Above BRUTE_MAX_SF the brute self-join REFUSES to run and routes to
+    Above similarity.BRUTE_MAX_ROWS embeddings (the table's Parquet footer
+    row count, catalog.table_stats — no probe job, whatever the
+    directory is named) the brute self-join REFUSES to run and routes to
     the learned-cell blocked path (VERDICT r4 item 5: enforce the switch
     in code, not prose; r11: the route is embedding_dedup_blocked, whose
     fixture recall vs brute is 1.0) — at that scale the O(n²) form is
     not an option and any residual recall trade-off is the price of
-    admission, tracked by the recall tests. Directories whose basename
-    does not parse as sfN get sf_of = inf; since r12 they are gated on a
-    bounded ROW-COUNT probe (limit(EMBED_BRUTE_MAX_ROWS+1).count() — one
-    cheap early-stopping scan) instead of assumed-big-by-name, so a
-    small corpus in a renamed directory still gets the exact form while
-    a genuinely big one still refuses brute. The probe verdict is
-    memoized per (application, dir) — load_tables already memoizes the
-    Catalog, so repeat invocations pay neither the load nor the count
-    job (r12 ADVICE); the memo assumes a STATIC directory (a corpus that
-    grows past the bound mid-application keeps its cached brute verdict
-    — same staleness contract as the Catalog cache; live-ingest callers
-    must route to embedding_dedup_blocked explicitly, r13 ADVICE) — and
-    routing an UNNAMED directory to the
-    approximate path emits a warning: the caller asked for the exact
-    query and is getting blocked-candidate semantics (recall 1.0 on the
-    fixtures, but approximate by construction), which must be
-    observable, not silent (r12 ADVICE)."""
-    from machinelearningalgomapreduce_spark.functions.joins import sf_of
-    from machinelearningalgomapreduce_spark.operators.similarity import BRUTE_MAX_SF
+    admission, tracked by the recall tests. The route emits a warning:
+    the caller asked for the exact query and is getting blocked-candidate
+    semantics (recall 1.0 on the fixtures, but approximate by
+    construction), which must be observable, not silent (r12 ADVICE)."""
+    from machinelearningalgomapreduce_spark.operators.similarity import BRUTE_MAX_ROWS
 
+    if table_stats(spark, sf_dir)["embeddings"].rows > BRUTE_MAX_ROWS:
+        import warnings
+
+        warnings.warn(
+            f"q_dedup_embedding: {sf_dir} holds more than "
+            f"{BRUTE_MAX_ROWS} embeddings — routing to the "
+            "approximate blocked path (embedding_dedup_blocked); "
+            "results are candidate-verified near-dup pairs, not "
+            "the exhaustive O(n²) enumeration",
+            stacklevel=2,
+        )
+        # learned-cell multi-probe blocking (recall 1.0 vs brute on the
+        # fixtures), not the label-cell variant — a big unlabeled corpus
+        # has no label column to seed cells from anyway
+        return embedding_dedup_blocked(spark, sf_dir)
     t = load_tables(spark, sf_dir)
-    sf = sf_of(sf_dir)
-    if sf > BRUTE_MAX_SF:
-        route_blocked = True
-        if sf == float("inf"):
-            # the bound is part of the key: the verdict is only valid
-            # for the bound it was probed against
-            key = (
-                spark.sparkContext.applicationId,
-                os.path.abspath(sf_dir),
-                EMBED_BRUTE_MAX_ROWS,
-            )
-            route_blocked = _EMBED_PROBE_CACHE.get(key)
-            if route_blocked is None:
-                route_blocked = (
-                    t.embeddings.limit(EMBED_BRUTE_MAX_ROWS + 1).count()
-                    > EMBED_BRUTE_MAX_ROWS
-                )
-                _EMBED_PROBE_CACHE[key] = route_blocked
-            if route_blocked:
-                import warnings
-
-                warnings.warn(
-                    f"q_dedup_embedding: {sf_dir} holds more than "
-                    f"{EMBED_BRUTE_MAX_ROWS} embeddings — routing to the "
-                    "approximate blocked path (embedding_dedup_blocked); "
-                    "results are candidate-verified near-dup pairs, not "
-                    "the exhaustive O(n²) enumeration",
-                    stacklevel=2,
-                )
-        if route_blocked:
-            # learned-cell multi-probe blocking (recall 1.0 vs brute on
-            # the fixtures), not the label-cell variant — a big unlabeled
-            # corpus has no label column to seed cells from anyway
-            return embedding_dedup_blocked(spark, sf_dir)
     # Per-vector norms precomputed; each candidate pair pays only the dot.
     e = t.embeddings.select("vec_id", "embedding", norm(F.col("embedding"), EMBEDDING_DIM).alias("vnorm"))
     # The STREAMED side of the pairwise loop must not inherit the 1-partition

@@ -44,7 +44,7 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/joins.py::pre_partition_small_tier)."""
     t = load_tables(spark, sf_dir)
     ev = t.events.withColumn("window_start", F.date_trunc("hour", "ts"))
-    ev = pre_partition_small_tier(ev, sf_dir, ["window_start", "event_type"])
+    ev = pre_partition_small_tier(ev, sf_dir, ["window_start", "event_type"], "events")
     per_user = (
         ev.groupBy("window_start", "event_type", "user_id")
         .agg(F.count("*").alias("n"), F.sum(money.units("value")).alias("v_c"))

@@ -22,25 +22,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from machinelearningalgomapreduce_spark.functions.joins import fan_out, sf_of
-from machinelearningalgomapreduce_spark.sources.catalog import load_tables
+from machinelearningalgomapreduce_spark.functions.joins import fan_out
+from machinelearningalgomapreduce_spark.sources.catalog import load_tables, table_stats
 
 DAMPING = 0.85
-# Triangle enumeration (q_triangle_count / q_edge_support): below this tier
-# the ORDERED ADJACENCY table (node → sorted out-neighbor array; ~15k rows
-# × avg-82 longs ≈ 15 MB at sf0.1) provably fits a broadcast, so triangles
-# come from per-EDGE sorted-array intersection — 1.2M edge rows, each
-# intersecting two ≤deg arrays — instead of materializing the 49M-row
-# wedge relation and closure-joining it (r16, guide §1.1 first-principles:
-# the wedge multiset is 26× larger than the triangle set at sf0.1, 1.88M
-# triangles; measured 6.1 → 2.2 s count / 6.7 → 3.3 s support). Identical
-# output: with id-oriented edges u<v, triangle x<y<z is found exactly once
+# Triangle enumeration (q_triangle_count / q_edge_support): while lineitem
+# measures at most this many rows (lineitem at sf0.2), the ORDERED ADJACENCY
+# table (node → sorted out-neighbor array; ~15k rows × avg-82 longs ≈ 15 MB
+# at sf0.1) provably fits a broadcast, so triangles come from per-EDGE
+# sorted-array intersection — 1.2M edge rows, each intersecting two ≤deg
+# arrays — instead of materializing the 49M-row wedge relation and
+# closure-joining it (r16, guide §1.1 first-principles: the wedge multiset
+# is 26× larger than the triangle set at sf0.1, 1.88M triangles; measured
+# 6.1 → 2.2 s count / 6.7 → 3.3 s support). Identical output: with
+# id-oriented edges u<v, triangle x<y<z is found exactly once
 # (z ∈ N+(x) ∩ N+(y)), and the 3-way edge charge multiset is the same.
-# Above the bound the proven O(m^{3/2}) wedge-closure join stands (at
-# 100 TB adjacency arrays cannot broadcast and a hot node's array would
-# break a row; the at-scale wedge reducer is degree orientation — see
+# Above the bound the proven O(m^{3/2}) wedge-closure join stands (at 100 TB
+# adjacency arrays cannot broadcast and a hot node's array would break a
+# row; the at-scale wedge reducer is degree orientation — see
 # q_triangle_count's docstring).
-TRIANGLE_BCAST_MAX_SF = 0.2
+TRIANGLE_BCAST_MAX_ROWS = 1_200_000
 
 
 def _oriented_adj(edges: DataFrame) -> DataFrame:
@@ -262,9 +263,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes — same plan shape, one extra degree join to build the orientation.
     """
     edges = _copurchase_edges(spark, sf_dir)
-    if sf_of(sf_dir) <= TRIANGLE_BCAST_MAX_SF:
+    if table_stats(spark, sf_dir)["lineitem"].rows <= TRIANGLE_BCAST_MAX_ROWS:
         # Small tiers: per-edge adjacency intersection (see
-        # TRIANGLE_BCAST_MAX_SF) — Σ|N+(u) ∩ N+(v)| over edges is exactly
+        # TRIANGLE_BCAST_MAX_ROWS) — Σ|N+(u) ∩ N+(v)| over edges is exactly
         # the ordered-triangle count; no 49M-row wedge relation exists.
         triangles = _adj_intersect_edges(edges).agg(
             F.coalesce(F.sum(F.size("common")), F.lit(0)).cast("bigint").alias("n_triangles")
@@ -1448,9 +1449,9 @@ def q_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny. The full per-edge support relation never reaches the driver.
     """
     edges = _copurchase_edges(spark, sf_dir)
-    if sf_of(sf_dir) <= TRIANGLE_BCAST_MAX_SF:
+    if table_stats(spark, sf_dir)["lineitem"].rows <= TRIANGLE_BCAST_MAX_ROWS:
         # Small tiers: ordered triangles by per-edge adjacency intersection
-        # (see TRIANGLE_BCAST_MAX_SF) — explode the common-neighbor array
+        # (see TRIANGLE_BCAST_MAX_ROWS) — explode the common-neighbor array
         # to one row per TRIANGLE (1.88M at sf0.1), never one per wedge
         # (49M). Same (x, y, z) set as the wedge-closure join.
         tri = _adj_intersect_edges(edges).select(

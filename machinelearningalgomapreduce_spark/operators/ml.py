@@ -31,18 +31,11 @@ from pyspark.sql.window import Window as W
 from machinelearningalgomapreduce_spark.functions import money
 from machinelearningalgomapreduce_spark.functions.joins import fan_out
 from machinelearningalgomapreduce_spark.functions.vectors import as_double, dot, norm, sq_dist
-from machinelearningalgomapreduce_spark.sources.catalog import load_tables
+from machinelearningalgomapreduce_spark.sources.catalog import load_tables, table_stats
 from machinelearningalgomapreduce_spark.sources.schemas import EMBEDDING_DIM
 
 KNN_K = 10
 KNN_QUERY_STRIDE = 50  # vec_id % stride == 0 → query point
-
-# Memoized corpus row counts for knn_ann's auto-k probe, keyed like
-# dedup._EMBED_PROBE_CACHE — the count is one bounded job, but a serving
-# loop invokes knn_ann many times per session and the corpus size for a
-# fixed directory cannot change mid-application (the same static-directory
-# assumption load_tables' Catalog cache already makes).
-_KNN_AUTOK_CACHE: dict = {}
 
 
 def label_centroids(embeddings: DataFrame) -> DataFrame:
@@ -206,9 +199,10 @@ def knn_ann(
     ADVICE: sizing the probe budget against the corpus-derived k when
     the quantizer has a different one silently mis-probes — the k that
     matters for recall is the one the cells were actually built with);
-    the corpus-sized auto-k runs only in the cold-start path, and its
-    ``.count()`` probe is memoized per (application, dir) like
-    q_dedup_embedding's routing probe.
+    the corpus-sized auto-k runs only in the cold-start path and takes n
+    from the embeddings' Parquet footers (catalog.table_stats) — no count
+    job; a table whose footers cannot be read has no size to plan by and
+    fails here instead of guessing.
 
     ``index=``: a persisted ``IVFIndexView`` or ``IVFPQIndexView``
     (VERDICT r13 item 2) — the fully-amortized serving shape where both
@@ -289,16 +283,7 @@ def knn_ann(
                 # actually in play — a k-row count, not a corpus scan
                 k_cells = centroids.count()
             else:
-                import os as _os
-
-                key = (
-                    spark.sparkContext.applicationId,
-                    _os.path.abspath(sf_dir),
-                )
-                n = _KNN_AUTOK_CACHE.get(key)
-                if n is None:
-                    n = t.embeddings.count()
-                    _KNN_AUTOK_CACHE[key] = n
+                n = int(table_stats(spark, sf_dir)["embeddings"].rows)
                 k_cells = max(10, -(-n // EMBED_DEDUP_CELL_TARGET))
         np_ = auto_n_probe(k_cells) if n_probe is None else n_probe
         if centroids is None:

@@ -25,12 +25,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from machinelearningalgomapreduce_spark.functions import money
-from machinelearningalgomapreduce_spark.functions.joins import (
-    broadcast_if_small,
-    pre_partition_small_tier,
-    sf_of,
+from machinelearningalgomapreduce_spark.functions.joins import pre_partition_small_tier
+from machinelearningalgomapreduce_spark.sources.catalog import (
+    cache_partition_key,
+    load_tables,
+    table_stats,
 )
-from machinelearningalgomapreduce_spark.sources.catalog import cache_partition_key, load_tables
+
+# Small-tier join shapes (q_join3_topk, q_join5_region) hold while orders
+# measures at most this many rows: 750k, orders at sf0.5.
+SMALL_TIER_MAX_ORDERS = 750_000
 
 
 def tiny_sorted(df: DataFrame, *cols) -> DataFrame:
@@ -174,8 +178,9 @@ def q_join3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a compact (orderkey → date, priority) relation before lineitem
     touches it, so the fact scan probes ONE hash table instead of two and
     never shuffles (measured 229 → 175 ms at the bench tier). The
-    broadcast hint is size-gated per tier (functions/joins.py); above the
-    bound the same plan stays declarative for Catalyst/AQE.
+    broadcast hint is gated on orders' measured row count
+    (SMALL_TIER_MAX_ORDERS); above the bound the same plan stays
+    declarative for Catalyst/AQE.
 
     Tie-break on l_orderkey makes LIMIT deterministic across engines
     (SURVEY.md §5.2.2). Spark plans TakeOrderedAndProject — no global sort.
@@ -199,9 +204,9 @@ def q_join3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     122/106/97 ms with the leaf broadcast). Unbucketed layouts (the
     correctness gate's uncached reads) keep the broadcast-leaf plan —
     forcing SHJ there would shuffle 150k orders to avoid a 3k-row
-    broadcast. Above sf0.5 neither side is provably broadcastable and
-    the semi-reduced dims shape below stays the declarative plan for
-    Catalyst/AQE.
+    broadcast. Above SMALL_TIER_MAX_ORDERS orders rows neither side is
+    provably broadcastable and the semi-reduced dims shape below stays
+    the declarative plan for Catalyst/AQE.
     """
     t = load_tables(spark, sf_dir)
     cutoff = F.lit("1998-06-01").cast("timestamp")
@@ -210,7 +215,7 @@ def q_join3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
     ).alias("revenue")
     fact = t.lineitem.filter(F.col("l_shipdate") > cutoff)
-    if sf_of(sf_dir) <= 0.5:
+    if table_stats(spark, sf_dir)["orders"].rows <= SMALL_TIER_MAX_ORDERS:
         cust_f = t.customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
         colocated = (
             cache_partition_key(spark, sf_dir, "orders") == "o_custkey"
@@ -247,11 +252,10 @@ def q_join5_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact (orderkey → nationkey, nation name) relation — region filter
     applied first, dims broadcast by Catalyst — and lineitem then probes
     just that and supplier (measured 369 → 222 ms at the bench tier vs
-    streaming lineitem through four separate dim probes). The reduced-dim
-    broadcast hint is size-gated per tier (functions/joins.py): above
-    sf1 it drops away and Catalyst/AQE plan the fact-side join from
-    runtime stats — at 100 TB that is a shuffle on orderkey, exactly what
-    the unreduced form would also do.
+    streaming lineitem through four separate dim probes). Above the
+    small-tier bound the reduced dims carry no hint: Catalyst/AQE plan the
+    fact-side join from runtime stats — at 100 TB that is a shuffle on
+    orderkey, exactly what the unreduced form would also do.
 
     Small-tier FLATTENED shape (VERDICT r5 item 5): the nested
     region→nation→customer→orders pre-join broadcasts serialize 4 job
@@ -261,8 +265,9 @@ def q_join5_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     (depth 2: customer probing the tiny nation/region leaf broadcasts)
     and supplier (leaf) lets the builds overlap — critical path 3 levels
     instead of 5; measured 153 → ~122 ms interleaved best-of-6. Above
-    sf0.5 the filtered orders side stops being provably broadcastable
-    and the semi-reduced dims shape keeps the declarative 100 TB plan.
+    SMALL_TIER_MAX_ORDERS orders rows the filtered orders side stops
+    being provably broadcastable and the semi-reduced dims shape keeps
+    the declarative 100 TB plan.
 
     When the catalog layout co-partitions orders and customer on custkey
     (catalog.cache_partition_key — the bucketing-metadata analogue), the
@@ -278,7 +283,7 @@ def q_join5_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.round(
         F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
     ).alias("revenue")
-    if sf_of(sf_dir) <= 0.5:
+    if table_stats(spark, sf_dir)["orders"].rows <= SMALL_TIER_MAX_ORDERS:
         cust_map = (
             t.customer
             .join(F.broadcast(t.nation), t.customer.c_nationkey == t.nation.n_nationkey)
@@ -525,7 +530,7 @@ def q_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     Small tiers pre-partition on event_type so both levels share ONE
     exchange (functions/joins.py::pre_partition_small_tier)."""
     t = load_tables(spark, sf_dir)
-    ev = pre_partition_small_tier(t.events, sf_dir, ["event_type"])
+    ev = pre_partition_small_tier(t.events, sf_dir, ["event_type"], "events")
     per_user = ev.groupBy("event_type", "user_id").agg(F.count("*").alias("n"))
     return per_user.groupBy("event_type").agg(
         F.count("*").alias("n_users"),

@@ -25,14 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from machinelearningalgomapreduce_spark.functions.joins import fan_out, sf_of
+from machinelearningalgomapreduce_spark.functions.joins import fan_out
 from machinelearningalgomapreduce_spark.functions.vectors import dot, norm, sq_dist, sq_norm
 from machinelearningalgomapreduce_spark.operators.ml import (
     _ASSIGN_CTES,
     assign_nearest,
     label_centroids,
 )
-from machinelearningalgomapreduce_spark.sources.catalog import load_tables
+from machinelearningalgomapreduce_spark.sources.catalog import load_tables, table_stats
 from machinelearningalgomapreduce_spark.sources.schemas import EMBEDDING_DIM
 
 TOPK_PAIRS = 20
@@ -44,11 +44,11 @@ ANN_NPROBE = 2
 _IDCG_SQL = " + ".join(
     f"{ANN_K - p + 1}.0 / log2({p + 1}.0)" for p in range(1, ANN_K + 1)
 )
-# Above this tier the O(n²) brute pair scans REFUSE to run and route to the
-# cell-pruned plan instead (VERDICT r4 item 5: the scale path must be
-# enforced by code, not prose). Fixture tiers (≤ sf0.1) stay brute — the
-# exact oracle baseline.
-BRUTE_MAX_SF = 0.5
+# Above this many embeddings (sf0.5's; ≤ 5·10⁷ pairs) the O(n²) brute pair
+# scans of q_sim_topk and q_dedup_embedding REFUSE to run and route to the
+# cell-pruned plan (VERDICT r4 item 5: the scale path must be enforced by
+# code, not prose). Fixture tiers (≤ 2k) stay brute — the oracle baseline.
+BRUTE_MAX_ROWS = 10_000
 
 
 def _pair_cos() -> "F.Column":
@@ -95,9 +95,10 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-20 most-similar embedding pairs by cosine.
 
     Brute force at fixture tiers (exact — the oracle baseline); above
-    BRUTE_MAX_SF the O(n²) self-join is refused and the query routes to
-    the cell-pruned plan (sim_topk_cell), pytest-asserted via the plan."""
-    if sf_of(sf_dir) > BRUTE_MAX_SF:
+    BRUTE_MAX_ROWS embeddings the O(n²) self-join is refused and the query
+    routes to the cell-pruned plan (sim_topk_cell), pytest-asserted via
+    the plan."""
+    if table_stats(spark, sf_dir)["embeddings"].rows > BRUTE_MAX_ROWS:
         return sim_topk_cell(spark, sf_dir)
     t = load_tables(spark, sf_dir)
     # Norms precomputed per vector; the pairwise loop pays only the dot.

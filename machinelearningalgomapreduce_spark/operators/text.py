@@ -56,7 +56,7 @@ def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels share ONE exchange (joins.py::pre_partition_small_tier)."""
     t = load_tables(spark, sf_dir)
     tok = t.documents.select("doc_id", F.explode(_tokens()).alias("token"))
-    tok = pre_partition_small_tier(tok, sf_dir, ["token"])
+    tok = pre_partition_small_tier(tok, sf_dir, ["token"], "documents")
     per_doc = tok.groupBy("token", "doc_id").agg(F.count("*").alias("n"))
     return per_doc.groupBy("token").agg(
         F.sum("n").alias("n_occurrences"),

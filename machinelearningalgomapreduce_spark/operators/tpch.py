@@ -40,8 +40,9 @@ part⋈supplier bridge, ship-lag as lateness):
 Scale notes (100 TB posture): every query keeps the fact table (lineitem /
 orders) on the probe side and semi-reduces dimension chains to compact
 (key → attrs) relations before the fact scan touches them, the same
-discipline as q_join3_topk / q_join5_region. Broadcast hints are size-gated
-per tier via broadcast_if_small — above the bound the join stays
+discipline as q_join3_topk / q_join5_region. Broadcast hints are gated on
+the measured row count of each side's key table via broadcast_if_small
+(catalog.table_stats footers) — above the bound the join stays
 declarative and AQE plans from runtime stats. Top-k uses orderBy+limit
 (TakeOrderedAndProject); bounded-domain sorts use tiny_sorted (no range
 exchange). Correlated scalar subqueries (Q15/Q17/Q22) are decorrelated by
@@ -124,7 +125,7 @@ def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("l_quantity").alias("sum_qty"))
         .filter(F.col("sum_qty") > 250.0)
     )
-    big = broadcast_if_small(big, sf_dir, fits_until_sf=1.0)
+    big = broadcast_if_small(big, sf_dir, "orders")
     return (
         t.orders.join(big, t.orders.o_orderkey == big.l_orderkey)
         .join(t.customer, t.orders.o_custkey == t.customer.c_custkey)
@@ -218,7 +219,7 @@ def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .select("o_orderkey", "c_custkey", "c_name", "c_acctbal", "n_name")
     )
-    dims = broadcast_if_small(dims, sf_dir, fits_until_sf=1.0)
+    dims = broadcast_if_small(dims, sf_dir, "orders")
     return (
         t.lineitem.filter(F.col("l_returnflag") == "R")
         .join(dims, F.col("l_orderkey") == dims.o_orderkey)
@@ -300,8 +301,8 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t.orders, F.col("c_custkey") == F.col("o_custkey"))
         .select("o_orderkey", F.col("n_name").alias("cust_nation"))
     )
-    supp = broadcast_if_small(supp, sf_dir, fits_until_sf=1.0)
-    cust_orders = broadcast_if_small(cust_orders, sf_dir, fits_until_sf=1.0)
+    supp = broadcast_if_small(supp, sf_dir, "supplier")
+    cust_orders = broadcast_if_small(cust_orders, sf_dir, "orders")
     agg = (
         t.lineitem.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -342,9 +343,9 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.supplier.join(t.nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
-    econ_parts = broadcast_if_small(econ_parts, sf_dir, fits_until_sf=1.0)
-    asia_orders = broadcast_if_small(asia_orders, sf_dir, fits_until_sf=1.0)
-    supp_nat = broadcast_if_small(supp_nat, sf_dir, fits_until_sf=1.0)
+    econ_parts = broadcast_if_small(econ_parts, sf_dir, "part")
+    asia_orders = broadcast_if_small(asia_orders, sf_dir, "orders")
+    supp_nat = broadcast_if_small(supp_nat, sf_dir, "supplier")
     target_u = F.when(F.col("supp_nation") == "NATION_5", _rev_u()).otherwise(F.lit(0))
     agg = (
         t.lineitem
@@ -424,9 +425,9 @@ def q_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     order_year = t.orders.select(
         "o_orderkey", F.year("o_orderdate").cast("int").alias("o_year")
     )
-    widget_parts = broadcast_if_small(widget_parts, sf_dir, fits_until_sf=1.0)
-    supp_nat = broadcast_if_small(supp_nat, sf_dir, fits_until_sf=1.0)
-    order_year = broadcast_if_small(order_year, sf_dir, fits_until_sf=1.0)
+    widget_parts = broadcast_if_small(widget_parts, sf_dir, "part")
+    supp_nat = broadcast_if_small(supp_nat, sf_dir, "supplier")
+    order_year = broadcast_if_small(order_year, sf_dir, "orders")
     price_c = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     disc_pct = F.round(F.col("l_discount") * 100).cast("bigint")
     retail_c = F.round(F.col("p_retailprice") * 100).cast("bigint")
@@ -479,7 +480,7 @@ def q_late_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_supp"),
         F.max("s_max").alias("o_max"),
     )
-    per_order = broadcast_if_small(per_order, sf_dir, fits_until_sf=1.0)
+    per_order = broadcast_if_small(per_order, sf_dir, "orders")
     at_max = (
         per_supp.join(per_order, "l_orderkey")
         .filter((F.col("n_supp") >= 2) & (F.col("s_max") == F.col("o_max")))
@@ -528,8 +529,8 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.part.filter((F.col("p_type") == "STANDARD") & (F.col("p_size") <= 5))
         .select("p_partkey", "p_brand")
     )
-    eur_supp = broadcast_if_small(eur_supp, sf_dir, fits_until_sf=1.0)
-    std_parts = broadcast_if_small(std_parts, sf_dir, fits_until_sf=1.0)
+    eur_supp = broadcast_if_small(eur_supp, sf_dir, "supplier")
+    std_parts = broadcast_if_small(std_parts, sf_dir, "part")
     unit_cents = F.floor(F.lit(100.0) * F.col("l_extendedprice") / F.col("l_quantity")).cast("bigint")
     cost = (
         t.lineitem
@@ -541,7 +542,7 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = cost.groupBy(F.col("p_partkey").alias("bp")).agg(
         F.min("cost_cents").alias("best_cents")
     )
-    best = broadcast_if_small(best, sf_dir, fits_until_sf=1.0)
+    best = broadcast_if_small(best, sf_dir, "part")
     return (
         cost.join(best, (F.col("p_partkey") == F.col("bp"))
                   & (F.col("cost_cents") == F.col("best_cents")))
@@ -571,7 +572,7 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey")
     )
-    nat_supp = broadcast_if_small(nat_supp, sf_dir, fits_until_sf=1.0)
+    nat_supp = broadcast_if_small(nat_supp, sf_dir, "supplier")
     rev_cents = F.floor(
         F.lit(100.0) * F.col("l_extendedprice") * (1 - F.col("l_discount"))
     ).cast("bigint")
@@ -607,7 +608,7 @@ def q_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate",
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("is_high"),
     )
-    ord_pri = broadcast_if_small(ord_pri, sf_dir, fits_until_sf=1.0)
+    ord_pri = broadcast_if_small(ord_pri, sf_dir, "orders")
     late = (
         t.lineitem
         .filter((F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -644,7 +645,7 @@ def q_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
                       & F.col("p_size").isin(sizes))
         .select("p_partkey", "p_brand", "p_type", "p_size")
     )
-    parts = broadcast_if_small(parts, sf_dir, fits_until_sf=1.0)
+    parts = broadcast_if_small(parts, sf_dir, "part")
     complainers = t.supplier.filter(F.col("s_acctbal") < 0.0).select("s_suppkey")
     bridge = t.lineitem.select("l_partkey", "l_suppkey").distinct()
     agg = (
@@ -677,7 +678,7 @@ def q_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = load_tables(spark, sf_dir)
     bolt_parts = t.part.filter(F.col("p_name").like("%bolt%")).select("p_partkey")
-    bolt_parts = broadcast_if_small(bolt_parts, sf_dir, fits_until_sf=1.0)
+    bolt_parts = broadcast_if_small(bolt_parts, sf_dir, "part")
     qty = F.col("l_quantity").cast("bigint")
     per_ps = (
         t.lineitem.join(bolt_parts, F.col("l_partkey") == F.col("p_partkey"))
@@ -688,7 +689,7 @@ def q_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("supp_qty").alias("total_qty"),
         F.count("*").alias("n_supp"),
     )
-    per_part = broadcast_if_small(per_part, sf_dir, fits_until_sf=1.0)
+    per_part = broadcast_if_small(per_part, sf_dir, "part")
     dominant = (
         per_ps.join(per_part, F.col("l_partkey") == F.col("pk"))
         .filter((F.col("n_supp") >= 2)

@@ -14,6 +14,7 @@ bench harness opts in for the small fixed-overhead tiers).
 
 from __future__ import annotations
 
+import math
 import os
 from dataclasses import dataclass, fields
 
@@ -188,6 +189,49 @@ def cache_partition_key(spark: SparkSession, sf_dir: str, table: str) -> str | N
     """
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
     return _cache_layout.get(key, {}).get(table)
+
+
+@dataclass(frozen=True)
+class TableStats:
+    """Measured size of one source table: Parquet footer rows, or inf when
+    a footer cannot be read (an unmeasurable table counts as unbounded)."""
+
+    rows: float
+
+
+# Keyed and static-directory-bound like the Catalog cache.
+_stats_cache: dict[tuple[str, str], dict[str, TableStats]] = {}
+
+
+def _footer_rows(path: str) -> float:
+    """Footer row count of a single Parquet file or of a Spark-written
+    directory of part files (``_``/``.``-prefixed entries skipped, as Spark
+    does)."""
+    import pyarrow.parquet as pq
+
+    try:
+        if os.path.isdir(path):
+            names = [f for f in os.listdir(path) if not f.startswith(("_", "."))]
+            files = [os.path.join(path, f) for f in names]
+        else:
+            files = [path]
+        return sum(pq.read_metadata(f).num_rows for f in files)
+    except (OSError, ValueError):  # missing, truncated, nested or not Parquet
+        return math.inf
+
+
+def table_stats(spark: SparkSession, sf_dir: str) -> dict[str, TableStats]:
+    """{table: TableStats} for `sf_dir`, from Parquet footers only: no scan,
+    no Spark job (~2 ms for all ten tables). Every tier-gated plan choice
+    compares one of these row counts with a named bound, so plans follow
+    the data's measured size, never the directory's name."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    if key not in _stats_cache:
+        _stats_cache[key] = {
+            name: TableStats(_footer_rows(os.path.join(sf_dir, f"{name}.parquet")))
+            for name in TABLES
+        }
+    return _stats_cache[key]
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:

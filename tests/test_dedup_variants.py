@@ -481,14 +481,15 @@ def test_blocked_dedup_collapse_recovers_exact_copies(spark, sf_dir):
 def test_dedup_embedding_unknown_dir_gated_on_rows_not_name(spark, tmp_path, monkeypatch):
     """VERDICT r11 item 6: a directory whose name does not parse as sfN
     used to be assumed big and routed to the approximate blocked path even
-    when tiny. r12 gates on a bounded row-count probe instead: a tiny
-    renamed corpus gets the exact brute form (bit-equal to the fixture
-    run), a corpus over EMBED_BRUTE_MAX_ROWS still refuses brute."""
+    when tiny. The route is gated on the embeddings' footer row count
+    instead: a tiny renamed corpus gets the exact brute form (bit-equal to
+    the fixture run), a corpus over similarity.BRUTE_MAX_ROWS still
+    refuses brute."""
     import os
 
     import pytest
 
-    from machinelearningalgomapreduce_spark.operators import dedup
+    from machinelearningalgomapreduce_spark.operators import dedup, similarity
     from machinelearningalgomapreduce_spark.plans import inspect as P
     from tests.conftest import SMOKE_SF_DIR
 
@@ -502,7 +503,7 @@ def test_dedup_embedding_unknown_dir_gated_on_rows_not_name(spark, tmp_path, mon
     want = {tuple(r) for r in dedup.q_dedup_embedding(spark, SMOKE_SF_DIR).collect()}
     assert {tuple(r) for r in routed.collect()} == want
 
-    monkeypatch.setattr(dedup, "EMBED_BRUTE_MAX_ROWS", 100)  # corpus now "big"
+    monkeypatch.setattr(similarity, "BRUTE_MAX_ROWS", 100)  # corpus now "big"
     # the routing flip to approximate semantics must be OBSERVABLE, not
     # silent (r12 ADVICE): the caller asked for the exact query
     with pytest.warns(UserWarning, match="approximate blocked path"):

@@ -228,41 +228,28 @@ def test_quantile_cutpoint_segments_balanced_and_ordered(spark, sf_dir):
         assert abs(r.n - n / k) <= 0.25 * n / k, (s, r.n, n)
 
 
-def _linked_fixture_dir(tmp_path, name: str) -> str:
-    """A fixture dir whose NAME claims a huge scale factor but whose parquet
-    files are symlinks to the smallest fixture — lets tests drive the
-    tier-gated code paths without big data."""
-    import os
-
-    from tests.conftest import SMOKE_SF_DIR
-
-    big = tmp_path / name
-    big.mkdir()
-    for f in os.listdir(SMOKE_SF_DIR):
-        os.symlink(os.path.join(SMOKE_SF_DIR, f), big / f)
-    return str(big)
-
-
-def test_sim_topk_routes_to_cell_plan_above_brute_bound(spark, sf_dir, tmp_path):
+def test_sim_topk_routes_to_cell_plan_above_brute_bound(spark, sf_dir, monkeypatch):
     """VERDICT r4 item 5: the O(n²) brute pair scan must REFUSE to run
-    above BRUTE_MAX_SF and route to the cell-pruned plan — enforced by
-    code, not docstrings. The brute plan never mentions the quantizer;
-    the cell plan joins on it."""
+    above BRUTE_MAX_ROWS embeddings and route to the cell-pruned plan —
+    enforced by code, not docstrings. The brute plan never mentions the
+    quantizer; the cell plan joins on it."""
+    from machinelearningalgomapreduce_spark.operators import similarity
     from machinelearningalgomapreduce_spark.operators.similarity import q_sim_topk
     from machinelearningalgomapreduce_spark.plans import inspect as P
 
     brute_plan = P.formatted_plan(q_sim_topk(spark, sf_dir))
     assert "cluster" not in brute_plan  # fixture tier: exact brute baseline
 
-    big_dir = _linked_fixture_dir(tmp_path, "sf100")
-    cell_df = q_sim_topk(spark, big_dir)
+    monkeypatch.setattr(similarity, "BRUTE_MAX_ROWS", 100)  # 500 embeddings now over
+    cell_df = q_sim_topk(spark, sf_dir)
     cell_plan = P.formatted_plan(cell_df)
     assert "cluster" in cell_plan  # routed: candidates must share a cell
     assert cell_df.columns == ["id_a", "id_b", "cos_sim"]  # same contract
     assert cell_df.count() > 0
 
 
-def test_dedup_embedding_routes_to_cell_plan_above_brute_bound(spark, sf_dir, tmp_path):
+def test_dedup_embedding_routes_to_cell_plan_above_brute_bound(spark, sf_dir, monkeypatch):
+    from machinelearningalgomapreduce_spark.operators import similarity
     from machinelearningalgomapreduce_spark.operators.dedup import (
         embedding_dedup_blocked,
         q_dedup_embedding,
@@ -272,14 +259,15 @@ def test_dedup_embedding_routes_to_cell_plan_above_brute_bound(spark, sf_dir, tm
     brute_plan = P.formatted_plan(q_dedup_embedding(spark, sf_dir))
     assert "cluster" not in brute_plan and "cell" not in brute_plan
 
-    big_dir = _linked_fixture_dir(tmp_path, "sf100")
-    routed = q_dedup_embedding(spark, big_dir)
+    monkeypatch.setattr(similarity, "BRUTE_MAX_ROWS", 100)  # 500 embeddings now over
+    with pytest.warns(UserWarning, match="approximate blocked path"):
+        routed = q_dedup_embedding(spark, sf_dir)
     assert "cell" in P.formatted_plan(routed)
     # Routed result IS the learned-cell blocked path's result (r11: the
     # SemDeDup-style composition — recall 1.0 vs brute on the fixtures —
     # replaced the label-cell variant as the big-tier route).
     got = {tuple(r) for r in routed.collect()}
-    want = {tuple(r) for r in embedding_dedup_blocked(spark, big_dir).collect()}
+    want = {tuple(r) for r in embedding_dedup_blocked(spark, sf_dir).collect()}
     assert got == want
 
 
@@ -327,18 +315,17 @@ def test_sim_ann_second_probe_strictly_improves_recall(spark):
     assert r2 > r1, f"2-probe recall must strictly beat 1-probe: {r2} vs {r1}"
 
 
-def test_pre_partition_small_tier_inert_above_bound(spark, sf_dir):
-    """Above the tier bound the helper must return the input UNCHANGED —
+def test_pre_partition_small_tier_inert_above_bound(spark, sf_dir, monkeypatch):
+    """Above the row bound the helper must return the input UNCHANGED —
     no repartition node, no forfeited map-side combine at scale."""
-    from machinelearningalgomapreduce_spark.functions.joins import (
-        pre_partition_small_tier,
-    )
+    from machinelearningalgomapreduce_spark.functions import joins
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
 
     ev = load_tables(spark, sf_dir).events
-    assert pre_partition_small_tier(ev, "/root/testdata/sf100", ["event_type"]) is ev
-    small = pre_partition_small_tier(ev, sf_dir, ["event_type"])
+    small = joins.pre_partition_small_tier(ev, sf_dir, ["event_type"], "events")
     assert small is not ev
+    monkeypatch.setitem(joins.PRE_PARTITION_MAX_ROWS, "events", 100)  # 1000 events now over
+    assert joins.pre_partition_small_tier(ev, sf_dir, ["event_type"], "events") is ev
 
 
 @pytest.mark.slow  # heavy lane, run with -m slow (pytest.ini r16)

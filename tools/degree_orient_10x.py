@@ -1,7 +1,8 @@
 """Measure degree-ordered triangle orientation AT the 10x tier (VERDICT
 r15 item 7): the fixture-tier A/B showed only -17% wedges on the
 near-uniform graph; skew grows with scale, so the decision belongs at the
-tier where the wedge-closure branch actually runs (> TRIANGLE_BCAST_MAX_SF).
+tier where the wedge-closure branch actually runs (lineitem over
+graph.TRIANGLE_BCAST_MAX_ROWS).
 
 Compares, on the SAME session over the tier's co-purchase edges:
   id-oriented    — the shipped wedge-closure plan (u < v);

@@ -1,13 +1,30 @@
-"""Regenerate PLANS.md: executed physical plans for the headline queries.
+"""Dump physical plans: PLANS.md, or one plan file per query for diffing.
 
-Evidence artifact for plan-quality review — shows pushed filters, read
-schemas, join strategies, exchange counts, and codegen fusion for each
-headline query at the bench tier. Usage: python tools/dump_plans.py
+    python tools/dump_plans.py
+        Regenerate PLANS.md: executed physical plans of the headline
+        queries at SPARK_GRAFT_SF_DIR (default the sf0.1 fixture) — pushed
+        filters, read schemas, join strategies, exchange counts and codegen
+        fusion, as evidence for plan-quality review.
+
+    python tools/dump_plans.py --tier DIR --out OUT [--bench] [--no-run] [query ...]
+        Write OUT/<query>.txt, the formatted plan of each named query at
+        the tier DIR. Queries default to every registered query; a dotted
+        name such as ml.knn_ann names an operators.<module> function
+        taking (spark, sf_dir). Each query runs once (a noop write) first,
+        so the AQE final plan is captured; --no-run captures the plan
+        without executing it. --bench applies the bench conf (AQE off,
+        SPARK_BENCH_PARTITIONS shuffle partitions, tables cached on their
+        CACHE_KEYS). Expression, plan and RDD ids are normalized
+        (#123 → #N, plan_id=7 → plan_id=N, RDD[42] → RDD[N]), so `diff -r`
+        of two dumps compares the plans of two commits.
 """
 
 from __future__ import annotations
 
+import argparse
+import importlib
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -38,7 +55,41 @@ SCALE_FLAGSHIPS = [
 ]
 
 
-def main() -> None:
+def dump_dir(tier: str, out: str, names: list[str], bench: bool, run: bool) -> None:
+    from machinelearningalgomapreduce_spark import registry
+    from machinelearningalgomapreduce_spark.plans import inspect as P
+    from machinelearningalgomapreduce_spark.session import ensure_query_conf, get_spark
+    from machinelearningalgomapreduce_spark.sources.catalog import load_tables
+
+    spark = get_spark(app_name="dump_plans")
+    ensure_query_conf(spark)
+    if bench:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       os.environ.get("SPARK_BENCH_PARTITIONS", "4"))
+        n_cache = int(os.environ.get("SPARK_BENCH_CACHE_PARTITIONS", "16"))
+        tables = load_tables(spark, tier, cached=True, cache_partitions=n_cache)
+        for tname in tables.names():
+            tables[tname].count()
+    qs = registry.queries()
+    os.makedirs(out, exist_ok=True)
+    for name in names or sorted(qs):
+        if "." in name:
+            mod, fn = name.rsplit(".", 1)
+            query = getattr(
+                importlib.import_module(f"machinelearningalgomapreduce_spark.operators.{mod}"), fn
+            )
+        else:
+            query = qs[name]
+        df = query(spark, tier)
+        if run:
+            df.write.format("noop").mode("overwrite").save()
+        with open(os.path.join(out, f"{name}.txt"), "w") as f:
+            f.write(re.sub(r"(#|plan_id=|RDD\[)\d+", r"\1N", P.formatted_plan(df)))
+        print(f"wrote {name}", file=sys.stderr)
+
+
+def write_plans_md() -> None:
     from machinelearningalgomapreduce_spark import registry
     from machinelearningalgomapreduce_spark.plans import inspect as P
     from machinelearningalgomapreduce_spark.session import ensure_query_conf, get_spark
@@ -78,6 +129,22 @@ def main() -> None:
     with open(path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {path}")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
+    ap.add_argument("--tier", help="tier directory to plan against (with --out)")
+    ap.add_argument("--out", help="output directory: one <query>.txt per query")
+    ap.add_argument("--bench", action="store_true", help="bench conf + cached tables")
+    ap.add_argument("--no-run", action="store_true", help="capture plans without executing")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.out is None:
+        write_plans_md()
+    elif args.tier is None:
+        ap.error("--out needs --tier")
+    else:
+        dump_dir(args.tier, args.out, args.queries, args.bench, not args.no_run)
 
 
 if __name__ == "__main__":

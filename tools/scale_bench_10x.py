@@ -10,8 +10,8 @@ by growing the data 10× and re-measure BOTH engines in the same process
 on the same host.
 
 Protocol: build the 10× tier with tools/scale_probe.build_tier (key-offset
-copies, FK-consistent; directory named sf1.0 so tier-gated plan switches
-take their at-scale branches), then run bench.py's OWN methodology on it —
+copies, FK-consistent; its 10× row counts put the row-gated plan switches
+past their bounds, so they take their at-scale branches), then run bench.py's OWN methodology on it —
 same floor-probed, warm-up, best-of-N Spark timing; same warm best-of-3
 DuckDB oracle timing, interleaved in the same run — restricted to the
 audited queries via SPARK_BENCH_QUERIES. The output table (printed as

@@ -4,10 +4,11 @@ Builds a 10× tier from sf0.1 by unioning N key-offset copies of the fact
 tables (events, documents, lineitem, orders, customer, supplier, and —
 since round 8 — embeddings, so the vector kernels are probed for real;
 offsets keep FK chains consistent so the join queries stay semantically
-valid; region/nation/part are shared dims, copied once), names the
-directory ``sf1.0`` so every tier-gated plan switch (broadcast size gates,
-pre-partition small-tier shortcuts) takes its AT-SCALE branch, then times a
-set of headline queries on both tiers under the ENGINE DEFAULT session
+valid; region/nation/part are shared dims, copied once) into ``sf1.0``,
+whose 10× row counts (catalog.table_stats footers) put the small-tier
+shapes (brute pair scans, adjacency triangles, small-join and
+pre-partition shortcuts) past their row bounds, so each takes its AT-SCALE
+branch, then times a set of headline queries on both tiers under the ENGINE DEFAULT session
 (AQE on, compression on, uncached scans — the 100 TB posture, deliberately
 NOT the bench tier's latency knobs).
 
@@ -69,8 +70,7 @@ PROBE_QUERIES = [
     # vector kernels are probed for real: q_knn is the deliberate brute
     # O(nq·n) oracle form (quadratic by design — its curve documents why
     # the ANN path exists), q_sim_ann exercises the IVF cell-routed scale
-    # path (the tier name sf{1,3,10} pushes it past BRUTE_MAX_SF),
-    # q_dedup_minhash the banded-LSH path, q_kmeans_assign the broadcast
+    # path, q_dedup_minhash the banded-LSH path, q_kmeans_assign the broadcast
     # centroid scorer.
     "q_kmeans_assign",
     "q_knn",
@@ -114,9 +114,10 @@ PROBE_QUERIES = [
     "q_energy_distance",
     # round-11 addition: q_dedup_embedding's big-tier route is now the
     # learned-cell blocked composition (embedding_dedup_blocked) — the
-    # small tier measures the brute baseline, the sf1.0 tier the routed
-    # kmeans+blocking+verify path, so the SemDeDup-style curve is probed
-    # for real (candidates O(Σ cell²), never all-pairs).
+    # small tier measures the brute baseline, the 10× tier (20k embeddings,
+    # over similarity.BRUTE_MAX_ROWS) the routed kmeans+blocking+verify
+    # path, so the SemDeDup-style curve is probed for real (candidates
+    # O(Σ cell²), never all-pairs).
     "q_dedup_embedding",
 ]
 
