@@ -89,7 +89,7 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     takes its width from ``spark.sql.shuffle.partitions`` (or from
     defaultParallelism for RDD-backed leaves), so a conf change inside one
     application misses the memo instead of reusing a stale width;
-    localCheckpoint/cache create fresh leaf nodes (fresh hashes), and the
+    materialize_once and cache create fresh leaf nodes (fresh hashes), and the
     fixture dirs are static (the same assumption load_tables' catalog
     cache already makes).
     """

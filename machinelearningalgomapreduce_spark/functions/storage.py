@@ -1,16 +1,23 @@
-"""On-disk sizing helpers shared by the broadcast-gating call sites.
+"""Storage helpers: the one way to materialize a reused frame, and the
+on-disk sizing behind the broadcast-gating call sites.
 
-ONE copy of the "broadcast only while it provably fits" discipline: the
-dedup seen-index anti-join (streaming/sinks.py) and the star-rollup dim
-join (operators/matview.py) both gate their F.broadcast on the committed
-snapshot's on-disk parquet size — past the cap the join stays declarative
-and AQE plans the shuffle. At 100 TB the same decision comes from table
-statistics; on this engine the committed files ARE the statistics.
+``materialize_once`` is the only place the package checkpoints a frame
+(tests/test_materialize.py walks the source to keep it so).
+
+``dir_size_below`` is ONE copy of the "broadcast only while it provably
+fits" discipline: the dedup seen-index anti-join (streaming/sinks.py) and
+the star-rollup dim join (operators/matview.py) both gate their
+F.broadcast on the committed snapshot's on-disk parquet size — past the
+cap the join stays declarative and AQE plans the shuffle. At 100 TB the
+same decision comes from table statistics; on this engine the committed
+files ARE the statistics.
 """
 
 from __future__ import annotations
 
 import os
+
+from pyspark.sql import DataFrame
 
 BROADCAST_CAP_BYTES = 64 << 20
 
@@ -25,3 +32,28 @@ def dir_size_below(path: str, cap_bytes: int = BROADCAST_CAP_BYTES) -> bool:
             if total > cap_bytes:
                 return False
     return total <= cap_bytes
+
+
+def materialize_once(df: DataFrame) -> DataFrame:
+    """Compute ``df`` once, now, and return a frame that reads the stored
+    result: the one way a reused or loop-carried frame is materialized.
+
+    One eager action stores the rows; every later reference reads them
+    instead of re-running ``df``'s plan, and the returned frame's lineage
+    starts at the stored blocks (an iterative loop's plan stays O(1)
+    deep). Nothing is registered in the session's CacheManager, so no
+    later query's plan depends on what ran before it; Spark's
+    ContextCleaner releases the blocks once the returned frame is
+    garbage.
+
+    Where the rows live is a deployment choice, Spark's own
+    ``spark.checkpoint.dir``: when the SparkContext has a checkpoint
+    directory they are written there (``checkpoint``) and survive losing
+    the executor that computed them. Without one they stay in executor
+    block storage (``localCheckpoint``), and losing that executor fails
+    the next read. Both run the same jobs: Spark 4.1's reliable
+    checkpoint writes the files in the action that computes the rows.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.operators.graph import (
     _REPEAT_EDGE_CTES,
     _repeat_copurchase_edges,
@@ -789,7 +790,7 @@ def dbscan_cluster(
         F.col("embedding")[0].cast("double").alias("x"),
         F.col("embedding")[1].cast("double").alias("y"),
     )
-    pairs = _eps_pairs(pts, eps).localCheckpoint()
+    pairs = materialize_once(_eps_pairs(pts, eps))
     counts = pairs.groupBy("a_id").agg(F.count("*").alias("n_nbrs"))
     cores = counts.filter(F.col("n_nbrs") >= min_pts).select(
         F.col("a_id").alias("vec_id")
@@ -847,7 +848,7 @@ def fuzzy_kmeans_fit(
     from machinelearningalgomapreduce_spark.operators.ml import label_centroids
 
     t = load_tables(spark, sf_dir)
-    data = t.embeddings.select("vec_id", "embedding").localCheckpoint()
+    data = materialize_once(t.embeddings.select("vec_id", "embedding"))
     cents = {
         r.label: list(r.centroid)
         for r in label_centroids(t.embeddings).collect()
@@ -898,7 +899,7 @@ def adaboost_fit(spark: SparkSession, sf_dir: str, rounds: int = 3) -> list[dict
     API): per round, ONE aggregate scores every candidate stump's
     weighted error against the current row weights, the driver picks the
     argmin (deterministic tie-break on (dim, thr)), and rows are
-    reweighted w ← w·exp(∓α)/Z with localCheckpoint truncating lineage.
+    reweighted w ← w·exp(∓α)/Z, materialized to truncate lineage.
     Returns [{dim, thr, flip, alpha, eps}, ...] — O(rounds) model state;
     the weight column is the only per-row state, exactly the MapReduce
     formulation (weights in HDFS, stump search as one job per round).
@@ -909,7 +910,7 @@ def adaboost_fit(spark: SparkSession, sf_dir: str, rounds: int = 3) -> list[dict
         "vec_id", "embedding", y.alias("y"), F.lit(1.0).alias("w")
     )
     n = base.count()
-    cur = base.withColumn("w", F.col("w") / n).localCheckpoint()
+    cur = materialize_once(base.withColumn("w", F.col("w") / n))
     grid = spark.createDataFrame(ADA_CANDIDATES, "dim int, thr double")
     model: list[dict] = []
     for _ in range(rounds):
@@ -952,7 +953,7 @@ def adaboost_fit(spark: SparkSession, sf_dir: str, rounds: int = 3) -> list[dict
             ),
         )
         z = unnorm.agg(F.sum("w")).collect()[0][0]
-        cur = unnorm.withColumn("w", F.col("w") / F.lit(z)).localCheckpoint()
+        cur = materialize_once(unnorm.withColumn("w", F.col("w") / F.lit(z)))
     return model
 
 
@@ -977,7 +978,7 @@ def hits_iterate(edges: DataFrame, rounds: int = 5) -> tuple[DataFrame, DataFram
     L2 normalization per half-step (library API). Returns (auth, hub)
     frames with `score` columns. Per half-step: one join + one keyed
     aggregate + a 1-row norm broadcast — O(m), the q_hits_step kernel
-    iterated with localCheckpoint lineage truncation."""
+    iterated with materialize_once lineage truncation."""
     hub = edges.select(F.col("hub_id")).distinct().withColumn("score", F.lit(1.0))
     auth = None
     for _ in range(rounds):
@@ -987,10 +988,9 @@ def hits_iterate(edges: DataFrame, rounds: int = 5) -> tuple[DataFrame, DataFram
             .agg(F.sum("score").alias("raw"))
         )
         anorm = auth_raw.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw"))).alias("nrm"))
-        auth = (
+        auth = materialize_once(
             auth_raw.crossJoin(F.broadcast(anorm))
             .select("auth_id", (F.col("raw") / F.col("nrm")).alias("score"))
-            .localCheckpoint()
         )
         hub_raw = (
             edges.join(auth, "auth_id")
@@ -998,10 +998,9 @@ def hits_iterate(edges: DataFrame, rounds: int = 5) -> tuple[DataFrame, DataFram
             .agg(F.sum("score").alias("raw"))
         )
         hnorm = hub_raw.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw"))).alias("nrm"))
-        hub = (
+        hub = materialize_once(
             hub_raw.crossJoin(F.broadcast(hnorm))
             .select("hub_id", (F.col("raw") / F.col("nrm")).alias("score"))
-            .localCheckpoint()
         )
     return auth, hub
 
@@ -1013,9 +1012,11 @@ def power_iterate(edges: DataFrame, rounds: int = 8) -> tuple[DataFrame, list[fl
     eigenvalue estimates (their convergence is the stopping signal a
     driver loop watches). Per round: one join + keyed aggregate + two
     1-row reductions — O(m)."""
-    nbrs = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    ).localCheckpoint()
+    nbrs = materialize_once(
+        edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
+            edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
+        )
+    )
     v = nbrs.select("node").distinct().withColumn("score", F.lit(1.0))
     eigen: list[float] = []
     for _ in range(rounds):
@@ -1037,7 +1038,7 @@ def power_iterate(edges: DataFrame, rounds: int = 8) -> tuple[DataFrame, list[fl
         )
         eigen.append(float(stats.vav) / float(stats.vtv))  # Rayleigh vᵀAv/vᵀv
         nrm = float(stats.norm2) ** 0.5
-        v = av.select("node", (F.col("raw") / F.lit(nrm)).alias("score")).localCheckpoint()
+        v = materialize_once(av.select("node", (F.col("raw") / F.lit(nrm)).alias("score")))
     return v, eigen
 
 
@@ -1111,9 +1112,11 @@ def cross_validate_accuracy(
     split measures held-out accuracy. Model state O(candidates)."""
     t = load_tables(spark, sf_dir)
     y = F.when(F.col("label") >= 5, F.lit(1.0)).otherwise(F.lit(-1.0))
-    base = kfold_assign(
-        t.embeddings.select("vec_id", "embedding", y.alias("y")), "vec_id", k
-    ).localCheckpoint()
+    base = materialize_once(
+        kfold_assign(
+            t.embeddings.select("vec_id", "embedding", y.alias("y")), "vec_id", k
+        )
+    )
     grid = spark.createDataFrame(ADA_CANDIDATES, "dim int, thr double")
     pred = F.when(
         F.element_at(F.col("embedding"), F.col("dim")).cast("double") <= F.col("thr"),
@@ -1295,28 +1298,28 @@ def boruvka_mst(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
     global edge list.
 
     Input: undirected (u, v, w); output: the forest edges (u, v, w) with
-    |E| = nodes − components. Loop discipline: localCheckpoint on labels
-    and forest, O(1) convergence counts."""
-    e = edges.select(
-        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"), "w"
-    ).localCheckpoint()
-    labels = (
+    |E| = nodes − components. Loop discipline: labels and forest
+    materialized per round, O(1) convergence counts."""
+    e = materialize_once(
+        edges.select(
+            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"), "w"
+        )
+    )
+    labels = materialize_once(
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
         .distinct()
         .select("node", F.col("node").alias("comp"))
-        .localCheckpoint()
     )
     forest = None
     converged = False
     for _ in range(max_rounds):
         lu = labels.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
         lv = labels.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
-        cross = (
+        cross = materialize_once(
             e.join(lu, "u")
             .join(lv, "v")
             .filter(F.col("cu") != F.col("cv"))
-            .localCheckpoint()
         )
         if cross.limit(1).count() == 0:
             converged = True
@@ -1326,15 +1329,14 @@ def boruvka_mst(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
         proposals = cross.select(F.col("cu").alias("comp"), pick).unionAll(
             cross.select(F.col("cv").alias("comp"), pick)
         )
-        chosen = (
+        chosen = materialize_once(
             proposals.groupBy("comp")
             .agg(F.min("cand").alias("m"))
             .select("m.u", "m.v", "m.w")
             .distinct()
-            .localCheckpoint()
         )
         forest = chosen if forest is None else forest.unionByName(chosen).distinct()
-        forest = forest.localCheckpoint()
+        forest = materialize_once(forest)
         # Merge: CC over the component-graph induced by the chosen edges.
         comp_edges = (
             chosen.join(lu, "u")
@@ -1346,14 +1348,13 @@ def boruvka_mst(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
         )
 
         merged = connected_components_star(comp_edges)  # (node=old comp, root)
-        labels = (
+        labels = materialize_once(
             labels.join(
                 merged.withColumnRenamed("node", "comp"), "comp", "left"
             )
             .select(
                 "node", F.coalesce(F.col("root"), F.col("comp")).alias("comp")
             )
-            .localCheckpoint()
         )
     if not converged:
         # Rounds halve components, so this only fires on a caller-supplied
@@ -1517,17 +1518,16 @@ def spearman_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def em_fit(spark: SparkSession, sf_dir: str, rounds: int = 5) -> dict:
     """Full EM for the 2-component 1-D GMM on the quantity histogram
     (library API): parameters live in the driver (the MapReduce
-    Configuration idiom), each round is ONE aggregate over the cached
+    Configuration idiom), each round is ONE aggregate over the materialized
     50-row value histogram, and the per-round incomplete log-likelihood
     Σ c·ln(Σ_k π_k φ_k(v)) is recorded — EM guarantees it never
     decreases, which the test asserts. Returns {params, loglik}."""
     import math as _m
 
     t = load_tables(spark, sf_dir)
-    hist = (
+    hist = materialize_once(
         t.lineitem.groupBy(F.col("l_quantity").cast("bigint").alias("v"))
         .agg(F.count("*").alias("c"))
-        .localCheckpoint()
     )
     p = {"mu1": EM_MU1, "mu2": EM_MU2, "s1": EM_SIGMA, "s2": EM_SIGMA, "pi2": EM_PI2}
     loglik: list[float] = []

@@ -40,6 +40,7 @@ from machinelearningalgomapreduce_spark.functions.hashing import (
     tokens,
 )
 from machinelearningalgomapreduce_spark.functions.joins import fan_out
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.functions.vectors import dot, norm, sq_dist
 from machinelearningalgomapreduce_spark.operators.text import QUALITY_SCORE_SQL
 from machinelearningalgomapreduce_spark.sources.catalog import load_tables, table_stats
@@ -164,7 +165,7 @@ def minhash_dedup_pairs(docs: DataFrame) -> DataFrame:
         member-level one because members' shingle sets equal their rep's.
     """
     reps, members = _exact_collapse(docs)
-    # localCheckpoint: the shingle-set frame is referenced FIVE times in
+    # Materialized: the shingle-set frame is referenced FIVE times in
     # this plan (signatures → band melt self-join, both exact-verify
     # sides, the within-group rep_j) and the shingling + array_distinct
     # compute sits ABOVE its exchange, so every reference re-ran it
@@ -172,9 +173,8 @@ def minhash_dedup_pairs(docs: DataFrame) -> DataFrame:
     # Materialize once: measured 3.15 → 1.79 s on this subtree at sf0.1
     # (r16, guide §5; ck of members measured neutral, ck of candidates
     # measured worse — both left lazy). At 100 TB the same decision holds
-    # (compute the shingle pass once, not five times) with a durable
-    # checkpoint instead of local blocks.
-    base = _shingle_sets(reps).localCheckpoint()
+    # (compute the shingle pass once, not five times).
+    base = materialize_once(_shingle_sets(reps))
     cand = _lsh_candidates(_minhash_sigs(base))
     rep_pairs = _exact_jaccard(cand, base).filter(
         F.col("jaccard") >= JACCARD_THRESHOLD
@@ -247,15 +247,17 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     reps, members = _exact_collapse(t.documents)
     base = _shingle_sets(reps)
-    # localCheckpoint: sigs (shingle set + 16 MinHash folds) is referenced
+    # Materialized: sigs (shingle set + 16 MinHash folds) is referenced
     # four times below (band melt, both audit sides, rep_metrics) and its
     # per-row compute would re-run per reference — same reasoning and
     # measurement class as minhash_dedup_pairs' base checkpoint (r16).
-    sigs = base.select(
-        "doc_id",
-        "sh",
-        *[minhash_sig(F.col("sh"), s).alias(f"sig{s}") for s in range(N_MINHASH)],
-    ).localCheckpoint()
+    sigs = materialize_once(
+        base.select(
+            "doc_id",
+            "sh",
+            *[minhash_sig(F.col("sh"), s).alias(f"sig{s}") for s in range(N_MINHASH)],
+        )
+    )
     cand = _lsh_candidates(sigs)  # sigs already carries sig0..15; the
     # extra sh column is ignored by the band-key projection
     sa = sigs.select(
@@ -428,16 +430,18 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     outside the fixtures and any sane near-dup threshold use; noted, not
     special-cased."""
     t = load_tables(spark, sf_dir)
-    # localCheckpoint: both self-join sides reference this frame and its
+    # Materialized: both self-join sides reference this frame and its
     # shingling + md5-min + array_distinct compute sits above the fan_out
     # exchange — without materialization each side re-ran the full shingle
     # pass (the sides differ by the band explode, so no exchange is
     # shared). Measured 3.5–4.0 → 0.6–0.75 s at sf0.1 (r16, guide §5).
-    base = fan_out(t.documents).select(
-        "doc_id",
-        F.array_min(F.transform(shingles(F.col("text"), k=3), F.md5)).alias("block"),
-        F.array_distinct(shingles(F.col("text"), k=2)).alias("ng"),
-    ).localCheckpoint()
+    base = materialize_once(
+        fan_out(t.documents).select(
+            "doc_id",
+            F.array_min(F.transform(shingles(F.col("text"), k=3), F.md5)).alias("block"),
+            F.array_distinct(shingles(F.col("text"), k=2)).alias("ng"),
+        )
+    )
     banded = base.withColumn("band", F.floor(F.log2(F.size("ng"))).cast("int"))
     a = banded.alias("a")
     b = banded.select(
@@ -485,13 +489,15 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: block-keyed equi self-join, candidates near-linear;
     verify is one array_intersect per candidate."""
     t = load_tables(spark, sf_dir)
-    # localCheckpoint: both self-join sides re-ran the shingle pass (same
+    # Materialized: both self-join sides re-ran the shingle pass (same
     # class as q_dedup_ngram_jaccard); measured 2.2 → 0.7 s at sf0.1 (r16).
-    base = fan_out(t.documents).select(
-        "doc_id",
-        F.array_min(F.transform(shingles(F.col("text"), k=3), F.md5)).alias("block"),
-        F.array_distinct(shingles(F.col("text"), k=2)).alias("ng"),
-    ).localCheckpoint()
+    base = materialize_once(
+        fan_out(t.documents).select(
+            "doc_id",
+            F.array_min(F.transform(shingles(F.col("text"), k=3), F.md5)).alias("block"),
+            F.array_distinct(shingles(F.col("text"), k=2)).alias("ng"),
+        )
+    )
     a, b = base.alias("a"), base.alias("b")
     inter = F.size(F.array_intersect("a.ng", "b.ng"))
     c_ab = F.round(inter / F.size("a.ng").cast("double"), 6)
@@ -642,13 +648,12 @@ def min_label_clusters(pairs: DataFrame) -> DataFrame:
     # here), and the loop below references `edges` in every round — without
     # the checkpoint each round's actions re-executed that pipeline from
     # the scan (~2 full recomputes per round; measured 42 s → ~6 s for
-    # q_dedup_clusters at sf0.1). localCheckpoint also truncates lineage so
-    # the per-round plan stays O(1) deep. Same fixpoint, same labels.
+    # q_dedup_clusters at sf0.1). Same fixpoint, same labels.
     # Symmetrize with ONE generator pass, not a 2-branch union (r16 — the
     # q_edge_support r15 lesson): each union branch re-executed the whole
     # candidate pipeline's joins above its exchanges. Same (doc_a, doc_b)
     # multiset, struct fields keep the endpoint order explicit.
-    edges = (
+    edges = materialize_once(
         pairs.select(
             F.explode(
                 F.array(
@@ -661,7 +666,6 @@ def min_label_clusters(pairs: DataFrame) -> DataFrame:
         )
         .select("e.doc_a", "e.doc_b")
         .distinct()
-        .localCheckpoint()
     )
     labels = edges.select(F.col("doc_a").alias("node")).distinct().select(
         "node", F.col("node").alias("root")
@@ -690,7 +694,7 @@ def min_label_clusters(pairs: DataFrame) -> DataFrame:
         # Checkpoint FIRST, then count changes against the checkpointed
         # frame (r15): counting from the pre-checkpoint plan re-executed
         # the whole join subtree a second time per round.
-        ck = new_labels.localCheckpoint()
+        ck = materialize_once(new_labels)
         changed = ck.filter(F.col("root") != F.col("old_root")).count()
         labels = ck.select("node", "root")
         if changed == 0:
@@ -806,12 +810,11 @@ def _keyed_kmeans(
     (key, sub, dim) average — both map-side combinable; no driver state
     beyond the loop counter."""
     wi = W.partitionBy(key).orderBy("vec_id")
-    cents = (
+    cents = materialize_once(
         data.withColumn("rn", F.row_number().over(wi))
         .filter(F.col("rn") <= k)
         .select(key, (F.col("rn") - 1).cast("bigint").alias("sub"),
                 F.col("embedding").alias("centroid"))
-        .localCheckpoint()
     )
     for _ in range(n_iter):
         assigned = (
@@ -826,7 +829,7 @@ def _keyed_kmeans(
             .groupBy(key, "vec_id")
             .agg(F.min("cand")["sub"].alias("sub"))
         )
-        cents = (
+        cents = materialize_once(
             assigned.join(data, [key, "vec_id"])
             .select(key, "sub", F.posexplode("embedding").alias("d", "x"))
             .groupBy(key, "sub", "d")
@@ -834,7 +837,6 @@ def _keyed_kmeans(
             .groupBy(key, "sub")
             .agg(F.array_sort(F.collect_list(F.struct("d", "c"))).alias("dc"))
             .select(key, "sub", F.transform("dc", lambda s: s["c"]).alias("centroid"))
-            .localCheckpoint()
         )
     return cents
 
@@ -898,7 +900,7 @@ def _two_level_probe_cells(
         coarse.join(sub.select("coarse").distinct(), "coarse", "left_anti")
         .select("coarse", F.lit(0).cast("bigint").alias("sub"), "centroid")
     )
-    sub = sub.unionByName(backfill).localCheckpoint()
+    sub = materialize_once(sub.unionByName(backfill))
     # stage 1: top-n_probe coarse cells per corpus vector
     probed = _multi_probe_cells(
         embeddings,
@@ -1182,7 +1184,7 @@ def embedding_dedup_blocked_frame(
     # below, the k-means fit (which PERSISTS its input internally for
     # its ~20 iterations — MLlib's handlePersistence), and the blocking
     # pass. A table-backed frame pays two cheap columnar rescans; a
-    # JOIN-HEAVY caller lineage should be localCheckpoint'd by the
+    # JOIN-HEAVY caller lineage should go through materialize_once in the
     # caller first (the pipeline's semantic stage and the streaming sink
     # both do) — checkpointing unconditionally here would materialize a
     # full corpus copy at 100 TB for callers whose input is already a

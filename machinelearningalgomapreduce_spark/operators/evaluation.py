@@ -73,11 +73,16 @@ def q_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(col_tot), "band")
         .crossJoin(F.broadcast(grand))
     )
+    # Set sizes over the bounded cell domain, not countDistinct: a
+    # multi-distinct aggregate plans an Expand whose column order follows
+    # session history (same in q_cramers_v, q_friedman, q_g_test).
+    n_types = F.size(F.collect_set("event_type")).cast("bigint")
+    n_bands = F.size(F.collect_set("band")).cast("bigint")
     return joined.agg(
         F.count("*").alias("n_cells"),
-        F.countDistinct("event_type").alias("n_types"),
-        F.countDistinct("band").alias("n_bands"),
-        ((F.countDistinct("event_type") - 1) * (F.countDistinct("band") - 1)).alias("dof"),
+        n_types.alias("n_types"),
+        n_bands.alias("n_bands"),
+        ((n_types - 1) * (n_bands - 1)).alias("dof"),
         F.round(F.sum(term), 6).alias("chi2"),
     )
 
@@ -1060,9 +1065,10 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     mr = cells.groupBy("o_orderpriority").agg(F.sum("n_rc").alias("n_r"))
     mc = cells.groupBy("o_orderstatus").agg(F.sum("n_rc").alias("n_c"))
     tot = cells.agg(F.sum("n_rc").alias("n"))
+    # set sizes, not countDistinct (see q_chi2)
     dims = cells.agg(
-        F.countDistinct("o_orderpriority").alias("r"),
-        F.countDistinct("o_orderstatus").alias("c"),
+        F.size(F.collect_set("o_orderpriority")).cast("bigint").alias("r"),
+        F.size(F.collect_set("o_orderstatus")).cast("bigint").alias("c"),
     )
     joined = (
         cells.join(F.broadcast(mr), "o_orderpriority")
@@ -1597,9 +1603,10 @@ def q_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2 * F.rank().over(wv) + F.count("*").over(wt) - 1).cast("bigint"),
     )
     sums = ranked.groupBy("event_type").agg(F.sum("rx2").alias("rank_sum_x2"))
+    # set sizes, not countDistinct (see q_chi2)
     nk = ranked.agg(
-        F.countDistinct("wk").alias("n_blocks"),
-        F.countDistinct("event_type").alias("k"),
+        F.size(F.collect_set("wk")).cast("bigint").alias("n_blocks"),
+        F.size(F.collect_set("event_type")).cast("bigint").alias("k"),
     )
     s2 = sums.agg(F.sum(F.col("rank_sum_x2") * F.col("rank_sum_x2")).alias("s_rx2_sq"))
     chi2 = (

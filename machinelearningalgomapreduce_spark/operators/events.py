@@ -19,6 +19,7 @@ from pyspark.sql.window import Window as W
 
 from machinelearningalgomapreduce_spark.functions import money
 from machinelearningalgomapreduce_spark.functions.joins import pre_partition_small_tier
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.sources.catalog import load_tables
 
 SESSION_GAP_MIN = 30
@@ -313,14 +314,16 @@ def markov_steady_state(
     # Exact conditional probabilities from counts (not the rounded display
     # column) so the fixpoint is a true stochastic matrix.
     totals = p.groupBy("prev_type").agg(F.sum("n").alias("n_from"))
-    p = p.join(F.broadcast(totals), "prev_type").select(
-        "prev_type", "next_type", (F.col("n") / F.col("n_from")).alias("prob")
-    ).localCheckpoint()
+    p = materialize_once(
+        p.join(F.broadcast(totals), "prev_type").select(
+            "prev_type", "next_type", (F.col("n") / F.col("n_from")).alias("prob")
+        )
+    )
     states = p.select(F.col("prev_type").alias("event_type")).unionAll(
         p.select(F.col("next_type"))
     ).distinct()
     k = states.count()
-    pi = states.withColumn("pi", F.lit(1.0 / k)).localCheckpoint()
+    pi = materialize_once(states.withColumn("pi", F.lit(1.0 / k)))
     for _ in range(rounds):
         raw = (
             p.join(pi.withColumnRenamed("event_type", "prev_type"), "prev_type")
@@ -332,10 +335,9 @@ def markov_steady_state(
         # mass leaks at each multiply and π need not sum to 1 on general
         # data — the stationary-distribution contract requires Σπ = 1.
         mass = raw.agg(F.sum("pi_raw").alias("m"))
-        nxt = (
+        nxt = materialize_once(
             raw.crossJoin(F.broadcast(mass))
             .select("event_type", (F.col("pi_raw") / F.col("m")).alias("pi"))
-            .localCheckpoint()
         )
         step = (
             pi.withColumnRenamed("pi", "old")

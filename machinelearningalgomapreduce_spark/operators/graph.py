@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from machinelearningalgomapreduce_spark.functions.joins import fan_out
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.sources.catalog import load_tables, table_stats
 
 DAMPING = 0.85
@@ -138,14 +139,14 @@ def pagerank_frame(edges: DataFrame, n_iter: int = 10) -> DataFrame:
     pytest-diffed against a pure-Python power iteration to convergence
     on a toy graph; dangling mass dropped, matching q_pagerank).
 
-    The edge/degree frame is cached once (loop-invariant); ranks are
-    re-derived per pass and localCheckpoint'ed every few iterations to
+    The degree frame is materialized once (loop-invariant); ranks are
+    re-derived per pass and materialized every third iteration to
     truncate lineage (SURVEY.md §3.2).
     """
     nodes = edges.select(F.col("src").alias("node")).union(
         edges.select(F.col("dst").alias("node"))
     ).distinct()
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).cache()
+    deg = materialize_once(edges.groupBy("src").agg(F.count("*").alias("outdeg")))
     n_nodes = nodes.count()
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
     for i in range(n_iter):
@@ -166,7 +167,7 @@ def pagerank_frame(edges: DataFrame, n_iter: int = 10) -> DataFrame:
             )
         )
         if (i + 1) % 3 == 0:
-            ranks = ranks.localCheckpoint()
+            ranks = materialize_once(ranks)
     return ranks
 
 
@@ -459,20 +460,19 @@ def kcore_iterate(edges: DataFrame, k: int = 3, max_rounds: int = 50) -> DataFra
     """Full k-core: peel degree-<k nodes to fixpoint (library API).
 
     Per round: one degree aggregate + two semi-joins — O(m) each, the
-    q_dedup_clusters loop discipline (localCheckpoint to truncate lineage,
+    q_dedup_clusters loop discipline (materialize_once to truncate lineage,
     O(1) convergence count only). Returns the surviving (u, v) edge set;
     core nodes are its endpoints."""
-    cur = edges.localCheckpoint()
+    cur = materialize_once(edges)
     # Carry the previous round's count forward (ADVICE r4): cur's count is
     # known from last round's nxt.count() — one Spark action per round.
     n_cur = cur.count()
     for _ in range(max_rounds):
         deg = _directed_nbrs(cur).groupBy("node").agg(F.count("*").alias("deg"))
         alive = deg.filter(F.col("deg") >= k).select("node")
-        nxt = (
+        nxt = materialize_once(
             cur.join(alive.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(alive.withColumnRenamed("node", "v"), "v", "left_semi")
-            .localCheckpoint()
         )
         n_nxt = nxt.count()
         cur = nxt
@@ -519,19 +519,18 @@ def connected_components_star(edges: DataFrame, max_rounds: int = 30) -> DataFra
     component minimum — bit-identical to the min-label fixpoint
     (pytest-diffed in tests/test_dedup_variants.py).
 
-    Loop discipline: localCheckpoint per phase (lineage truncation), O(1)
+    Loop discipline: materialize_once per phase (lineage truncation), O(1)
     driver-side convergence stats (count + exact sums — the cheap
     invariant triple; the star forest is additionally verified closed
     before returning, so a colliding triple cannot return wrong labels).
     """
-    pairs = (
+    pairs = materialize_once(
         edges.filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"),
             F.least("u", "v").alias("v"),
         )
         .distinct()
-        .localCheckpoint()
     )
 
     def stats(df: DataFrame) -> tuple:
@@ -544,8 +543,8 @@ def connected_components_star(edges: DataFrame, max_rounds: int = 30) -> DataFra
 
     prev = stats(pairs)
     for _ in range(max_rounds):
-        pairs = _star_phase(pairs, large=True).localCheckpoint()
-        pairs = _star_phase(pairs, large=False).localCheckpoint()
+        pairs = materialize_once(_star_phase(pairs, large=True))
+        pairs = materialize_once(_star_phase(pairs, large=False))
         cur = stats(pairs)
         if cur == prev:
             # Closed-form check that we truly hold a star forest: every
@@ -689,7 +688,7 @@ def personalized_pagerank(
         .union(seed_rows)
         .distinct()
     )
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).cache()
+    deg = materialize_once(edges.groupBy("src").agg(F.count("*").alias("outdeg")))
     seed_col = F.when(F.col("node").isin(seeds), 1.0 / len(seeds)).otherwise(0.0)
     ranks = nodes.select("node", seed_col.alias("rank"))
     for i in range(n_iter):
@@ -716,7 +715,7 @@ def personalized_pagerank(
             )
         )
         if (i + 1) % 3 == 0:
-            ranks = ranks.localCheckpoint()
+            ranks = materialize_once(ranks)
     return ranks
 
 
@@ -833,12 +832,12 @@ def reachable_from(edges: DataFrame, seeds: DataFrame, max_rounds: int = 30) -> 
             .distinct()
             .join(visited, "node", "left_anti")
         )
-        # Checkpoint EVERY round: isEmpty() materializes nxt anyway, so
-        # the eager checkpoint costs nothing extra — while leaving nxt
-        # un-checkpointed makes the next round's join RECOMPUTE this
+        # Materialize EVERY round: isEmpty() computes nxt anyway, so
+        # the eager job costs nothing extra — while leaving nxt
+        # lazy makes the next round's join RECOMPUTE this
         # round's whole multi-stage lineage (measured: the q_scc_pivot
         # closure went from minutes to seconds with this).
-        nxt = nxt.localCheckpoint()
+        nxt = materialize_once(nxt)
         if nxt.isEmpty():
             break
         visited = visited.unionByName(nxt)
@@ -1036,7 +1035,7 @@ def q_scc_pivot(
     Scale shape: two frontier-BFS closures (O(diameter) rounds, one edge
     join each) + a semi-join intersection; the pivot seed is an
     aggregate, never a collect. The edge list is loop-invariant, so it is
-    localCheckpoint'ed ONCE — without that every BFS round would re-run
+    materialized ONCE — without that every BFS round would re-run
     the co-purchase self-join (measured: minutes vs seconds). The pivot
     is the max-degree node (ties to the smallest id), which sits inside
     the giant SCC of the oriented graph, so the result is the nontrivial
@@ -1051,10 +1050,12 @@ def q_scc_pivot(
         F.md5(F.concat(F.lit("dir:"), F.col("u").cast("string"),
                        F.lit(":"), F.col("v").cast("string"))), 1, 1
     ).isin(*"01234567")
-    directed = e.select(
-        F.when(even, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(even, F.col("v")).otherwise(F.col("u")).alias("dst"),
-    ).localCheckpoint()
+    directed = materialize_once(
+        e.select(
+            F.when(even, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(even, F.col("v")).otherwise(F.col("u")).alias("dst"),
+        )
+    )
     deg = (
         directed.select(F.col("src").alias("node"))
         .unionAll(directed.select(F.col("dst").alias("node")))
@@ -1473,7 +1474,7 @@ def q_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union form re-executed the whole wedge-closure join per branch
     # (exchange reuse dedupes the shuffles, not the join compute above
     # them). Same (u, v) multiset, bit-identical histogram; measured
-    # 20 s → 7.4 s at sf0.1 (r15; a localCheckpoint of the edges was
+    # 20 s → 7.4 s at sf0.1 (r15; materializing the edges was
     # tried and REVERTED — materialization drops the edge relation's
     # partitioning, so every consumer re-shuffles what ReusedExchange
     # had shared for free).

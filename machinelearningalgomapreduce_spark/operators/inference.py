@@ -300,11 +300,12 @@ def q_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("double")
     term = F.col("n").cast("double") * F.log(F.col("n").cast("double") / expected)
     with_term = joined.select("event_type", "band", term.alias("term"))
+    # set sizes, not countDistinct (see evaluation.q_chi2)
+    n_types = F.size(F.collect_set("event_type")).cast("bigint")
+    n_bands = F.size(F.collect_set("band")).cast("bigint")
     agg = with_term.agg(
         F.count("*").alias("n_cells"),
-        (
-            (F.countDistinct("event_type") - 1) * (F.countDistinct("band") - 1)
-        ).cast("bigint").alias("dof"),
+        ((n_types - 1) * (n_bands - 1)).alias("dof"),
         F.aggregate(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("event_type", "band", "term"))),

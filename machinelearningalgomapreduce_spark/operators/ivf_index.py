@@ -329,15 +329,15 @@ class IVFIndexView:
         # re-evaluated (once for the gate probe above, again for the
         # distinct-cells collect, again downstream). Correct for
         # deterministic sources; say so LOUDLY once so a caller with a
-        # nondeterministic source knows to cache()/localCheckpoint()
+        # nondeterministic source knows to materialize_once() it first
         # (r12 ADVICE: the hazard used to live only in the docstring).
         import warnings
 
         warnings.warn(
             f"IVF probe overflowed the {cap}-row collect gate; continuing "
             "with a distributed probe plan that RE-EVALUATES the query "
-            "lineage — cache() or localCheckpoint() nondeterministic "
-            "query sources",
+            "lineage — materialize_once() nondeterministic query "
+            "sources first",
             stacklevel=3,
         )
         return probe_plan, sorted(

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.functions.vectors import dot, norm, sq_dist
 from machinelearningalgomapreduce_spark.operators.ivf_index import IVFIndexView
 
@@ -299,7 +300,7 @@ class IVFPQIndexView(IVFIndexView):
         # per micro-batch into O(candidates). survivors is checkpointed
         # first so deriving the id set does not re-run the probe.
         if callable(full_vectors):
-            survivors = survivors.localCheckpoint()
+            survivors = materialize_once(survivors)
             cand_ids = survivors.select(
                 F.col("neighbor_id").alias("vec_id")
             ).distinct()

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window as W
 
 from machinelearningalgomapreduce_spark.functions import money
 from machinelearningalgomapreduce_spark.functions.joins import fan_out
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.functions.vectors import as_double, dot, norm, sq_dist
 from machinelearningalgomapreduce_spark.sources.catalog import load_tables, table_stats
 from machinelearningalgomapreduce_spark.sources.schemas import EMBEDDING_DIM
@@ -528,13 +529,13 @@ def kmeans_iterate(spark: SparkSession, sf_dir: str, n_iter: int = 5) -> DataFra
     """Multi-iteration pure-DataFrame k-means driver loop (library API).
 
     Per iteration: broadcast centroids → assign → recompute. The
-    embeddings are cached once (loop-invariant); centroids are the only
-    state crossing iterations and stay O(k·d). localCheckpoint every few
-    iterations truncates the growing plan lineage — the Spark replacement
+    embeddings are materialized once (loop-invariant); centroids are the
+    only state crossing iterations and stay O(k·d). Materializing them
+    every second iteration truncates the growing plan lineage — the Spark replacement
     for the reference's job-per-iteration HDFS round-trip (SURVEY.md §3.2).
     """
     t = load_tables(spark, sf_dir)
-    data = t.embeddings.select("vec_id", "embedding").cache()
+    data = materialize_once(t.embeddings.select("vec_id", "embedding"))
     cents = label_centroids(t.embeddings)
     for i in range(n_iter):
         assigned = assign_nearest(
@@ -553,7 +554,7 @@ def kmeans_iterate(spark: SparkSession, sf_dir: str, n_iter: int = 5) -> DataFra
             )
         )
         if (i + 1) % 2 == 0:
-            cents = cents.localCheckpoint()
+            cents = materialize_once(cents)
     return cents
 
 
@@ -572,7 +573,7 @@ def kmeans_pp_init(spark: SparkSession, sf_dir: str, k: int = 10) -> list[int]:
     TakeOrdered(1) argmax over (mind desc, vec_id) — the running min-dist
     column is the only state, updated incrementally (never recomputed
     against all chosen centers). Driver holds O(k·d) floats. The growing
-    column-update lineage is truncated by localCheckpoint every 4 rounds.
+    column-update lineage is truncated by materializing it every 4 rounds.
     """
     t = load_tables(spark, sf_dir)
     data = t.embeddings.select("vec_id", "embedding")
@@ -585,7 +586,7 @@ def kmeans_pp_init(spark: SparkSession, sf_dir: str, k: int = 10) -> list[int]:
         d2 = F.round(sq_dist(F.col("embedding"), lit_center, EMBEDDING_DIM), 6)
         state = state.withColumn("mind", F.least(F.col("mind"), d2))
         if i % 4 == 0:
-            state = state.localCheckpoint()
+            state = materialize_once(state)
         nxt = state.orderBy(F.desc("mind"), "vec_id").limit(1).collect()[0]
         chosen.append(nxt.vec_id)
         center_vec = [float(x) for x in nxt.embedding]
@@ -655,11 +656,10 @@ def kmeans_parallel_init(
             .groupBy("vec_id")
             .agg(F.min("d2").alias("new_mind"))
         )
-        state = (
+        state = materialize_once(
             state.join(mins, "vec_id")
             .withColumn("mind", F.least(F.col("mind"), F.col("new_mind")))
             .drop("new_mind")
-            .localCheckpoint()
         )
     # Attraction weights: points per nearest candidate (one assign pass).
     cand_df = spark.createDataFrame(

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.operators.graph import _copurchase_edges
 
 BFS_SEED_MOD = 500  # p_partkey % 500 == 0 → seed node
@@ -39,7 +40,7 @@ def bfs_levels(spark: SparkSession, sf_dir: str, n_rounds: int = 2) -> DataFrame
     """Per-node BFS distance (≤ n_rounds) from the seed set over the
     undirected co-purchase graph; returns (node, dist). Library API — the
     general loop; the fixed 2-round form is the oracle-checked query."""
-    edges = _undirected(_copurchase_edges(spark, sf_dir)).localCheckpoint()
+    edges = materialize_once(_undirected(_copurchase_edges(spark, sf_dir)))
     nodes = edges.select(F.col("u").alias("node")).distinct()
     visited = nodes.filter(F.col("node") % BFS_SEED_MOD == 0).select(
         "node", F.lit(0).alias("dist")
@@ -61,11 +62,7 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two BFS rounds from the seed parts, rolled up per distance —
     dist 0 (seeds), 1, 2, and -1 for nodes unreached within two rounds.
     Exact integer set algebra end to end (joins + anti-joins + counts)."""
-    # localCheckpoint instead of lazy cache (r15): eager one-shot
-    # materialization + lineage truncation — every level join, anti-join
-    # and the unreached pass re-read the materialized blocks instead of
-    # racing the lazy cache fill inside one action.
-    edges = _undirected(_copurchase_edges(spark, sf_dir)).localCheckpoint()
+    edges = materialize_once(_undirected(_copurchase_edges(spark, sf_dir)))
     nodes = edges.select(F.col("u").alias("node")).distinct()
     l0 = nodes.filter(F.col("node") % BFS_SEED_MOD == 0)
     l1 = (
@@ -146,9 +143,9 @@ def sssp_iterate(spark: SparkSession, sf_dir: str, max_rounds: int = 20) -> Data
     """Weighted single-source-set shortest paths to convergence (library
     API): Bellman-Ford rounds until the (count, Σdist) pair stops moving —
     exact integer convergence detection, the bfs_levels/pagerank_iterate
-    loop discipline (localCheckpoint lineage truncation, O(1) driver
+    loop discipline (materialize_once lineage truncation, O(1) driver
     state). Returns (node, dist) for reached nodes."""
-    edges = _weighted_edges(spark, sf_dir).localCheckpoint()
+    edges = materialize_once(_weighted_edges(spark, sf_dir))
     dist = (
         edges.select(F.col("u").alias("node"))
         .distinct()
@@ -157,7 +154,7 @@ def sssp_iterate(spark: SparkSession, sf_dir: str, max_rounds: int = 20) -> Data
     )
     prev = None
     for _ in range(max_rounds):
-        dist = _relax(dist, edges).localCheckpoint()
+        dist = materialize_once(_relax(dist, edges))
         row = dist.agg(F.count("*").alias("n"), F.sum("dist").alias("s")).collect()[0]
         cur = (row.n, row.s)
         if cur == prev:
@@ -172,10 +169,7 @@ def q_sssp_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     sssp_iterate), rolled up as (dist, n_nodes) with unreached = −1.
     All-integer arithmetic end to end; the weighted sibling of
     q_bfs_levels."""
-    # localCheckpoint, not lazy cache (r15 — the q_bfs_levels finding):
-    # eager one-shot materialization of the weighted edge list that the
-    # two relax rounds + node/unreached passes then re-read.
-    edges = _weighted_edges(spark, sf_dir).localCheckpoint()
+    edges = materialize_once(_weighted_edges(spark, sf_dir))
     nodes = edges.select(F.col("u").alias("node")).distinct()
     dist = nodes.filter(F.col("node") % BFS_SEED_MOD == 0).select(
         "node", F.lit(0).cast("bigint").alias("dist")

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from machinelearningalgomapreduce_spark.functions.joins import fan_out
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.functions.vectors import dot, norm, sq_dist, sq_norm
 from machinelearningalgomapreduce_spark.operators.ml import (
     _ASSIGN_CTES,
@@ -304,7 +305,7 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to q_sim_recall — brute truth on the query
     sample only, model-sized joins after."""
-    # (r16 negative result: localCheckpoint of brute — referenced twice,
+    # (r16 negative result: materializing brute — referenced twice,
     # here and as the query universe — measured NEUTRAL-to-worse across
     # q_ndcg/q_mrr/q_map: both references share the window's query_id
     # exchange, so ReusedExchange already dedupes the O(n·q) scoring pass,
@@ -1137,49 +1138,43 @@ def pq_fit(
     O(n_iter) driver-side convergence read the MapReduce loop would put
     in a counter.
 
-    Scale shape: the subvector frame caches once (loop-invariant); per
-    iteration ONE broadcast-codebook assignment aggregate and ONE
-    (sub, code, dim) recompute aggregate — both map-side combinable;
-    state crossing iterations is O(M·k·sub_dim)."""
-    data = _pq_subvectors(spark, sf_dir).cache()
+    Scale shape: the subvector frame is materialized once
+    (loop-invariant); per iteration ONE broadcast-codebook assignment
+    aggregate and ONE (sub, code, dim) recompute aggregate — both
+    map-side combinable; state crossing iterations is O(M·k·sub_dim)."""
+    data = materialize_once(_pq_subvectors(spark, sf_dir))
     wi = W.partitionBy("sub").orderBy("vec_id")
-    cents = (
+    cents = materialize_once(
         data.withColumn("rn", F.row_number().over(wi))
         .filter(F.col("rn") <= k)
         .select("sub", (F.col("rn") - 1).cast("int").alias("code"), F.col("sv").alias("centroid"))
-        .localCheckpoint()
     )
     errors: list[float] = []
-    try:
-        for i in range(n_iter):
-            # persist the assignment: the error read AND the centroid
-            # recompute both consume it — uncached it would run the
-            # broadcast-codebook job twice per iteration (r10 review)
-            assigned = pq_assign(data, cents).persist()
-            # DECIMAL(18,6) sum: order-free exact total, so the error
-            # trajectory is identical across partition layouts (the
-            # q_pq_codes discipline; d2 is already rounded to 6)
-            errors.append(
-                float(
-                    assigned.agg(
-                        F.sum(F.col("d2").cast("decimal(18,6)"))
-                    ).first()[0]
-                )
+    for i in range(n_iter):
+        # materialize the assignment: the error read AND the centroid
+        # recompute both consume it — otherwise the broadcast-codebook
+        # job runs twice per iteration (r10 review)
+        assigned = materialize_once(pq_assign(data, cents))
+        # DECIMAL(18,6) sum: order-free exact total, so the error
+        # trajectory is identical across partition layouts (the
+        # q_pq_codes discipline; d2 is already rounded to 6)
+        errors.append(
+            float(
+                assigned.agg(
+                    F.sum(F.col("d2").cast("decimal(18,6)"))
+                ).first()[0]
             )
-            cents = (
-                assigned.join(data, ["vec_id", "sub"])
-                .select("sub", "code", F.posexplode("sv").alias("d", "x"))
-                .groupBy("sub", "code", "d")
-                .agg(F.round(F.avg("x"), 6).alias("c"))
-                .groupBy("sub", "code")
-                .agg(F.array_sort(F.collect_list(F.struct("d", "c"))).alias("dc"))
-                .select("sub", "code", F.transform("dc", lambda s: s["c"]).alias("centroid"))
-                .localCheckpoint()
-            )
-            assigned.unpersist()
-        return cents, errors
-    finally:
-        data.unpersist()
+        )
+        cents = materialize_once(
+            assigned.join(data, ["vec_id", "sub"])
+            .select("sub", "code", F.posexplode("sv").alias("d", "x"))
+            .groupBy("sub", "code", "d")
+            .agg(F.round(F.avg("x"), 6).alias("c"))
+            .groupBy("sub", "code")
+            .agg(F.array_sort(F.collect_list(F.struct("d", "c"))).alias("dc"))
+            .select("sub", "code", F.transform("dc", lambda s: s["c"]).alias("centroid"))
+        )
+    return cents, errors
 
 
 def _brute_topk(
@@ -1238,7 +1233,7 @@ def q_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to q_sim_recall — brute truth on the query
     sample only, model-sized joins after."""
     # (ReusedExchange already dedupes the double-referenced brute subtree —
-    # see q_ndcg's r16 note; a localCheckpoint measured neutral-to-worse.)
+    # see q_ndcg's r16 note; materializing it measured neutral-to-worse.)
     brute = _brute_topk(spark, sf_dir)
     ann = q_sim_ann(spark, sf_dir).select("query_id", "neighbor_id", "rank")
     first_hit = (
@@ -1272,7 +1267,7 @@ def q_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to q_sim_recall — brute truth on the query
     sample only, model-sized joins after."""
     # (ReusedExchange already dedupes the double-referenced brute subtree —
-    # see q_ndcg's r16 note; a localCheckpoint measured neutral-to-worse.)
+    # see q_ndcg's r16 note; materializing it measured neutral-to-worse.)
     brute = _brute_topk(spark, sf_dir)
     ann = q_sim_ann(spark, sf_dir).select("query_id", "neighbor_id", "rank")
     hits = ann.join(brute, ["query_id", "neighbor_id"]).select("query_id", "rank")

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from machinelearningalgomapreduce_spark.functions.hashing import shingles
 from machinelearningalgomapreduce_spark.functions.joins import fan_out, pre_partition_small_tier
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.sources.catalog import load_tables
 
 # Tiny function-word lexicon for the language-ID heuristic. The fixture
@@ -235,14 +236,16 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles only (doc_id, shingle-hit) pairs). With a larger probe set,
     swap the broadcast join for a bloom filter built from it."""
     t = load_tables(spark, sf_dir)
-    # fan_out + localCheckpoint (r16): the shingle pass fed BOTH branches
+    # fan_out + materialize_once (r16): the shingle pass fed BOTH branches
     # (probe build + train probe) from the single-file scan — each branch
     # re-ran it, serially. Materialize the per-doc distinct-shingle arrays
     # once and explode from the blocks; measured 2.3–3.3 → 1.26 s at
     # sf0.1. Same rows (explode of the same arrays).
-    base = fan_out(t.documents).select(
-        "doc_id", F.array_distinct(shingles(F.col("text"), k=3)).alias("shs")
-    ).localCheckpoint()
+    base = materialize_once(
+        fan_out(t.documents).select(
+            "doc_id", F.array_distinct(shingles(F.col("text"), k=3)).alias("shs")
+        )
+    )
     sh = base.select("doc_id", F.explode("shs").alias("sh"))
     probes = sh.filter(F.col("doc_id") % DECON_PROBE_STRIDE == 0).select("sh").distinct()
     train = t.documents.filter(F.col("doc_id") % DECON_PROBE_STRIDE != 0)

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from machinelearningalgomapreduce_spark.functions.metrics import with_quality_counters
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.operators.dedup import (
     embedding_dedup_blocked_frame,
     keep_best_frame,
@@ -108,7 +109,7 @@ def training_pipeline(
 
     # Near-dup pass on the REDUCED corpus: pairs, clusters, and the
     # quality-chosen winner are all computed among gate-passers. The CC
-    # fixpoint localCheckpoints its labels, so `losers` enters the final
+    # fixpoint materializes its labels, so `losers` enters the final
     # plan as a checkpoint scan — the observed `staged` subtree appears
     # exactly once and no counter double-fires.
     pairs = minhash_dedup_pairs(staged).select("doc_a", "doc_b")
@@ -127,12 +128,12 @@ def training_pipeline(
         # embeddings (r11 review — filtering result pairs after a
         # full-corpus blocking pass would waste the dominant cost), so
         # survivorship is decided among survivors by construction.
-        # localCheckpoint pins ONE evaluation of this join-heavy lineage:
+        # materialize_once pins ONE evaluation of this join-heavy lineage:
         # the blocked-dedup helper reads it for its sizing count, the
         # k-means fit, and the blocking pass (r11 review), and the
         # checkpoint scan also keeps the observed `staged` subtree out of
         # the sem_pairs plan (the text-stage `losers` discipline above).
-        survivors_emb = (
+        survivors_emb = materialize_once(
             load_tables(spark, sf_dir)
             .embeddings.select("vec_id", "embedding")
             .join(
@@ -140,7 +141,6 @@ def training_pipeline(
                 "vec_id",
                 "left_semi",
             )
-            .localCheckpoint()
         )
         sem_pairs = embedding_dedup_blocked_frame(spark, survivors_emb).select(
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
@@ -182,7 +182,7 @@ def training_pipeline(
     chunks, chunk_obs = with_quality_counters(chunks)
 
     # ONE action materializes the export and populates every counter.
-    chunks = chunks.localCheckpoint()
+    chunks = materialize_once(chunks)
     funnel: dict[str, int] = {name: o.get["n_rows"] for name, o in obs.items()}
     funnel["chunks"] = chunk_obs.get["n_rows"]
     return chunks, funnel

@@ -25,6 +25,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from machinelearningalgomapreduce_spark.functions.storage import (
+    BROADCAST_CAP_BYTES,
+    dir_size_below,
+    materialize_once,
+)
+
+
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the documents parquet — the shared cached-schema
     idiom lives in windows.stream_table (one copy to keep in sync)."""
@@ -95,24 +102,21 @@ def _ingest_batch(spark: SparkSession, index_dir: str, out_dir: str, run_key: st
         # copy; the index append MAY duplicate a hash on replay, which is
         # harmless (it is consumed as a set by the anti-join) and
         # compactable offline.
-        survivors.persist()
-        try:
-            # A replay crossing the zero-padding upgrade must supersede the
-            # PRE-upgrade output directory too, not write a second copy of
-            # the batch under the padded name.
-            import shutil as _shutil
+        survivors = materialize_once(survivors)
+        # A replay crossing the zero-padding upgrade must supersede the
+        # PRE-upgrade output directory too, not write a second copy of
+        # the batch under the padded name.
+        import shutil as _shutil
 
-            legacy = os.path.join(out_dir, f"epoch={run_digest}_{batch_id}")
-            if os.path.exists(legacy):
-                _shutil.rmtree(legacy)
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"epoch={epoch.replace('/', '_')}")
-            )
-            survivors.select(
-                "content_hash", "doc_id", F.lit(epoch).alias("epoch")
-            ).write.mode("append").parquet(index_dir)
-        finally:
-            survivors.unpersist()
+        legacy = os.path.join(out_dir, f"epoch={run_digest}_{batch_id}")
+        if os.path.exists(legacy):
+            _shutil.rmtree(legacy)
+        survivors.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"epoch={epoch.replace('/', '_')}")
+        )
+        survivors.select(
+            "content_hash", "doc_id", F.lit(epoch).alias("epoch")
+        ).write.mode("append").parquet(index_dir)
 
     return ingest
 
@@ -122,11 +126,6 @@ def _index_is_small(index_dir: str, cap_bytes: int | None = None) -> bool:
     shared functions/storage.py discipline; past the cap the anti-join
     falls back to a shuffled hash join (the 100 TB path — at that point
     the index itself is the big side and AQE plans it)."""
-    from machinelearningalgomapreduce_spark.functions.storage import (
-        BROADCAST_CAP_BYTES,
-        dir_size_below,
-    )
-
     return dir_size_below(
         index_dir, BROADCAST_CAP_BYTES if cap_bytes is None else cap_bytes
     )
@@ -458,7 +457,7 @@ def _semantic_ingest_batch(
         epoch = f"{run_digest}/{batch_id:010d}"
         if epoch in index.applied_batches():
             return  # replay of a fully-committed epoch — both writes done
-        batch = batch.select("vec_id", "embedding").localCheckpoint()
+        batch = materialize_once(batch.select("vec_id", "embedding"))
         # Within-batch near-dup collapse (min vec_id per CC cluster) at
         # the CALLER's threshold, passed INTO the operator (r12): the
         # old verify=False-then-filter pattern read rep-level candidates
@@ -470,10 +469,9 @@ def _semantic_ingest_batch(
         # Checkpoint the pair plan: the CC loop re-walks its edge
         # lineage every iteration, and the kmeans-assignment self-join
         # is far too heavy to recompute per iteration.
-        pairs = (
+        pairs = materialize_once(
             embedding_dedup_blocked_frame(spark, batch, threshold=threshold)
             .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-            .localCheckpoint()
         )
         # empty pair frame short-circuits inside the CC fixpoint (empty
         # labels converge on the first read) — no branch needed
@@ -549,7 +547,7 @@ def _semantic_ingest_batch(
                 # refuse instead (the full_vectors= escape hatch covers
                 # externally-populated indexes).
                 def fv_for(cand_ids):
-                    cand_ids = cand_ids.localCheckpoint()
+                    cand_ids = materialize_once(cand_ids)
 
                     def refuse(n_missing):
                         raise ValueError(
@@ -588,7 +586,7 @@ def _semantic_ingest_batch(
                         return spark.createDataFrame(
                             [], "vec_id long, embedding array<double>"
                         )
-                    fv = (
+                    fv = materialize_once(
                         log
                         .filter(
                             F.col("batch") != f"{run_digest}-{batch_id:010d}"
@@ -597,7 +595,6 @@ def _semantic_ingest_batch(
                         .select("vec_id", "embedding", pref.alias("o"))
                         .groupBy("vec_id")
                         .agg(F.max_by("embedding", "o").alias("embedding"))
-                        .localCheckpoint()
                     )
                     n_missing = cand_ids.join(fv, "vec_id", "left_anti").count()
                     if n_missing:
@@ -613,7 +610,7 @@ def _semantic_ingest_batch(
             accepted = survivors.join(hits, "vec_id", "left_anti")
         else:
             accepted = survivors
-        accepted = accepted.localCheckpoint()  # pin ONE evaluation for both writes
+        accepted = materialize_once(accepted)  # pin ONE evaluation for both writes
         accepted.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch={run_digest}-{batch_id:010d}")
         )

@@ -621,13 +621,14 @@ def test_two_level_tier_differential_vs_flat(spark, monkeypatch):
     verify exactly, so pairs are true in both; the differential is
     quantizer cell shape only. Pins: pair-set overlap, planted-pair
     recall for both lanes, and candidate volume under all-pairs."""
+    from machinelearningalgomapreduce_spark.functions.storage import materialize_once
     from machinelearningalgomapreduce_spark.operators import dedup
     from tools.imi_scale_probe import CLUSTER_M, THRESHOLD, synth_corpus
 
     n = 2048  # the at-scale differential is the BENCH_NOTES record
     # (n=98304: two-level 0.53x flat wall, overlap 0.99997); this pin
     # holds the CONTRACT at battery-affordable size
-    corpus = synth_corpus(spark, n).localCheckpoint()
+    corpus = materialize_once(synth_corpus(spark, n))
     planted = n // CLUSTER_M * (CLUSTER_M * (CLUSTER_M - 1) // 2)
 
     flat = {

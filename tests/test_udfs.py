@@ -83,13 +83,14 @@ def test_python_udtf_matches_jvm_explode(spark, sf_dir):
     the fixture corpus (both 0-based positions, char trigrams)."""
     from pyspark.sql import functions as F
 
+    from machinelearningalgomapreduce_spark.functions.storage import materialize_once
     from machinelearningalgomapreduce_spark.functions.udfs import (
         CharNgramsUDTF,
         char_ngrams_jvm,
     )
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
 
-    docs = load_tables(spark, sf_dir).documents.limit(50).cache()
+    docs = materialize_once(load_tables(spark, sf_dir).documents.limit(50))
     spark.udtf.register("char_ngrams", CharNgramsUDTF)
     docs.createOrReplaceTempView("udtf_docs")
     got = spark.sql(

@@ -28,12 +28,13 @@ def main() -> None:
     tier = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1.0"
     from pyspark.sql import functions as F
 
+    from machinelearningalgomapreduce_spark.functions.storage import materialize_once
     from machinelearningalgomapreduce_spark.operators.graph import _copurchase_edges
     from machinelearningalgomapreduce_spark.session import ensure_query_conf, get_spark
 
     spark = get_spark(app_name="degree_orient_10x")
     ensure_query_conf(spark)
-    edges = _copurchase_edges(spark, tier).localCheckpoint()
+    edges = materialize_once(_copurchase_edges(spark, tier))
 
     def wedge_count(e) -> int:
         out = e.groupBy("u").agg(F.count("*").alias("d"))
@@ -62,14 +63,13 @@ def main() -> None:
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    oriented = (
+    oriented = materialize_once(
         edges.join(du, "u").join(dv, "v")
         .select(
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("u2"),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("v2"),
         )
         .select(F.col("u2").alias("u"), F.col("v2").alias("v"))
-        .localCheckpoint()
     )
     w_id = wedge_count(edges)
     w_deg = wedge_count(oriented)

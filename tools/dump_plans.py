@@ -14,9 +14,9 @@
         so the AQE final plan is captured; --no-run captures the plan
         without executing it. --bench applies the bench conf (AQE off,
         SPARK_BENCH_PARTITIONS shuffle partitions, tables cached on their
-        CACHE_KEYS). Expression, plan and RDD ids are normalized
-        (#123 → #N, plan_id=7 → plan_id=N, RDD[42] → RDD[N]), so `diff -r`
-        of two dumps compares the plans of two commits.
+        CACHE_KEYS). Every name a session counter makes is normalized
+        (see ``normalize``), so `diff -r` of two dumps compares the plans
+        of two commits, whatever ran earlier in each session.
 """
 
 from __future__ import annotations
@@ -55,6 +55,18 @@ SCALE_FLAGSHIPS = [
 ]
 
 
+def normalize(plan: str) -> str:
+    """Replace the session-counter parts of a formatted plan with N:
+    expression, plan and RDD ids (#123, plan_id=7, RDD[42]), common
+    subexpression names (_common_expr_3), lambda variables (lambda x_145)
+    and the call site of a materialized RDD (at localCheckpoint at
+    NativeMethodAccessorImpl.java:0, or <unknown>:0 later in a session)."""
+    plan = re.sub(r"(#|plan_id=|RDD\[)\d+", r"\1N", plan)
+    plan = re.sub(r"_common_expr_\d+", "_common_expr_N", plan)
+    plan = re.sub(r"(lambda \w+?)_\d+#", r"\1_N#", plan)
+    return re.sub(r"(RDD\[N\] at \w+ at )\S+?:\d+", r"\1N", plan)
+
+
 def dump_dir(tier: str, out: str, names: list[str], bench: bool, run: bool) -> None:
     from machinelearningalgomapreduce_spark import registry
     from machinelearningalgomapreduce_spark.plans import inspect as P
@@ -85,7 +97,7 @@ def dump_dir(tier: str, out: str, names: list[str], bench: bool, run: bool) -> N
         if run:
             df.write.format("noop").mode("overwrite").save()
         with open(os.path.join(out, f"{name}.txt"), "w") as f:
-            f.write(re.sub(r"(#|plan_id=|RDD\[)\d+", r"\1N", P.formatted_plan(df)))
+            f.write(normalize(P.formatted_plan(df)))
         print(f"wrote {name}", file=sys.stderr)
 
 

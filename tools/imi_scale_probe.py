@@ -112,6 +112,7 @@ def main() -> None:
     n = int(argv[0]) if argv else 262_144
     k_max_low = int(argv[1]) if len(argv) > 1 else 128
 
+    from machinelearningalgomapreduce_spark.functions.storage import materialize_once
     from machinelearningalgomapreduce_spark.operators import dedup
     from machinelearningalgomapreduce_spark.session import (
         ensure_query_conf,
@@ -124,7 +125,7 @@ def main() -> None:
         shuffle_partitions=32,
     )
     ensure_query_conf(spark)
-    corpus = synth_corpus(spark, n).localCheckpoint()  # pin one synthesis
+    corpus = materialize_once(synth_corpus(spark, n))  # pin one synthesis
     auto_k = max(10, -(-n // dedup.EMBED_DEDUP_CELL_TARGET))
     assert auto_k <= dedup.EMBED_DEDUP_K_MAX, "flat lane must stay flat"
     assert auto_k > k_max_low, "two-level lane must actually trigger"
