@@ -189,9 +189,11 @@ class IVFIndexView:
         # delta keeps the array-max embedding (arrays compare
         # lexicographically), so the segment never depends on row order
         delta = delta.groupBy("vec_id").agg(F.max("embedding").alias("embedding"))
-        if not self._log.append(
-            batch_id, lambda: self._log.write_segment(self._payload(spark, delta))
-        ):
+        def write(segs: list[dict]) -> list[dict]:
+            seg = self._log.write_segment(self._payload(spark, delta))
+            return segs if seg is None else [*segs, seg]
+
+        if not self._log.append(batch_id, write):
             return False
         if compact and len(self.segments()) >= self.compact_at:
             self.compact(spark)

@@ -8,48 +8,47 @@ rollup on disk and refreshes it one delta batch at a time:
 
 — the q_incremental_agg merge algebra (operators/incremental.py) turned
 into a persistent, crash-safe, replay-idempotent view. No table format
-dependency: versions are immutable parquet directories and the commit is
-ONE atomic pointer flip (``os.replace`` of ``_CURRENT``), which is also
-what makes reads non-blocking — a reader resolving the pointer a moment
-before a refresh commits simply sees the previous version.
+dependency: every view here stores its versions through ``SegmentLog``,
+whose versions are manifests listing immutable parquet segments and whose
+commit is ONE atomic pointer flip (``os.replace`` of ``_CURRENT``), which
+is also what makes reads non-blocking — a reader resolving the pointer a
+moment before a refresh commits simply sees the previous version.
 
-Storage layout (all inside ``path``):
+Storage layout (all inside ``path``; ``SegmentLog`` has the details):
 
     _CURRENT              ← text file holding the committed version number
-    v00000001/
-        data.parquet/     ← the rolled-up state, O(groups) rows
-        batches.json      ← EVERY batch id folded into this version
-        schema.json       ← the state's schema: reads pin it, so no
-                            schema-inference job runs (a version dir
-                            without it is read with inference)
-    v00000002/ ...
+    _SPEC.json            ← the state-defining spec, checked on every use
+    m00000001.json        ← manifest: live segments (each with the schema
+                            reads pin, so no inference job runs) + EVERY
+                            batch id folded into this version
+    seg-<n>-<pid>-<token>/data.parquet   ← an immutable segment
+    m00000002.json ...
 
-Crash safety: a version directory is written COMPLETELY before the
-pointer flips, so a crash mid-write leaves an orphan ``v*`` dir that no
-pointer references — ignored by readers, cleaned by the next refresh
-(never adopted: adopting a maybe-half-written directory would trade a
-recompute for corruption). Replaying a Structured-Streaming epoch or
-re-running a batch job re-sends a ``batch_id`` already in
-``batches.json`` → no-op, so foreachBatch at-least-once delivery yields
-exactly-once STATE.
+The flat view's manifest lists ONE segment, its whole rolled-up state
+(O(groups) rows); the segmented views list many partial segments; the
+star rollup keeps one log for its fact side and one for its dim side.
 
-Single writer by design: refreshes are serialized by the caller (a
-streaming query's foreachBatch, a scheduled job) — concurrent refreshes
-would race the version counter (last pointer flip wins; the loser's
-batch is silently dropped from the ledger). Readers need no
-coordination at any time.
+Crash safety: segments and the manifest are written COMPLETELY before
+the pointer flips, so a crash mid-write leaves unreferenced ``seg-*``/
+``m*`` debris that readers never see and ``vacuum`` removes (never
+adopted: adopting a maybe-half-written segment would trade a recompute
+for corruption). Replaying a Structured-Streaming epoch or re-running a
+batch job re-sends a ``batch_id`` already in the manifest's ledger →
+no-op, so foreachBatch at-least-once delivery yields exactly-once STATE.
 
-Segmented stores: ``SegmentLog`` is the one commit protocol of every
-store whose state is immutable segments listed by per-version manifests
-— ``SegmentedAggView``/``LeveledAggView`` here and the IVF/IVF-PQ
-indexes (operators/ivf_index.py, ivf_pq.py), which keep only their
-payload logic. It owns the ``_CURRENT`` pointer, the manifests and their
-replay ledger, the ``_SPEC.json`` guard, writer-unique segment names,
-the exclusive-manifest commit with post-commit verification, the append
-loop's bounded rebase-retry, vacuum, and the segment read pinned to each
-segment's recorded schema. The flat view's version directories flip the
-same pointer (``_flip_pointer``) and check the same guard
-(``_guard_spec``), so a fix to the commit path lands once.
+Single writer is the operating mode (refreshes serialized by the caller:
+a streaming query's foreachBatch, a scheduled job), but the log does not
+rely on it: segment names are writer-unique, the manifest of the next
+version is created exclusively, and a writer that loses the race waits
+for the winner's pointer flip, rebases onto the committed manifest and
+re-runs its write (a bounded rebase-retry) — so two racing refreshes
+both land, serialized, or the loser fails loudly; no batch is silently
+dropped. Readers need no coordination at any time.
+
+``SegmentLog`` is the one commit protocol of every versioned store in the
+package: the views here and the IVF/IVF-PQ indexes (operators/
+ivf_index.py, ivf_pq.py) keep only their payload logic, so a fix to the
+commit path lands once.
 
 Merge algebra: count→sum, sum→sum, min→min, max→max — each
 associative + commutative, so any delta partitioning and any refresh
@@ -317,16 +316,6 @@ def _committed(version: int | None, current: int, what: str = "view") -> int:
     return v
 
 
-def _drop_uncommitted_versions(path: str) -> None:
-    """Remove ``v*`` version dirs ABOVE the committed pointer — debris from
-    a crash between state write and pointer flip. Never adopted (the write
-    may be partial); the interrupted batch simply re-applies."""
-    cur = _read_pointer(path)
-    for name in os.listdir(path):
-        if name.startswith("v") and name[1:].isdigit() and int(name[1:]) > cur:
-            shutil.rmtree(os.path.join(path, name))
-
-
 def _new_seg_name(next_id: int) -> str:
     """Writer-unique segment directory name. The numeric prefix is a
     readability/ordering hint only — uniqueness comes from the
@@ -390,9 +379,9 @@ def _read_parquet(spark: SparkSession, parts: list[tuple[str, dict | None]]) -> 
 
 def _write_snapshot(df: DataFrame, snap_dir: str) -> None:
     """Write ``df`` as ``snap_dir/data.parquet`` plus its durable
-    ``schema.json`` record — the single-directory state of a flat view
-    version, a pinned drift reference or a dim version. The caller makes
-    it visible afterwards (pointer flip or directory rename)."""
+    ``schema.json`` record — the single-directory state of a pinned drift
+    reference. The caller makes it visible afterwards (directory rename
+    and the ``_REF`` pointer write)."""
     df.write.mode("error").parquet(os.path.join(snap_dir, "data.parquet"))
     _write_json_durable(os.path.join(snap_dir, "schema.json"), _schema_record(df))
 
@@ -438,6 +427,14 @@ class IncrementalAggView:
     ... }, derive={"avg_qty": lambda s: s["sum_qty"] / s["n_rows"]})
     >>> mv.refresh(spark, monday_rows, batch_id="2026-08-10")
     >>> mv.read(spark)        # rollup over everything folded in so far
+
+    Versions, commit, replay ledger, time travel and vacuum are the
+    ``SegmentLog``'s (its docstring has the layout): every refresh reads
+    the committed state, merges the delta's partial into it, writes the
+    result ONCE as a new segment and commits a manifest listing only that
+    segment ``{"dir", "schema"}``. A read is one schema-pinned scan of it.
+    ``SegmentedAggView`` shares the constructor checks, the spec and the
+    merge algebra, and differs only in what a refresh writes.
     """
 
     def __init__(
@@ -450,7 +447,7 @@ class IncrementalAggView:
         ledger_cap: int | None = None,
     ) -> None:
         if not keys:
-            raise ValueError("IncrementalAggView needs at least one group key")
+            raise ValueError(f"{type(self).__name__} needs at least one group key")
         for alias, (fn, _col) in aggs.items():
             if fn not in _PARTIAL:
                 raise ValueError(
@@ -460,45 +457,49 @@ class IncrementalAggView:
                 )
             if alias in keys:
                 raise ValueError(f"agg alias {alias!r} collides with a key")
+        if ledger_cap is not None and ledger_cap < 1:
+            raise ValueError(f"ledger_cap must be >= 1 or None, got {ledger_cap}")
         self.path = path
         self.keys = list(keys)
         self.aggs = dict(aggs)
         self.derive = dict(derive or {})
-        if ledger_cap is not None and ledger_cap < 1:
-            raise ValueError(f"ledger_cap must be >= 1 or None, got {ledger_cap}")
         self.ledger_cap = ledger_cap
         # The state-DEFINING spec: merging deltas computed under different
         # keys/aggs (or a wrapper's different sketch width/depth) into
         # existing state would be silent corruption — same column names,
-        # different meanings. Persisted at first refresh, validated on
-        # every later one. `derive` is read-time-only (never stored), so it
+        # different meanings. Persisted at first use, validated on every
+        # later one. `derive` is read-time-only (never stored), so it
         # does not participate; neither does the file layout, which is
         # whatever partitioning the aggregate wrote.
-        self._spec = {
+        self._log = SegmentLog(path, {
             "keys": self.keys,
             "aggs": {a: list(v) for a, v in self.aggs.items()},
             "extra": spec_extra or {},
-        }
-        os.makedirs(path, exist_ok=True)
+            **self._spec_fields(),
+        })
 
-    # ---- version bookkeeping -------------------------------------------
+    def _spec_fields(self) -> dict:
+        """State-defining fields a subclass adds to the spec."""
+        return {}
+
+    # ---- the log -----------------------------------------------------------
     def current_version(self) -> int:
         """Committed version number, 0 if never refreshed."""
-        return _read_pointer(self.path)
+        return self._log.current_version()
 
-    def _vdir(self, version: int) -> str:
-        return os.path.join(self.path, f"v{version:08d}")
+    def segments(self, version: int | None = None) -> list[dict]:
+        """Live segment descriptors at ``version`` (default: committed)."""
+        return self._log.segments(version)
 
     def applied_batches(self) -> list[str]:
         """Batch ids folded into the committed state (replay ledger)."""
-        v = self.current_version()
-        if v == 0:
-            return []
-        with open(os.path.join(self._vdir(v), "batches.json")) as f:
-            return json.load(f)
+        return self._log.applied_batches()
 
-    def _read_state(self, spark: SparkSession, v: int) -> DataFrame:
-        return _read_snapshot(spark, self._vdir(v))
+    def vacuum(self, keep_last: int = 2) -> list[str]:
+        """``SegmentLog.vacuum``: drop manifests older than the newest
+        ``keep_last`` (the time-travel window), then every segment no kept
+        manifest references. Returns the removed file/dir names."""
+        return self._log.vacuum(keep_last)
 
     # ---- the merge algebra ---------------------------------------------
     def _partial(self, delta: DataFrame) -> DataFrame:
@@ -508,19 +509,31 @@ class IncrementalAggView:
         ]
         return delta.groupBy(*self.keys).agg(*exprs)
 
-    def _merge(self, state: DataFrame, partial: DataFrame) -> DataFrame:
+    def _reagg(self, df: DataFrame, by: list[str] | None = None) -> DataFrame:
+        """Merge partial rows per view key (or per ``by``)."""
         exprs = [
             _PARTIAL[fn][1](alias).alias(alias)
             for alias, (fn, _col) in self.aggs.items()
         ]
-        return state.unionByName(partial).groupBy(*self.keys).agg(*exprs)
+        return df.groupBy(*(self.keys if by is None else by)).agg(*exprs)
+
+    def _write_segment(self, df: DataFrame) -> dict:
+        """Write ``df`` (a ``groupBy`` on the view keys, so its partitions
+        are already key-disjoint) as a new segment; returns its manifest
+        descriptor."""
+        return self._log.write_segment(df)
+
+    def _state(self, spark: SparkSession, segs: list[dict]) -> DataFrame:
+        """The rollup stored in ``segs``: the flat view's one segment is
+        already merged."""
+        return self._log.read(spark, segs)
 
     # ---- public API -----------------------------------------------------
     def refresh(self, spark: SparkSession, delta: DataFrame, batch_id: str) -> bool:
         """Fold one delta batch into the view. Returns False (no-op) when
         ``batch_id`` was already applied — safe to call from foreachBatch
-        or a retried job. The delta is scanned ONCE; history is never
-        rescanned.
+        or a retried job. The delta is scanned ONCE per commit attempt;
+        history is never rescanned.
 
         By default the ledger carries every applied batch id (at one
         epoch a minute that is ~10 MB/year of JSON, reloaded and
@@ -530,56 +543,32 @@ class IncrementalAggView:
         I/O — safe when replays can only arrive within a bounded horizon
         (Structured Streaming re-sends recent epochs, not ancient
         ones)."""
-        _guard_spec(self.path, self._spec)
-        applied = self.applied_batches()
-        if batch_id in applied:
-            return False
-        _drop_uncommitted_versions(self.path)
-        partial = self._partial(delta)
-        v = self.current_version()
-        state = partial if v == 0 else self._merge(self._read_state(spark, v), partial)
-        nxt = self._vdir(v + 1)
-        _write_snapshot(state, nxt)
-        ledger = [*applied, batch_id]
-        if self.ledger_cap is not None:
-            ledger = ledger[-self.ledger_cap:]
-        _write_json_durable(os.path.join(nxt, "batches.json"), ledger)
-        _flip_pointer(self.path, v + 1)  # THE commit
-        return True
+        self._log.check_spec()
+
+        def write(segs: list[dict]) -> list[dict]:
+            partial = self._partial(delta)
+            if segs:
+                partial = self._reagg(self._state(spark, segs).unionByName(partial))
+            return [self._write_segment(partial)]
+
+        return self._log.append(batch_id, write, self.ledger_cap)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """The rollup at ``version`` (default: latest committed), with
-        derived columns appended. Version 0 / empty view → empty frame
-        with the declared schema (keys as-is requires ≥1 refresh, so 0
-        raises instead of guessing key types).
+        derived columns appended. Version 0 / empty view raises instead
+        of guessing key types.
 
         Runs the spec guard: every sketch/monitor wrapper read delegates
         here, and a wrapper constructed with a different width/depth/
         n_bins would otherwise DERIVE silently wrong estimates from
         existing state (reads re-apply constructor parameters just as
         merges do)."""
-        _guard_spec(self.path, self._spec)
-        df = self._read_state(spark, _committed(version, self.current_version()))
+        self._log.check_spec()
+        v = _committed(version, self.current_version())
+        df = self._state(spark, self.segments(v))
         for alias, fn in self.derive.items():
             df = df.withColumn(alias, _as_column(fn(df)))
         return df
-
-    def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop committed versions older than the newest ``keep_last``
-        (time-travel window). Returns the removed version numbers. The
-        current version is always kept — ``keep_last`` < 1 is rejected,
-        because range(1, cur+1) would rmtree the committed state itself
-        and leave a pointer to nothing."""
-        if keep_last < 1:
-            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        cur = self.current_version()
-        removed = []
-        for v in range(1, max(1, cur - keep_last + 1)):
-            d = self._vdir(v)
-            if os.path.exists(d):
-                shutil.rmtree(d)
-                removed.append(v)
-        return removed
 
 
 def _as_column(c) -> Column:
@@ -649,7 +638,7 @@ class FrequencySketchView:
     def applied_batches(self) -> list[str]:
         return self._mv.applied_batches()
 
-    def vacuum(self, keep_last: int = 2) -> list[int]:
+    def vacuum(self, keep_last: int = 2) -> list[str]:
         return self._mv.vacuum(keep_last)
 
 
@@ -715,7 +704,7 @@ class DistinctCountView:
     def applied_batches(self) -> list[str]:
         return self._mv.applied_batches()
 
-    def vacuum(self, keep_last: int = 2) -> list[int]:
+    def vacuum(self, keep_last: int = 2) -> list[str]:
         return self._mv.vacuum(keep_last)
 
 
@@ -791,7 +780,7 @@ class QuantileHistogramView:
     def applied_batches(self) -> list[str]:
         return self._mv.applied_batches()
 
-    def vacuum(self, keep_last: int = 2) -> list[int]:
+    def vacuum(self, keep_last: int = 2) -> list[str]:
         return self._mv.vacuum(keep_last)
 
 
@@ -991,18 +980,12 @@ class DriftMonitorView:
             shutil.rmtree(tmp, ignore_errors=True)
             _write_snapshot(self._mv.read(spark, v), tmp)
             os.replace(tmp, ref_dir)
-        with open(os.path.join(self.path, "_REF.tmp"), "w") as fh:
-            fh.write(f"{v}")
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(
-            os.path.join(self.path, "_REF.tmp"), os.path.join(self.path, "_REF")
-        )
+        _write_json_durable(os.path.join(self.path, "_REF"), v)
         # reclaim superseded reference snapshots: without this every
         # re-pin leaks an O(groups×bins) _ref-v* directory forever (the
-        # inner view's vacuum only manages bare v* state dirs). Single
-        # writer by design; a reader racing a re-pin re-resolves the
-        # pointer on its next call.
+        # inner view's vacuum only manages its manifests and segments).
+        # Single writer by design; a reader racing a re-pin re-resolves
+        # the pointer on its next call.
         for name in sorted(os.listdir(self.path)):
             if (
                 name.startswith("_ref-v")
@@ -1013,10 +996,11 @@ class DriftMonitorView:
         return v
 
     def reference_version(self) -> int:
-        ptr = os.path.join(self.path, "_REF")
-        if not os.path.exists(ptr):
+        try:
+            with open(os.path.join(self.path, "_REF")) as f:
+                return int(f.read().strip())
+        except FileNotFoundError:
             return 0
-        return int(open(ptr).read().strip())
 
     def reference(self, spark: SparkSession) -> DataFrame:
         v = self.reference_version()
@@ -1110,15 +1094,17 @@ class DriftMonitorView:
     def applied_batches(self) -> list[str]:
         return self._mv.applied_batches()
 
-    def vacuum(self, keep_last: int = 2) -> list[int]:
+    def vacuum(self, keep_last: int = 2) -> list[str]:
         return self._mv.vacuum(keep_last)
 
 
 class SegmentLog:
-    """The commit protocol shared by every segmented store in the package
-    — ``SegmentedAggView``/``LeveledAggView`` and the IVF/IVF-PQ indexes
-    (operators/ivf_index.py, ivf_pq.py). The stores keep only their
-    payload logic; the log owns the layout, the commit and the read.
+    """The commit protocol of every versioned store in the package — the
+    flat ``IncrementalAggView`` (and the sketch/drift views wrapping it),
+    ``SegmentedAggView``/``LeveledAggView``, both sides of
+    ``FactDimRollupView`` and the IVF/IVF-PQ indexes (operators/
+    ivf_index.py, ivf_pq.py). The stores keep only their payload logic;
+    the log owns the layout, the commit and the read.
 
     Layout (all inside ``path``)::
 
@@ -1151,7 +1137,8 @@ class SegmentLog:
     is the version its content was read from, so a writer racing another
     gets a loud version collision instead of silently dropping a batch;
     ``append`` turns a collision with a live writer into a bounded
-    rebase-retry. Replay: a batch id already in the manifest's ledger is
+    rebase-retry that re-runs the store's write on the winner's state.
+    Replay: a batch id already in the manifest's ledger is
     a no-op, so at-least-once delivery yields exactly-once state. Time
     travel: old manifests stay resolvable until ``vacuum``."""
 
@@ -1283,45 +1270,48 @@ class SegmentLog:
         return v
 
     def append(self, batch_id: str, write, ledger_cap: int | None = None) -> bool:
-        """Commit one batch: ``write()`` writes its segment (once) and
-        returns the descriptor, or None when the batch has no rows — the
-        commit then advances only the ledger. Returns False (no-op) for an
+        """Commit one batch: ``write(segs)`` receives the base manifest's
+        live segments, writes what the batch adds and returns the new live
+        list (``segs`` itself when there is nothing to write — the commit
+        then advances only the ledger). Returns False (no-op) for an
         already-applied ``batch_id``.
+
+        On a collision with a live writer the lost attempt's new segments
+        are removed (no manifest references them) and ``write`` runs again
+        on the winner's committed segments; a rebase that finds the batch
+        id already committed (a concurrent replay) returns False.
 
         ``ledger_cap`` keeps only the newest N batch ids: O(cap) manifest
         I/O per refresh, replay protection only within the newest cap ids
         (safe when replays arrive within a bounded horizon, as Structured
         Streaming's do)."""
-        seg, written = None, False
         for attempt in range(_COMMIT_RETRIES + 1):
             v = self.current_version()
             manifest = self.manifest(v) if v else {"segments": [], "batches": []}
             applied = manifest["batches"]
             if batch_id in applied:
-                if seg is not None:
-                    # a rebase found a competitor already committed THIS
-                    # batch id (concurrent replay) — our written segment
-                    # is referenced by no manifest; reclaim it instead of
-                    # leaking it until vacuum (r12 review)
-                    shutil.rmtree(os.path.join(self.path, seg["dir"]), ignore_errors=True)
                 return False
-            if not written:  # the batch is written once; retries re-ledger it
-                seg, written = write(), True
+            segs = write(manifest["segments"])
             ledger = [*applied, batch_id]
             if ledger_cap is not None:
                 ledger = ledger[-ledger_cap:]
-            segs = manifest["segments"] if seg is None else [*manifest["segments"], seg]
             try:
                 self.commit(segs, ledger, base_v=v)
                 return True
             except ValueError as e:
                 # Bounded rebase-retry (VERDICT r11 item 5): a LIVE
                 # competing writer won this version — wait for its pointer
-                # flip, rebase on its committed manifest (which now also
-                # carries its segment + batch id), retry at the next
-                # version. Anything else (an orphan that never flips,
-                # exhausted retries, non-collision errors) surfaces.
-                if "version collision" not in str(e) or attempt == _COMMIT_RETRIES:
+                # flip and retry on its committed manifest (which now also
+                # carries its segments + batch id) at the next version.
+                # Anything else (an orphan that never flips, exhausted
+                # retries, non-collision errors) surfaces.
+                if "version collision" not in str(e):
+                    raise
+                base = {s["dir"] for s in manifest["segments"]}
+                for s in segs:
+                    if s["dir"] not in base:
+                        shutil.rmtree(os.path.join(self.path, s["dir"]), ignore_errors=True)
+                if attempt == _COMMIT_RETRIES:
                     raise
                 _await_rebase(self.current_version, v, e)
 
@@ -1355,7 +1345,7 @@ class SegmentLog:
         return removed
 
 
-class SegmentedAggView:
+class SegmentedAggView(IncrementalAggView):
     """LSM-style segmented twin of IncrementalAggView: O(delta) refresh
     writes, size-tiered compaction, identical read semantics.
 
@@ -1396,8 +1386,10 @@ class SegmentedAggView:
     keys, and AQE's partition coalescing sizes the file count: one file
     at the fixture tiers, the session's shuffle width at scale.
 
-    Single writer by design, like the flat view. Derived columns
-    (``derive``) compute on read from the merged parts.
+    Keys, aggs, ``derive``, ``ledger_cap``, the spec guard, the merge
+    algebra and the log come from ``IncrementalAggView``; ``fanout`` joins
+    the spec. Derived columns (``derive``) compute on read from the
+    merged parts.
     """
 
     def __init__(
@@ -1410,53 +1402,17 @@ class SegmentedAggView:
         spec_extra: dict | None = None,
         ledger_cap: int | None = None,
     ) -> None:
-        if not keys:
-            raise ValueError("SegmentedAggView needs at least one group key")
         if fanout < 2:
             raise ValueError(f"fanout must be >= 2, got {fanout}")
-        if ledger_cap is not None and ledger_cap < 1:
-            raise ValueError(f"ledger_cap must be >= 1 or None, got {ledger_cap}")
-        self.ledger_cap = ledger_cap
-        for alias, (fn, _col) in aggs.items():
-            if fn not in _PARTIAL:
-                raise ValueError(
-                    f"agg {alias!r}: {fn!r} is not mergeable "
-                    f"(supported: {sorted(_PARTIAL)})"
-                )
-            if alias in keys:
-                raise ValueError(f"agg alias {alias!r} collides with a key")
-        self.path = path
-        self.keys = list(keys)
-        self.aggs = dict(aggs)
-        self.derive = dict(derive or {})
         self.fanout = int(fanout)
+        super().__init__(path, keys, aggs, derive, spec_extra, ledger_cap)
+
+    def _spec_fields(self) -> dict:
         # fanout is part of the spec: reopening with a different fanout
         # would re-tier existing segments and break the amortization
         # invariant mid-chain (weights stay valid, but the written
-        # guarantee changes silently). keys/aggs are state-defining as in
-        # the flat view; derive is read-time only.
-        self._log = SegmentLog(path, {
-            "keys": self.keys,
-            "aggs": {a: list(v) for a, v in self.aggs.items()},
-            "fanout": self.fanout,
-            "extra": spec_extra or {},
-        })
-
-    # ---- the log ---------------------------------------------------------
-    def current_version(self) -> int:
-        return self._log.current_version()
-
-    def segments(self, version: int | None = None) -> list[dict]:
-        """Live segment descriptors [{dir, weight, schema}] at ``version``."""
-        return self._log.segments(version)
-
-    def applied_batches(self) -> list[str]:
-        return self._log.applied_batches()
-
-    def vacuum(self, keep_last: int = 2) -> list[str]:
-        """``SegmentLog.vacuum``: drop old manifests, then unreferenced
-        segments. Returns removed file/dir names."""
-        return self._log.vacuum(keep_last)
+        # guarantee changes silently).
+        return {"fanout": self.fanout}
 
     def _tier(self, weight: int) -> int:
         t = 0
@@ -1464,26 +1420,15 @@ class SegmentedAggView:
             t += 1
         return t
 
-    # ---- merge algebra (shared shapes with the flat view) ---------------
-    def _partial(self, delta: DataFrame) -> DataFrame:
-        exprs = [
-            _PARTIAL[fn][0](col).alias(alias)
-            for alias, (fn, col) in self.aggs.items()
-        ]
-        return delta.groupBy(*self.keys).agg(*exprs)
-
-    def _reagg(self, df: DataFrame) -> DataFrame:
-        exprs = [
-            _PARTIAL[fn][1](alias).alias(alias)
-            for alias, (fn, _col) in self.aggs.items()
-        ]
-        return df.groupBy(*self.keys).agg(*exprs)
-
     def _write_segment(self, df: DataFrame, weight: int = 1) -> dict:
-        """Write ``df`` (a ``groupBy`` on the view keys, so its partitions
-        are already key-disjoint) as a new segment; returns its manifest
-        descriptor."""
         return self._log.write_segment(df, weight=weight)
+
+    def _state(self, spark: SparkSession, segs: list[dict]) -> DataFrame:
+        # the union of partial segments is re-aggregated: reads RE-APPLY
+        # the merge algebra, which is why the spec guard runs on reads
+        # too (summing another spec's max partials would silently return
+        # garbage instead of failing)
+        return self._reagg(self._log.read(spark, segs))
 
     # ---- public API ------------------------------------------------------
     def refresh(
@@ -1498,7 +1443,9 @@ class SegmentedAggView:
         bounds the replay ledger as in the flat view."""
         self._log.check_spec()
         if not self._log.append(
-            batch_id, lambda: self._write_segment(self._partial(delta)), self.ledger_cap
+            batch_id,
+            lambda segs: [*segs, self._write_segment(self._partial(delta))],
+            self.ledger_cap,
         ):
             return False
         if compact:
@@ -1525,7 +1472,7 @@ class SegmentedAggView:
             victims = self._victims(tiers)
             if not victims:
                 return rounds
-            merged = self._reagg(self._log.read(spark, victims))
+            merged = self._state(spark, victims)
             new_seg = self._write_segment(merged, sum(s["weight"] for s in victims))
             victim_dirs = {s["dir"] for s in victims}
             survivors = [s for s in segs if s["dir"] not in victim_dirs]
@@ -1542,21 +1489,6 @@ class SegmentedAggView:
         return sorted(tiers[min(due)], key=lambda s: (s["weight"], s["dir"]))[
             : self.fanout
         ]
-
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """The rollup at ``version`` (default latest): union of that
-        manifest's segments, re-aggregated, derived columns appended.
-
-        Unlike the flat view (whose read is a plain parquet scan), this
-        read RE-APPLIES the merge algebra — so the spec guard runs here
-        too: summing another spec's max partials would silently return
-        garbage instead of failing."""
-        self._log.check_spec()
-        v = _committed(version, self.current_version())
-        df = self._reagg(self._log.read(spark, self.segments(v)))
-        for alias, fn in self.derive.items():
-            df = df.withColumn(alias, _as_column(fn(df)))
-        return df
 
 
 class LeveledAggView(SegmentedAggView):
@@ -1617,11 +1549,14 @@ class FactDimRollupView:
     Folding the join INTO the stored state (keying by attr) would make
     every dim update a history rewrite.
 
-    The dim side is a keyed LATEST-WINS snapshot with the same
-    version-dir (data + ``schema.json`` record, so reads infer nothing)
-    + atomic-pointer + batch-ledger machinery: an upsert
-    batch keeps max_by(ts) per key within the batch, then overrides the
-    stored row for those keys (state ← latest ∪ state ⟕̸ latest-keys).
+    Both sides store their versions through ``SegmentLog`` — the fact
+    view at ``path/fact``, the dim snapshot in its own log at
+    ``path/dim`` — so each has the manifest commit, the replay ledger,
+    the spec guard and ``vacuum``. The dim side is a keyed LATEST-WINS
+    snapshot committed like the flat view, one segment per version: an
+    upsert batch keeps max_by(ts) per key within the batch, then
+    overrides the stored row for those keys (state ← latest ∪ state ⟕̸
+    latest-keys). ``vacuum`` reclaims superseded versions of both.
 
     100 TB shape: fact refresh = one map-side-combined partial over the
     delta + O(distinct fks) re-agg (hash-partitioned on fk); dim upsert
@@ -1654,34 +1589,21 @@ class FactDimRollupView:
             aggs=aggs,
             spec_extra={"role": "fact_of_star_rollup", "dim_key": dim_key},
         )
-        self._dim_dir = os.path.join(path, "dim")
-        os.makedirs(self._dim_dir, exist_ok=True)
+        self._dim = SegmentLog(
+            os.path.join(path, "dim"),
+            {"dim_key": dim_key, "dim_attrs": self.dim_attrs, "dim_ts": dim_ts},
+            what="dim spec",
+        )
 
     # ---- dim snapshot (latest-wins upsert, versioned) --------------------
-    def _dim_version(self) -> int:
-        return _read_pointer(self._dim_dir)
-
-    def _dim_vdir(self, v: int) -> str:
-        return os.path.join(self._dim_dir, f"v{v:08d}")
-
     def dim_applied_batches(self) -> list[str]:
-        v = self._dim_version()
-        if v == 0:
-            return []
-        with open(os.path.join(self._dim_vdir(v), "batches.json")) as f:
-            return json.load(f)
+        return self._dim.applied_batches()
 
     def refresh_dim(self, spark: SparkSession, updates: DataFrame, batch_id: str) -> bool:
         """Upsert one batch of dim rows (latest max_by(ts) per key within
         the batch wins; batch rows override stored rows for their keys).
         Same crash/replay contract as the fact side."""
-        applied = self.dim_applied_batches()
-        if batch_id in applied:
-            return False
-        # the fact side's orphan discipline: a crash between the v{N+1}
-        # parquet write and the pointer flip leaves an orphan dir the
-        # retried upsert would collide with (mode="error") forever
-        _drop_uncommitted_versions(self._dim_dir)
+        self._dim.check_spec()
         cols = [self.dim_key, *self.dim_attrs, self.dim_ts]
         latest = (
             updates.select(*cols)
@@ -1697,26 +1619,27 @@ class FactDimRollupView:
             )
             .select("r.*")
         )
-        v = self._dim_version()
-        if v == 0:
+
+        def write(segs: list[dict]) -> list[dict]:
             state = latest
-        else:
-            prev = _read_snapshot(spark, self._dim_vdir(v))
-            keys = latest.select(self.dim_key)
-            state = prev.join(F.broadcast(keys), self.dim_key, "left_anti").unionByName(
-                latest
-            )
-        nxt = self._dim_vdir(v + 1)
-        _write_snapshot(state, nxt)
-        _write_json_durable(os.path.join(nxt, "batches.json"), [*applied, batch_id])
-        _flip_pointer(self._dim_dir, v + 1)
-        return True
+            if segs:
+                keys = latest.select(self.dim_key)
+                state = self._dim.read(spark, segs).join(
+                    F.broadcast(keys), self.dim_key, "left_anti"
+                ).unionByName(latest)
+            return [self._dim.write_segment(state)]
+
+        return self._dim.append(batch_id, write)
+
+    def _dim_segments(self) -> list[dict]:
+        """The committed dim version's one segment, as a list."""
+        self._dim.check_spec()
+        return self._dim.segments(
+            _committed(None, self._dim.current_version(), "dim snapshot")
+        )
 
     def dim(self, spark: SparkSession) -> DataFrame:
-        v = self._dim_version()
-        if v == 0:
-            raise ValueError("dim snapshot has no committed version yet")
-        return _read_snapshot(spark, self._dim_vdir(v))
+        return self._dim.read(spark, self._dim_segments())
 
     # ---- fact side --------------------------------------------------------
     def refresh_fact(self, spark: SparkSession, delta: DataFrame, batch_id: str) -> bool:
@@ -1737,28 +1660,33 @@ class FactDimRollupView:
         # resolving the pointer twice would let a concurrent refresh_dim
         # commit in between, making the gate inspect a different (smaller)
         # snapshot than the one joined.
-        v = self._dim_version()
-        if v == 0:
-            raise ValueError("dim snapshot has no committed version yet")
-        dim_data = os.path.join(self._dim_vdir(v), "data.parquet")
-        d = _read_snapshot(spark, self._dim_vdir(v))
+        segs = self._dim_segments()
+        d = self._dim.read(spark, segs)
         # Broadcast only while the committed dim snapshot provably fits
         # (on-disk parquet size, the sinks._index_is_small discipline);
         # a large dimension would otherwise force a driver-side broadcast
         # build and can OOM — past the cap the join stays declarative and
         # AQE plans the shuffle.
-        if _snapshot_is_small(dim_data):
+        if _snapshot_is_small(os.path.join(self._dim.path, segs[0]["dir"])):
             d = F.broadcast(d)
         joined = state.join(
             d,
             state[self.fact_key] == d[self.dim_key],
             join_type,
         )
-        exprs = [
-            _PARTIAL[fn][1](alias).alias(alias)
-            for alias, (fn, _col) in self.aggs.items()
+        return self._fact._reagg(joined, self.dim_attrs)
+
+    def vacuum(self, keep_last: int = 2) -> list[str]:
+        """Drop versions older than the newest ``keep_last`` of BOTH sides
+        (``SegmentLog.vacuum``): every dim upsert writes a full O(dim)
+        snapshot, so this is what keeps the dim side from growing by one
+        copy per ``refresh_dim``. Returns removed names, relative to
+        ``path``."""
+        return [
+            os.path.join(side, name)
+            for side, log in (("fact", self._fact), ("dim", self._dim))
+            for name in log.vacuum(keep_last)
         ]
-        return joined.groupBy(*self.dim_attrs).agg(*exprs)
 
 
 def export_view_snapshot(
@@ -1770,13 +1698,16 @@ def export_view_snapshot(
     downstream consumer that requires two-phase-commit exports (a
     training job reading feature rollups, a serving loader). Works for
     the views exposing the VERSIONED read contract — ``read(spark,
-    version)`` + ``current_version()``: IncrementalAggView,
-    SegmentedAggView, DistinctCountView. Views whose accessor is named
+    version)`` + ``current_version()``, where the version is the view's
+    ``SegmentLog`` manifest number: IncrementalAggView and its segmented
+    subclasses, DistinctCountView. Views whose accessor is named
     differently (FrequencySketchView.cells, QuantileHistogramView.bins,
     DriftMonitorView.bins) or whose read takes no version
-    (FactDimRollupView's join_type read) do NOT fit — export their
-    underlying ``_mv`` / ``_fact`` view instead; the guard below
-    rejects them loudly rather than mis-binding the version argument.
+    (FactDimRollupView's join_type read: its fact and dim sides commit
+    through two logs, so no single version number names a star state)
+    do NOT fit — export their underlying ``_mv`` / ``_fact`` view
+    instead; the guard below rejects them loudly rather than mis-binding
+    the version argument.
 
     Idempotent by layout: each version exports into its own
     ``out_dir/v{N}`` subdirectory, and a directory that already holds a

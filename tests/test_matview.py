@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -89,26 +90,42 @@ def test_replayed_batch_is_a_noop(spark, tmp_path):
     assert mv.applied_batches() == ["b0", "b1"]
 
 
+def _stage_crashed_commit(log, seg, batches):
+    """Leave what a writer that crashed between linking its manifest and
+    flipping the pointer leaves: the segment ``seg`` and an unflipped
+    manifest of the next version, aged past the orphan horizon (the crash
+    happened long ago, so the log may reclaim the version)."""
+    v = log.current_version() + 1
+    with open(log.manifest_path(v), "w") as f:
+        json.dump({"segments": [seg], "batches": batches}, f)
+    old = time.time() - 3600
+    os.utime(log.manifest_path(v), (old, old))
+
+
 def test_crash_orphan_is_ignored_and_cleaned(spark, tmp_path):
     t = load_tables(spark, SMOKE_SF_DIR)
     mv = _mk_view(tmp_path / "mv")
     b0, b1, _ = _batches(t.lineitem)
     mv.refresh(spark, b0, batch_id="b0")
     committed = _canon(mv.read(spark))
-    # simulate a crash AFTER the v2 state write but BEFORE the pointer
-    # flip: a half-trusted orphan directory above the pointer
-    orphan = os.path.join(str(tmp_path / "mv"), "v00000002")
-    os.makedirs(os.path.join(orphan, "data.parquet"))
-    with open(os.path.join(orphan, "batches.json"), "w") as f:
-        json.dump(["b0", "b1"], f)
+    # simulate a crash AFTER the v2 state write and manifest link but
+    # BEFORE the pointer flip: an orphan segment and manifest above the
+    # pointer
+    orphan = mv._log.write_segment(mv._partial(b1))
+    _stage_crashed_commit(mv._log, orphan, ["b0", "b1"])
     # readers still see v1; the ledger is the COMMITTED ledger
     assert mv.current_version() == 1
     assert _canon(mv.read(spark)) == committed
     assert mv.applied_batches() == ["b0"]
-    # the re-driven batch replaces the orphan and commits cleanly
+    # the re-driven batch reclaims the orphan version and commits cleanly
     assert mv.refresh(spark, b1, batch_id="b1") is True
     assert mv.current_version() == 2
     assert mv.applied_batches() == ["b0", "b1"]
+    assert orphan not in mv.segments()
+    # vacuum reclaims the orphan segment with the superseded version
+    assert orphan["dir"] in mv.vacuum(keep_last=1)
+    on_disk = {n for n in os.listdir(mv.path) if n.startswith("seg-")}
+    assert on_disk == {s["dir"] for s in mv.segments()}
 
 
 def test_time_travel_and_vacuum(spark, tmp_path):
@@ -123,8 +140,13 @@ def test_time_travel_and_vacuum(spark, tmp_path):
         assert _canon(mv.read(spark, version=v)) == snap
     with pytest.raises(ValueError):
         mv.read(spark, version=len(snaps) + 1)
+    # exactly versions 1 and 2 go: their manifests and their segments
+    superseded = sorted(
+        ["m00000001.json", "m00000002.json"]
+        + [s["dir"] for v in (1, 2) for s in mv.segments(v)]
+    )
     removed = mv.vacuum(keep_last=1)
-    assert removed == [1, 2]
+    assert removed == superseded
     assert _canon(mv.read(spark)) == snaps[-1]
 
 
@@ -787,7 +809,7 @@ def test_star_rollup_left_join_surfaces_referential_gaps(spark, tmp_path):
 
 def _strip_recorded_schemas(path):
     """Rewrite view directories as written before schemas were recorded:
-    no ``schema`` in any segmented manifest, no flat-view schema.json."""
+    no ``schema`` in any manifest, no drift-reference schema.json."""
     for root, _dirs, files in os.walk(path):
         for name in files:
             full = os.path.join(root, name)
@@ -837,11 +859,12 @@ def test_views_without_recorded_schemas_read_the_same(spark, tmp_path):
 
 
 def test_drift_reference_and_dim_snapshots_read_without_inference(spark, tmp_path):
-    """The pinned drift reference and the star rollup's dim versions carry
-    a schema.json record: reference(), dim() and the star read build their
-    frames with no Spark job. With every record stripped they read the
-    same frames (inference fallback), and refresh_dim rebuilds on a
-    stripped previous version and records the new one's schema."""
+    """The pinned drift reference (its schema.json) and the star rollup's
+    dim versions (their manifest) carry a schema record: reference(),
+    dim() and the star read build their frames with no Spark job. With
+    every record stripped they read the same frames (inference fallback),
+    and refresh_dim rebuilds on a stripped previous version and records
+    the new one's schema."""
     t = load_tables(spark, SMOKE_SF_DIR)
     mv = _drift_view(tmp_path / "drift")
     mv.refresh(spark, t.events.select("event_type", "value"), batch_id="all")
@@ -1071,25 +1094,63 @@ def test_segmented_view_vacuum_survives_prior_stricter_vacuum(spark, tmp_path):
 
 
 def test_star_rollup_dim_orphan_recovery(spark, tmp_path):
-    """Review fix: a crash between the dim parquet write and the pointer
-    flip leaves an orphan v{N+1} dir; the retried upsert must GC it
-    instead of colliding with mode='error' forever."""
+    """Review fix: a crash between the dim segment write and the pointer
+    flip leaves an orphan segment and manifest above the pointer; reads
+    and the dim ledger ignore them, the retried upsert commits instead of
+    colliding forever, and vacuum reclaims the orphan segment."""
     t = load_tables(spark, SMOKE_SF_DIR)
     sv = _star_view(tmp_path / "starx")
     dim0 = t.customer.select(
         "c_custkey", "c_mktsegment", F.lit("2020-01-01").alias("ts")
     )
     sv.refresh_dim(spark, dim0, batch_id="d0")
-    # simulate the crash: orphan v2 above the committed pointer (v1)
-    orphan = os.path.join(sv._dim_dir, "v00000002")
-    os.makedirs(os.path.join(orphan, "data.parquet"))
-    assert sv._dim_version() == 1
     upd = t.customer.limit(10).select(
         "c_custkey", F.lit("MOVED").alias("c_mktsegment"), F.lit("2021-01-01").alias("ts")
     )
+    # simulate the crash: orphan v2 above the committed pointer (v1)
+    orphan = sv._dim.write_segment(upd)
+    _stage_crashed_commit(sv._dim, orphan, ["d0", "d1"])
+    assert sv._dim.current_version() == 1
+    assert sv.dim_applied_batches() == ["d0"]
+    assert sv.dim(spark).filter("c_mktsegment = 'MOVED'").count() == 0
     assert sv.refresh_dim(spark, upd, batch_id="d1") is True
-    assert sv._dim_version() == 2
+    assert sv._dim.current_version() == 2
+    assert sv.dim_applied_batches() == ["d0", "d1"]
     assert sv.dim(spark).filter("c_mktsegment = 'MOVED'").count() == 10
+    assert os.path.join("dim", orphan["dir"]) in sv.vacuum(keep_last=1)
+
+
+def test_star_rollup_vacuum_reclaims_superseded_dim_and_fact_versions(spark, tmp_path):
+    """Every dim upsert writes a full O(dim) snapshot: the star rollup's
+    vacuum must reclaim the superseded ones (and the fact side's), leaving
+    only the live segments and newest manifests, with the read unchanged."""
+    t = load_tables(spark, SMOKE_SF_DIR)
+    sv = _star_view(tmp_path / "starv")
+    fact = t.orders.select(
+        "o_custkey", (F.col("o_totalprice") * 100).cast("long").alias("price_cents")
+    )
+    for i in range(2):
+        sv.refresh_fact(spark, fact.filter(F.pmod("o_custkey", F.lit(2)) == i), batch_id=f"f{i}")
+    sv.refresh_dim(spark, t.customer.select(
+        "c_custkey", "c_mktsegment", F.lit("2020-01-01").alias("ts")
+    ), batch_id="d0")
+    for i in range(1, 4):
+        sv.refresh_dim(spark, t.customer.filter(F.pmod("c_custkey", F.lit(3)) == i - 1).select(
+            "c_custkey", F.lit(f"SEG{i}").alias("c_mktsegment"), F.lit(f"2021-0{i}-01").alias("ts")
+        ), batch_id=f"d{i}")
+    assert sv._dim.current_version() == 4
+    before = _canon(sv.read(spark))
+
+    removed = sv.vacuum(keep_last=1)
+    assert "dim/m00000003.json" in removed and "fact/m00000001.json" in removed
+    for log in (sv._fact._log, sv._dim):
+        names = sorted(os.listdir(log.path))
+        (live,) = log.segments()
+        assert [n for n in names if n.startswith("seg-")] == [live["dir"]]
+        assert [n for n in names if n.startswith("m")] == [
+            os.path.basename(log.manifest_path(log.current_version()))
+        ]
+    assert _canon(sv.read(spark)) == before
 
 
 def test_export_view_snapshot_rejects_unversioned_views(spark, tmp_path):
@@ -1403,8 +1464,16 @@ def test_content_key_carries_two_independent_sums(spark):
     assert len(k1.split("-")) == 4  # content, n, s1, s2
 
 
+# the stores of the commit-race tests: the segmented view without
+# auto-compaction, and the flat view
+_RACE_VIEWS = pytest.mark.parametrize(
+    "make", [lambda p: _seg_view(p, fanout=99), _mk_view], ids=["segmented", "flat"]
+)
+
+
+@_RACE_VIEWS
 def test_concurrent_version_commit_raises_instead_of_silent_drop(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, make
 ):
     """VERDICT r10 item 6: two writers racing the version counter must
     not silently drop one batch from the ledger (last pointer flip
@@ -1415,8 +1484,8 @@ def test_concurrent_version_commit_raises_instead_of_silent_drop(
     A commits the next version for real."""
     t = load_tables(spark, SMOKE_SF_DIR)
     b0, b1, b2 = _batches(t.lineitem)
-    a = _seg_view(tmp_path / "race", fanout=99)  # no auto-compaction
-    b = _seg_view(tmp_path / "race", fanout=99)
+    a = make(tmp_path / "race")
+    b = make(tmp_path / "race")
     a.refresh(spark, b0, batch_id="b0")  # v1 — both writers see it
     stale = a.current_version()
     a.refresh(spark, b1, batch_id="b1")  # A wins v2
@@ -1494,7 +1563,8 @@ def test_stale_committed_manifest_is_never_reclaimed(spark, tmp_path):
     assert sv.applied_batches() == ["b0"]
 
 
-def test_two_racing_writers_both_land_serialized(spark, tmp_path, monkeypatch):
+@_RACE_VIEWS
+def test_two_racing_writers_both_land_serialized(spark, tmp_path, monkeypatch, make):
     """VERDICT r11 item 5: a version collision from a LIVE competing
     writer is no longer terminal — the loser waits for the winner's
     pointer flip, rebases on the committed manifest, and retries. Both
@@ -1505,12 +1575,13 @@ def test_two_racing_writers_both_land_serialized(spark, tmp_path, monkeypatch):
     The race is staged deterministically: writer B reads the empty
     manifest, and while writing its segment writer A's full refresh
     sneaks in and wins version 1 — exactly the interleaving that used to
-    raise for B."""
+    raise for B. The flat view's retry re-reads A's committed state and
+    merges B's delta into it."""
     li = load_tables(spark, SMOKE_SF_DIR).lineitem
     da = li.filter(F.col("l_orderkey") % 2 == 0)
     db = li.filter(F.col("l_orderkey") % 2 == 1)
 
-    a, b = _seg_view(tmp_path / "race"), _seg_view(tmp_path / "race")
+    a, b = make(tmp_path / "race"), make(tmp_path / "race")
     orig = type(b)._write_segment
     fired = {"done": False}
 
@@ -1526,7 +1597,7 @@ def test_two_racing_writers_both_land_serialized(spark, tmp_path, monkeypatch):
 
     assert b.applied_batches() == ["batch-a", "batch-b"]
     # state == one big refresh of the union (order-insensitive algebra)
-    want = _seg_view(tmp_path / "ref")
+    want = make(tmp_path / "ref")
     want.refresh(spark, li, batch_id="all")
     got = {
         (r.l_returnflag, r.l_linestatus, r.n_rows, r.sum_qty)
@@ -1579,15 +1650,20 @@ spark = get_spark(
     app_name="race-" + batch_id, master="local[2]", shuffle_partitions=2
 )
 spark.conf.set("spark.sql.adaptive.enabled", "false")
-if kind == "view":
-    from machinelearningalgomapreduce_spark.operators.matview import SegmentedAggView
+if kind in ("view", "flat"):
+    from machinelearningalgomapreduce_spark.operators.matview import (
+        IncrementalAggView,
+        SegmentedAggView,
+    )
 
-    sv = SegmentedAggView(
-        view_dir,
+    spec = dict(
         keys=["l_returnflag", "l_linestatus"],
         aggs={{"n_rows": ("count", "*"), "sum_qty": ("sum", "l_quantity")}},
-        fanout=99,
     )
+    if kind == "view":
+        sv = SegmentedAggView(view_dir, fanout=99, **spec)
+    else:
+        sv = IncrementalAggView(view_dir, **spec)
 else:
     from machinelearningalgomapreduce_spark.operators.ivf_index import IVFIndexView
 
@@ -1641,30 +1717,35 @@ def _race_two_processes(tmp_path, view_dir, deltas, kind):
 
 
 @pytest.mark.slow  # heavy lane, run with -m slow (pytest.ini r16)
-def test_two_os_process_commit_race_serializes(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["view", "flat"])
+def test_two_os_process_commit_race_serializes(spark, tmp_path, kind):
     """VERDICT r12 item 4: the r12 two-writer test interleaves within one
     process; this one races two real OS processes (separate JVMs, real
     os.link/O_EXCL semantics on a shared directory) through refresh() on
-    the same SegmentedAggView. Both batches must land, serialized, and
-    the state must equal a one-shot union — the single-writer-per-view
-    documented mode is a deployment choice, not a correctness crutch."""
+    the same SegmentedAggView (``view``) or flat IncrementalAggView
+    (``flat``). Both batches must land, serialized, and the state must
+    equal a one-shot union — the single-writer-per-view documented mode
+    is a deployment choice, not a correctness crutch."""
     li = load_tables(spark, SMOKE_SF_DIR).lineitem.limit(600)
     da = li.filter(F.col("l_orderkey") % 2 == 0)
     db = li.filter(F.col("l_orderkey") % 2 == 1)
     view_dir = str(tmp_path / "race2p")
-    _race_two_processes(tmp_path, view_dir, [(da, "proc-a"), (db, "proc-b")], "view")
+    _race_two_processes(tmp_path, view_dir, [(da, "proc-a"), (db, "proc-b")], kind)
 
     from machinelearningalgomapreduce_spark.operators.matview import (
+        IncrementalAggView,
         SegmentedAggView,
     )
 
     # same spec as the children (keys+aggs+fanout are spec-checked)
-    sv = SegmentedAggView(
-        view_dir,
+    spec = dict(
         keys=["l_returnflag", "l_linestatus"],
         aggs={"n_rows": ("count", "*"), "sum_qty": ("sum", "l_quantity")},
-        fanout=99,
     )
+    if kind == "view":
+        sv = SegmentedAggView(view_dir, fanout=99, **spec)
+    else:
+        sv = IncrementalAggView(view_dir, **spec)
     assert sorted(sv.applied_batches()) == ["proc-a", "proc-b"]
     assert sv.current_version() == 2
     got = {
@@ -1737,3 +1818,44 @@ def test_concurrent_replay_of_same_batch_reclaims_loser_segment(
     live = {s["dir"] for s in b.segments()}
     on_disk = {n for n in os.listdir(str(tmp_path / "replay")) if n.startswith("seg-")}
     assert on_disk == live, f"leaked segments: {sorted(on_disk - live)}"
+
+
+def test_one_commit_protocol_for_every_versioned_view():
+    """Every versioned store commits through ``SegmentLog``: in the whole
+    package ``_flip_pointer`` is called only from ``SegmentLog.commit``,
+    and no module writes a ``batches.json`` ledger of its own."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "machinelearningalgomapreduce_spark"
+    flips, ledgers = [], []
+
+    class Scan(ast.NodeVisitor):
+        def __init__(self, rel):
+            self.rel, self.scope = rel, []
+
+        def scoped(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_ClassDef = visit_FunctionDef = visit_AsyncFunctionDef = scoped
+
+        def visit_Call(self, node):
+            f = node.func
+            where = f"{self.rel}:{'.'.join(self.scope)}"
+            if (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) == "_flip_pointer":
+                flips.append(where)
+            for arg in [*node.args, *(k.value for k in node.keywords)]:
+                if any(
+                    isinstance(c, ast.Constant) and isinstance(c.value, str)
+                    and "batches.json" in c.value
+                    for c in ast.walk(arg)
+                ):
+                    ledgers.append(where)
+            self.generic_visit(node)
+
+    for path in sorted(pkg.rglob("*.py")):
+        Scan(str(path.relative_to(pkg))).visit(ast.parse(path.read_text()))
+    assert flips == ["operators/matview.py:SegmentLog.commit"]
+    assert ledgers == []
