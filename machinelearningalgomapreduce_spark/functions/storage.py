@@ -5,12 +5,13 @@ on-disk sizing behind the broadcast-gating call sites.
 (tests/test_materialize.py walks the source to keep it so).
 
 ``dir_size_below`` is ONE copy of the "broadcast only while it provably
-fits" discipline: the dedup seen-index anti-join (streaming/sinks.py) and
-the star-rollup dim join (operators/matview.py) both gate their
-F.broadcast on the committed snapshot's on-disk parquet size — past the
-cap the join stays declarative and AQE plans the shuffle. At 100 TB the
-same decision comes from table statistics; on this engine the committed
-files ARE the statistics.
+fits" discipline, reached through ``SegmentLog.broadcastable``
+(operators/matview.py): the dedup seen-index anti-join (streaming/sinks.py)
+and the star-rollup dim join both gate their F.broadcast on the on-disk
+parquet size of the committed version's live segments — past the cap the
+join stays declarative and AQE plans the shuffle. At 100 TB the same
+decision comes from table statistics; on this engine the committed files
+ARE the statistics.
 """
 
 from __future__ import annotations
@@ -22,16 +23,17 @@ from pyspark.sql import DataFrame
 BROADCAST_CAP_BYTES = 64 << 20
 
 
-def dir_size_below(path: str, cap_bytes: int = BROADCAST_CAP_BYTES) -> bool:
-    """True while the files under ``path`` total at most ``cap_bytes``
+def dir_size_below(paths: list[str], cap_bytes: int = BROADCAST_CAP_BYTES) -> bool:
+    """True while the files under ``paths`` total at most ``cap_bytes``
     (early-exits the walk as soon as the cap is crossed)."""
     total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-            if total > cap_bytes:
-                return False
-    return total <= cap_bytes
+    for path in paths:
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                total += os.path.getsize(os.path.join(root, f))
+                if total > cap_bytes:
+                    return False
+    return True
 
 
 def materialize_once(df: DataFrame) -> DataFrame:

@@ -54,7 +54,7 @@ from machinelearningalgomapreduce_spark.operators.matview import SegmentLog, _co
 # query() collects the probe set (query rows × n_probe cells) to the
 # driver only while it provably fits this many rows; past the cap the
 # probe stays a distributed plan and the candidate join shuffles on cell
-# (the FactDimRollupView._snapshot_is_small discipline, row-count form —
+# (the SegmentLog.broadcastable discipline, row-count form —
 # the probe is a caller plan, not an on-disk snapshot, so bytes aren't
 # knowable without evaluating it). Module-level so tests can monkeypatch
 # the gate both ways.

@@ -26,12 +26,13 @@ Storage layout (all inside ``path``; ``SegmentLog`` has the details):
 
 The flat view's manifest lists ONE segment, its whole rolled-up state
 (O(groups) rows); the segmented views list many partial segments; the
-star rollup keeps one log for its fact side and one for its dim side.
+star rollup keeps one log for its fact side and one for its dim side;
+the drift monitor keeps its pinned reference in a log at ``path/ref``.
 
 Crash safety: segments and the manifest are written COMPLETELY before
 the pointer flips, so a crash mid-write leaves unreferenced ``seg-*``/
-``m*`` debris that readers never see and ``vacuum`` removes (never
-adopted: adopting a maybe-half-written segment would trade a recompute
+``m*`` debris that readers never see and ``vacuum`` removes once it is
+older than ``MANIFEST_ORPHAN_SECONDS`` (never adopted: adopting a maybe-half-written segment would trade a recompute
 for corruption). Replaying a Structured-Streaming epoch or re-running a
 batch job re-sends a ``batch_id`` already in the manifest's ledger →
 no-op, so foreachBatch at-least-once delivery yields exactly-once STATE.
@@ -46,9 +47,10 @@ both land, serialized, or the loser fails loudly; no batch is silently
 dropped. Readers need no coordination at any time.
 
 ``SegmentLog`` is the one commit protocol of every versioned store in the
-package: the views here and the IVF/IVF-PQ indexes (operators/
-ivf_index.py, ivf_pq.py) keep only their payload logic, so a fix to the
-commit path lands once.
+package: the views here (and the drift monitor's pinned reference), the
+IVF/IVF-PQ indexes (operators/ivf_index.py, ivf_pq.py) and the streaming
+sinks' dedup index and SCD2 dimension (streaming/sinks.py) keep only their
+payload logic, so a fix to the commit path lands once.
 
 Merge algebra: count→sum, sum→sum, min→min, max→max — each
 associative + commutative, so any delta partitioning and any refresh
@@ -81,6 +83,11 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from machinelearningalgomapreduce_spark.functions.storage import (
+    BROADCAST_CAP_BYTES,
+    dir_size_below,
+)
 
 # output-column merge function per partial kind: how two partial states
 # combine under re-aggregation.
@@ -254,7 +261,7 @@ def _write_json_durable(
             "batch was NOT committed and must be retried. If this "
             "collision is an orphan from a crashed commit (pointer "
             "never flipped), it self-expires after "
-            f"{MANIFEST_ORPHAN_SECONDS}s, or run vacuum()."
+            f"{MANIFEST_ORPHAN_SECONDS}s."
         ) from None
 
 
@@ -291,6 +298,19 @@ def _guard_spec(path: str, spec: dict, what: str = "spec") -> None:
         with open(spec_path) as f:
             on_disk = json.load(f)
     except FileNotFoundError:
+        # A directory that already holds plain parquet (a Spark write's
+        # part files, _SUCCESS, a *.parquet entry) is not a log: opening
+        # it as an empty one would silently restart the store.
+        foreign = sorted(
+            n for n in os.listdir(path)
+            if n.startswith("part-") or n == "_SUCCESS" or n.endswith(".parquet")
+        )
+        if foreign:
+            raise ValueError(
+                f"{path} holds parquet data but no {_SPEC_FILE}: it is not a "
+                f"segment log (found {reprlib.repr(foreign)}); point the store "
+                "at a new directory and re-ingest its source into it"
+            )
         _write_json_durable(spec_path, spec)
         return
     if on_disk != spec:
@@ -375,42 +395,6 @@ def _read_parquet(spark: SparkSession, parts: list[tuple[str, dict | None]]) -> 
                 raise
             frames.extend(spark.read.parquet(p) for p in paths)
     return functools.reduce(DataFrame.unionByName, frames)
-
-
-def _write_snapshot(df: DataFrame, snap_dir: str) -> None:
-    """Write ``df`` as ``snap_dir/data.parquet`` plus its durable
-    ``schema.json`` record — the single-directory state of a pinned drift
-    reference. The caller makes it visible afterwards (directory rename
-    and the ``_REF`` pointer write)."""
-    df.write.mode("error").parquet(os.path.join(snap_dir, "data.parquet"))
-    _write_json_durable(os.path.join(snap_dir, "schema.json"), _schema_record(df))
-
-
-def _read_snapshot(spark: SparkSession, snap_dir: str) -> DataFrame:
-    """Read a ``_write_snapshot`` directory with its recorded schema (no
-    inference job); a directory without the record is read with
-    inference."""
-    try:
-        with open(os.path.join(snap_dir, "schema.json")) as f:
-            schema = json.load(f)
-    except FileNotFoundError:
-        schema = None
-    return _read_parquet(spark, [(os.path.join(snap_dir, "data.parquet"), schema)])
-
-
-def _snapshot_is_small(path: str, cap_bytes: int | None = None) -> bool:
-    """Broadcast a committed snapshot only while its on-disk parquet
-    provably fits — the shared functions/storage.py discipline; past the
-    cap the caller keeps the join declarative and lets AQE plan the
-    shuffle. (Kept as a module name so tests can monkeypatch the gate.)"""
-    from machinelearningalgomapreduce_spark.functions.storage import (
-        BROADCAST_CAP_BYTES,
-        dir_size_below,
-    )
-
-    return dir_size_below(
-        path, BROADCAST_CAP_BYTES if cap_bytes is None else cap_bytes
-    )
 
 
 class IncrementalAggView:
@@ -906,10 +890,10 @@ class DriftMonitorView:
     mergeable when every partial uses the same grid (at scale the
     feature range comes from the training profile, not the delta).
     Values outside [lo, hi) clamp to the edge bins, same as q_psi's
-    `least` guard. The reference is an immutable copied snapshot
-    (``_ref-v*`` + atomic pointer), so vacuum of old versions never
-    invalidates it; like a state version it carries a ``schema.json``
-    record, so reading it runs no schema-inference job.
+    `least` guard. The reference is an immutable copied snapshot kept in
+    its own ``SegmentLog`` at ``path/ref`` (one segment whose descriptor
+    names the pinned state version), so vacuum of old state versions never
+    invalidates it, and reading it is one schema-pinned scan.
 
     100 TB shape: state is O(groups × bins) forever; a refresh is one
     map-side-combined count over the delta + an O(state) re-sum; psi
@@ -935,6 +919,10 @@ class DriftMonitorView:
                 "value_col": value_col, "lo": self.lo, "hi": self.hi,
                 "n_bins": self.n_bins,
             },
+        )
+        self._ref = SegmentLog(
+            os.path.join(path, "ref"), {"role": "drift_reference"},
+            what="reference spec",
         )
 
     def _binned(self, delta: DataFrame) -> DataFrame:
@@ -968,45 +956,29 @@ class DriftMonitorView:
     # -- reference pin ----------------------------------------------------
     def set_reference(self, spark: SparkSession, version: int | None = None) -> int:
         """Snapshot the committed state as the pinned reference
-        distribution; returns the pinned version. Crash-safe like a
-        refresh: the snapshot directory is written completely, then ONE
-        atomic pointer flip adopts it."""
+        distribution; returns the pinned version. The snapshot is one
+        segment committed to the reference log, then the superseded pins
+        are vacuumed."""
         v = self._mv.current_version() if version is None else version
         if v == 0:
             raise ValueError("cannot pin a reference before the first refresh")
-        ref_dir = os.path.join(self.path, f"_ref-v{v:08d}")
-        if not os.path.exists(ref_dir):
-            tmp = ref_dir + ".inprogress"
-            shutil.rmtree(tmp, ignore_errors=True)
-            _write_snapshot(self._mv.read(spark, v), tmp)
-            os.replace(tmp, ref_dir)
-        _write_json_durable(os.path.join(self.path, "_REF"), v)
-        # reclaim superseded reference snapshots: without this every
-        # re-pin leaks an O(groups×bins) _ref-v* directory forever (the
-        # inner view's vacuum only manages its manifests and segments).
-        # Single writer by design; a reader racing a re-pin re-resolves
-        # the pointer on its next call.
-        for name in sorted(os.listdir(self.path)):
-            if (
-                name.startswith("_ref-v")
-                and name[6:].isdigit()
-                and int(name[6:]) != v
-            ):
-                shutil.rmtree(os.path.join(self.path, name))
+        self._ref.check_spec()
+        if self.reference_version() != v:
+            base_v = self._ref.current_version()
+            seg = self._ref.write_segment(self._mv.read(spark, v), version=v)
+            self._ref.commit([seg], [], base_v=base_v)
+        self._ref.vacuum(keep_last=1)
         return v
 
     def reference_version(self) -> int:
-        try:
-            with open(os.path.join(self.path, "_REF")) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
+        segs = self._ref.segments()
+        return segs[0]["version"] if segs else 0
 
     def reference(self, spark: SparkSession) -> DataFrame:
-        v = self.reference_version()
-        if v == 0:
+        segs = self._ref.segments()
+        if not segs:
             raise ValueError("no reference pinned — call set_reference first")
-        return _read_snapshot(spark, os.path.join(self.path, f"_ref-v{v:08d}"))
+        return self._ref.read(spark, segs)
 
     # -- derived drift ----------------------------------------------------
     def psi(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -1101,10 +1073,13 @@ class DriftMonitorView:
 class SegmentLog:
     """The commit protocol of every versioned store in the package — the
     flat ``IncrementalAggView`` (and the sketch/drift views wrapping it),
-    ``SegmentedAggView``/``LeveledAggView``, both sides of
-    ``FactDimRollupView`` and the IVF/IVF-PQ indexes (operators/
-    ivf_index.py, ivf_pq.py). The stores keep only their payload logic;
-    the log owns the layout, the commit and the read.
+    the drift monitor's pinned reference, ``SegmentedAggView``/
+    ``LeveledAggView``, both sides of ``FactDimRollupView``, the IVF/IVF-PQ
+    indexes (operators/ivf_index.py, ivf_pq.py) and the streaming sinks'
+    dedup hash index and SCD2 dimension (streaming/sinks.py). The stores
+    keep only their payload logic; the log owns the layout, the commit and
+    the read. A directory that already holds plain parquet but no spec is
+    refused, never opened as an empty log.
 
     Layout (all inside ``path``)::
 
@@ -1132,7 +1107,8 @@ class SegmentLog:
 
     Commit: segments and the new manifest are fully written BEFORE the
     one atomic pointer flip, so a crash leaves unreferenced ``seg-*``/
-    ``m*`` debris that readers never see and ``vacuum`` removes. The
+    ``m*`` debris that readers never see and ``vacuum`` removes once it
+    is older than ``MANIFEST_ORPHAN_SECONDS``. The
     manifest of version base_v + 1 is created EXCLUSIVELY, where base_v
     is the version its content was read from, so a writer racing another
     gets a loud version collision instead of silently dropping a batch;
@@ -1231,6 +1207,16 @@ class SegmentLog:
             frames.append(d)
         return functools.reduce(DataFrame.unionByName, frames)
 
+    def broadcastable(self, segs: list[dict]) -> bool:
+        """True while the on-disk bytes of ``segs`` (a pinned version's
+        live segments) fit ``BROADCAST_CAP_BYTES``: a join against them may
+        broadcast; past the cap it stays declarative and AQE plans the
+        shuffle. The segments, not the log root, are measured: the root
+        also holds superseded segments until ``vacuum``."""
+        return dir_size_below(
+            [os.path.join(self.path, s["dir"]) for s in segs], BROADCAST_CAP_BYTES
+        )
+
     # ---- commit -------------------------------------------------------------
     def commit(self, segments: list[dict], batches: list[str], base_v: int) -> int:
         # Commit at base_v+1 where base_v is the version the CONTENT was
@@ -1320,29 +1306,57 @@ class SegmentLog:
         segment directory no kept manifest references (compaction leaves
         old segments on disk precisely so old manifests stay
         time-travel-resolvable; this is where they are finally freed).
-        Also removes crash debris above the pointer. Returns removed
-        file/dir names."""
+        Returns removed file/dir names.
+
+        A segment that some committed manifest (at or below the pointer)
+        lists is superseded and goes at once. Anything else — a manifest
+        above the pointer, a segment no committed manifest lists — may be
+        a live writer's commit in flight (segment written, manifest not yet
+        linked or not yet flipped), so it goes only once it is older than
+        ``MANIFEST_ORPHAN_SECONDS``, the horizon ``_write_json_durable``
+        uses to reclaim an orphan manifest. A segment's age is that of the
+        newest entry in its tree, so a write still producing files stays
+        fresh."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         cur = self.current_version()
-        removed: list[str] = []
         keep_versions = set(range(max(1, cur - keep_last + 1), cur + 1))
+        names = sorted(os.listdir(self.path))
+        manifests = {
+            int(n[1:9]): n for n in names if n.startswith("m") and n[1:9].isdigit()
+        }
         live: set[str] = set()
-        for v in keep_versions:
-            # a version inside the keep window may already have been
-            # dropped by an earlier, stricter vacuum — skip, don't crash
-            if os.path.exists(self.manifest_path(v)):
-                live.update(s["dir"] for s in self.segments(v))
-        for name in sorted(os.listdir(self.path)):
+        superseded: set[str] = set()
+        for v, name in manifests.items():
+            if v <= cur:
+                dirs = {s["dir"] for s in self.segments(v)}
+                (live if v in keep_versions else superseded).update(dirs)
+        removed: list[str] = []
+        for v, name in manifests.items():
             full = os.path.join(self.path, name)
-            if name.startswith("m") and name[1:9].isdigit():
-                if int(name[1:9]) not in keep_versions:
-                    os.remove(full)
-                    removed.append(name)
-            elif name.startswith("seg-") and name not in live:
+            if v not in keep_versions and (v <= cur or _is_orphan(full)):
+                os.remove(full)
+                removed.append(name)
+        for name in names:
+            full = os.path.join(self.path, name)
+            if name.startswith("seg-") and name not in live and (
+                name in superseded or _is_orphan(full)
+            ):
                 shutil.rmtree(full)
                 removed.append(name)
-        return removed
+        return sorted(removed)
+
+
+def _is_orphan(path: str) -> bool:
+    """True when the newest entry under ``path`` (a file, or a directory
+    tree) is older than ``MANIFEST_ORPHAN_SECONDS``."""
+    import time as _time
+
+    newest = os.path.getmtime(path)
+    for root, dirs, files in os.walk(path):
+        for n in (*dirs, *files):
+            newest = max(newest, os.path.getmtime(os.path.join(root, n)))
+    return _time.time() - newest > MANIFEST_ORPHAN_SECONDS
 
 
 class SegmentedAggView(IncrementalAggView):
@@ -1662,12 +1676,10 @@ class FactDimRollupView:
         # snapshot than the one joined.
         segs = self._dim_segments()
         d = self._dim.read(spark, segs)
-        # Broadcast only while the committed dim snapshot provably fits
-        # (on-disk parquet size, the sinks._index_is_small discipline);
+        # Broadcast only while the committed dim snapshot provably fits:
         # a large dimension would otherwise force a driver-side broadcast
-        # build and can OOM — past the cap the join stays declarative and
-        # AQE plans the shuffle.
-        if _snapshot_is_small(os.path.join(self._dim.path, segs[0]["dir"])):
+        # build and can OOM.
+        if self._dim.broadcastable(segs):
             d = F.broadcast(d)
         joined = state.join(
             d,

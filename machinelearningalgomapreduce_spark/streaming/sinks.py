@@ -10,11 +10,22 @@ cheap columnar storage keyed by the hash, NOT in the streaming state
 store, so index size is unbounded by executor memory and the stream
 restarts for free from the checkpoint + index.
 
-Exactly-once posture: foreachBatch is at-least-once on retry; the sink is
-idempotent by construction — a replayed epoch recomputes the identical
-survivor set (its own index entries are excluded from the seen-set) and
-overwrites its own epoch-keyed output directory. Within one batch the
-survivor per hash is the min doc_id (min_by — deterministic).
+Both stores here that a micro-batch rewrites — the dedup hash index and
+the SCD2 dimension — are ``SegmentLog``s (operators/matview.py): versions
+are manifests over immutable parquet segments, a batch commits with one
+atomic pointer flip, and the manifest's ledger of applied batch ids makes
+a replayed epoch a no-op. Readers resolve the pointer and never see a
+half-written version; read them with ``read_dedup_index`` and
+``read_scd2_dimension``, not a plain parquet read of the directory.
+A directory holding plain parquet from an older layout is refused.
+
+Exactly-once posture: foreachBatch is at-least-once on retry. The hash
+sink writes a batch's admitted documents to its epoch-keyed output
+directory (overwrite) and then commits the batch's index segment; a
+replay of a committed epoch is a ledger no-op, and a replay after a crash
+before the commit recomputes against the same committed index, so it
+rewrites the identical survivor set. Within one batch the survivor per
+hash is the min doc_id (min_by — deterministic).
 """
 
 from __future__ import annotations
@@ -25,11 +36,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from machinelearningalgomapreduce_spark.functions.storage import (
-    BROADCAST_CAP_BYTES,
-    dir_size_below,
-    materialize_once,
-)
+from machinelearningalgomapreduce_spark.functions.storage import materialize_once
+from machinelearningalgomapreduce_spark.operators.matview import SegmentLog, _committed
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,23 +48,50 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_table(spark, sf_dir, "documents.parquet")
 
 
+def _index_log(index_dir: str) -> SegmentLog:
+    return SegmentLog(
+        index_dir,
+        {"store": "dedup_hash_index", "columns": ["content_hash", "doc_id", "epoch"]},
+        what="dedup index spec",
+    )
+
+
+def _read_committed(spark: SparkSession, path: str, what: str) -> DataFrame:
+    # a read never records a spec, so the log is opened without one
+    log = SegmentLog(path, {})
+    return log.read(spark, log.segments(_committed(None, log.current_version(), what)))
+
+
+def read_dedup_index(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The committed seen-hash index: one (content_hash, doc_id, epoch)
+    row per admitted content hash, read schema-pinned (no inference job)."""
+    return _read_committed(spark, index_dir, "dedup index")
+
+
+def read_scd2_dimension(spark: SparkSession, dim_dir: str) -> DataFrame:
+    """The committed SCD2 dimension written by ``scd2_ingest_stream``:
+    (key, tracked..., valid_from, valid_to), read schema-pinned."""
+    return _read_committed(spark, dim_dir, "SCD2 dimension")
+
+
 def _ingest_batch(spark: SparkSession, index_dir: str, out_dir: str, run_key: str):
     """Build the per-batch merge function over a persistent hash index.
 
     ``run_key`` scopes batch ids: Structured Streaming numbers epochs from
-    0 PER CHECKPOINT, so the epoch identity stamped into the index (and
-    the output directory name) is (run_key, batch_id) — otherwise batch 0
-    of a second ingestion run would be mistaken for a replay of batch 0 of
-    the first and wrongly excluded from the seen-set."""
+    0 PER CHECKPOINT, so the epoch identity in the index ledger, the index
+    rows and the output directory name is (run_key, batch_id) — otherwise
+    batch 0 of a second ingestion run would be mistaken for a replay of
+    batch 0 of the first and skipped.
+
+    Raises ValueError at once when ``index_dir`` is not a dedup index log
+    (e.g. a plain-parquet index from an older layout), before any write."""
 
     run_digest = hashlib.md5(run_key.encode()).hexdigest()[:8]
+    log = _index_log(index_dir)
+    log.check_spec()
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
-        _recover_index(index_dir)
-        # Zero-padded batch id: the compaction's min_by orders epoch stamps
-        # LEXICOGRAPHICALLY, and an unpadded "x/10" sorts before "x/2" — so
-        # if multi-epoch rows for one hash ever arise (crash corners), the
-        # kept stamp would not be the earliest batch as documented.
+        # Zero-padded batch id: stamps of one run then sort in batch order.
         epoch = f"{run_digest}/{batch_id:010d}"
         # NULL text hashes to a sentinel, not NULL: a NULL content_hash
         # would group ALL null-text docs of a batch to one survivor yet
@@ -74,199 +109,80 @@ def _ingest_batch(spark: SparkSession, index_dir: str, out_dir: str, run_key: st
             .agg(F.min_by(F.struct(*hashed.columns), "doc_id").alias("row"))
             .select("row.*")
         )
-        if os.path.exists(index_dir):
-            # Exclude entries stamped with THIS batch id: a replayed epoch
-            # then sees exactly the pre-batch index state and recomputes
-            # the identical survivor set no matter where the previous
-            # attempt crashed (determinism is what makes the overwrite
-            # below safe).
-            # Exclusion matches BOTH stamp formats: rows written before the
-            # zero-padding change carry the unpadded 'digest/5' form — a
-            # replay crossing that upgrade must still see the pre-batch
-            # index state, not its own old-format survivors.
-            seen = (
-                spark.read.parquet(index_dir)
-                .filter(
-                    ~F.col("epoch").isin(epoch, f"{run_digest}/{batch_id}")
-                )
-                .select("content_hash")
-            )
-            survivors = survivors.join(
-                F.broadcast(seen) if _index_is_small(index_dir) else seen,
-                "content_hash",
-                "left_anti",
-            )
-        # Idempotent two-write protocol (no transactional sink needed):
-        # docs land in a BATCH-KEYED directory with overwrite — a replayed
-        # epoch rewrites the same directory instead of appending a second
-        # copy; the index append MAY duplicate a hash on replay, which is
-        # harmless (it is consumed as a set by the anti-join) and
-        # compactable offline.
-        survivors = materialize_once(survivors)
-        # A replay crossing the zero-padding upgrade must supersede the
-        # PRE-upgrade output directory too, not write a second copy of
-        # the batch under the padded name.
-        import shutil as _shutil
 
-        legacy = os.path.join(out_dir, f"epoch={run_digest}_{batch_id}")
-        if os.path.exists(legacy):
-            _shutil.rmtree(legacy)
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch.replace('/', '_')}")
-        )
-        survivors.select(
-            "content_hash", "doc_id", F.lit(epoch).alias("epoch")
-        ).write.mode("append").parquet(index_dir)
+        # Runs once per commit attempt, against the index version it
+        # commits on top of: a rebase onto a competing writer's commit
+        # recomputes the admitted set (and rewrites the output) against
+        # the winner's index.
+        def write(segs: list[dict]) -> list[dict]:
+            admitted = survivors
+            if segs:
+                seen = log.read(spark, segs).select("content_hash")
+                admitted = admitted.join(
+                    F.broadcast(seen) if log.broadcastable(segs) else seen,
+                    "content_hash",
+                    "left_anti",
+                )
+            admitted = materialize_once(admitted)  # one evaluation, two writes
+            admitted.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"epoch={epoch.replace('/', '_')}")
+            )
+            return [*segs, log.write_segment(
+                admitted.select("content_hash", "doc_id", F.lit(epoch).alias("epoch"))
+            )]
+
+        log.append(epoch, write)
 
     return ingest
 
 
-def _index_is_small(index_dir: str, cap_bytes: int | None = None) -> bool:
-    """Broadcast the seen-hash index only while it provably fits — the
-    shared functions/storage.py discipline; past the cap the anti-join
-    falls back to a shuffled hash join (the 100 TB path — at that point
-    the index itself is the big side and AQE plans it)."""
-    return dir_size_below(
-        index_dir, BROADCAST_CAP_BYTES if cap_bytes is None else cap_bytes
-    )
-
-
-def _recover_aside(path: str) -> None:
-    """Shared rename-aside recovery for the swap protocol users in this
-    module (the dedup index and the SCD2 dimension): if a crash left no
-    live directory but an `.old-` sibling exists (the window between
-    rename-aside and rename-in), restore the newest sibling — otherwise
-    the next job would see "nothing here" and silently start over
-    (re-admitting every already-ingested document / merging against an
-    empty dimension)."""
-    import glob
-
-    if os.path.exists(path):
-        return
-    # glob.escape: a '[' or ']' in the path (pytest tmp dirs, bracketed
-    # data paths) would otherwise turn the pattern into a character class
-    # that matches nothing — recovery silently no-ops and the pipeline
-    # restarts from an empty index/dimension.
-    siblings = sorted(glob.glob(glob.escape(path) + ".old-*"))
-    if siblings:
-        os.rename(siblings[-1], path)
-
-
-def _clean_stale_siblings(path: str) -> list[str]:
-    """Remove crash debris the swap protocol can leave behind: any
-    `.staging-*` twin (a swap that died before rename-aside — the live
-    dir is still authoritative) and, when the live dir EXISTS, any
-    `.old-*` sibling (a swap that died between rename-in and the final
-    rmtree — the sibling is a stale full-size copy recovery will never
-    consume). Run AFTER _recover_aside, never instead of it."""
-    import glob
-    import shutil
-
-    removed = []
-    for d in glob.glob(glob.escape(path) + ".staging-*"):
-        shutil.rmtree(d, ignore_errors=True)
-        removed.append(os.path.basename(d))
-    if os.path.exists(path):
-        for d in glob.glob(glob.escape(path) + ".old-*"):
-            shutil.rmtree(d, ignore_errors=True)
-            removed.append(os.path.basename(d))
-    return removed
-
-
-def _recover_index(index_dir: str) -> None:
-    _recover_aside(index_dir)
-    _clean_stale_siblings(index_dir)
-
-
 def compact_dedup_index(spark: SparkSession, index_dir: str) -> dict:
-    """Offline maintenance for the dedup hash index (the "compactable
-    offline" promise in _ingest_batch): the index is an append-only pile
-    of per-epoch parquet files that accumulates one file set per batch
-    forever, plus duplicate rows from replayed epochs (the two-write
-    protocol may re-append the same (hash, epoch) rows — harmless for
-    correctness, pure bloat). Compaction rewrites it as ONE deduplicated,
-    hash-partitioned parquet: one row per content_hash, keeping the
-    deterministic min (epoch, doc_id) representative WITH its original
-    epoch stamp — the stamp must survive so a future replay of the most
-    recent epoch still excludes its own entries from the seen-set.
+    """Offline maintenance for the dedup hash index: every ingest batch
+    appends one segment, so the live segment list (and the file count the
+    ingest anti-join scans) grows by one per batch. Compaction rewrites
+    the live segments as ONE segment, hash-partitioned on content_hash
+    into a BOUNDED file count (~64 MB per file, sized from the live
+    segments' bytes), commits it with the unchanged ledger, and vacuums
+    the superseded segments. Rows are copied as they are — the index
+    holds one row per content hash by construction, each with the epoch
+    that admitted it.
 
-    Crash-safe swap (the scd2_ingest_stream protocol): write staging,
-    rename the live index ASIDE (never delete first), rename staging in,
-    then drop the sibling; every crash window leaves either the live dir
-    or its `.old-` sibling, and _recover_index (run at the start of every
-    ingest batch and every compaction) restores the sibling.
-
-    Single writer: never run concurrently with an active ingestion run —
-    same rule as the views in operators/matview.py.
-
-    100 TB shape: one hash aggregate over the index relation (map-side
-    combinable, never touches documents), written back hash-partitioned
-    on content_hash into a BOUNDED file count (~64 MB per file, sized
-    from the pre-compaction bytes) — the compacted layout also makes the
-    ingest-side anti-join's big-side scan cheaper (fewer, larger files;
-    a single column-pruned read).
+    The commit is pinned to the version the rewrite read, so an ingest
+    batch committing meanwhile makes the compaction fail loudly (version
+    collision) instead of dropping that batch; re-run it.
 
     Returns {"rows_before", "rows_after", "files_before", "files_after"}.
     """
-    import shutil
-    import time
-
-    _recover_index(index_dir)
-    if not os.path.exists(index_dir):
+    log = _index_log(index_dir)
+    log.check_spec()
+    v0 = log.current_version()
+    segs = log.segments(v0)
+    if not segs:
         return {"rows_before": 0, "rows_after": 0,
                 "files_before": 0, "files_after": 0}
 
-    def _count_files(d: str) -> int:
-        return sum(
-            1
-            for root, _dirs, files in os.walk(d)
+    def parquet_files(segs: list[dict]) -> list[str]:
+        return [
+            os.path.join(root, f)
+            for s in segs
+            for root, _dirs, files in os.walk(os.path.join(log.path, s["dir"]))
             for f in files
             if f.endswith(".parquet")
-        )
+        ]
 
-    idx = spark.read.parquet(index_dir)
+    idx = log.read(spark, segs)
     rows_before = idx.count()
-    files_before = _count_files(index_dir)
-    # Order by the PARSED numeric batch id, not the raw stamp: padded and
-    # pre-upgrade unpadded stamps then sort identically, and the kept
-    # representative is genuinely the earliest batch (digest ties break on
-    # the raw stamp, then doc_id — deterministic).
-    batch_no = F.split(F.col("epoch"), "/").getItem(1).cast("long")
-    compacted = (
-        idx.groupBy("content_hash")
-        .agg(
-            F.min_by(
-                F.struct("doc_id", "epoch"),
-                F.struct(batch_no.alias("b"), F.col("epoch"), F.col("doc_id")),
-            ).alias("r")
-        )
-        .select("content_hash", "r.doc_id", "r.epoch")
-    )
-    stamp = int(time.time() * 1000)
-    staging = index_dir + f".staging-{stamp}"
-    old = index_dir + f".old-{stamp}"
-    # Hash-partitioned into a BOUNDED file count sized from the on-disk
-    # bytes (~64 MB per output file): repartition(col) alone would emit
-    # spark.sql.shuffle.partitions files — for a small index MORE files
-    # than before, the opposite of compaction's fewer-larger promise.
-    total_bytes = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _d, files in os.walk(index_dir)
-        for f in files
-    )
-    n_out = max(1, total_bytes // (64 << 20) + (1 if total_bytes % (64 << 20) else 0))
-    compacted.repartition(int(n_out), F.col("content_hash")).write.mode(
-        "overwrite"
-    ).parquet(staging)
-    rows_after = spark.read.parquet(staging).count()
-    os.rename(index_dir, old)
-    os.rename(staging, index_dir)
-    shutil.rmtree(old)
+    files_before = parquet_files(segs)
+    total_bytes = sum(os.path.getsize(f) for f in files_before)
+    n_out = max(1, -(-total_bytes // (64 << 20)))
+    new = log.write_segment(idx.repartition(n_out, F.col("content_hash")))
+    log.commit([new], log.manifest(v0)["batches"], base_v=v0)
+    log.vacuum(keep_last=1)
     return {
         "rows_before": rows_before,
-        "rows_after": rows_after,
-        "files_before": files_before,
-        "files_after": _count_files(index_dir),
+        "rows_after": log.read(spark, [new]).count(),
+        "files_before": len(files_before),
+        "files_after": len(parquet_files([new])),
     }
 
 
@@ -280,62 +196,57 @@ def scd2_ingest_stream(
     ts_col: str = "ts",
 ):
     """Streaming dimension maintenance: each micro-batch of updates is
-    MERGED into the on-disk SCD2 dimension via
+    MERGED into the SCD2 dimension via
     operators/incremental.py::scd2_apply (composition of verified pieces —
     the foreachBatch twin of a MERGE INTO job chain).
 
-    Within a batch, only the LATEST update per key applies (max_by ts);
-    scd2_apply is idempotent on identical updates, so a replayed epoch
-    re-merges to the same dimension. Crash-safe swap protocol: the merged
-    dimension is written to a staging dir (rewriting a parquet dir in
-    place while the merge plan is still reading it would corrupt the
-    read), the live dir is renamed ASIDE (never deleted first), staging is
-    renamed in, and only then is the old version removed — every crash
-    window leaves either the live dir or its `.old-` sibling intact, and
-    `_recover_dim` restores the sibling on the next batch. Tracked columns
-    are carried as strings in the bootstrap (empty-dimension) schema."""
-    import shutil
-
+    Within a batch, only the LATEST update per key applies (max_by ts).
+    The dimension is a ``SegmentLog`` at ``dim_dir`` (read it with
+    ``read_scd2_dimension``): each batch reads the committed version,
+    writes the merged dimension as one new segment and commits it under
+    the run-scoped batch id, so a replayed epoch is a ledger no-op and a
+    crash before the commit leaves the previous version in place. The
+    empty-dimension bootstrap is typed from the batch's own schema. The
+    spec (key, tracked, ts_col) is guarded on reopen; a ``dim_dir``
+    holding plain parquet from an older layout raises ValueError before
+    the stream starts."""
     from machinelearningalgomapreduce_spark.operators.incremental import scd2_apply
 
     if not tracked:
         raise ValueError("scd2_ingest_stream needs at least one tracked column")
+    log = SegmentLog(
+        dim_dir, {"key": key, "tracked": list(tracked), "ts_col": ts_col},
+        what="SCD2 spec",
+    )
+    log.check_spec()
+    run_digest = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        _recover_dim(dim_dir)
         latest = (
             batch.groupBy(key)
             .agg(F.max_by(F.struct(*batch.columns), ts_col).alias("r"))
             .select("r.*")
         )
-        if os.path.exists(dim_dir):
-            dim = spark.read.parquet(dim_dir)
-        else:
-            # TYPED bootstrap derived from this batch's schema: an
-            # all-string empty frame would union-widen every tracked
-            # column and valid_from/valid_to to STRING permanently (set
-            # operations coerce string+T to string), and later ts
-            # comparisons would go through lossy double casts.
-            proto = latest.select(
-                F.col(key),
-                *[F.col(c) for c in tracked],
-                F.col(ts_col).alias("valid_from"),
-                F.col(ts_col).alias("valid_to"),
-            )
-            dim = spark.createDataFrame([], proto.schema)
-        merged = scd2_apply(dim, latest, key, tracked, ts_col)
-        # zero-padded suffixes: _recover_aside picks the newest sibling
-        # LEXICOGRAPHICALLY, the same ordering hazard the epoch stamps pad
-        # against (a stale '.old-2' surviving an ignore_errors rmtree must
-        # never outsort a fresh '.old-10')
-        staging = dim_dir + f".staging-{batch_id:010d}"
-        old = dim_dir + f".old-{batch_id:010d}"
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.exists(dim_dir):
-            os.rename(dim_dir, old)
-        os.rename(staging, dim_dir)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+
+        def write(segs: list[dict]) -> list[dict]:
+            if segs:
+                dim = log.read(spark, segs)
+            else:
+                # TYPED bootstrap derived from this batch's schema: an
+                # all-string empty frame would union-widen every tracked
+                # column and valid_from/valid_to to STRING permanently (set
+                # operations coerce string+T to string), and later ts
+                # comparisons would go through lossy double casts.
+                proto = latest.select(
+                    F.col(key),
+                    *[F.col(c) for c in tracked],
+                    F.col(ts_col).alias("valid_from"),
+                    F.col(ts_col).alias("valid_to"),
+                )
+                dim = spark.createDataFrame([], proto.schema)
+            return [log.write_segment(scd2_apply(dim, latest, key, tracked, ts_col))]
+
+        log.append(f"{run_digest}/{batch_id:010d}", write)
 
     return (
         updates_stream.writeStream.foreachBatch(merge)
@@ -343,11 +254,6 @@ def scd2_ingest_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def _recover_dim(dim_dir: str) -> None:
-    _recover_aside(dim_dir)
-    _clean_stale_siblings(dim_dir)
 
 
 def dedup_ingest_stream(
@@ -409,8 +315,8 @@ def _semantic_ingest_batch(
     exact seen-set; size n_probe to the corpus geometry, measured via
     similarity.ann_recall_frame).
 
-    Exactly-once protocol (simpler than the hash path's epoch-stamp
-    exclusion, because the index carries its own replay ledger):
+    Exactly-once protocol (the index's ``SegmentLog`` ledger, as on the
+    hash path):
 
     1. ledger short-circuit — if this epoch is already in
        ``index.applied_batches()``, BOTH writes below completed (output

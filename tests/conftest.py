@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import sys
+import time
 
 import pytest
 
@@ -116,3 +118,21 @@ def run_stream(stream_df, name, checkpoint, output_mode="update"):
     )
     drain(q, 600)
     return stream_df.sparkSession.table(name).collect(), q
+
+
+def stage_crashed_commit(log, seg, batches):
+    """Leave what a writer of ``log`` (a ``SegmentLog``) that crashed
+    between linking its manifest and flipping the pointer leaves: the
+    segment ``seg`` and an unflipped manifest of the next version, both
+    aged past the orphan horizon (the crash happened long ago, so the log
+    may reclaim the version and ``vacuum`` the segment)."""
+    v = log.current_version() + 1
+    with open(log.manifest_path(v), "w") as f:
+        json.dump({"segments": [seg], "batches": batches}, f)
+    old = time.time() - 3600
+    seg_dir = os.path.join(log.path, seg["dir"])
+    for root, dirs, files in os.walk(seg_dir):
+        for n in (*dirs, *files):
+            os.utime(os.path.join(root, n), (old, old))
+    for path in (seg_dir, log.manifest_path(v)):
+        os.utime(path, (old, old))

@@ -16,7 +16,7 @@ from machinelearningalgomapreduce_spark.operators.matview import (
     mv_ingest_stream,
 )
 from machinelearningalgomapreduce_spark.sources.catalog import load_tables
-from tests.conftest import SMOKE_SF_DIR, drain, jobs_while
+from tests.conftest import SMOKE_SF_DIR, drain, jobs_while, stage_crashed_commit
 
 
 def _mk_view(path):
@@ -90,18 +90,6 @@ def test_replayed_batch_is_a_noop(spark, tmp_path):
     assert mv.applied_batches() == ["b0", "b1"]
 
 
-def _stage_crashed_commit(log, seg, batches):
-    """Leave what a writer that crashed between linking its manifest and
-    flipping the pointer leaves: the segment ``seg`` and an unflipped
-    manifest of the next version, aged past the orphan horizon (the crash
-    happened long ago, so the log may reclaim the version)."""
-    v = log.current_version() + 1
-    with open(log.manifest_path(v), "w") as f:
-        json.dump({"segments": [seg], "batches": batches}, f)
-    old = time.time() - 3600
-    os.utime(log.manifest_path(v), (old, old))
-
-
 def test_crash_orphan_is_ignored_and_cleaned(spark, tmp_path):
     t = load_tables(spark, SMOKE_SF_DIR)
     mv = _mk_view(tmp_path / "mv")
@@ -112,7 +100,7 @@ def test_crash_orphan_is_ignored_and_cleaned(spark, tmp_path):
     # BEFORE the pointer flip: an orphan segment and manifest above the
     # pointer
     orphan = mv._log.write_segment(mv._partial(b1))
-    _stage_crashed_commit(mv._log, orphan, ["b0", "b1"])
+    stage_crashed_commit(mv._log, orphan, ["b0", "b1"])
     # readers still see v1; the ledger is the COMMITTED ledger
     assert mv.current_version() == 1
     assert _canon(mv.read(spark)) == committed
@@ -126,6 +114,38 @@ def test_crash_orphan_is_ignored_and_cleaned(spark, tmp_path):
     assert orphan["dir"] in mv.vacuum(keep_last=1)
     on_disk = {n for n in os.listdir(mv.path) if n.startswith("seg-")}
     assert on_disk == {s["dir"] for s in mv.segments()}
+
+
+def test_vacuum_spares_an_in_flight_commit(spark, tmp_path, monkeypatch):
+    """A vacuum that runs while another writer is inside its commit — its
+    segment written and its manifest linked, the pointer not yet flipped —
+    leaves both alone, so the writer's flip commits a version that reads
+    back. Once that version is committed, the superseded one goes at once."""
+    import machinelearningalgomapreduce_spark.operators.matview as mvmod
+
+    t = load_tables(spark, SMOKE_SF_DIR)
+    b0, b1, _ = _batches(t.lineitem)
+    clean = _mk_view(tmp_path / "clean")
+    mv = _mk_view(tmp_path / "mv")
+    for view in (clean, mv):
+        view.refresh(spark, b0, batch_id="b0")
+    clean.refresh(spark, b1, batch_id="b1")
+    v1_segs = [s["dir"] for s in mv.segments()]
+
+    flip, removed = mvmod._flip_pointer, []
+
+    def vacuum_then_flip(path, version):
+        removed.extend(mv.vacuum(keep_last=1))
+        flip(path, version)
+
+    monkeypatch.setattr(mvmod, "_flip_pointer", vacuum_then_flip)
+    assert mv.refresh(spark, b1, batch_id="b1") is True
+    monkeypatch.undo()
+    assert removed == []
+    assert mv.current_version() == 2
+    assert mv.applied_batches() == ["b0", "b1"]
+    assert _canon(mv.read(spark)) == _canon(clean.read(spark))
+    assert mv.vacuum(keep_last=1) == sorted(["m00000001.json", *v1_segs])
 
 
 def test_time_travel_and_vacuum(spark, tmp_path):
@@ -809,13 +829,11 @@ def test_star_rollup_left_join_surfaces_referential_gaps(spark, tmp_path):
 
 def _strip_recorded_schemas(path):
     """Rewrite view directories as written before schemas were recorded:
-    no ``schema`` in any manifest, no drift-reference schema.json."""
+    no ``schema`` in any manifest."""
     for root, _dirs, files in os.walk(path):
         for name in files:
             full = os.path.join(root, name)
-            if name == "schema.json":
-                os.remove(full)
-            elif name.startswith("m") and name.endswith(".json"):
+            if name.startswith("m") and name.endswith(".json"):
                 with open(full) as f:
                     manifest = json.load(f)
                 for s in manifest["segments"]:
@@ -859,8 +877,8 @@ def test_views_without_recorded_schemas_read_the_same(spark, tmp_path):
 
 
 def test_drift_reference_and_dim_snapshots_read_without_inference(spark, tmp_path):
-    """The pinned drift reference (its schema.json) and the star rollup's
-    dim versions (their manifest) carry a schema record: reference(),
+    """The pinned drift reference and the star rollup's dim versions
+    (their logs' manifests) carry a schema record: reference(),
     dim() and the star read build their frames with no Spark job. With
     every record stripped they read the same frames (inference fallback),
     and refresh_dim rebuilds on a stripped previous version and records
@@ -1109,7 +1127,7 @@ def test_star_rollup_dim_orphan_recovery(spark, tmp_path):
     )
     # simulate the crash: orphan v2 above the committed pointer (v1)
     orphan = sv._dim.write_segment(upd)
-    _stage_crashed_commit(sv._dim, orphan, ["d0", "d1"])
+    stage_crashed_commit(sv._dim, orphan, ["d0", "d1"])
     assert sv._dim.current_version() == 1
     assert sv.dim_applied_batches() == ["d0"]
     assert sv.dim(spark).filter("c_mktsegment = 'MOVED'").count() == 0
@@ -1234,7 +1252,7 @@ def test_star_rollup_read_identical_without_broadcast_gate(spark, tmp_path, monk
     sv.refresh_fact(spark, fact, batch_id="f0")
 
     small = {tuple(r) for r in sv.read(spark).collect()}
-    monkeypatch.setattr(mvmod, "_snapshot_is_small", lambda *_a, **_k: False)
+    monkeypatch.setattr(mvmod.SegmentLog, "broadcastable", lambda *_a, **_k: False)
     large = {tuple(r) for r in sv.read(spark).collect()}
     assert small == large and small
 
@@ -1436,9 +1454,16 @@ def test_set_reference_reclaims_superseded_snapshots(spark, tmp_path):
     mv.refresh(spark, d, batch_id="b0")
     mv.set_reference(spark)
     mv.refresh(spark, d, batch_id="b1")
-    mv.set_reference(spark)
-    refs = [n for n in _os.listdir(str(tmp_path / "dm2")) if n.startswith("_ref-v")]
-    assert len(refs) == 1 and refs[0].endswith(f"{mv.reference_version():08d}")
+    assert mv.set_reference(spark) == mv.reference_version() == 2
+    # the reference log keeps only the v2 pin: one segment, one manifest
+    ref = mv._ref
+    (live,) = ref.segments()
+    assert live["version"] == 2
+    names = sorted(_os.listdir(ref.path))
+    assert [n for n in names if n.startswith("seg-")] == [live["dir"]]
+    assert [n for n in names if n.startswith("m")] == [
+        _os.path.basename(ref.manifest_path(ref.current_version()))
+    ]
     mv.psi(spark)  # still resolvable after the cleanup
 
 
@@ -1822,13 +1847,17 @@ def test_concurrent_replay_of_same_batch_reclaims_loser_segment(
 
 def test_one_commit_protocol_for_every_versioned_view():
     """Every versioned store commits through ``SegmentLog``: in the whole
-    package ``_flip_pointer`` is called only from ``SegmentLog.commit``,
-    and no module writes a ``batches.json`` ledger of its own."""
+    package ``_flip_pointer`` is called only from ``SegmentLog.commit``, no
+    module writes a ``batches.json`` ledger of its own, and no store keeps
+    a second protocol beside the log — ``os.rename``/``os.replace`` only
+    inside the log's two atomic writes and the JSONL export sink's commit,
+    no rename-aside ``.old-``/``.staging-`` directories, no ``_REF``
+    pointer file."""
     import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "machinelearningalgomapreduce_spark"
-    flips, ledgers = [], []
+    flips, ledgers, renames, swaps = [], [], [], []
 
     class Scan(ast.NodeVisitor):
         def __init__(self, rel):
@@ -1841,21 +1870,44 @@ def test_one_commit_protocol_for_every_versioned_view():
 
         visit_ClassDef = visit_FunctionDef = visit_AsyncFunctionDef = scoped
 
+        def where(self):
+            return f"{self.rel}:{'.'.join(self.scope)}"
+
         def visit_Call(self, node):
             f = node.func
-            where = f"{self.rel}:{'.'.join(self.scope)}"
             if (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) == "_flip_pointer":
-                flips.append(where)
+                flips.append(self.where())
+            if (
+                isinstance(f, ast.Attribute) and f.attr in ("rename", "replace")
+                and isinstance(f.value, ast.Name) and f.value.id == "os"
+            ):
+                renames.append(self.where())
             for arg in [*node.args, *(k.value for k in node.keywords)]:
                 if any(
                     isinstance(c, ast.Constant) and isinstance(c.value, str)
                     and "batches.json" in c.value
                     for c in ast.walk(arg)
                 ):
-                    ledgers.append(where)
+                    ledgers.append(self.where())
             self.generic_visit(node)
+
+        def visit_Constant(self, node):
+            if isinstance(node.value, str) and any(
+                m in node.value for m in (".old-", ".staging-", "_REF")
+            ):
+                swaps.append(self.where())
+
+        def visit_Name(self, node):
+            if "_REF" in node.id:
+                swaps.append(self.where())
 
     for path in sorted(pkg.rglob("*.py")):
         Scan(str(path.relative_to(pkg))).visit(ast.parse(path.read_text()))
     assert flips == ["operators/matview.py:SegmentLog.commit"]
     assert ledgers == []
+    assert sorted(set(renames)) == [
+        "operators/matview.py:_flip_pointer",
+        "operators/matview.py:_write_json_durable",
+        "sources/custom.py:ManifestJsonlWriter.commit",
+    ]
+    assert swaps == []

@@ -1050,10 +1050,9 @@ def test_manifest_jsonl_sink_round_trip(spark, sf_dir, tmp_path):
 # ------------------------------------------------- streaming dedup sink
 
 def test_dedup_ingest_replay_is_deterministic(spark, sf_dir, tmp_path):
-    """The crash-replay contract of the epoch-stamped index: re-running
-    the SAME epoch after its index append landed recomputes the identical
-    survivor set (its own entries are excluded from the seen-set) and the
-    overwrite leaves the output unchanged — no loss, no duplication."""
+    """The crash-replay contract of the index log: re-running the SAME
+    epoch after its index commit landed is a ledger no-op, so the output
+    is unchanged — no loss, no duplication."""
     from machinelearningalgomapreduce_spark.streaming.sinks import _ingest_batch
 
     index_dir = str(tmp_path / "idx")
@@ -1079,7 +1078,10 @@ def test_dedup_ingest_replay_is_deterministic(spark, sf_dir, tmp_path):
 def test_scd2_ingest_stream_merges_batches(spark, tmp_path):
     """Streaming SCD2 maintenance: two availableNow runs of update batches
     produce the same dimension as applying the batches in order."""
-    from machinelearningalgomapreduce_spark.streaming.sinks import scd2_ingest_stream
+    from machinelearningalgomapreduce_spark.streaming.sinks import (
+        read_scd2_dimension,
+        scd2_ingest_stream,
+    )
 
     dim_dir = str(tmp_path / "dim")
     src = tmp_path / "updates"
@@ -1119,7 +1121,7 @@ def test_scd2_ingest_stream_merges_batches(spark, tmp_path):
     )
     drain(q2, 420)
 
-    rows = sorted(map(tuple, spark.read.parquet(dim_dir).collect()))
+    rows = sorted(map(tuple, read_scd2_dimension(spark, dim_dir).collect()))
     assert rows == sorted(
         [
             ("k1", "AMS", "2022-01-01", "2022-02-01"),
@@ -1469,7 +1471,7 @@ def test_hash_sink_crash_between_output_and_index_replays_identically(
 ):
     """VERDICT r12 item 5 (kill-point, hash sink): crash INSIDE the
     two-write window — after the epoch output lands, before the index
-    append — then restart on the same checkpoint. The replayed epoch
+    log's segment write — then restart on the same checkpoint. The replayed epoch
     must converge bit-identically to a clean one-shot run: no document
     admitted twice, no document lost, one index row per content hash."""
     import os
@@ -1477,8 +1479,10 @@ def test_hash_sink_crash_between_output_and_index_replays_identically(
     import pyspark.sql.readwriter as RW
     import pytest
 
+    from machinelearningalgomapreduce_spark.operators.matview import _read_pointer
     from machinelearningalgomapreduce_spark.streaming.sinks import (
         dedup_ingest_stream,
+        read_dedup_index,
     )
 
     idx_dir = str(tmp_path / "cidx")
@@ -1487,9 +1491,9 @@ def test_hash_sink_crash_between_output_and_index_replays_identically(
     orig = RW.DataFrameWriter.parquet
 
     def boom(self, path, *a, **kw):
-        if path == idx_dir and not fired["done"]:
+        if path.startswith(os.path.join(idx_dir, "seg-")) and not fired["done"]:
             fired["done"] = True
-            raise RuntimeError("injected crash before index append")
+            raise RuntimeError("injected crash before index segment write")
         return orig(self, path, *a, **kw)
 
     monkeypatch.setattr(RW.DataFrameWriter, "parquet", boom)
@@ -1498,9 +1502,9 @@ def test_hash_sink_crash_between_output_and_index_replays_identically(
         drain(q, 420)
     monkeypatch.undo()
     assert fired["done"]  # the kill-point actually fired
-    # the crash window state: output epoch dir written, index absent
+    # the crash window state: output epoch dir written, nothing committed
     assert any(d.startswith("epoch=") for d in os.listdir(out))
-    assert not os.path.exists(idx_dir)
+    assert _read_pointer(idx_dir) == 0
 
     # restart on the SAME checkpoint: Structured Streaming replays epoch 0
     q2 = dedup_ingest_stream(spark, sf_dir, idx_dir, out, str(tmp_path / "cck"))
@@ -1519,8 +1523,8 @@ def test_hash_sink_crash_between_output_and_index_replays_identically(
     ).collect()
     assert {tuple(r) for r in got} == {tuple(r) for r in want}
     assert len(got) == len({r.doc_id for r in got})  # no dup admission
-    idx = spark.read.parquet(idx_dir).select("content_hash", "doc_id").collect()
-    tidx = spark.read.parquet(str(tmp_path / "tidx")).select(
+    idx = read_dedup_index(spark, idx_dir).select("content_hash", "doc_id").collect()
+    tidx = read_dedup_index(spark, str(tmp_path / "tidx")).select(
         "content_hash", "doc_id"
     ).collect()
     assert {tuple(r) for r in idx} == {tuple(r) for r in tidx}

@@ -73,6 +73,7 @@ def _drain_live(q, done, timeout=240):
 def test_live_trigger_soak_exact_dedup_sink(spark, sf_dir, tmp_path):
     from machinelearningalgomapreduce_spark.streaming.sinks import (
         dedup_ingest_stream,
+        read_dedup_index,
     )
 
     src = _split_source(spark, sf_dir, tmp_path, "documents")
@@ -123,7 +124,7 @@ def test_live_trigger_soak_exact_dedup_sink(spark, sf_dir, tmp_path):
 
     # index state consistent and bounded: one index row per content hash
     # (the seen-set), no per-trigger duplication
-    idx = spark.read.parquet(str(tmp_path / "idx_b"))
+    idx = read_dedup_index(spark, str(tmp_path / "idx_b"))
     assert idx.select("content_hash").distinct().count() == idx.count() == n_hashes
 
 

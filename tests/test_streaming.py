@@ -198,14 +198,17 @@ def test_cm_sketch_stream_matches_batch_build(spark, sf_dir):
 
 
 def test_compact_dedup_index_preserves_semantics(spark, sf_dir, tmp_path):
-    """Compaction of the append-only hash index: replay-duplicated rows
-    collapse to one per content_hash, the epoch stamps survive (a replay
-    of the most recent epoch still excludes its own entries), and a later
-    epoch over the same docs still admits nothing."""
+    """Replayed epochs are ledger no-ops and add no index row; compaction
+    folds the per-batch segments into one, keeps every row with its
+    ORIGINAL epoch stamp and the ledger, so a post-compaction replay of the
+    last epoch is still a no-op and a later epoch over the same docs still
+    admits nothing."""
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
     from machinelearningalgomapreduce_spark.streaming.sinks import (
+        _index_log,
         _ingest_batch,
         compact_dedup_index,
+        read_dedup_index,
     )
 
     index_dir = str(tmp_path / "idx")
@@ -215,24 +218,27 @@ def test_compact_dedup_index_preserves_semantics(spark, sf_dir, tmp_path):
     ingest = _ingest_batch(spark, index_dir, out_dir, "runC")
 
     ingest(half, 0)
-    ingest(half, 0)   # replayed epoch → duplicate (hash, epoch) index rows
+    n_half = read_dedup_index(spark, index_dir).count()
+    ingest(half, 0)   # replayed epoch → no-op
+    assert read_dedup_index(spark, index_dir).count() == n_half
     ingest(docs, 1)
     ingest(docs, 1)   # replayed epoch again
-    idx_before = spark.read.parquet(index_dir)
+    idx_before = read_dedup_index(spark, index_dir)
     rows_before = idx_before.count()
     n_hashes = idx_before.select("content_hash").distinct().count()
-    # materialize the pre-compaction epoch map NOW — the swap replaces the
-    # files this plan reads
+    assert rows_before == n_hashes  # one row per hash, replays added none
     before_map = {
         r.content_hash: r.epoch
-        for r in idx_before.select("content_hash", "epoch").distinct().collect()
+        for r in idx_before.select("content_hash", "epoch").collect()
     }
-    assert rows_before > n_hashes  # bloat exists
+    log = _index_log(index_dir)
+    ledger = log.applied_batches()
+    assert len(log.segments()) == 2
 
     stats = compact_dedup_index(spark, index_dir)
-    assert stats["rows_before"] == rows_before
-    assert stats["rows_after"] == n_hashes
-    idx_after = spark.read.parquet(index_dir)
+    assert stats["rows_before"] == stats["rows_after"] == n_hashes
+    assert len(log.segments()) == 1 and log.applied_batches() == ledger
+    idx_after = read_dedup_index(spark, index_dir)
     assert idx_after.count() == n_hashes
     # epoch stamps preserved: every hash still carries its ORIGINAL epoch
     for r in idx_after.collect():
@@ -241,8 +247,7 @@ def test_compact_dedup_index_preserves_semantics(spark, sf_dir, tmp_path):
     out_docs = sorted(
         r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect()
     )
-    # post-compaction replay of the LAST epoch: self-exclusion intact,
-    # output unchanged
+    # post-compaction replay of the LAST epoch: ledger no-op, output unchanged
     ingest(docs, 1)
     assert sorted(
         r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect()
@@ -255,31 +260,49 @@ def test_compact_dedup_index_preserves_semantics(spark, sf_dir, tmp_path):
 
 
 def test_compact_dedup_index_crash_recovery(spark, sf_dir, tmp_path):
-    """A crash between rename-aside and rename-in leaves only the .old-
-    sibling; the next ingest (and the next compaction) must restore it
-    rather than treating the index as empty and re-admitting everything."""
+    """A batch that crashed between linking its index manifest and
+    flipping the pointer leaves an orphan segment (its admitted hashes)
+    and an unflipped manifest. The re-driven batch ignores them — it
+    admits against the COMMITTED index, so it admits those documents —
+    and commits by reclaiming the orphan version; the compaction's vacuum
+    then reclaims the orphan segment."""
     import os as _os
 
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
     from machinelearningalgomapreduce_spark.streaming.sinks import (
+        _index_log,
         _ingest_batch,
         compact_dedup_index,
+        read_dedup_index,
     )
+    from tests.conftest import stage_crashed_commit
 
     index_dir = str(tmp_path / "idx2")
     out_dir = str(tmp_path / "out2")
     docs = load_tables(spark, sf_dir).documents.filter(F.col("doc_id") < 100)
+    first, second = docs.filter(F.col("doc_id") < 50), docs.filter(F.col("doc_id") >= 50)
     ingest = _ingest_batch(spark, index_dir, out_dir, "runD")
-    ingest(docs, 0)
-    n = spark.read.parquet(out_dir).count()
+    ingest(first, 0)
+    log = _index_log(index_dir)
+    committed = log.applied_batches()
+    orphan = log.write_segment(second.select(
+        F.md5("text").alias("content_hash"), "doc_id", F.lit("crashed").alias("epoch")
+    ))
+    stage_crashed_commit(log, orphan, [*committed, "crashed"])
+    assert log.applied_batches() == committed
+    assert read_dedup_index(spark, index_dir).filter("epoch = 'crashed'").count() == 0
 
-    # simulate the crash window
-    _os.rename(index_dir, index_dir + ".old-999")
-    assert not _os.path.exists(index_dir)
-    ingest(docs, 1)  # recovery runs first → index restored → 0 admitted
-    assert spark.read.parquet(out_dir).count() == n
+    ingest(second, 1)  # the re-driven batch
+    n_distinct = docs.select(F.md5("text")).distinct().count()
+    assert spark.read.parquet(out_dir).count() == n_distinct
+    idx = read_dedup_index(spark, index_dir)
+    assert idx.count() == idx.select("content_hash").distinct().count() == n_distinct
+    assert log.current_version() == 2 and orphan not in log.segments()
 
-    # compaction on an empty path (no index, no sibling) is a no-op
+    compact_dedup_index(spark, index_dir)
+    assert not _os.path.exists(_os.path.join(index_dir, orphan["dir"]))
+
+    # compaction on an empty path is a no-op
     stats = compact_dedup_index(spark, str(tmp_path / "nothing"))
     assert stats == {
         "rows_before": 0, "rows_after": 0, "files_before": 0, "files_after": 0
@@ -287,47 +310,53 @@ def test_compact_dedup_index_crash_recovery(spark, sf_dir, tmp_path):
 
 
 def test_compact_dedup_index_cleans_crash_debris(spark, sf_dir, tmp_path):
-    """Review fix: .staging-*/.old-* directories left by compaction
-    crash windows must be removed by the next recovery pass, not
-    accumulate full-size index copies forever."""
+    """A compaction that crashed before its pointer flip leaves a
+    full-size orphan segment and an unflipped manifest. Ingest ignores
+    them and commits past them, and the next compaction's vacuum removes
+    them with the superseded segments: on disk only the live segment and
+    the newest manifest are left, and nothing beside the index directory."""
     import os as _os
 
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
     from machinelearningalgomapreduce_spark.streaming.sinks import (
+        _index_log,
         _ingest_batch,
         compact_dedup_index,
+        read_dedup_index,
     )
+    from tests.conftest import stage_crashed_commit
 
     index_dir = str(tmp_path / "idx3")
     out_dir = str(tmp_path / "out3")
     docs = load_tables(spark, sf_dir).documents.filter(F.col("doc_id") < 80)
     ingest = _ingest_batch(spark, index_dir, out_dir, "runE")
-    ingest(docs, 0)
-    # crash window A: staging written, swap never started
-    _os.makedirs(index_dir + ".staging-111")
-    # crash window B: swap finished but the old copy was never dropped
-    _os.makedirs(index_dir + ".old-222")
-    stats = compact_dedup_index(spark, index_dir)
-    assert stats["rows_after"] > 0
-    leftovers = [
-        n for n in _os.listdir(str(tmp_path))
-        if n.startswith("idx3.") and (".staging-" in n or ".old-" in n)
-    ]
-    assert leftovers == []
-    # ingest-side recovery cleans the same debris
-    _os.makedirs(index_dir + ".old-333")
+    ingest(docs.filter(F.col("doc_id") < 40), 0)
+    log = _index_log(index_dir)
+    # the crashed compaction's copy of the index
+    orphan = log.write_segment(read_dedup_index(spark, index_dir))
+    stage_crashed_commit(log, orphan, log.applied_batches())
     ingest(docs, 1)
-    assert not _os.path.exists(index_dir + ".old-333")
+    assert log.current_version() == 2 and orphan not in log.segments()
+
+    stats = compact_dedup_index(spark, index_dir)
+    assert stats["rows_after"] == docs.select(F.md5("text")).distinct().count()
+    names = sorted(_os.listdir(index_dir))
+    (live,) = log.segments()
+    assert [n for n in names if n.startswith("seg-")] == [live["dir"]]
+    assert [n for n in names if n.startswith("m")] == [
+        _os.path.basename(log.manifest_path(log.current_version()))
+    ]
+    assert sorted(n for n in _os.listdir(str(tmp_path)) if n.startswith("idx3")) == ["idx3"]
 
 
 def test_compact_dedup_index_keeps_numerically_earliest_epoch(spark, tmp_path):
-    """ADVICE r9: epoch stamps order LEXICOGRAPHICALLY in the compaction's
-    min_by, so batch ids must be zero-padded — with unpadded stamps,
-    'x/10' < 'x/2' and a multi-epoch hash (crash corners) would keep the
-    wrong batch. Synthetic multi-epoch index: batch 2 must win over 10."""
+    """Epoch stamps carry a zero-padded batch id, so one run's stamps sort
+    in batch order; a document re-sent in a later batch adds no index row,
+    so the earliest batch's stamp is the one compaction keeps."""
     from machinelearningalgomapreduce_spark.streaming.sinks import (
         _ingest_batch,
         compact_dedup_index,
+        read_dedup_index,
     )
 
     index_dir = str(tmp_path / "idx")
@@ -338,68 +367,67 @@ def test_compact_dedup_index_keeps_numerically_earliest_epoch(spark, tmp_path):
     d2 = spark.createDataFrame([("b", "other text")], ["doc_id", "text"])
     ingest(d1, 2)
     ingest(d2, 10)
-    idx = spark.read.parquet(index_dir)
-    epochs = sorted(r.epoch for r in idx.select("epoch").distinct().collect())
-    assert all(e.split("/")[1].isdigit() and len(e.split("/")[1]) == 10 for e in epochs)
-
-    # Forge the crash corner: duplicate doc 'a' re-stamped at batch 10.
-    forged = idx.filter("doc_id = 'a'").withColumn(
-        "epoch", F.regexp_replace("epoch", "/0000000002$", "/0000000010")
+    epochs = sorted(
+        r.epoch for r in read_dedup_index(spark, index_dir).select("epoch").collect()
     )
-    forged.write.mode("append").parquet(index_dir)
+    assert all(e.split("/")[1].isdigit() and len(e.split("/")[1]) == 10 for e in epochs)
+    assert [e.split("/")[1] for e in epochs] == ["0000000002", "0000000010"]
+
+    ingest(d1, 11)  # doc 'a' re-sent later: already seen
     compact_dedup_index(spark, index_dir)
-    kept = spark.read.parquet(index_dir).filter("doc_id = 'a'").collect()
+    kept = read_dedup_index(spark, index_dir).filter("doc_id = 'a'").collect()
     assert len(kept) == 1
     assert kept[0].epoch.endswith("/0000000002"), kept
 
 
-def test_dedup_ingest_excludes_pre_padding_epoch_stamps(spark, tmp_path):
-    """Format-migration corner (r10 review): index rows written BEFORE the
-    zero-padding change carry unpadded 'digest/5' stamps. A replay of that
-    batch after the upgrade must still exclude its own old-format rows
-    (else it anti-joins away its own survivors and writes a wrong set),
-    and compaction must order mixed-format stamps by the PARSED batch id."""
-    from pyspark.sql import functions as F
+def test_sinks_refuse_a_plain_parquet_directory(spark, sf_dir, tmp_path):
+    """An index or dimension directory written as plain parquet (the
+    layout before the sinks committed through a segment log) is refused
+    with a ValueError before anything is written — never opened as an
+    empty log that would re-admit every document or restart the
+    dimension."""
+    import os as _os
+
+    import pytest as _pytest
 
     from machinelearningalgomapreduce_spark.streaming.sinks import (
-        _ingest_batch,
         compact_dedup_index,
+        dedup_ingest_stream,
+        scd2_ingest_stream,
     )
 
-    index_dir = str(tmp_path / "idx")
-    out_dir = str(tmp_path / "outp")
-    ingest = _ingest_batch(spark, index_dir, out_dir, run_key="mig")
-    docs = spark.createDataFrame(
-        [("a", "alpha text"), ("b", "beta text")], ["doc_id", "text"]
-    )
-    ingest(docs, 5)
-    # Rewrite the whole index to the PRE-UPGRADE stamp format
-    old = spark.read.parquet(index_dir).withColumn(
-        "epoch", F.regexp_replace("epoch", "/0+(\\d)", "/$1")
-    ).collect()
-    import shutil as _sh
-    _sh.rmtree(index_dir)
-    spark.createDataFrame(old).write.parquet(index_dir)
-    assert all(r.epoch.endswith("/5") for r in spark.read.parquet(index_dir).collect())
+    def listing(d):
+        return sorted(
+            (_os.path.relpath(_os.path.join(r, n), d), _os.path.getmtime(_os.path.join(r, n)))
+            for r, dirs, files in _os.walk(d) for n in (*dirs, *files)
+        )
 
-    # Replay batch 5: must see the PRE-batch state (empty), i.e. both docs
-    # survive again, not an empty survivor set.
-    ingest(docs, 5)
-    out = spark.read.parquet(f"{out_dir}/epoch=*")
-    assert out.count() == 2
+    index_dir = str(tmp_path / "old_idx")
+    spark.createDataFrame(
+        [("h1", 1, "abcd1234/0000000000")], "content_hash string, doc_id long, epoch string"
+    ).write.parquet(index_dir)
+    dim_dir = str(tmp_path / "old_dim")
+    spark.createDataFrame(
+        [("k1", "AMS", "2022-01-01", None)],
+        "key string, city string, valid_from string, valid_to string",
+    ).write.parquet(dim_dir)
+    before = {d: listing(d) for d in (index_dir, dim_dir)}
 
-    # Mixed-format index now holds '/5' and '/0000000005' rows per hash;
-    # a forged later batch must LOSE to both under numeric ordering.
-    forged = (
-        spark.read.parquet(index_dir)
-        .limit(1)
-        .withColumn("epoch", F.regexp_replace("epoch", "/0*5$", "/0000000012"))
-    )
-    forged.write.mode("append").parquet(index_dir)
-    compact_dedup_index(spark, index_dir)
-    for r in spark.read.parquet(index_dir).collect():
-        # batch 5 wins in EITHER stamp format; the forged batch 12 never
-        assert int(r.epoch.split("/")[1]) == 5, r
+    with _pytest.raises(ValueError, match="not a segment log"):
+        dedup_ingest_stream(
+            spark, sf_dir, index_dir, str(tmp_path / "out"), str(tmp_path / "ck")
+        )
+    with _pytest.raises(ValueError, match="not a segment log"):
+        compact_dedup_index(spark, index_dir)
+    src = tmp_path / "upd"
+    src.mkdir()
+    stream = spark.readStream.schema("key string, city string, ts string").parquet(str(src))
+    with _pytest.raises(ValueError, match="not a segment log"):
+        scd2_ingest_stream(spark, stream, dim_dir, str(tmp_path / "ck2"), "key", ["city"])
+
+    assert {d: listing(d) for d in (index_dir, dim_dir)} == before
+    for name in ("out", "ck", "ck2"):
+        assert not _os.path.exists(str(tmp_path / name))
 
 
 def test_scd2_bootstrap_keeps_typed_schema_and_validates_tracked(spark, tmp_path):
@@ -411,7 +439,10 @@ def test_scd2_bootstrap_keeps_typed_schema_and_validates_tracked(spark, tmp_path
 
     import pytest as _pytest
 
-    from machinelearningalgomapreduce_spark.streaming.sinks import scd2_ingest_stream
+    from machinelearningalgomapreduce_spark.streaming.sinks import (
+        read_scd2_dimension,
+        scd2_ingest_stream,
+    )
 
     dim_dir = str(tmp_path / "dim_t")
     src = tmp_path / "upd_t"
@@ -428,7 +459,7 @@ def test_scd2_bootstrap_keeps_typed_schema_and_validates_tracked(spark, tmp_path
         scd2_ingest_stream(spark, stream, dim_dir, str(tmp_path / "ckx"), "key", [])
     q = scd2_ingest_stream(spark, stream, dim_dir, str(tmp_path / "ck_t"), "key", ["price"])
     drain(q, 420)
-    dim = spark.read.parquet(dim_dir)
+    dim = read_scd2_dimension(spark, dim_dir)
     types = {f.name: f.dataType.simpleString() for f in dim.schema.fields}
     assert types == {
         "key": "bigint", "price": "bigint",
@@ -445,7 +476,7 @@ def test_scd2_bootstrap_keeps_typed_schema_and_validates_tracked(spark, tmp_path
     stream2 = spark.readStream.schema("key long, price long, ts long").parquet(str(src))
     q2 = scd2_ingest_stream(spark, stream2, dim_dir, str(tmp_path / "ck_t2"), "key", ["price"])
     drain(q2, 420)
-    open_row = spark.read.parquet(dim_dir).filter(
+    open_row = read_scd2_dimension(spark, dim_dir).filter(
         "key = 1 and valid_to is null").collect()
     assert len(open_row) == 1 and open_row[0].price == 150
 
@@ -467,33 +498,3 @@ def test_dedup_ingest_null_text_is_one_content_class(spark, tmp_path):
     out = spark.read.parquet(str(tmp_path / "out") + "/epoch=*")
     rows = {r.doc_id for r in out.collect()}
     assert rows == {"a", "c"}  # min-id null survivor once; d excluded
-
-
-def test_dedup_replay_supersedes_pre_padding_output_dir(spark, tmp_path):
-    """r10 review: a replay crossing the zero-padding upgrade must replace
-    the PRE-upgrade epoch directory, not leave a duplicate copy of the
-    batch in the landing zone."""
-    import os as _os
-
-    from machinelearningalgomapreduce_spark.streaming.sinks import _ingest_batch
-
-    out_dir = str(tmp_path / "out_m")
-    ingest = _ingest_batch(spark, str(tmp_path / "idx_m"), out_dir, "mig2")
-    docs = spark.createDataFrame([("a", "x text")], "doc_id string, text string")
-    ingest(docs, 7)
-    padded = next(d for d in _os.listdir(out_dir) if d.startswith("epoch="))
-    # forge the pre-upgrade layout: rename to the unpadded name
-    legacy = padded.replace("_0000000007", "_7")
-    _os.rename(_os.path.join(out_dir, padded), _os.path.join(out_dir, legacy))
-    # strip the index rows to the legacy stamp too
-    idx_dir = str(tmp_path / "idx_m")
-    from pyspark.sql import functions as F
-    old = spark.read.parquet(idx_dir).withColumn(
-        "epoch", F.regexp_replace("epoch", "/0000000007", "/7")).collect()
-    import shutil as _sh
-    _sh.rmtree(idx_dir)
-    spark.createDataFrame(old).write.parquet(idx_dir)
-
-    ingest(docs, 7)  # the replay, post-upgrade
-    dirs = [d for d in _os.listdir(out_dir) if d.startswith("epoch=")]
-    assert dirs == [padded], dirs  # exactly one copy, the padded dir
