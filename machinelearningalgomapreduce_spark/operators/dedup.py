@@ -14,8 +14,16 @@ Four families over the documents table plus one over embeddings:
               (1-permutation MinHash LSH: same-block probability equals the
               Jaccard itself, so ≥0.5-similar pairs are mostly retained and
               the candidate set stays near-linear).
-- embedding:  cosine near-dup. Brute self-join here (fixture scale);
-              the LSH-bucketed scale path lives in operators/similarity.py.
+- embedding:  cosine near-dup. Brute self-join in the checked query
+              (fixture scale); the one scale path is
+              embedding_dedup_blocked (learned k-means cells, multi-probe
+              blocking, the same exact verify).
+
+The minhash pair pass, its estimate audit, the MLlib LSH variant and the
+blocked embedding pass first collapse exact duplicates to one
+representative (md5 of text, or the raw vector) and run on distinct
+contents only; one helper, _expand_exact_groups, expands their
+representative-level pairs back to member pairs.
 
 Every hash is md5-over-string, identical in Spark and DuckDB, so all five
 are exact sql-oracle checks. Thresholds were calibrated on the fixtures:
@@ -50,13 +58,6 @@ NGRAM_JACCARD_THRESHOLD = 0.5
 EMBEDDING_COSINE_THRESHOLD = 0.45
 CONTAINMENT_THRESHOLD = 0.8
 SIMHASH_BITS = 32
-
-# Once-per-CALL-SITE registry for embedding_dedup_blocked_frame's
-# verify=False semantic
-# -break warning (r13 ADVICE: warn once per process, not per bench-loop
-# call).
-_VERIFY_FALSE_WARNED_SITES: set = set()
-
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: md5 content groups; the survivor is the min doc_id."""
@@ -141,6 +142,43 @@ def _exact_collapse(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return reps.select("doc_id", "text"), members
 
 
+def _expand_exact_groups(
+    rep_pairs: DataFrame,
+    members: DataFrame,
+    rep_self: DataFrame,
+    a: str = "doc_a",
+    b: str = "doc_b",
+    member: str = "doc_id",
+) -> DataFrame:
+    """Member-level pairs from the representative-level result of a pass
+    that collapsed exact duplicates first.
+
+    ``rep_pairs`` is (a, b, *metrics) over representative ids with a < b;
+    ``members`` maps every input row to its group, (member, rep_id);
+    ``rep_self`` is (rep_id, *metrics): the metrics of two identical
+    members, one row per group that emits its within-group pairs (a
+    caller filters it to drop groups whose self metric fails its cut).
+    Returns within ∪ cross: every member pair of one group carries the
+    group's self metrics, and every member pair across a rep pair carries
+    that pair's metrics, ordered by least/greatest so a < b still holds.
+    Both sides are id-only joins; nothing is recomputed per member."""
+    metrics = [c for c in rep_self.columns if c != "rep_id"]
+    m1 = members.select("rep_id", F.col(member).alias(a))
+    m2 = members.select(F.col("rep_id").alias("rep_b"), F.col(member).alias(b))
+    within = (
+        m1.join(m2, (F.col("rep_id") == F.col("rep_b")) & (F.col(a) < F.col(b)))
+        .join(rep_self, "rep_id")
+        .select(a, b, *metrics)
+    )
+    cross = (
+        rep_pairs.withColumnRenamed(a, "rep_a").withColumnRenamed(b, "rep_b")
+        .join(members.select(F.col("rep_id").alias("rep_a"), F.col(member).alias("da")), "rep_a")
+        .join(members.select(F.col("rep_id").alias("rep_b"), F.col(member).alias("db")), "rep_b")
+        .select(F.least("da", "db").alias(a), F.greatest("da", "db").alias(b), *metrics)
+    )
+    return within.unionByName(cross)
+
+
 def minhash_dedup_pairs(docs: DataFrame) -> DataFrame:
     """Frame-level core of q_dedup_minhash: near-dup pairs for ANY
     (doc_id, text) frame — the composable form pipeline.py chains after
@@ -180,37 +218,15 @@ def minhash_dedup_pairs(docs: DataFrame) -> DataFrame:
         F.col("jaccard") >= JACCARD_THRESHOLD
     )
 
-    # Within-group expansion: all ordered member pairs of each exact group,
-    # Jaccard 1.0 (identical non-empty shingle sets) — NULL (dropped) for
-    # empty sets, matching the uncollapsed verify's 0/0 result.
+    # Identical non-empty shingle sets have Jaccard 1.0; an empty set's
+    # 0/0 is NULL and drops, matching the uncollapsed verify.
     rep_j = base.select(
         F.col("doc_id").alias("rep_id"),
         F.round(
             F.when(F.size("sh") > 0, F.lit(1.0)).cast("double"), 6
         ).alias("jaccard"),
-    )
-    m1 = members.select("rep_id", F.col("doc_id").alias("doc_a"))
-    m2 = members.select(F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("doc_b"))
-    within = (
-        m1.join(m2, (F.col("rep_id") == F.col("rep_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .join(rep_j, "rep_id")
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-    # Cross-group expansion: every member pair across two near-dup groups
-    # carries the rep pair's Jaccard; least/greatest restores doc_a < doc_b.
-    cross = (
-        rep_pairs.withColumnRenamed("doc_a", "rep_a").withColumnRenamed("doc_b", "rep_b")
-        .join(members.select(F.col("rep_id").alias("rep_a"), F.col("doc_id").alias("da")), "rep_a")
-        .join(members.select(F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("db")), "rep_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    return within.unionByName(cross)
+    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    return _expand_exact_groups(rep_pairs, members, rep_j)
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,40 +242,21 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     (matching positions / 16) next to the exact shingle-set Jaccard and
     the absolute error — the measurement that justifies (or indicts)
     the 16-permutation budget before anyone trusts the dedup pass at
-    100 TB, where only the estimate is affordable corpus-wide.
-
-    Scale shape: the q_dedup_minhash candidate path (band-key shuffle
-    only) plus one 16-column equality sum per pair. ONE join tree: each
-    side carries its signatures AND its shingle set, so estimate and
-    exact Jaccard come from the same two joins — the expensive band-bucket
-    candidate subtree appears exactly once in the plan (ADVICE r4: the old
-    shape built it twice and relied on exchange reuse). At full scale the
-    audit runs on a candidate SAMPLE with identical plan shape.
-
-    r10: the same exact-duplicate collapse as minhash_dedup_pairs (the
-    hot-bucket guard — byte-identical copies would make this audit's
-    bucket self-join quadratic, with an even heavier per-pair verify);
-    metrics compute at rep level and expand by id-only joins. Identical
-    pairs carry n_match=16 / est=1.0 / jaccard=1.0 / abs_err=0.0 — the
-    values the uncollapsed verify computes for identical sigs and sets —
-    or all-NULL when the shared shingle set is null, matching the
-    uncollapsed 0/0 arithmetic."""
+    100 TB, where only the estimate is affordable corpus-wide."""
     t = load_tables(spark, sf_dir)
-    reps, members = _exact_collapse(t.documents)
-    base = _shingle_sets(reps)
-    # Materialized: sigs (shingle set + 16 MinHash folds) is referenced
-    # four times below (band melt, both audit sides, rep_metrics) and its
-    # per-row compute would re-run per reference — same reasoning and
-    # measurement class as minhash_dedup_pairs' base checkpoint (r16).
-    sigs = materialize_once(
-        base.select(
-            "doc_id",
-            "sh",
-            *[minhash_sig(F.col("sh"), s).alias(f"sig{s}") for s in range(N_MINHASH)],
-        )
-    )
-    cand = _lsh_candidates(sigs)  # sigs already carries sig0..15; the
-    # extra sh column is ignored by the band-key projection
+    return minhash_estimate_pairs(t.documents)
+
+
+def _minhash_estimates(sigs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_match, est_jaccard, jaccard, abs_err) for the LSH
+    candidate pairs of a (doc_id, sh, sig0..sig15) frame.
+
+    ONE join tree: each side carries its signatures AND its shingle set,
+    so estimate and exact Jaccard come from the same two joins — the
+    expensive band-bucket candidate subtree appears exactly once in the
+    plan (ADVICE r4: the old shape built it twice and relied on exchange
+    reuse)."""
+    cand = _lsh_candidates(sigs)  # the band-key projection ignores sh
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
         F.col("sh").alias("sh_a"),
@@ -281,7 +278,7 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     exact = F.round(inter.cast("double") / union, 6)
-    rep_rows = (
+    return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("n_match", n_match)
@@ -296,11 +293,34 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # Within-group expansion: identical docs agree on every signature and
-    # share one shingle set, so the audit metrics are constants per group
-    # (NULL-propagating when the set is null — the uncollapsed result).
-    # NULL-sh reps (NULL text): n_match 0 / est 0.0 (the oracle's CASE
-    # yields 0 per NULL-sig term), jaccard/abs_err NULL (0/0 arithmetic)
+
+def minhash_estimate_pairs(docs: DataFrame) -> DataFrame:
+    """Frame-level core of q_dedup_minhash_est for ANY (doc_id, text)
+    frame. Scale shape: the q_dedup_minhash candidate path (band-key
+    shuffle only) plus one 16-column equality sum per pair; at full scale
+    the audit runs on a candidate SAMPLE with identical plan shape.
+
+    The same exact-duplicate collapse as minhash_dedup_pairs (the
+    hot-bucket guard — byte-identical copies would make this audit's
+    bucket self-join quadratic, with an even heavier per-pair verify):
+    metrics compute at rep level and expand by id-only joins. Identical
+    pairs carry n_match=16 / est=1.0 / jaccard=1.0 / abs_err=0.0 — the
+    values the uncollapsed verify computes for identical sigs and sets."""
+    reps, members = _exact_collapse(docs)
+    base = _shingle_sets(reps)
+    # Materialized: sigs (shingle set + 16 MinHash folds) is referenced
+    # four times (band melt, both audit sides, rep_metrics) and its
+    # per-row compute would re-run per reference — same reasoning and
+    # measurement class as minhash_dedup_pairs' base checkpoint (r16).
+    sigs = materialize_once(
+        base.select(
+            "doc_id",
+            "sh",
+            *[minhash_sig(F.col("sh"), s).alias(f"sig{s}") for s in range(N_MINHASH)],
+        )
+    )
+    # a NULL shingle set would score as the oracle's CASE does: n_match 0,
+    # est 0.0, NULL jaccard/abs_err (0/0 arithmetic)
     has_sh = F.col("sh").isNotNull()
     rep_metrics = sigs.select(
         F.col("doc_id").alias("rep_id"),
@@ -309,27 +329,7 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.when(has_sh, F.lit(1.0)).cast("double"), 6).alias("jaccard"),
         F.round(F.when(has_sh, F.lit(0.0)).cast("double"), 6).alias("abs_err"),
     )
-    m1 = members.select("rep_id", F.col("doc_id").alias("doc_a"))
-    m2 = members.select(F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("doc_b"))
-    within = (
-        m1.join(m2, (F.col("rep_id") == F.col("rep_b")) & (F.col("doc_a") < F.col("doc_b")))
-        .join(rep_metrics, "rep_id")
-        .select("doc_a", "doc_b", "n_match", "est_jaccard", "jaccard", "abs_err")
-    )
-    cross = (
-        rep_rows.withColumnRenamed("doc_a", "rep_a").withColumnRenamed("doc_b", "rep_b")
-        .join(members.select(F.col("rep_id").alias("rep_a"), F.col("doc_id").alias("da")), "rep_a")
-        .join(members.select(F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("db")), "rep_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "n_match",
-            "est_jaccard",
-            "jaccard",
-            "abs_err",
-        )
-    )
-    return within.unionByName(cross)
+    return _expand_exact_groups(_minhash_estimates(sigs), members, rep_metrics)
 
 
 def _simhash_bit_vote(token_hash: Column, bit: int) -> Column:
@@ -526,8 +526,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; at 100 TB use the composed SemDeDup-style path
     (`embedding_dedup_blocked` below — learned cells + multi-probe
     blocking + this query's exact verify; measured recall 1.0 vs brute
-    at both fixture scales) or the label-cell variant
-    (`dedup_embedding_cell`) for corpora with a trusted label column.
+    at both fixture scales).
 
     Why the CHECKED query stays brute: cell-pruning was measured on the
     fixture (sf0.01, 2026-08-13) — IVF cells from label_centroids retain
@@ -535,22 +534,22 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's labels barely correlate with geometry. Swapping the checked
     semantics to cell-pruned would pass its own oracle while silently
     missing 86% of actual near-dups — the brute form is the honest oracle
-    baseline, and `dedup_embedding_cell`'s recall is pytest-tracked
-    (tests/test_dedup_variants.py) so the trade-off is machine-recorded.
+    baseline.
 
     Above similarity.BRUTE_MAX_ROWS embeddings (the table's Parquet footer
     row count, catalog.table_stats — no probe job, whatever the
     directory is named) the brute self-join REFUSES to run and routes to
     the learned-cell blocked path (VERDICT r4 item 5: enforce the switch
-    in code, not prose; r11: the route is embedding_dedup_blocked, whose
-    fixture recall vs brute is 1.0) — at that scale the O(n²) form is
-    not an option and any residual recall trade-off is the price of
-    admission, tracked by the recall tests. The route emits a warning:
-    the caller asked for the exact query and is getting blocked-candidate
-    semantics (recall 1.0 on the fixtures, but approximate by
-    construction), which must be observable, not silent (r12 ADVICE)."""
+    in code, not prose), whose fixture recall vs brute is 1.0 — at that
+    scale the O(n²) form is not an option and any residual recall
+    trade-off is the price of admission, tracked by the recall tests.
+    The route emits a warning: the caller asked for the exact query and
+    is getting blocked-candidate semantics (recall 1.0 on the fixtures,
+    but approximate by construction), which must be observable, not
+    silent (r12 ADVICE)."""
     from machinelearningalgomapreduce_spark.operators.similarity import BRUTE_MAX_ROWS
 
+    t = load_tables(spark, sf_dir)
     if table_stats(spark, sf_dir)["embeddings"].rows > BRUTE_MAX_ROWS:
         import warnings
 
@@ -562,11 +561,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "the exhaustive O(n²) enumeration",
             stacklevel=2,
         )
-        # learned-cell multi-probe blocking (recall 1.0 vs brute on the
-        # fixtures), not the label-cell variant — a big unlabeled corpus
-        # has no label column to seed cells from anyway
-        return embedding_dedup_blocked(spark, sf_dir)
-    t = load_tables(spark, sf_dir)
+        return embedding_dedup_blocked(spark, t.embeddings.select("vec_id", "embedding"))
     # Per-vector norms precomputed; each candidate pair pays only the dot.
     e = t.embeddings.select("vec_id", "embedding", norm(F.col("embedding"), EMBEDDING_DIM).alias("vnorm"))
     # The STREAMED side of the pairwise loop must not inherit the 1-partition
@@ -729,37 +724,12 @@ def _multi_probe_cells(
     )
 
 
-def _cell_blocked_embedding_pairs(
-    embeddings: DataFrame,
-    cents: DataFrame,
-    n_probe: int,
-    verify: bool = True,
-    threshold: float | None = None,
-) -> DataFrame:
-    """Shared candidate-generate + exact-verify core of the cell-blocked
-    embedding dedup family: assign every vector of the supplied
-    (vec_id, embedding) frame to its ``n_probe`` nearest cells from
-    ``cents`` (cell, centroid) — IVF multi-probe — generate pairs only
-    WITHIN a cell, then run the SAME rounded-cosine verify as brute
-    q_dedup_embedding. O(corpus × n_probe) candidate rows sharded by
-    cell, never all-pairs; the centroid frame is O(k·d) and broadcast.
-    ``verify=False`` returns the UNFILTERED candidate pairs (cos_sim
-    included) — the knob the containment tests use to assert the
-    candidate set stays O(Σ cell²), far under all-pairs."""
-    return _pairs_within_cells(
-        embeddings, _multi_probe_cells(embeddings, cents, n_probe), verify, threshold
-    )
-
-
-def _pairs_within_cells(
-    embeddings: DataFrame,
-    cells: DataFrame,
-    verify: bool = True,
-    threshold: float | None = None,
-) -> DataFrame:
-    """Pair-generate + exact-verify over a precomputed (vec_id, cell)
-    assignment — factored out (r12) so the flat and TWO-LEVEL quantizer
-    paths share one verify/distinct/threshold implementation."""
+def _pairs_within_cells(embeddings: DataFrame, cells: DataFrame) -> DataFrame:
+    """Unverified candidate pairs (id_a, id_b, cos_sim) over a (vec_id,
+    cell) assignment: pairs only WITHIN a cell, scored with the SAME
+    rounded cosine as brute q_dedup_embedding — O(corpus × n_probe)
+    candidate rows sharded by cell, never all-pairs. The flat and the
+    two-level quantizer both feed it."""
     e = embeddings.select("vec_id", "embedding", norm(F.col("embedding"), EMBEDDING_DIM).alias("vnorm"))
     ea = e.join(cells, "vec_id").alias("a")
     eb = e.join(cells, "vec_id").alias("b")
@@ -774,7 +744,7 @@ def _pairs_within_cells(
         ),
         6,
     )
-    pairs = (
+    return (
         ea.join(
             eb,
             (F.col("a.cell") == F.col("b.cell")) & (F.col("a.vec_id") < F.col("b.vec_id")),
@@ -786,12 +756,6 @@ def _pairs_within_cells(
         )
         .distinct()  # multi-probe pairs can share >1 cell
     )
-    if verify:
-        pairs = pairs.filter(
-            F.col("cos_sim")
-            >= (EMBEDDING_COSINE_THRESHOLD if threshold is None else threshold)
-        )
-    return pairs
 
 
 def _keyed_kmeans(
@@ -847,7 +811,6 @@ def _two_level_probe_cells(
     train: DataFrame,
     k: int,
     n_probe: int,
-    seed: int,
 ) -> DataFrame:
     """(vec_id, cell) via a TWO-LEVEL (IMI-style, public FAISS/Babenko
     2012 design) quantizer — the route past EMBED_DEDUP_K_MAX where a
@@ -867,18 +830,17 @@ def _two_level_probe_cells(
     which is what makes k ≈ n/512 affordable past the clamp."""
     import math
 
-    from machinelearningalgomapreduce_spark.operators.ml import kmeans_fit_frame
+    from machinelearningalgomapreduce_spark.operators.ml import (
+        centroid_frame,
+        kmeans_fit_frame,
+    )
 
     k1 = max(2, math.isqrt(k - 1) + 1)  # ceil(sqrt(k))
     k2 = -(-k // k1)
-    model, _cost = kmeans_fit_frame(train.select("vec_id", "embedding"), k=k1, seed=seed)
-    coarse = spark.createDataFrame(
-        [
-            (int(i), [round(float(x), 6) for x in c])
-            for i, c in enumerate(model.clusterCenters())
-        ],
-        "coarse bigint, centroid array<double>",
+    model, _cost = kmeans_fit_frame(
+        train.select("vec_id", "embedding"), k=k1, seed=EMBED_DEDUP_SEED
     )
+    coarse = centroid_frame(spark, model, "coarse")
     keyed = train.select(
         "vec_id", "embedding"
     ).join(
@@ -926,33 +888,6 @@ def _two_level_probe_cells(
     )
 
 
-def dedup_embedding_cell(
-    spark: SparkSession, sf_dir: str, n_probe: int = 2
-) -> DataFrame:
-    """Cell-bucketed embedding near-dup (library API, pytest-checked):
-    candidates blocked by the FIXTURE-LABEL centroids (label_centroids).
-
-    Kept as the labeled-corpus variant; its recall on THIS fixture is
-    honestly low (labels barely correlate with geometry — see
-    q_dedup_embedding's docstring) and pytest-tracked. The learned-
-    quantizer form below (``embedding_dedup_blocked``) is the variant a
-    100 TB corpus without labels actually runs — and the variant whose
-    CELL COUNT scales: label cells are a FIXED partition, so per-cell
-    all-pairs cost here grows n²/|labels| (fine for fine-grained label
-    domains, quadratic for coarse ones; the auto-k form holds cell size
-    constant instead).
-    """
-    from machinelearningalgomapreduce_spark.operators.ml import label_centroids
-
-    t = load_tables(spark, sf_dir)
-    cents = label_centroids(t.embeddings).select(
-        F.col("label").alias("cell"), "centroid"
-    )
-    return _cell_blocked_embedding_pairs(
-        t.embeddings.select("vec_id", "embedding"), cents, n_probe
-    )
-
-
 # Auto-k target cell size for embedding_dedup_blocked: total candidate
 # cost is Σ_cells C(cell·n_probe, 2) ≈ n_probe²·n²/(2k), so holding the
 # CELL size fixed (k = n / target) keeps the total LINEAR in n — a fixed
@@ -983,6 +918,16 @@ EMBED_DEDUP_TRAIN_PER_CELL = 32
 # linear candidate budget it guarantees) holds at any n instead of
 # silently regrowing per-cell cost at a clamped k.
 EMBED_DEDUP_K_MAX = 65_536
+# k-means seed of both quantizers: a fixed seed keeps the trained cells,
+# and with them the candidate set, the same run to run.
+EMBED_DEDUP_SEED = 42
+
+
+def auto_k(n: int) -> int:
+    """Cell count for ``n`` vectors: a fixed TARGET CELL SIZE
+    (EMBED_DEDUP_CELL_TARGET), so candidate volume stays linear in n; the
+    floor of 10 keeps the fixtures' measured recall-1.0 configuration."""
+    return max(10, -(-n // EMBED_DEDUP_CELL_TARGET))
 
 
 def auto_n_probe(k: int) -> int:
@@ -1004,232 +949,68 @@ def auto_n_probe(k: int) -> int:
     small constant, silently regrowing the exact quadratic the blocking
     exists to kill (the same failure class as r11's fixed-k and
     train-cap findings). Capped at 6 the total stays LINEAR in n
-    (≤ 256·36 candidate rows per vector). The residual decay beyond the
-    cap on genuinely distinct geometries is the corpus owner's explicit
-    n_probe= knob; the EXACT-DUPLICATE mass — what actually drove the
-    measured tier decay, each copy splitting across finer cells — is
-    eliminated structurally by the rep-collapse in
-    ``embedding_dedup_blocked_frame`` (r12), not by probes."""
+    (≤ 256·36 candidate rows per vector). The EXACT-DUPLICATE mass —
+    what actually drove the measured tier decay, each copy splitting
+    across finer cells — is eliminated structurally by
+    ``embedding_dedup_blocked``'s rep-collapse, not by probes."""
     import math
 
     return min(k, max(3, min(6, math.ceil(0.6 * math.sqrt(k)))))
 
 
-# Measured probe→recall calibration (10×-tier audit geometry, k=98 —
-# the WORST measured case: fine cells over self-similar data; fixture
-# k=10 measured 1.0 at probe 3). Powers n_probe_for_recall.
-PROBE_RECALL_CURVE = ((3, 0.778), (4, 0.868), (5, 0.944), (6, 0.993))
+def _vector_reps(embeddings: DataFrame) -> DataFrame:
+    """One (embedding, vec_id) row per distinct vector, vec_id = the min
+    member id. groupBy on the raw array<double> column is exact float
+    equality — one linear shuffle."""
+    return embeddings.groupBy("embedding").agg(F.min("vec_id").alias("vec_id"))
 
 
-def n_probe_for_recall(target_recall: float) -> int:
-    """The explicit target_recall lane of the r12 probe policy: smallest
-    probe budget whose MEASURED audit-tier recall meets the target
-    (conservative — the curve was measured on the worst geometry probed
-    so far, and exact-dup mass is handled structurally by the
-    rep-collapse, not by probes). A target above the measured ceiling
-    (0.993 at probe 6) raises: no probe budget was MEASURED to deliver
-    it — use the brute form or re-measure the curve on the real corpus
-    geometry before promising a number."""
-    if not 0.0 < target_recall <= 1.0:
-        raise ValueError(f"target_recall must be in (0, 1], got {target_recall}")
-    for n_probe, recall in PROBE_RECALL_CURVE:
-        if recall >= target_recall:
-            return n_probe
-    raise ValueError(
-        f"no measured probe budget delivers recall {target_recall} "
-        f"(curve ceiling {PROBE_RECALL_CURVE[-1][1]} at n_probe "
-        f"{PROBE_RECALL_CURVE[-1][0]}); use the brute q_dedup_embedding "
-        "form or re-measure PROBE_RECALL_CURVE on your corpus"
-    )
-
-
-def embedding_dedup_blocked(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int | None = None,
-    n_probe: int | None = None,
-    seed: int = 42,
-    verify: bool = True,
-    target_recall: float | None = None,
-) -> DataFrame:
-    """SemDeDup-style blocked embedding dedup (VERDICT r10 item 3): the
-    composed 100 TB scale path for q_dedup_embedding, assembled from the
-    pieces that previously only existed separately.
-
-    Plan: (1) train a coarse quantizer on the embeddings themselves with
-    kmeans_fit (the learned_ivf_ann discipline — no label column needed,
-    centroids rounded to 6 for engine-stable assignment); (2) assign each
-    vector to its ``n_probe`` nearest cells (multi-probe catches near-dup
-    pairs that straddle a cell boundary — the single-cell SemDeDup form
-    is the n_probe=1 special case); (3) candidate pairs only WITHIN a
-    cell; (4) the exact rounded-cosine verify of brute q_dedup_embedding
-    over the candidates — so every emitted pair is TRUE by construction,
-    and the only possible error is a MISSED pair whose members share no
-    probed cell.
-
-    Scale shape: quantizer training is the k-means iterate (broadcast
-    k×d centroids, one agg per iteration); assignment is one broadcast
-    crossJoin + per-vector top-n_probe; the pair join shuffles on cell
-    with per-cell work O(cell²) — cells are data-sized/k, so the
-    all-pairs O(n²) never materializes. Past EMBED_DEDUP_K_MAX (r12,
-    > ~33.5M distinct reps) the quantizer goes TWO-LEVEL
-    (_two_level_probe_cells: √k coarse + keyed-kmeans sub-cells, O(n·√k)
-    assignment) so the 512-target cell size holds at any n. Recall vs
-    the brute baseline and candidate-count containment are
-    pytest-asserted (tests/test_dedup_variants.py).
-
-    Defaults measured on the fixtures (2026-08-15, sf0.001 + sf0.01):
-    k=10/n_probe=3 recovers ALL brute pairs (recall 1.0, 0 invented) at
-    both scales; n_probe=2 measured 0.857 — boundary-straddling pairs
-    need the third probe on this geometry. At the 10× tier (50k vectors,
-    auto-k=98 cells, brute ground truth on one key-offset copy) the
-    measured probe curve is n_probe 3/4/5/6 → recall 0.778/0.868/0.944/
-    0.993, ALWAYS 0 invented, runtime ~flat (31→38 s — the verify is
-    cheap next to quantizer training): more cells straddle more
-    boundaries, and n_probe is the recall lever with near-linear
-    candidate growth (n_probe²/k of all-pairs).
-
-    r12 closes the decay two ways. (1) STRUCTURALLY: identical
-    embeddings collapse to a representative before blocking (see
-    ``embedding_dedup_blocked_frame``) — the measured tier decay was
-    exact copies straddling ever-finer cells; with collapse the 10× tier
-    re-audit (2026-08-16, 20k vectors → 2000 reps) measures recall
-    0.9653 at the auto defaults with 0 invented pairs and the end-to-end
-    run 5.8× faster (342 s → 58.5 s — the copies never enter the
-    blocked join). (2) POLICY:
-    n_probe=None now auto-scales ~√k with the cell count, BOUNDED at 6
-    so candidate volume stays linear (``auto_n_probe`` — an unbounded
-    √k default would regrow the quadratic; see its docstring for the
-    substitution). A fixed probe count is still accepted for corpus
-    owners who measured their own geometry; re-measure on the real
-    corpus before committing a probe budget."""
-    return embedding_dedup_blocked_frame(
-        spark,
-        load_tables(spark, sf_dir).embeddings.select("vec_id", "embedding"),
-        k=k,
-        n_probe=n_probe,
-        seed=seed,
-        verify=verify,
-        target_recall=target_recall,
-    )
-
-
-def embedding_dedup_blocked_frame(
+def _blocked_candidates(
     spark: SparkSession,
     embeddings: DataFrame,
     k: int | None = None,
     n_probe: int | None = None,
-    seed: int = 42,
-    verify: bool = True,
-    threshold: float | None = None,
-    target_recall: float | None = None,
 ) -> DataFrame:
-    """Frame-parameterized form of ``embedding_dedup_blocked`` (r11
-    review): quantizer training AND candidate blocking run over exactly
-    the supplied (vec_id, embedding) frame — the pipeline's semantic
-    stage passes its curation SURVIVORS, so docs already dropped by the
-    quality gate or text dedup never pay the kmeans/blocking/verify cost
-    (at 100 TB the blocking pass dominates; filtering result pairs after
-    the fact would waste it).
+    """UNVERIFIED representative-level candidate pairs (id_a, id_b,
+    cos_sim) of embedding_dedup_blocked: the blocked join's whole volume,
+    which the candidate-budget audits in tests and tools count. ``k`` and
+    ``n_probe`` default to auto_k / auto_n_probe; the audits pass them to
+    measure the budget law. The pairs are NOT expanded to members:
+    unverified candidates × duplicate mass² would be quadratic in the
+    copy count, and a within-group pair is never a candidate here.
 
-    ``threshold`` (r12, verify=True only): caller-supplied cosine cutoff
-    replacing EMBEDDING_COSINE_THRESHOLD — applied at the REP level
-    (sound: a member pair's cosine is bit-identical to its rep pair's),
-    so only TRUE pairs pay the expansion joins. This replaced the
-    streaming sink's old verify=False-then-filter pattern, which after
-    the rep-collapse would have missed EXACT-duplicate pairs entirely
-    (rep-level candidates carry no within-group pairs — the r12
-    regression caught by review, pinned by
-    test_blocked_frame_threshold_recovers_exact_dups).
+    Exact-duplicate embeddings collapse to a min-id representative
+    BEFORE any quantizer or blocking work — the hot-bucket guard the
+    minhash path has too (_exact_collapse). The blocked join never sees
+    a hot cell made of one repeated vector, quantizer training is not
+    skewed toward high-multiplicity points, and the measured 10×/30×-tier
+    recall decay at fixed probes (0.778/0.681) disappears structurally:
+    it was exact copies straddling ever-finer cells."""
+    from machinelearningalgomapreduce_spark.operators.ml import (
+        centroid_frame,
+        kmeans_fit_frame,
+    )
 
-    ``verify=False`` returns the UNFILTERED REP-LEVEL candidate set —
-    strictly a budget-audit knob now (the containment tests bound the
-    blocked join's volume with it); it deliberately does NOT expand,
-    because expanding unverified candidates multiplies by the duplicate
-    mass squared. Because this meaning CHANGED in r12 (it used to return
-    doc-level candidates, and the old verify=False-then-filter pattern
-    now silently loses every exact-duplicate pair), the call emits a
-    loud UserWarning naming the break and the threshold= lane — the
-    regression mode is silent missed duplicates, so the knob cannot stay
-    quiet (r12 ADVICE). The warning fires ONCE PER PROCESS (r13 ADVICE):
-    the endorsed budget-audit callers run verify=False in bench loops,
-    and per-call repetition of an already-acknowledged semantic note is
-    noise, not signal — first use warns, the rest stay quiet. Keyed per
-    CALL SITE (caller file:line — r14 ADVICE): one bench loop consuming
-    the warning must not hide the semantic break from a second, distinct
-    caller elsewhere in a long-lived process."""
-    from machinelearningalgomapreduce_spark.operators.ml import kmeans_fit_frame
-
-    if not verify:
-        import inspect
-        import warnings
-
-        caller = inspect.stack()[1]
-        site = (caller.filename, caller.lineno)
-        del caller
-    if not verify and site not in _VERIFY_FALSE_WARNED_SITES:
-        _VERIFY_FALSE_WARNED_SITES.add(site)
-        warnings.warn(
-            "embedding_dedup_blocked_frame(verify=False) returns "
-            "REP-LEVEL candidates (identical embeddings collapse to one "
-            "representative since r12): filtering them by cosine does "
-            "NOT reproduce verify=True — exact-duplicate pairs are "
-            "absent. Pass threshold= for a caller-supplied cutoff with "
-            "exact member expansion; verify=False is a blocking-budget "
-            "audit knob only.",
-            stacklevel=2,
-        )
-
-    # Evaluation-count note (r11 review): the frame is read by the count
-    # below, the k-means fit (which PERSISTS its input internally for
-    # its ~20 iterations — MLlib's handlePersistence), and the blocking
-    # pass. A table-backed frame pays two cheap columnar rescans; a
-    # JOIN-HEAVY caller lineage should go through materialize_once in the
-    # caller first (the pipeline's semantic stage and the streaming sink
-    # both do) — checkpointing unconditionally here would materialize a
-    # full corpus copy at 100 TB for callers whose input is already a
-    # plain scan.
-    # r12: EXACT-collapse identical embeddings to a min-id representative
-    # BEFORE any quantizer or blocking work — the same hot-bucket guard
-    # the minhash path has had since r10 (_exact_collapse). Three wins:
-    # (1) the blocked join never sees a hot cell made of one repeated
-    # vector (copy-heavy corpora drop from O(copies²) join rows to
-    # O(reps), with the inherent O(copies²) OUTPUT pairs reconstructed
-    # by expansion, not by the d-dim verify); (2) quantizer training is
-    # not skewed toward high-multiplicity points; (3) the measured
-    # 10×/30×-tier recall decay at fixed probes (0.778/0.681) disappears
-    # STRUCTURALLY — it was exact copies straddling ever-finer cells,
-    # and copies now collapse to ONE blocked participant. The expansion
-    # is exact, not approximate: identical vectors make a member pair's
-    # cosine bit-identical to its rep pair's cosine. groupBy on the raw
-    # array<double> column is exact float equality — one linear shuffle.
-    reps = embeddings.groupBy("embedding").agg(F.min("vec_id").alias("vec_id"))
+    reps = _vector_reps(embeddings)
     # One count pays for the empty-corpus guard (MLlib KMeans crashes on
     # zero rows; a fewer-than-k corpus is fine — min(n, k) centers), the
     # auto-k sizing, and the training-stride sizing — all on the
     # COLLAPSED rep count, the frame the quantizer and blocking actually
-    # see. An empty corpus has no pairs by definition; return the empty
-    # contract frame so the empty-tables sweep and empty curation stages
-    # stay green.
+    # see.
     n = reps.count()
     if n == 0:
-        return embeddings.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cos_sim double"
-        )
+        return spark.createDataFrame([], "id_a long, id_b long, cos_sim double")
     if k is None:
-        # fixed TARGET CELL SIZE, so candidate volume stays linear in n
-        # (see EMBED_DEDUP_CELL_TARGET); floor of 10 keeps the fixture
-        # behavior (and its measured recall-1.0 point) unchanged
-        k = max(10, -(-n // EMBED_DEDUP_CELL_TARGET))
+        k = auto_k(n)
     # Deterministic hash-sample for training. The TARGET scales with k
     # (EMBED_DEDUP_TRAIN_PER_CELL · k, floored at EMBED_DEDUP_TRAIN_CAP):
     # a flat cap would starve KMeans of centers once auto-k crosses the
-    # cap (r12 ADVICE). Sampling keys on xxhash64(vec_id), NOT vec_id
-    # itself — a raw pmod assumes dense sequential ids and silently
-    # skews (or empties) the sample on sparse/strided id spaces (r12
-    # ADVICE); the hash is partition-layout-independent, so trained
-    # cells stay stable run-to-run. Below the target the sample IS the
-    # corpus and nothing changes (the fixtures, in particular).
+    # cap. Sampling keys on xxhash64(vec_id), NOT vec_id itself — a raw
+    # pmod assumes dense sequential ids and silently skews (or empties)
+    # the sample on sparse/strided id spaces; the hash is
+    # partition-layout-independent, so trained cells stay stable
+    # run-to-run. Below the target the sample IS the corpus and nothing
+    # changes (the fixtures, in particular).
     train_target = max(EMBED_DEDUP_TRAIN_CAP, EMBED_DEDUP_TRAIN_PER_CELL * k)
     stride = max(1, n // train_target)
     if stride == 1:
@@ -1243,50 +1024,85 @@ def embedding_dedup_blocked_frame(
             # rather than crashing MLlib or silently degrading cells.
             train, train_n = reps, n
     k = min(k, train_n)  # KMeans cannot produce more centers than points
-    if target_recall is not None:
-        if n_probe is not None:
-            raise ValueError("pass n_probe OR target_recall, not both")
-        # explicit lane: the smallest MEASURED probe budget meeting the
-        # target on the audit curve (raises above the measured ceiling)
-        n_probe = min(k, n_probe_for_recall(target_recall))
-    elif n_probe is None:
-        # recall-targeting default: probes scale ~√k with the cell count,
-        # bounded so candidate volume stays linear (see auto_n_probe)
+    if n_probe is None:
+        # probes scale ~√k with the cell count, bounded so candidate
+        # volume stays linear (see auto_n_probe)
         n_probe = auto_n_probe(k)
     rep_frame = reps.select("vec_id", "embedding")
     if k > EMBED_DEDUP_K_MAX:
         # Past the flat-Lloyd's practicality ceiling (> ~33.5M reps at
-        # the 512 target) the quantizer goes TWO-LEVEL (r12): √k coarse
-        # cells, then keyed k-means for √k sub-cells per coarse cell,
-        # two-stage multi-probe assignment — O(n·√k) distance work keeps
-        # k ≈ n/512 (and with it the linear candidate budget) affordable
-        # where the old code clamped k and let per-cell cost regrow.
-        cells = _two_level_probe_cells(spark, rep_frame, train, k, n_probe, seed)
-        rep_pairs = _pairs_within_cells(rep_frame, cells, verify, threshold)
+        # the 512 target) the quantizer goes TWO-LEVEL: √k coarse cells,
+        # then keyed k-means for √k sub-cells per coarse cell, two-stage
+        # multi-probe assignment — O(n·√k) distance work keeps k ≈ n/512
+        # (and with it the linear candidate budget) affordable.
+        cells = _two_level_probe_cells(spark, rep_frame, train, k, n_probe)
     else:
         model, _cost = kmeans_fit_frame(
-            train.select("vec_id", "embedding"), k=k, seed=seed
+            train.select("vec_id", "embedding"), k=k, seed=EMBED_DEDUP_SEED
         )
-        rows = [
-            (int(i), [round(float(x), 6) for x in c])
-            for i, c in enumerate(model.clusterCenters())
-        ]
-        cents = spark.createDataFrame(rows, "cell bigint, centroid array<double>")
-        rep_pairs = _cell_blocked_embedding_pairs(
-            rep_frame, cents, n_probe, verify, threshold
-        )
-    if not verify:
-        # budget-audit knob: the UNFILTERED rep-level candidate set — the
-        # join volume the containment assertions bound. No expansion:
-        # unverified candidates × duplicate-mass² would be quadratic in
-        # the copy count, and the budget being audited is the join's.
-        return rep_pairs
-    thr = EMBEDDING_COSINE_THRESHOLD if threshold is None else threshold
-    # Expand rep-level verified pairs back to member pairs. Identical
-    # vectors ⇒ identical arithmetic ⇒ the expanded cosine IS the rep
-    # cosine (and a within-group pair's cosine is the rep's
-    # self-cosine: 1.0 after rounding, or NULL for a zero-norm vector —
-    # dropped by the threshold, exactly matching the brute form).
+        cells = _multi_probe_cells(rep_frame, centroid_frame(spark, model, "cell"), n_probe)
+    return _pairs_within_cells(rep_frame, cells)
+
+
+def embedding_dedup_blocked(
+    spark: SparkSession,
+    embeddings: DataFrame,
+    threshold: float = EMBEDDING_COSINE_THRESHOLD,
+) -> DataFrame:
+    """SemDeDup-style blocked embedding near-dup pairs (id_a, id_b,
+    cos_sim) over a (vec_id, embedding) frame: the 100 TB path of
+    q_dedup_embedding, which routes here above similarity.BRUTE_MAX_ROWS.
+    The pipeline's semantic stage passes its curation SURVIVORS, so docs
+    already dropped never pay the quantizer, blocking or verify cost.
+
+    Plan: (1) identical embeddings collapse to a min-id representative;
+    (2) a k-means quantizer (kmeans_fit_frame, centroids rounded to 6 for
+    engine-stable assignment) trains on a hash sample of the
+    representatives; (3) each representative goes to its n_probe nearest
+    cells (multi-probe catches near-dup pairs that straddle a cell
+    boundary); (4) candidate pairs only WITHIN a cell
+    (_blocked_candidates), verified with brute q_dedup_embedding's
+    rounded cosine ≥ ``threshold`` at the rep level, so only true pairs
+    pay the expansion joins; (5) verified pairs expand to member pairs
+    (_expand_exact_groups). Identical vectors make a member pair's cosine
+    bit-identical to its rep pair's, and a within-group pair's cosine is
+    the rep's self-cosine (1.0 after rounding, or NULL for a zero-norm
+    vector — dropped, exactly as in the brute form). Every emitted pair
+    is TRUE by construction; the only possible error is a MISSED pair
+    whose members share no probed cell.
+
+    Scale shape: k = auto_k(n) holds the cell size near
+    EMBED_DEDUP_CELL_TARGET and n_probe = auto_n_probe(k) is bounded at
+    6, so the candidate volume (~n_probe²/k of all-pairs) stays linear in
+    n; training runs on a sample of max(EMBED_DEDUP_TRAIN_CAP,
+    EMBED_DEDUP_TRAIN_PER_CELL·k) reps; past EMBED_DEDUP_K_MAX cells
+    (> ~33.5M reps) the quantizer goes TWO-LEVEL (_two_level_probe_cells:
+    √k coarse + keyed-kmeans sub-cells, O(n·√k) assignment), so the
+    512-target cell size holds at any n.
+
+    Defaults measured on the fixtures (2026-08-15, sf0.001 + sf0.01):
+    k=10/n_probe=3 recovers ALL brute pairs (recall 1.0, 0 invented) at
+    both scales; n_probe=2 measured 0.857 — boundary-straddling pairs
+    need the third probe on this geometry. At the 10× tier (50k vectors,
+    auto-k=98 cells, brute ground truth on one key-offset copy, before
+    the rep-collapse) the measured probe curve was n_probe 3/4/5/6 →
+    recall 0.778/0.868/0.944/0.993, ALWAYS 0 invented, runtime ~flat
+    (31→38 s — the verify is cheap next to quantizer training). With the
+    collapse the 10× tier (20k vectors → 2000 reps, 2026-08-16) measures
+    recall 0.9653 at the auto defaults with 0 invented pairs and the
+    end-to-end run 5.8× faster (342 s → 58.5 s). Re-measure on the real
+    corpus geometry before relying on a recall figure.
+
+    Evaluation count: the frame is read by the rep count, the k-means
+    fit (MLlib persists its input for its iterations) and the blocking
+    pass. A join-heavy caller lineage should go through materialize_once
+    first (the pipeline's semantic stage and the streaming sink both
+    do); materializing unconditionally here would copy the corpus at
+    100 TB for callers whose input is already a plain scan."""
+    reps = _vector_reps(embeddings)
+    rep_pairs = _blocked_candidates(spark, embeddings).filter(
+        F.col("cos_sim") >= threshold
+    )
     members = embeddings.join(
         reps.select("embedding", F.col("vec_id").alias("rep_id")), "embedding"
     ).select("rep_id", "vec_id")
@@ -1300,33 +1116,8 @@ def embedding_dedup_blocked_frame(
             ),
             6,
         ).alias("cos_sim"),
-    )
-    within = (
-        members.select("rep_id", F.col("vec_id").alias("id_a"))
-        .join(
-            members.select(F.col("rep_id").alias("r2"), F.col("vec_id").alias("id_b")),
-            (F.col("rep_id") == F.col("r2")) & (F.col("id_a") < F.col("id_b")),
-        )
-        .join(rep_self, "rep_id")
-        .filter(F.col("cos_sim") >= thr)
-        .select("id_a", "id_b", "cos_sim")
-    )
-    cross = (
-        rep_pairs.join(
-            members.select(F.col("rep_id").alias("id_a"), F.col("vec_id").alias("ma")),
-            "id_a",
-        )
-        .join(
-            members.select(F.col("rep_id").alias("id_b"), F.col("vec_id").alias("mb")),
-            "id_b",
-        )
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-            "cos_sim",
-        )
-    )
-    return within.unionByName(cross)
+    ).filter(F.col("cos_sim") >= threshold)
+    return _expand_exact_groups(rep_pairs, members, rep_self, "id_a", "id_b", "vec_id")
 
 
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str, threshold: float = 0.35):
@@ -1356,27 +1147,12 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str, threshold: float = 
     rep_pairs = pairs.filter(
         F.col("datasetA.doc_id") < F.col("datasetB.doc_id")
     ).select(
-        F.col("datasetA.doc_id").alias("rep_a"),
-        F.col("datasetB.doc_id").alias("rep_b"),
+        F.col("datasetA.doc_id").alias("doc_a"),
+        F.col("datasetB.doc_id").alias("doc_b"),
         "jaccard_dist",
     )
-    m1 = members.select("rep_id", F.col("doc_id").alias("doc_a"))
-    m2 = members.select(F.col("rep_id").alias("rep_b_"), F.col("doc_id").alias("doc_b"))
-    within = (
-        m1.join(m2, (F.col("rep_id") == F.col("rep_b_")) & (F.col("doc_a") < F.col("doc_b")))
-        .select("doc_a", "doc_b", F.lit(0.0).alias("jaccard_dist"))
-    )
-    cross = (
-        rep_pairs
-        .join(members.select(F.col("rep_id").alias("rep_a"), F.col("doc_id").alias("da")), "rep_a")
-        .join(members.select(F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("db")), "rep_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard_dist",
-        )
-    )
-    return within.unionByName(cross)
+    rep_self = reps.select(F.col("doc_id").alias("rep_id"), F.lit(0.0).alias("jaccard_dist"))
+    return _expand_exact_groups(rep_pairs, members, rep_self)
 
 
 QUERIES = {

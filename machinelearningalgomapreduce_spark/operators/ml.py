@@ -190,7 +190,7 @@ def knn_ann(
     here (the cold-start shape, quantizer cost included).
 
     ``k_cells=None`` auto-scales with the corpus exactly like the
-    blocked-dedup tier (cells targeted at EMBED_DEDUP_CELL_TARGET rows,
+    blocked-dedup tier (dedup.auto_k: cells targeted at 512 rows,
     so candidate volume stays ~n·n_probe·512, linear in n); a FIXED cell
     count regrows toward all-pairs as the corpus grows (measured: fixed
     k=10 at 2000 vectors scanned 40% of the corpus per query for 0.72
@@ -234,7 +234,7 @@ def knn_ann(
     builds its indexes from the tier it scores, and the soak tests pin
     index↔corpus pairing."""
     from machinelearningalgomapreduce_spark.operators.dedup import (
-        EMBED_DEDUP_CELL_TARGET,
+        auto_k,
         auto_n_probe,
     )
     from machinelearningalgomapreduce_spark.operators.similarity import (
@@ -285,7 +285,7 @@ def knn_ann(
                 k_cells = centroids.count()
             else:
                 n = int(table_stats(spark, sf_dir)["embeddings"].rows)
-                k_cells = max(10, -(-n // EMBED_DEDUP_CELL_TARGET))
+                k_cells = auto_k(n)
         np_ = auto_n_probe(k_cells) if n_probe is None else n_probe
         if centroids is None:
             nn = learned_ivf_ann(
@@ -716,6 +716,18 @@ def kmeans_fit_frame(embeddings: DataFrame, k: int = 10, seed: int = 42):
     )
     model = KMeans(k=k, seed=seed, maxIter=20).fit(data)
     return model, model.summary.trainingCost
+
+
+def centroid_frame(spark: SparkSession, model, id_col: str) -> DataFrame:
+    """(id_col bigint, centroid array<double>) from a fitted MLlib k-means
+    model: one row per center, ids in center order, coordinates rounded
+    to 6 (the label_centroids determinism discipline) so cell assignment
+    is engine-stable. The frame is k rows, small enough to broadcast."""
+    rows = [
+        (int(i), [round(float(x), 6) for x in c])
+        for i, c in enumerate(model.clusterCenters())
+    ]
+    return spark.createDataFrame(rows, f"{id_col} bigint, centroid array<double>")
 
 
 def naive_bayes_fit(spark: SparkSession, sf_dir: str):

@@ -229,14 +229,10 @@ def learned_ivf_ann(
     downstream is the identical ivf_ann plan, so the 100 TB shape is
     unchanged. ann_recall_frame quantifies the swap: the pytest tier
     asserts learned cells recall at least as well as label cells."""
-    from machinelearningalgomapreduce_spark.operators.ml import kmeans_fit
+    from machinelearningalgomapreduce_spark.operators.ml import centroid_frame, kmeans_fit
 
     model, _cost = kmeans_fit(spark, sf_dir, k=k, seed=seed)
-    rows = [
-        (int(i), [round(float(x), 6) for x in c])
-        for i, c in enumerate(model.clusterCenters())
-    ]
-    cents = spark.createDataFrame(rows, "label bigint, centroid array<double>")
+    cents = centroid_frame(spark, model, "label")
     return ivf_ann(spark, sf_dir, cents, n_probe, stride=stride, topk=topk)
 
 

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from machinelearningalgomapreduce_spark.functions.metrics import with_quality_counters
 from machinelearningalgomapreduce_spark.functions.storage import materialize_once
 from machinelearningalgomapreduce_spark.operators.dedup import (
-    embedding_dedup_blocked_frame,
+    embedding_dedup_blocked,
     keep_best_frame,
     min_label_clusters,
     minhash_dedup_pairs,
@@ -81,9 +81,9 @@ def training_pipeline(
 
     ``semantic_dedup=True`` inserts the SemDeDup-style stage between the
     text near-dup pass and decontamination: embedding-cosine near-dup
-    pairs from dedup.embedding_dedup_blocked (learned IVF cells +
-    multi-probe blocking + exact verify — the 100 TB shape, never
-    all-pairs), restricted to the still-surviving docs, clustered by the
+    pairs from dedup.embedding_dedup_blocked run over the still-surviving
+    docs' embeddings only (learned IVF cells + multi-probe blocking +
+    exact verify — the 100 TB shape, never all-pairs), clustered by the
     same CC fixpoint, with the same quality-aware survivorship. Text
     dedup catches copies; the semantic stage catches paraphrases the
     shingle space misses — the standard curation order (SemDeDup runs
@@ -142,7 +142,7 @@ def training_pipeline(
                 "left_semi",
             )
         )
-        sem_pairs = embedding_dedup_blocked_frame(spark, survivors_emb).select(
+        sem_pairs = embedding_dedup_blocked(spark, survivors_emb).select(
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
         )
         sem_clusters = min_label_clusters(sem_pairs).select(

@@ -322,7 +322,7 @@ def _semantic_ingest_batch(
        ``index.applied_batches()``, BOTH writes below completed (output
        is written before the index refresh), so the whole batch no-ops;
     2. within-batch collapse — blocked near-dup pairs over the batch
-       (dedup.embedding_dedup_blocked_frame) → CC clusters → min-vec_id
+       (dedup.embedding_dedup_blocked) → CC clusters → min-vec_id
        survivor per cluster (deterministic);
     3. cross-batch admission — survivors query the index
        (k=1, exclude_self on vec_id); a top-1 cosine ≥ threshold means a
@@ -353,7 +353,7 @@ def _semantic_ingest_batch(
     the BATCH (cells auto-sized) + one index probe reading ~n_probe/k of
     the index via partition pruning; the index grows O(accepted)."""
     from machinelearningalgomapreduce_spark.operators.dedup import (
-        embedding_dedup_blocked_frame,
+        embedding_dedup_blocked,
         min_label_clusters,
     )
 
@@ -365,18 +365,16 @@ def _semantic_ingest_batch(
             return  # replay of a fully-committed epoch — both writes done
         batch = materialize_once(batch.select("vec_id", "embedding"))
         # Within-batch near-dup collapse (min vec_id per CC cluster) at
-        # the CALLER's threshold, passed INTO the operator (r12): the
-        # old verify=False-then-filter pattern read rep-level candidates
-        # only, which after the rep-collapse carried no within-group
-        # pairs — two EXACT-duplicate vectors in one batch would both
-        # have been admitted. threshold= filters at the rep level and
-        # expands member pairs (incl. exact-dup pairs at cos 1.0), so a
-        # non-default threshold still governs BOTH stages (r11 review).
+        # the CALLER's threshold, passed INTO the operator: it filters at
+        # the rep level and then expands member pairs, exact-duplicate
+        # pairs at cos 1.0 included — filtering rep-level pairs here
+        # would miss those, and two exact copies in one batch would both
+        # be admitted. A non-default threshold so governs BOTH stages.
         # Checkpoint the pair plan: the CC loop re-walks its edge
         # lineage every iteration, and the kmeans-assignment self-join
         # is far too heavy to recompute per iteration.
         pairs = materialize_once(
-            embedding_dedup_blocked_frame(spark, batch, threshold=threshold)
+            embedding_dedup_blocked(spark, batch, threshold=threshold)
             .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         )
         # empty pair frame short-circuits inside the CC fixpoint (empty

@@ -70,25 +70,6 @@ def test_salted_join_rejects_outer_forms(spark, sf_dir):
             salted_join(t.orders, t.customer, "o_custkey", how=how)
 
 
-def test_dedup_embedding_cell_is_subset_with_tracked_recall(spark, sf_dir):
-    """The cell-bucketed scale path returns a SUBSET of the brute pairs
-    (same verify), and its fixture recall is recorded here: the label-seeded
-    cells barely correlate with cosine geometry, so recall is low BY
-    MEASUREMENT — the reason the checked q_dedup_embedding stays brute."""
-    from machinelearningalgomapreduce_spark.operators.dedup import (
-        dedup_embedding_cell,
-        q_dedup_embedding,
-    )
-
-    brute = {(r.id_a, r.id_b) for r in q_dedup_embedding(spark, sf_dir).collect()}
-    cell = {(r.id_a, r.id_b) for r in dedup_embedding_cell(spark, sf_dir, n_probe=2).collect()}
-    assert cell <= brute, "cell path must never invent pairs"
-    if brute:
-        recall = len(cell) / len(brute)
-        # Documented floor, not a quality claim: sf0.01 measured 7/14.
-        assert recall >= 0.2, f"recall collapsed below the measured floor: {recall:.2f}"
-
-
 def test_ngram_banding_splits_skewed_block(spark):
     """A constructed hot-shingle corpus: every doc shares the same leading
     3-shingle (one global block), doc lengths span bands. The compound
@@ -229,27 +210,34 @@ def test_lsh_hot_bucket_candidates_stay_linear(spark):
 
 
 def test_lsh_exact_collapse_matches_uncollapsed_plan(spark):
-    """Bit-parity of the collapsed pipeline vs the pre-r10 UNCOLLAPSED plan
+    """Bit-parity of the collapsed pipelines vs the UNCOLLAPSED plans
     (candidates over every doc, no rep expansion) on an adversarial frame:
-    empty strings (shingle set [""], Jaccard 1.0 pairs), exact copies,
-    near-dups, and unrelated docs. Same pairs, same rounded Jaccards."""
+    empty strings (shingle set [""], Jaccard 1.0 pairs), a NULL text,
+    exact copies, near-dups, and unrelated docs. The pair pass yields the
+    same pairs and rounded Jaccards; the estimate audit yields the same
+    rows, row for row. A lone NULL text (all-NULL signatures) meets no
+    other doc in any band bucket, so it forms no pair in either plan."""
     from pyspark.sql import functions as F
 
+    from machinelearningalgomapreduce_spark.functions.hashing import N_MINHASH, minhash_sig
     from machinelearningalgomapreduce_spark.operators.dedup import (
         JACCARD_THRESHOLD,
         _exact_jaccard,
         _lsh_candidates,
+        _minhash_estimates,
         _minhash_sigs,
         _shingle_sets,
         minhash_dedup_pairs,
+        minhash_estimate_pairs,
     )
 
     near = "spark shuffles hash partition the rows across executors today"
     docs = spark.createDataFrame(
-        [("e0", ""), ("e1", ""), ("c0", "copy me twice"), ("c1", "copy me twice"),
+        [("e0", ""), ("e1", ""), ("z0", None),
+         ("c0", "copy me twice"), ("c1", "copy me twice"),
          ("c2", "copy me twice"), ("n0", near), ("n1", near + " quickly"),
          ("u0", "something else entirely unrelated to all of the above docs")],
-        ["doc_id", "text"],
+        "doc_id string, text string",
     )
 
     base = _shingle_sets(docs)
@@ -264,6 +252,20 @@ def test_lsh_exact_collapse_matches_uncollapsed_plan(spark):
     assert ("c0", "c2", 1.0) in reference
     assert collapsed == reference
 
+    sigs = base.select(
+        "doc_id", "sh",
+        *[minhash_sig(F.col("sh"), i).alias(f"sig{i}") for i in range(N_MINHASH)],
+    )
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    est_reference = rows(_minhash_estimates(sigs))
+    assert ("c0", "c1", N_MINHASH, 1.0, 1.0, 0.0) in est_reference
+    assert ("e0", "e1", N_MINHASH, 1.0, 1.0, 0.0) in est_reference
+    assert not [r for r in est_reference if "z0" in r[:2]]
+    assert rows(minhash_estimate_pairs(docs)) == est_reference
+
 
 def test_embedding_dedup_blocked_full_recall_with_learned_cells(spark, sf_dir):
     """VERDICT r10 item 3 (SemDeDup-style composed scale path): learned
@@ -276,8 +278,11 @@ def test_embedding_dedup_blocked_full_recall_with_learned_cells(spark, sf_dir):
         q_dedup_embedding,
     )
 
+    from machinelearningalgomapreduce_spark.sources.catalog import load_tables
+
+    emb = load_tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
     brute = {(r.id_a, r.id_b) for r in q_dedup_embedding(spark, sf_dir).collect()}
-    got = {(r.id_a, r.id_b) for r in embedding_dedup_blocked(spark, sf_dir).collect()}
+    got = {(r.id_a, r.id_b) for r in embedding_dedup_blocked(spark, emb).collect()}
     assert brute, "fixture should contain embedding near-dup pairs"
     assert got == brute, (
         f"missed {sorted(brute - got)[:5]}, invented {sorted(got - brute)[:5]}"
@@ -292,20 +297,17 @@ def test_embedding_dedup_blocked_candidates_stay_cell_bounded(spark, sf_dir):
     tiny (n_probe=3 ⇒ bound ≈ 0.9·all-pairs), so the assertions check the
     LAW, not a small constant: strictly under all-pairs at the recall-1.0
     config; shrinking when k doubles; far under all-pairs at single-probe."""
-    from machinelearningalgomapreduce_spark.operators.dedup import (
-        embedding_dedup_blocked,
-    )
+    from machinelearningalgomapreduce_spark.operators.dedup import _blocked_candidates
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
 
-    n = load_tables(spark, sf_dir).embeddings.count()
+    emb = load_tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    n = emb.count()
     all_pairs = n * (n - 1) // 2
-    cands = embedding_dedup_blocked(spark, sf_dir, verify=False).count()
+    cands = _blocked_candidates(spark, emb).count()
     assert 0 < cands < all_pairs, (cands, all_pairs)
-    bigger_k = embedding_dedup_blocked(spark, sf_dir, k=20, verify=False).count()
+    bigger_k = _blocked_candidates(spark, emb, k=20).count()
     assert bigger_k < cands, (bigger_k, cands)
-    one_probe = embedding_dedup_blocked(
-        spark, sf_dir, n_probe=1, verify=False
-    ).count()
+    one_probe = _blocked_candidates(spark, emb, n_probe=1).count()
     # balanced bound at n_probe=1 is all_pairs/k = 10%; allow skew to 35%
     assert one_probe < 0.35 * all_pairs, (one_probe, all_pairs)
 
@@ -365,7 +367,7 @@ def test_blocked_dedup_survives_sparse_id_space(spark, sf_dir, monkeypatch):
         load_tables(spark, sf_dir)
         .embeddings.select((F.col("vec_id") * 2 + 1).alias("vec_id"), "embedding")
     )
-    got = dedup.embedding_dedup_blocked_frame(spark, odd, k=10)
+    got = dedup.embedding_dedup_blocked(spark, odd)  # auto_k: k=10 here
     rows = got.collect()  # must not crash on the thin-sample path
     assert all(r.id_a % 2 == 1 and r.id_b % 2 == 1 for r in rows)
     assert all(r.cos_sim >= dedup.EMBEDDING_COSINE_THRESHOLD for r in rows)
@@ -390,14 +392,14 @@ def test_blocked_dedup_routes_two_level_past_k_max(spark, sf_dir, monkeypatch):
     }
     got = {
         (r.id_a, r.id_b)
-        for r in dedup.embedding_dedup_blocked_frame(spark, e).collect()
+        for r in dedup.embedding_dedup_blocked(spark, e).collect()
     }
     assert got <= brute, f"invented pairs: {sorted(got - brute)[:5]}"
     # 25 cells of ~20 vectors over 500 points is a deliberately brutal
     # blocking; the two-level probe must still recover a solid majority
     assert len(got) >= 0.5 * len(brute), (len(got), len(brute))
     n = e.count()
-    cands = dedup.embedding_dedup_blocked_frame(spark, e, verify=False).count()
+    cands = dedup._blocked_candidates(spark, e).count()
     assert 0 < cands < n * (n - 1) // 2
 
 
@@ -471,7 +473,7 @@ def test_blocked_dedup_collapse_recovers_exact_copies(spark, sf_dir):
     }
     got = {
         (r.id_a, r.id_b, r.cos_sim)
-        for r in dedup.embedding_dedup_blocked_frame(spark, doubled).collect()
+        for r in dedup.embedding_dedup_blocked(spark, doubled).collect()
     }
     assert brute and got == brute, (
         f"missed {sorted(brute - got)[:5]}, invented {sorted(got - brute)[:5]}"
@@ -511,14 +513,13 @@ def test_dedup_embedding_unknown_dir_gated_on_rows_not_name(spark, tmp_path, mon
     assert "cell" in P.formatted_plan(blocked)
 
 
-@pytest.mark.slow  # heavy lane, run with -m slow (pytest.ini r16)
 def test_blocked_frame_threshold_recovers_exact_dups(spark, sf_dir):
     """r12 regression (caught in review): after the rep-collapse, the
-    verify=False candidate set is REP-level and carries no within-group
-    pairs — a caller filtering it by threshold (the streaming sink's old
-    pattern) would silently miss EXACT-duplicate vectors. The threshold=
-    parameter must return member-level pairs including the exact-dup
-    pair at cos 1.0, at both the default and a tighter cutoff."""
+    candidate set is REP-level and carries no within-group pairs — a
+    caller filtering it by threshold would silently miss EXACT-duplicate
+    vectors. The threshold= parameter must return member-level pairs
+    including the exact-dup pair at cos 1.0, at both the default and a
+    tighter cutoff."""
     from machinelearningalgomapreduce_spark.operators import dedup
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
     from pyspark.sql import functions as F
@@ -534,24 +535,22 @@ def test_blocked_frame_threshold_recovers_exact_dups(spark, sf_dir):
 
     got = {
         (r.id_a, r.id_b, r.cos_sim)
-        for r in dedup.embedding_dedup_blocked_frame(
+        for r in dedup.embedding_dedup_blocked(
             spark, corpus, threshold=0.45
         ).collect()
     }
     assert (first_id, 900_000, 1.0) in got
-    # rep-level candidates (the old pattern) genuinely lack the pair —
-    # the hole this test guards against
+    # rep-level candidates genuinely lack the pair — the hole this test
+    # guards against
     cands = {
         (r.id_a, r.id_b)
-        for r in dedup.embedding_dedup_blocked_frame(
-            spark, corpus, verify=False
-        ).collect()
+        for r in dedup._blocked_candidates(spark, corpus).collect()
     }
     assert (first_id, 900_000) not in cands
     # a tighter threshold keeps the exact pair and only adds pairs
     loose = {
         (r.id_a, r.id_b)
-        for r in dedup.embedding_dedup_blocked_frame(
+        for r in dedup.embedding_dedup_blocked(
             spark, corpus, threshold=0.60
         ).collect()
     }
@@ -574,42 +573,10 @@ def test_two_level_assignment_covers_every_vector(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(dedup, "EMBED_DEDUP_TRAIN_CAP", 32)
     monkeypatch.setattr(dedup, "EMBED_DEDUP_TRAIN_PER_CELL", 1)
     train = e.filter(F.pmod(F.xxhash64("vec_id"), F.lit(15)) == 0)
-    cells = dedup._two_level_probe_cells(spark, e, train, k=25, n_probe=3, seed=42)
+    cells = dedup._two_level_probe_cells(spark, e, train, k=25, n_probe=3)
     assigned = {r.vec_id for r in cells.select("vec_id").distinct().collect()}
     everyone = {r.vec_id for r in e.select("vec_id").collect()}
     assert assigned == everyone, f"dropped: {sorted(everyone - assigned)[:5]}"
-
-
-@pytest.mark.slow  # heavy lane, run with -m slow (pytest.ini r16)
-def test_target_recall_lane_maps_curve_and_refuses_above_ceiling(spark, sf_dir):
-    """r12: target_recall= maps to the smallest MEASURED probe budget on
-    the audit curve; above the measured ceiling it refuses instead of
-    promising an unmeasured number; mutually exclusive with n_probe."""
-    import pytest
-
-    from machinelearningalgomapreduce_spark.operators import dedup
-
-    assert dedup.n_probe_for_recall(0.75) == 3
-    assert dedup.n_probe_for_recall(0.868) == 4
-    assert dedup.n_probe_for_recall(0.95) == 6
-    with pytest.raises(ValueError, match="no measured probe budget"):
-        dedup.n_probe_for_recall(0.999)
-    with pytest.raises(ValueError, match="not both"):
-        dedup.embedding_dedup_blocked(
-            spark, sf_dir, n_probe=3, target_recall=0.9
-        )
-    # the lane runs end-to-end and, being a superset probe budget of the
-    # fixture's recall-1.0 config, still recovers every brute pair
-    brute = {
-        (r.id_a, r.id_b) for r in dedup.q_dedup_embedding(spark, sf_dir).collect()
-    }
-    got = {
-        (r.id_a, r.id_b)
-        for r in dedup.embedding_dedup_blocked(
-            spark, sf_dir, target_recall=0.95
-        ).collect()
-    }
-    assert got == brute
 
 
 @pytest.mark.slow  # heavy lane, run with -m slow (pytest.ini r16)
@@ -631,18 +598,19 @@ def test_two_level_tier_differential_vs_flat(spark, monkeypatch):
     corpus = materialize_once(synth_corpus(spark, n))
     planted = n // CLUSTER_M * (CLUSTER_M * (CLUSTER_M - 1) // 2)
 
+    auto_k = dedup.auto_k(n)
+    assert dedup.auto_n_probe(auto_k) == 3  # both lanes probe 3 cells
     flat = {
         (r.id_a, r.id_b)
-        for r in dedup.embedding_dedup_blocked_frame(
-            spark, corpus, n_probe=3, threshold=THRESHOLD
+        for r in dedup.embedding_dedup_blocked(
+            spark, corpus, threshold=THRESHOLD
         ).collect()
     }
-    auto_k = max(10, -(-n // dedup.EMBED_DEDUP_CELL_TARGET))
     monkeypatch.setattr(dedup, "EMBED_DEDUP_K_MAX", auto_k // 2)  # force IMI
     imi = {
         (r.id_a, r.id_b)
-        for r in dedup.embedding_dedup_blocked_frame(
-            spark, corpus, n_probe=3, threshold=THRESHOLD
+        for r in dedup.embedding_dedup_blocked(
+            spark, corpus, threshold=THRESHOLD
         ).collect()
     }
     assert len(flat) >= 0.95 * planted, (len(flat), planted)
@@ -652,30 +620,3 @@ def test_two_level_tier_differential_vs_flat(spark, monkeypatch):
     # candidate-budget containment for the IMI route is pinned by
     # test_blocked_dedup_routes_two_level_past_k_max; re-counting here
     # would re-run the full blocking pass for no new contract
-
-
-@pytest.mark.slow  # heavy lane, run with -m slow (pytest.ini r16)
-def test_verify_false_semantic_warning_fires_once_per_call_site(spark, sf_dir):
-    """r15 (r14 ADVICE): the verify=False semantic-break UserWarning is
-    once-per-CALL-SITE — a bench loop consuming it must not hide the
-    semantic break from a second, distinct caller in the same process.
-    A loop (one site) warns exactly once; a separate call line (a new
-    site) warns again."""
-    import warnings
-
-    from machinelearningalgomapreduce_spark.operators import dedup
-    from machinelearningalgomapreduce_spark.sources.catalog import load_tables
-
-    emb = load_tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
-    dedup._VERIFY_FALSE_WARNED_SITES.clear()
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        for _ in range(3):  # one call site, looped — the bench-loop shape
-            dedup.embedding_dedup_blocked_frame(spark, emb, verify=False).count()
-        first = [x for x in w if "REP-LEVEL" in str(x.message)]
-    assert len(first) == 1, [str(x.message) for x in w]
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        dedup.embedding_dedup_blocked_frame(spark, emb, verify=False).count()
-        second = [x for x in w if "REP-LEVEL" in str(x.message)]
-    assert len(second) == 1, "a distinct call site must get its own warning"

@@ -100,7 +100,7 @@ def test_training_pipeline_semantic_stage(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from machinelearningalgomapreduce_spark.operators.dedup import (
-        embedding_dedup_blocked_frame,
+        embedding_dedup_blocked,
     )
 
     base_chunks, base_funnel = training_pipeline(
@@ -153,7 +153,7 @@ def test_training_pipeline_semantic_stage(spark, sf_dir):
     restricted = emb.filter(F.col("vec_id").isin([int(d) for d in present]))
     sem_pairs = [
         (r.id_a, r.id_b)
-        for r in embedding_dedup_blocked_frame(spark, restricted).collect()
+        for r in embedding_dedup_blocked(spark, restricted).collect()
     ]
     parent: dict = {}
 

@@ -411,16 +411,14 @@ def test_knn_ann_serving_lane_equals_cold_lane_on_same_centroids(
     """The centroids= serving lane (pre-trained quantizer — the
     persisted-IVFIndexView shape) must produce EXACTLY the cold lane's
     predictions when handed the same centroids the cold lane trains."""
-    from machinelearningalgomapreduce_spark.operators.ml import kmeans_fit, knn_ann
+    from machinelearningalgomapreduce_spark.operators.ml import (
+        centroid_frame,
+        kmeans_fit,
+        knn_ann,
+    )
 
     model, _cost = kmeans_fit(spark, sf_dir, k=10, seed=42)
-    cents = spark.createDataFrame(
-        [
-            (int(i), [round(float(x), 6) for x in c])
-            for i, c in enumerate(model.clusterCenters())
-        ],
-        "label bigint, centroid array<double>",
-    )
+    cents = centroid_frame(spark, model, "label")
     cold = {tuple(r) for r in knn_ann(spark, sf_dir, 10, 4, seed=42).collect()}
     served = {
         tuple(r)

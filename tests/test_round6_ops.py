@@ -1168,7 +1168,7 @@ def test_streaming_semantic_dedup_ingest(spark, sf_dir, tmp_path):
     the admitted set equals the index state."""
     from machinelearningalgomapreduce_spark.operators.dedup import (
         EMBEDDING_COSINE_THRESHOLD,
-        embedding_dedup_blocked_frame,
+        embedding_dedup_blocked,
     )
     from machinelearningalgomapreduce_spark.operators.ml import label_centroids
     from machinelearningalgomapreduce_spark.operators.ivf_index import IVFIndexView
@@ -1197,7 +1197,7 @@ def test_streaming_semantic_dedup_ingest(spark, sf_dir, tmp_path):
     }
     # no near-dup pair SURVIVES among the admitted (blocked-path check —
     # the same candidate generator the sink used)
-    leftover = embedding_dedup_blocked_frame(spark, admitted).filter(
+    leftover = embedding_dedup_blocked(spark, admitted).filter(
         F.col("cos_sim") >= EMBEDDING_COSINE_THRESHOLD
     )
     assert leftover.isEmpty()
@@ -1232,9 +1232,7 @@ def test_semantic_ingest_nondefault_threshold_governs_both_stages(
     trained blockings is approximate by IVF construction — the operator
     docstrings own that — so the test pins the threshold plumbing via
     this same-candidates subset relation, not a global no-pair claim.)"""
-    from machinelearningalgomapreduce_spark.operators.dedup import (
-        embedding_dedup_blocked_frame,
-    )
+    from machinelearningalgomapreduce_spark.operators.dedup import _blocked_candidates
     from machinelearningalgomapreduce_spark.operators.ivf_index import IVFIndexView
     from machinelearningalgomapreduce_spark.operators.ml import label_centroids
     from machinelearningalgomapreduce_spark.sources.schemas import EMBEDDING_DIM
@@ -1243,8 +1241,8 @@ def test_semantic_ingest_nondefault_threshold_governs_both_stages(
     )
 
     t = load_tables(spark, sf_dir)
-    band = embedding_dedup_blocked_frame(
-        spark, t.embeddings.select("vec_id", "embedding"), verify=False
+    band = _blocked_candidates(
+        spark, t.embeddings.select("vec_id", "embedding")
     ).filter((F.col("cos_sim") >= 0.30) & (F.col("cos_sim") < 0.45))
     assert not band.isEmpty(), "fixture should exercise the [0.30, 0.45) band"
 
@@ -1280,7 +1278,7 @@ def test_streaming_semantic_dedup_ingest_pq_backed(spark, sf_dir, tmp_path):
     admission log)."""
     from machinelearningalgomapreduce_spark.operators.dedup import (
         EMBEDDING_COSINE_THRESHOLD,
-        embedding_dedup_blocked_frame,
+        embedding_dedup_blocked,
     )
     from machinelearningalgomapreduce_spark.operators.ivf_pq import IVFPQIndexView
     from machinelearningalgomapreduce_spark.operators.ml import label_centroids
@@ -1311,7 +1309,7 @@ def test_streaming_semantic_dedup_ingest_pq_backed(spark, sf_dir, tmp_path):
         r.vec_id for r in idx.read(spark).collect()
     }
     # no near-dup pair SURVIVES among the admitted
-    leftover = embedding_dedup_blocked_frame(spark, admitted).filter(
+    leftover = embedding_dedup_blocked(spark, admitted).filter(
         F.col("cos_sim") >= EMBEDDING_COSINE_THRESHOLD
     )
     assert leftover.isEmpty()

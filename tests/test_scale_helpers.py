@@ -255,6 +255,7 @@ def test_dedup_embedding_routes_to_cell_plan_above_brute_bound(spark, sf_dir, mo
         q_dedup_embedding,
     )
     from machinelearningalgomapreduce_spark.plans import inspect as P
+    from machinelearningalgomapreduce_spark.sources.catalog import load_tables
 
     brute_plan = P.formatted_plan(q_dedup_embedding(spark, sf_dir))
     assert "cluster" not in brute_plan and "cell" not in brute_plan
@@ -267,7 +268,8 @@ def test_dedup_embedding_routes_to_cell_plan_above_brute_bound(spark, sf_dir, mo
     # SemDeDup-style composition — recall 1.0 vs brute on the fixtures —
     # replaced the label-cell variant as the big-tier route).
     got = {tuple(r) for r in routed.collect()}
-    want = {tuple(r) for r in embedding_dedup_blocked(spark, sf_dir).collect()}
+    emb = load_tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
+    want = {tuple(r) for r in embedding_dedup_blocked(spark, emb).collect()}
     assert got == want
 
 
@@ -339,6 +341,7 @@ def test_blocked_dedup_recall_holds_at_10x_tier(spark, tmp_path_factory):
     (0.778 at fixed n_probe=3) was exact copies straddling finer cells,
     eliminated by the r12 rep-collapse."""
     from machinelearningalgomapreduce_spark.operators.dedup import (
+        _blocked_candidates,
         embedding_dedup_blocked,
         q_dedup_embedding,
     )
@@ -350,18 +353,19 @@ def test_blocked_dedup_recall_holds_at_10x_tier(spark, tmp_path_factory):
 
     truth = {(r.id_a, r.id_b) for r in q_dedup_embedding(spark, SRC).collect()}
     assert truth, "sf0.1 should contain embedding near-dup pairs"
+    emb = load_tables(spark, big).embeddings.select("vec_id", "embedding")
     found = {
-        (r.id_a, r.id_b) for r in embedding_dedup_blocked(spark, big).collect()
+        (r.id_a, r.id_b) for r in embedding_dedup_blocked(spark, emb).collect()
     }
     copy0 = {p for p in found if p[0] < OFF and p[1] < OFF}
     recall = len(copy0 & truth) / len(truth)
     assert recall >= 0.95, f"recall {recall:.4f} below target"
     assert not (copy0 - truth), f"invented pairs: {sorted(copy0 - truth)[:5]}"
 
-    # Candidate budget: rep-level candidates (verify=False) must sit far
-    # under raw all-pairs — the collapse means the blocked join sees
-    # n_reps participants, so the budget is ~n_probe²/k of C(n_reps, 2),
-    # orders of magnitude under C(n, 2).
-    n = load_tables(spark, big).embeddings.count()
-    cands = embedding_dedup_blocked(spark, big, verify=False).count()
+    # Candidate budget: rep-level candidates must sit far under raw
+    # all-pairs — the collapse means the blocked join sees n_reps
+    # participants, so the budget is ~n_probe²/k of C(n_reps, 2), orders
+    # of magnitude under C(n, 2).
+    n = emb.count()
+    cands = _blocked_candidates(spark, emb).count()
     assert cands < 0.02 * (n * (n - 1) // 2), (cands, n)

@@ -46,6 +46,7 @@ def run_tier(tier: str) -> dict:
     from machinelearningalgomapreduce_spark.operators.ml import (
         KNN_K,
         KNN_QUERY_STRIDE,
+        centroid_frame,
         kmeans_fit,
         knn_ann,
         q_knn,
@@ -61,7 +62,7 @@ def run_tier(tier: str) -> dict:
     from machinelearningalgomapreduce_spark.sources.catalog import load_tables
 
     from machinelearningalgomapreduce_spark.operators.dedup import (
-        EMBED_DEDUP_CELL_TARGET,
+        auto_k,
         auto_n_probe,
     )
 
@@ -72,7 +73,7 @@ def run_tier(tier: str) -> dict:
     )
     ensure_query_conf(spark)
     n_vectors = load_tables(spark, tier).embeddings.count()
-    k_cells = max(10, -(-n_vectors // EMBED_DEDUP_CELL_TARGET))  # knn_ann's auto
+    k_cells = auto_k(n_vectors)  # knn_ann's auto
     probes = sorted({auto_n_probe(k_cells), 6})
 
     brute_s = _timed(lambda: q_knn(spark, tier))
@@ -81,13 +82,7 @@ def run_tier(tier: str) -> dict:
     # serving shape: quantizer trained ONCE (what a persisted IVF index
     # pins at construction); the timed part is candidate scoring + vote
     model, _cost = kmeans_fit(spark, tier, k=k_cells, seed=42)
-    cents = spark.createDataFrame(
-        [
-            (int(i), [round(float(x), 6) for x in c])
-            for i, c in enumerate(model.clusterCenters())
-        ],
-        "label bigint, centroid array<double>",
-    )
+    cents = centroid_frame(spark, model, "label")
 
     rows = []
     for np_ in probes:
@@ -188,7 +183,7 @@ def run_index_tier(tier: str) -> list[dict]:
     from pyspark.sql import functions as F
 
     from machinelearningalgomapreduce_spark.operators.dedup import (
-        EMBED_DEDUP_CELL_TARGET,
+        auto_k,
         auto_n_probe,
     )
     from machinelearningalgomapreduce_spark.operators.ivf_index import IVFIndexView
@@ -226,7 +221,7 @@ def run_index_tier(tier: str) -> list[dict]:
     t = load_tables(spark, tier)
     emb = t.embeddings.select("vec_id", "embedding")
     n_vectors = emb.count()
-    k_cells = max(10, -(-n_vectors // EMBED_DEDUP_CELL_TARGET))
+    k_cells = auto_k(n_vectors)
     np_ = auto_n_probe(k_cells)
 
     def brute_votes(stride):

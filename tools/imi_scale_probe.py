@@ -1,7 +1,7 @@
 """Flat-vs-two-level (IMI) quantizer differential at a measured tier
 (VERDICT r12 item 2).
 
-The two-level route in embedding_dedup_blocked_frame
+The two-level route in embedding_dedup_blocked
 (operators/dedup.py::_two_level_probe_cells) is the load-bearing 100 TB
 claim of the semantic-dedup tier — it keeps k ≈ n/512 affordable past
 EMBED_DEDUP_K_MAX where flat Lloyd's assignment cost O(n·k) becomes the
@@ -14,7 +14,9 @@ flat (K_MAX at its default, above auto-k) and once two-level (K_MAX
 lowered below auto-k) — recording wall-clock ratio, pair-set overlap
 (both lanes are approximations of the same truth; the verify stage is
 exact either way, so emitted pairs are TRUE in both), and the
-verify=False candidate volume each lane generated.
+rep-level candidate volume each lane generated (dedup._blocked_candidates).
+Both lanes run the auto-k cell count and its auto probe budget: the
+lanes differ in the quantizer's route only.
 
 Corpus: n vectors of EMBEDDING_DIM doubles in tiny planted clusters of
 ``m`` members (deterministic xxhash64 synthesis, fully JVM-side — no
@@ -38,9 +40,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 THRESHOLD = 0.9
 CLUSTER_M = 4  # members per planted near-dup cluster
-N_PROBE = 3  # fixed and IDENTICAL in both lanes — the differential is
-# about the QUANTIZER; auto_n_probe would pick 6 at these k and multiply
-# the candidate volume 4x without changing the comparison
 
 
 def synth_corpus(spark, n: int):
@@ -74,19 +73,11 @@ def run_lane(spark, corpus, k_max: int, label: str) -> dict:
     dedup.EMBED_DEDUP_K_MAX = k_max
     try:
         t0 = time.perf_counter()
-        pairs = dedup.embedding_dedup_blocked_frame(
-            spark, corpus, n_probe=N_PROBE, threshold=THRESHOLD
-        )
+        pairs = dedup.embedding_dedup_blocked(spark, corpus, threshold=THRESHOLD)
         pair_set = {(r.id_a, r.id_b) for r in pairs.collect()}
         wall = time.perf_counter() - t0
         t1 = time.perf_counter()
-        import warnings
-
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")  # the deliberate audit knob
-            cands = dedup.embedding_dedup_blocked_frame(
-                spark, corpus, n_probe=N_PROBE, verify=False
-            ).count()
+        cands = dedup._blocked_candidates(spark, corpus).count()
         cand_wall = time.perf_counter() - t1
     finally:
         dedup.EMBED_DEDUP_K_MAX = old
@@ -126,7 +117,8 @@ def main() -> None:
     )
     ensure_query_conf(spark)
     corpus = materialize_once(synth_corpus(spark, n))  # pin one synthesis
-    auto_k = max(10, -(-n // dedup.EMBED_DEDUP_CELL_TARGET))
+    auto_k = dedup.auto_k(n)
+    n_probe = dedup.auto_n_probe(auto_k)
     assert auto_k <= dedup.EMBED_DEDUP_K_MAX, "flat lane must stay flat"
     assert auto_k > k_max_low, "two-level lane must actually trigger"
     planted = n // CLUSTER_M * (CLUSTER_M * (CLUSTER_M - 1) // 2)
@@ -140,7 +132,7 @@ def main() -> None:
         out = {
             "n_vectors": n,
             "auto_k": auto_k,
-            "n_probe": N_PROBE,
+            "n_probe": n_probe,
             "threshold": THRESHOLD,
             "planted_pairs": planted,
             lane["lane"].replace("-", "_"): {
@@ -159,7 +151,7 @@ def main() -> None:
     out = {
         "n_vectors": n,
         "auto_k": auto_k,
-        "n_probe": N_PROBE,
+        "n_probe": n_probe,
         "threshold": THRESHOLD,
         "planted_pairs": planted,
         "flat": {k: v for k, v in flat.items() if k != "pair_set"},
